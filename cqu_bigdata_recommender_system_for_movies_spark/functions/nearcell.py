@@ -69,10 +69,9 @@ def _ship() -> None:
 _KEY_SENTINEL = -(2**63)
 
 # must equal operators.vectors.EPS (cosine denominator) — pinned by
-# tests/test_functions.py::test_nearcell_eps_matches_vectors (ADVICE
-# r16: a module-level import of operators.vectors here would drag the
-# whole registry into every worker's UDF import and wire a new closure
-# edge into 14 query manifests; the equality test is the cheaper pin)
+# tests/test_functions.py::test_nearcell_eps_matches_vectors; a
+# module-level import of operators.vectors here would drag the whole
+# registry into every worker's UDF import
 EPS = 1e-8
 
 

@@ -52,7 +52,7 @@ if len(sys.argv) > 1:  # targeted re-verify: driver_sim.py name [name ...]
     queries = {n: queries[n] for n in queries if n in set(sys.argv[1:])}
 n_ok = n_rowsonly = 0
 failures = []
-for name in queries:  # registration order — same as the driver's check order
+for name in queries:  # sorted by name; every query is checked
     t0 = time.perf_counter()
     try:
         sdf = queries[name](spark, SF)

@@ -239,11 +239,10 @@ def test_nearest_cells_udf_null_and_tie_semantics():
 
 
 def test_nearcell_eps_matches_vectors():
-    """ADVICE r16: nearcell.EPS is a by-value copy of
-    operators.vectors.EPS (a module-level import would wire the whole
-    registry into every UDF worker import and add a closure edge to 14
-    query manifests); silent drift would break the bit-exactness
-    contract of every vectorized twin — pin the equality."""
+    """nearcell.EPS is a by-value copy of operators.vectors.EPS (a
+    module-level import would pull the whole registry into every UDF
+    worker import); silent drift would break the bit-exactness contract
+    of every vectorized twin — pin the equality."""
     from cqu_bigdata_recommender_system_for_movies_spark.functions import nearcell
     from cqu_bigdata_recommender_system_for_movies_spark.operators import vectors
 

@@ -6,6 +6,9 @@ wrong plan is a 100-TB incident waiting; these tests fail it early."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import all_queries
@@ -591,944 +594,51 @@ def test_dedup_components_one_action_per_iteration(spark, sf_dir, monkeypatch):
     assert df.count() > 0
 
 
-def test_driver_window_is_fully_pinned():
-    """ADVICE r3: the driver checks exactly the first DRIVER_WINDOW names
-    of queries(); the pin list must fill the window exactly (no silent
-    overflow like r3's 52-for-50, no unpinned stragglers) and every listed
-    name must exist — _driver_order asserts the rest."""
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        DRIVER_WINDOW,
-    )
+def _decorated_register_names() -> set[str]:
+    """Statically collect the name literal of every ``@register(...)``."""
+    import cqu_bigdata_recommender_system_for_movies_spark as pkg
+
+    names: set[str] = set()
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            for deco in getattr(node, "decorator_list", ()):
+                if isinstance(deco, ast.Call) and getattr(deco.func, "id", None) == "register":
+                    names.add(ast.literal_eval(deco.args[0]))
+    return names
+
+
+def test_every_registering_module_is_loaded():
+    """A module missing from _load_operator_modules would silently drop its
+    queries from queries()/oracle_sql() and shrink the full-set gate."""
+    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import QUERIES
+
+    all_queries()
+    static = _decorated_register_names()
+    assert static == set(QUERIES), sorted(static ^ set(QUERIES))
+
+
+def test_registry_views_are_name_sorted():
+    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import all_oracles
 
     names = list(all_queries())
-    assert len(DRIVER_CHECK_FIRST) == DRIVER_WINDOW
-    assert names[:DRIVER_WINDOW] == list(DRIVER_CHECK_FIRST)
+    assert names == sorted(names)
+    oracle_names = list(all_oracles())
+    assert oracle_names == sorted(oracle_names)
 
 
-def test_next_window_plan_comment_is_exact():
-    """VERDICT r4 #1 was caused by the next-window plan comment omitting a
-    new query. Make the accounting self-maintaining: every registered query
-    that (a) has no row in any CORRECTNESS_r*.json and (b) is not in the
-    current pinned window MUST be named in the registry's r6-fill comment,
-    so nothing silently falls out of the verification rotation."""
-    import glob
-    import json
-    import os
-
-    import cqu_bigdata_recommender_system_for_movies_spark.plans.registry as reg
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        QUERIES,
-    )
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            checked |= set(json.load(f))
-    all_queries()  # populate the registry
-    never = [n for n in QUERIES if n not in checked and n not in set(DRIVER_CHECK_FIRST)]
-    with open(reg.__file__) as f:
-        src = f.read()
-    comment = src[src.index("# r16 fill") : src.index("R16_CHANGED_HEAD: tuple")]
-    # Tokenize the comment into identifiers rather than substring-matching:
-    # a name that is a substring of another listed name (e.g. "foo" inside
-    # "foo_bar") must NOT count as present (ADVICE r5).
-    import re
-
-    tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", comment))
-    missing = [n for n in never if n not in tokens]
-    assert not missing, (
-        f"registry's next-window plan comment omits never-driver-checked "
-        f"queries: {missing} — add them so the rotation stays exact"
-    )
-    # VERDICT r10 #1 (standing): every query whose implementation or
-    # oracle changed in the prior round OUTSIDE that round's window must
-    # be pinned by name at the head of the current plan so its stale
-    # green row gets refreshed first.
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        R16_CHANGED_HEAD,
-    )
-
-    unpinned = [n for n in R16_CHANGED_HEAD if n not in tokens]
-    assert not unpinned, (
-        f"r16-fill plan comment must name the round-15 changed queries for "
-        f"re-verification; missing: {unpinned}"
-    )
-
-
-def test_r8_window_pin():
-    """VERDICT r6 #5: the EXACT r8 window is pinned in r7 so the rotation
-    is mechanical. Recompute it from the stated rule — priority recheck
-    head (r7-changed + never-executed band oracles), then
-    oldest-green-first (last driver round ascending, NAME tie-break —
-    registry insertion order varies with module import order, so it
-    cannot anchor a pinned list — r7-window names excluded) — and
-    assert the pinned tuple matches bit for bit."""
-    import glob
-    import json
-    import os
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_WINDOW,
-        QUERIES,
-        R7_WINDOW,
-        R8_PRIORITY_RECHECK,
-        R8_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r8 rotation completed in CORRECTNESS_r08 — 50/50 green; the
-    # window is kept as data because the r9 pin rule excludes its names)
-    assert len(R8_WINDOW) == DRIVER_WINDOW
-    assert len(set(R8_WINDOW)) == len(R8_WINDOW)
-    assert R8_WINDOW[: len(R8_PRIORITY_RECHECK)] == R8_PRIORITY_RECHECK
-    unknown = [n for n in R8_WINDOW if n not in QUERIES]
-    assert not unknown, f"r8 window names unregistered queries: {unknown}"
-    overlap = set(R8_WINDOW) & set(R7_WINDOW)
-    assert not overlap, (
-        f"r8 window repeats r7-window names whose rows are freshest: {overlap}"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    import re
-
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r0[1-6].json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R8_PRIORITY_RECHECK) and n not in set(R7_WINDOW)
+def test_bench_headline_names_are_registered():
+    """bench.py looks its HEADLINE up by name; a rename must fail here, not
+    as a KeyError mid-bench."""
+    src = (pathlib.Path(__file__).parents[1] / "bench.py").read_text()
+    (headline,) = [
+        ast.literal_eval(node.value)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) == "HEADLINE"
     ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R8_PRIORITY_RECHECK + tuple(rest[: DRIVER_WINDOW - len(R8_PRIORITY_RECHECK)])
-    assert R8_WINDOW == expect, (
-        "pinned R8_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R8_WINDOW, expect) if a != b]}"
-    )
+    assert headline
+    missing = sorted(set(headline) - set(all_queries()))
+    assert not missing, f"bench.py HEADLINE names unregistered queries: {missing}"
 
-
-def test_r9_window_pin():
-    """VERDICT r7 #3 pinned the r9 window in r8; VERDICT r8 #1 corrected
-    it at the start of r9 (the r8 pin omitted simhash_near_dup_pairs,
-    whose implementation changed in r8 while its driver row was stale at
-    r5). Recompute it from the stated rule — round-8-changed queries
-    outside the r8 window first, then oldest-green-first (last driver
-    round ascending over CORRECTNESS_r01..r07, NAME tie-break, R8_WINDOW
-    names excluded since their r8 rows are freshest) — and assert the
-    pinned tuple matches bit for bit."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_WINDOW,
-        QUERIES,
-        R8_WINDOW,
-        R9_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r9 rotation completed in CORRECTNESS_r09 — 50/50 green; the
-    # window is kept as data because the r10 pin rule excludes its names)
-    changed_r8 = ("record_linkage_blocked", "simhash_near_dup_pairs")
-    assert len(R9_WINDOW) == DRIVER_WINDOW
-    assert len(set(R9_WINDOW)) == len(R9_WINDOW)
-    assert R9_WINDOW[: len(changed_r8)] == changed_r8
-    unknown = [n for n in R9_WINDOW if n not in QUERIES]
-    assert not unknown, f"r9 window names unregistered queries: {unknown}"
-    overlap = set(R9_WINDOW) & set(R8_WINDOW)
-    assert not overlap, (
-        f"r9 window repeats r8-window names whose rows are freshest: {overlap}"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r0[1-7].json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(changed_r8) and n not in set(R8_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = changed_r8 + tuple(rest[: DRIVER_WINDOW - len(changed_r8)])
-    assert R9_WINDOW == expect, (
-        "pinned R9_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R9_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r10_window_pin():
-    """VERDICT r9 #1: pin the EXACT r10 window at the start of round 10.
-    Recompute it from the stated rule — the eight changed queries at the
-    head (seven whose implementation/oracle changed in round 9 outside
-    the r9 window, in VERDICT r9's stated order, plus rollup_nation_brand
-    whose forced customer/part broadcasts drop in round 10 itself), then
-    oldest-green-first (last driver round ascending over
-    CORRECTNESS_r01..r09, NAME tie-break, R9_WINDOW names excluded since
-    their r9 rows are freshest) — and assert the pinned tuple matches
-    bit for bit."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_WINDOW,
-        QUERIES,
-        R9_WINDOW,
-        R10_CHANGED_HEAD,
-        R10_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r10 rotation completed in CORRECTNESS_r10 — 50/50 green; the
-    # window is kept as data because the r11 pin rule excludes its names)
-    assert len(R10_WINDOW) == DRIVER_WINDOW
-    assert len(set(R10_WINDOW)) == len(R10_WINDOW)
-    assert R10_WINDOW[: len(R10_CHANGED_HEAD)] == R10_CHANGED_HEAD
-    unknown = [n for n in R10_WINDOW if n not in QUERIES]
-    assert not unknown, f"r10 window names unregistered queries: {unknown}"
-    overlap = set(R10_WINDOW) & set(R9_WINDOW)
-    assert not overlap, (
-        f"r10 window repeats r9-window names whose rows are freshest: {overlap}"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r0[1-9].json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R10_CHANGED_HEAD) and n not in set(R9_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R10_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R10_CHANGED_HEAD)]
-    )
-    assert R10_WINDOW == expect, (
-        "pinned R10_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R10_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r11_window_pin():
-    """VERDICT r10 #1: pin the EXACT r11 window at the start of round 11.
-    Recompute it from the stated rule — head = the r10
-    CHANGED_THIS_ROUND tuple minus R10_WINDOW names (the 13 queries whose
-    shipped implementation drifted in round 10 with no fresh driver row:
-    streaming_simhash_dedup was registered mid-round and never checked;
-    the rest carry r06–r09 rows predating their r10 re-plans), then
-    oldest-green-first (last driver round ascending over
-    CORRECTNESS_r01..r10, NAME tie-break, R10_WINDOW names excluded since
-    their r10 rows are freshest) — and assert the pinned tuple matches
-    bit for bit. The head order is itself data: the frozen r10 tuple's
-    order, reproduced here as a literal because CHANGED_THIS_ROUND was
-    reset to () at the same commit that pinned this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        DRIVER_WINDOW,
-        QUERIES,
-        R10_WINDOW,
-        R11_CHANGED_HEAD,
-        R11_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r11 rotation was live through round 11; DRIVER_CHECK_FIRST now
-    # points at R12_WINDOW — asserted by test_r12_window_pin)
-    assert len(R11_WINDOW) == DRIVER_WINDOW
-    assert len(set(R11_WINDOW)) == len(R11_WINDOW)
-    assert R11_WINDOW[: len(R11_CHANGED_HEAD)] == R11_CHANGED_HEAD
-    # the r10 CHANGED_THIS_ROUND tuple, frozen at the r11 pin commit
-    changed_r10 = (
-        "streaming_simhash_dedup",
-        "ann_ivf_topk",
-        "ann_ivf_multiprobe_topk",
-        "ivf_pq_topk",
-        "quality_filter_funnel",
-        "dedup_canonical_docs",
-        "dedup_components",
-        "dedup_components_lss",
-        "dedup_pipeline_summary",
-        "minhash_jaccard_estimate",
-        "minhash_lsh_dedup",
-        "ngram_jaccard_pairs",
-        "record_linkage_blocked",
-        "rollup_nation_brand",
-        "simhash_near_dup_pairs",
-        "vocab_build",
-        "zipf_law_fit",
-    )
-    expect_head = tuple(n for n in changed_r10 if n not in set(R10_WINDOW))
-    assert R11_CHANGED_HEAD == expect_head, (
-        "r11 head deviates from CHANGED_THIS_ROUND(r10) minus R10_WINDOW: "
-        f"{[(a, b) for a, b in zip(R11_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R11_WINDOW if n not in QUERIES]
-    assert not unknown, f"r11 window names unregistered queries: {unknown}"
-    overlap = set(R11_WINDOW) & set(R10_WINDOW)
-    assert not overlap, (
-        f"r11 window repeats r10-window names whose rows are freshest: {overlap}"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 10:
-            continue  # the pin froze on the r01..r10 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R11_CHANGED_HEAD) and n not in set(R10_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R11_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R11_CHANGED_HEAD)]
-    )
-    assert R11_WINDOW == expect, (
-        "pinned R11_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R11_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r12_window_pin():
-    """VERDICT r11 #2: pin the EXACT r12 window at the start of round 12.
-    Recompute it from the stated rule — head = the r11
-    CHANGED_THIS_ROUND tuple minus R11_WINDOW names (the two queries
-    whose shipped implementation drifted in round 11 with no fresh
-    driver row: ann_ivf_multiprobe_topk's r10 row predates the
-    broadcast-centroid assignment swap; ppr_seeded_items' r07 row
-    predates the serialized-checkpoint storage change), then
-    oldest-green-first (last driver round ascending over
-    CORRECTNESS_r01..r11, NAME tie-break, R11_WINDOW names excluded
-    since their r11 rows are freshest) — and assert the pinned tuple
-    matches bit for bit. The head order is itself data: the frozen r11
-    tuple's order, reproduced here as a literal because
-    CHANGED_THIS_ROUND was reset to () at the same commit that pinned
-    this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_WINDOW,
-        QUERIES,
-        R11_WINDOW,
-        R12_CHANGED_HEAD,
-        R12_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r12 rotation was live through round 12; DRIVER_CHECK_FIRST now
-    # points at R13_WINDOW — asserted by test_r13_window_pin)
-    assert len(R12_WINDOW) == DRIVER_WINDOW
-    assert len(set(R12_WINDOW)) == len(R12_WINDOW)
-    assert R12_WINDOW[: len(R12_CHANGED_HEAD)] == R12_CHANGED_HEAD
-    # the r11 CHANGED_THIS_ROUND tuple, frozen at the r12 pin commit
-    changed_r11 = (
-        "streaming_simhash_dedup",
-        "ann_ivf_topk",
-        "ann_ivf_multiprobe_topk",
-        "ivf_pq_topk",
-        "dedup_components",
-        "dedup_components_lss",
-        "dedup_canonical_docs",
-        "dedup_pipeline_summary",
-        "kcore_membership",
-        "lpa_communities",
-        "pagerank_bipartite",
-        "ppr_seeded_items",
-        "random_walk_training_paths",
-    )
-    expect_head = tuple(n for n in changed_r11 if n not in set(R11_WINDOW))
-    assert R12_CHANGED_HEAD == expect_head, (
-        "r12 head deviates from CHANGED_THIS_ROUND(r11) minus R11_WINDOW: "
-        f"{[(a, b) for a, b in zip(R12_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R12_WINDOW if n not in QUERIES]
-    assert not unknown, f"r12 window names unregistered queries: {unknown}"
-    overlap = set(R12_WINDOW) & set(R11_WINDOW)
-    assert not overlap, (
-        f"r12 window repeats r11-window names whose rows are freshest: {overlap}"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 11:
-            continue  # the pin froze on the r01..r11 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R12_CHANGED_HEAD) and n not in set(R11_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R12_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R12_CHANGED_HEAD)]
-    )
-    assert R12_WINDOW == expect, (
-        "pinned R12_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R12_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r13_window_pin():
-    """VERDICT r12 #1: pin the EXACT r13 window at the start of round 13.
-    Recompute it from the stated rule — head = the r12
-    CHANGED_THIS_ROUND tuple minus R12_WINDOW names (none overlapped),
-    ordered never-driver-checked FIRST (the standing r11 rule:
-    never-checked precedes changed): the four operators registered
-    mid-round-12 with no driver row in any CORRECTNESS_r* file
-    (streaming_recommend_candidates, als_user_fold_in, als_item_fold_in,
-    streaming_online_ridge — VERDICT r12 #1's exact order), then the
-    three whose green rows predate a result-neutral r12 re-plan
-    (streaming_interest_fold, streaming_recommend_emit,
-    streaming_simhash_dedup). Fill = oldest-green-first (last driver
-    round ascending over CORRECTNESS_r01..r12, NAME tie-break,
-    R12_WINDOW names excluded since their r12 rows are freshest) — and
-    assert the pinned tuple matches bit for bit. The head order is
-    itself data: the frozen r12 tuple plus the judge's never-checked
-    ordering, reproduced here as literals because CHANGED_THIS_ROUND
-    was reset to () at the same commit that pinned this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        DRIVER_WINDOW,
-        QUERIES,
-        R12_WINDOW,
-        R13_CHANGED_HEAD,
-        R13_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r13 rotation was live through round 13; DRIVER_CHECK_FIRST now
-    # points at R14_WINDOW — asserted by test_r14_window_pin)
-    assert len(R13_WINDOW) == DRIVER_WINDOW
-    assert len(set(R13_WINDOW)) == len(R13_WINDOW)
-    assert R13_WINDOW[: len(R13_CHANGED_HEAD)] == R13_CHANGED_HEAD
-    # the r12 CHANGED_THIS_ROUND tuple, frozen at the r13 pin commit
-    changed_r12 = (
-        "streaming_simhash_dedup",
-        "streaming_interest_fold",
-        "streaming_recommend_emit",
-        "streaming_recommend_candidates",
-        "als_user_fold_in",
-        "streaming_online_ridge",
-        "als_item_fold_in",
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 12:
-            continue  # the pin froze on the r01..r12 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    head_pool = tuple(n for n in changed_r12 if n not in set(R12_WINDOW))
-    # VERDICT r12 #1 names the head order explicitly: the four
-    # never-checked first, then the three re-planned. Both literals are
-    # validated against the mechanical pools (membership + the
-    # never-checked/changed split) so a drifted pin cannot hide.
-    never_checked = (
-        "streaming_recommend_candidates",
-        "als_user_fold_in",
-        "als_item_fold_in",
-        "streaming_online_ridge",
-    )
-    replanned = (
-        "streaming_interest_fold",
-        "streaming_recommend_emit",
-        "streaming_simhash_dedup",
-    )
-    assert set(never_checked) == {n for n in head_pool if n not in last}
-    assert set(replanned) == {n for n in head_pool if n in last}
-    expect_head = never_checked + replanned
-    assert R13_CHANGED_HEAD == expect_head, (
-        "r13 head deviates from never-checked-first over "
-        "CHANGED_THIS_ROUND(r12) minus R12_WINDOW: "
-        f"{[(a, b) for a, b in zip(R13_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R13_WINDOW if n not in QUERIES]
-    assert not unknown, f"r13 window names unregistered queries: {unknown}"
-    overlap = set(R13_WINDOW) & set(R12_WINDOW)
-    assert not overlap, (
-        f"r13 window repeats r12-window names whose rows are freshest: {overlap}"
-    )
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R13_CHANGED_HEAD) and n not in set(R12_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R13_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R13_CHANGED_HEAD)]
-    )
-    assert R13_WINDOW == expect, (
-        "pinned R13_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R13_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r14_window_pin():
-    """VERDICT r13 #1: pin the EXACT r14 window at the start of round 14.
-    Recompute it from the stated rule — head = the r13
-    CHANGED_THIS_ROUND tuple minus R13_WINDOW names, ordered
-    never-driver-checked FIRST (the standing r11 rule: never-checked
-    precedes changed): streaming_ann_index_update (registered
-    mid-round-13, no driver row in any CORRECTNESS_r* file), then the
-    three whose green rows predate the result-neutral r13
-    derive_state_partitions re-plan, in tuple order
-    (streaming_window_counts, streaming_stream_stream_join,
-    streaming_stream_stream_left_join). Fill = oldest-green-first (last
-    driver round ascending over CORRECTNESS_r01..r13, NAME tie-break,
-    R13_WINDOW names excluded since their r13 rows are freshest) — and
-    assert the pinned tuple matches bit for bit. The r13
-    CHANGED_THIS_ROUND tuple is reproduced here as a literal because it
-    was reset to () at the same commit that pinned this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_WINDOW,
-        QUERIES,
-        R13_WINDOW,
-        R14_CHANGED_HEAD,
-        R14_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r14 rotation was live through round 14; DRIVER_CHECK_FIRST now
-    # points at R15_WINDOW — asserted by test_r15_window_pin)
-    assert len(R14_WINDOW) == DRIVER_WINDOW
-    assert len(set(R14_WINDOW)) == len(R14_WINDOW)
-    assert R14_WINDOW[: len(R14_CHANGED_HEAD)] == R14_CHANGED_HEAD
-    # the r13 CHANGED_THIS_ROUND tuple, frozen at the r14 pin commit
-    changed_r13 = (
-        "streaming_ann_index_update",
-        "streaming_recommend_emit",
-        "streaming_window_counts",
-        "streaming_stream_stream_join",
-        "streaming_stream_stream_left_join",
-        "streaming_simhash_dedup",
-        "streaming_online_ridge",
-        "streaming_recommend_candidates",
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 13:
-            continue  # the pin froze on the r01..r13 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    head_pool = tuple(n for n in changed_r13 if n not in set(R13_WINDOW))
-    never_checked = tuple(n for n in head_pool if n not in last)
-    replanned = tuple(n for n in head_pool if n in last)
-    assert never_checked == ("streaming_ann_index_update",)
-    expect_head = never_checked + replanned
-    assert R14_CHANGED_HEAD == expect_head, (
-        "r14 head deviates from never-checked-first over "
-        "CHANGED_THIS_ROUND(r13) minus R13_WINDOW: "
-        f"{[(a, b) for a, b in zip(R14_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R14_WINDOW if n not in QUERIES]
-    assert not unknown, f"r14 window names unregistered queries: {unknown}"
-    overlap = set(R14_WINDOW) & set(R13_WINDOW)
-    assert not overlap, (
-        f"r14 window repeats r13-window names whose rows are freshest: {overlap}"
-    )
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R14_CHANGED_HEAD) and n not in set(R13_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R14_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R14_CHANGED_HEAD)]
-    )
-    assert R14_WINDOW == expect, (
-        "pinned R14_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R14_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r15_window_pin():
-    """VERDICT r14 #1: pin the EXACT r15 window at the start of round 15.
-    Recompute it from the stated rule — head = the r14
-    CHANGED_THIS_ROUND tuple minus R14_WINDOW names, ordered
-    never-driver-checked FIRST (the standing r11 rule: never-checked
-    precedes changed): the four ANN lifecycle/serving queries registered
-    mid-round-14 with no driver row in any CORRECTNESS_r* file
-    (streaming_ann_search, streaming_ann_index_delete,
-    streaming_ann_index_upsert, streaming_ann_index_compact), then the
-    three whose green rows predate result-neutral r14 re-plans, in tuple
-    order (streaming_simhash_dedup, streaming_online_ridge,
-    streaming_recommend_candidates). Fill = oldest-green-first (last
-    driver round ascending over CORRECTNESS_r01..r14, NAME tie-break,
-    R14_WINDOW names excluded since their r14 rows are freshest) — and
-    assert the pinned tuple matches bit for bit. The r14
-    CHANGED_THIS_ROUND tuple is reproduced here as a literal because it
-    was reset to () at the same commit that pinned this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        DRIVER_WINDOW,
-        QUERIES,
-        R14_WINDOW,
-        R15_CHANGED_HEAD,
-        R15_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r15 rotation completed in CORRECTNESS_r15 — 50/50 green; the
-    # live rotation points at R16_WINDOW — asserted by test_r16_window_pin)
-    assert len(R15_WINDOW) == DRIVER_WINDOW
-    assert len(set(R15_WINDOW)) == len(R15_WINDOW)
-    assert R15_WINDOW[: len(R15_CHANGED_HEAD)] == R15_CHANGED_HEAD
-    # the r14 CHANGED_THIS_ROUND tuple, frozen at the r15 pin commit
-    changed_r14 = (
-        "streaming_ann_search",
-        "streaming_ann_index_delete",
-        "streaming_ann_index_upsert",
-        "streaming_ann_index_compact",
-        "streaming_ann_index_update",
-        "streaming_window_counts",
-        "streaming_stream_stream_join",
-        "streaming_stream_stream_left_join",
-        "streaming_simhash_dedup",
-        "streaming_online_ridge",
-        "streaming_recommend_candidates",
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 14:
-            continue  # the pin froze on the r01..r14 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    head_pool = tuple(n for n in changed_r14 if n not in set(R14_WINDOW))
-    never_checked = tuple(n for n in head_pool if n not in last)
-    replanned = tuple(n for n in head_pool if n in last)
-    assert never_checked == (
-        "streaming_ann_search",
-        "streaming_ann_index_delete",
-        "streaming_ann_index_upsert",
-        "streaming_ann_index_compact",
-    )
-    expect_head = never_checked + replanned
-    assert R15_CHANGED_HEAD == expect_head, (
-        "r15 head deviates from never-checked-first over "
-        "CHANGED_THIS_ROUND(r14) minus R14_WINDOW: "
-        f"{[(a, b) for a, b in zip(R15_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R15_WINDOW if n not in QUERIES]
-    assert not unknown, f"r15 window names unregistered queries: {unknown}"
-    overlap = set(R15_WINDOW) & set(R14_WINDOW)
-    assert not overlap, (
-        f"r15 window repeats r14-window names whose rows are freshest: {overlap}"
-    )
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R15_CHANGED_HEAD) and n not in set(R14_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R15_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R15_CHANGED_HEAD)]
-    )
-    assert R15_WINDOW == expect, (
-        "pinned R15_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R15_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r16_window_pin():
-    """VERDICT r15 #1: pin the EXACT r16 window at the start of round 16.
-    Recompute it from the stated rule — head = the r15
-    CHANGED_THIS_ROUND tuple minus R15_WINDOW names, ordered
-    never-driver-checked FIRST (the standing r11 rule: never-checked
-    precedes changed): the three queries registered mid-round-15 with
-    no driver row in any CORRECTNESS_r* file (ann_two_level_search,
-    ann_two_level_assign, streaming_ann_index_requantize), then the one
-    changed-but-previously-green name (streaming_ann_index_update).
-    Fill = oldest-green-first (last driver round ascending over
-    CORRECTNESS_r01..r15, NAME tie-break, R15_WINDOW names excluded
-    since their r15 rows are freshest) — and assert the pinned tuple
-    matches bit for bit. The r15 CHANGED_THIS_ROUND tuple is reproduced
-    here as a literal because it was reset to () at the same commit that
-    pinned this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        DRIVER_WINDOW,
-        QUERIES,
-        R15_WINDOW,
-        R16_CHANGED_HEAD,
-        R16_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    # (the r16 rotation completed in CORRECTNESS_r16 — 50/50 green; the
-    # live rotation points at R17_WINDOW — asserted by test_r17_window_pin)
-    assert len(R16_WINDOW) == DRIVER_WINDOW
-    assert len(set(R16_WINDOW)) == len(R16_WINDOW)
-    assert R16_WINDOW[: len(R16_CHANGED_HEAD)] == R16_CHANGED_HEAD
-    # the r15 CHANGED_THIS_ROUND tuple, frozen at the r16 pin commit
-    changed_r15 = (
-        "ann_two_level_search",
-        "ann_two_level_assign",
-        "streaming_ann_index_requantize",
-        "streaming_ann_search",
-        "streaming_ann_index_delete",
-        "streaming_ann_index_upsert",
-        "streaming_ann_index_compact",
-        "streaming_ann_index_update",
-        "streaming_recommend_candidates",
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 15:
-            continue  # the pin froze on the r01..r15 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    head_pool = tuple(n for n in changed_r15 if n not in set(R15_WINDOW))
-    never_checked = tuple(n for n in head_pool if n not in last)
-    replanned = tuple(n for n in head_pool if n in last)
-    assert never_checked == (
-        "ann_two_level_search",
-        "ann_two_level_assign",
-        "streaming_ann_index_requantize",
-    )
-    assert replanned == ("streaming_ann_index_update",)
-    expect_head = never_checked + replanned
-    assert R16_CHANGED_HEAD == expect_head, (
-        "r16 head deviates from never-checked-first over "
-        "CHANGED_THIS_ROUND(r15) minus R15_WINDOW: "
-        f"{[(a, b) for a, b in zip(R16_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R16_WINDOW if n not in QUERIES]
-    assert not unknown, f"r16 window names unregistered queries: {unknown}"
-    overlap = set(R16_WINDOW) & set(R15_WINDOW)
-    assert not overlap, (
-        f"r16 window repeats r15-window names whose rows are freshest: {overlap}"
-    )
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R16_CHANGED_HEAD) and n not in set(R15_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R16_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R16_CHANGED_HEAD)]
-    )
-    assert R16_WINDOW == expect, (
-        "pinned R16_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R16_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_r17_window_pin():
-    """VERDICT r16 #9: pin the EXACT r17 window at the start of round 17.
-    Recompute it from the stated rule — head = the r16
-    CHANGED_THIS_ROUND tuple minus R16_WINDOW names, ordered
-    never-driver-checked FIRST (the standing r11 rule: never-checked
-    precedes changed): the one query registered mid-round-16 with no
-    driver row in any CORRECTNESS_r* file
-    (streaming_ann_requantize_two_level), then the nineteen
-    changed-but-previously-green names in CHANGED_THIS_ROUND order.
-    Fill = oldest-green-first (last driver round ascending over
-    CORRECTNESS_r01..r16, NAME tie-break, R16_WINDOW names excluded
-    since their r16 rows are freshest) — and assert the pinned tuple
-    matches bit for bit. The r16 CHANGED_THIS_ROUND tuple is reproduced
-    here as a literal because it was reset to () at the same commit that
-    pinned this window."""
-    import glob
-    import json
-    import os
-    import re
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        DRIVER_CHECK_FIRST,
-        DRIVER_WINDOW,
-        QUERIES,
-        R16_WINDOW,
-        R17_CHANGED_HEAD,
-        R17_WINDOW,
-    )
-
-    all_queries()  # populate the registry
-    assert DRIVER_CHECK_FIRST == R17_WINDOW  # the r17 rotation is live
-    assert len(R17_WINDOW) == DRIVER_WINDOW
-    assert len(set(R17_WINDOW)) == len(R17_WINDOW)
-    assert R17_WINDOW[: len(R17_CHANGED_HEAD)] == R17_CHANGED_HEAD
-    # the r16 CHANGED_THIS_ROUND tuple, frozen at the r17 pin commit
-    changed_r16 = (
-        "streaming_ann_index_update",
-        "streaming_ann_index_compact",
-        "streaming_ann_index_upsert",
-        "streaming_ann_index_delete",
-        "streaming_ann_index_requantize",
-        "streaming_ann_requantize_two_level",
-        "streaming_ann_search",
-        "ann_two_level_assign",
-        "ann_two_level_search",
-        "ann_ivf_topk",
-        "ann_ivf_multiprobe_topk",
-        "ivf_pq_topk",
-        "streaming_recommend_candidates",
-        "ann_lsh_topk",
-        "embedding_near_dup_pairs",
-        "streaming_recommend_emit",
-        "streaming_simhash_dedup",
-        "contamination_check",
-        "dedup_canonical_docs",
-        "dedup_components",
-        "dedup_components_lss",
-        "dedup_pipeline_summary",
-        "minhash_jaccard_estimate",
-        "minhash_lsh_dedup",
-        "ngram_jaccard_pairs",
-        "prefix_filter_jaccard_join",
-        "simhash_fingerprint",
-        "simhash_near_dup_pairs",
-        "source_shingle_containment",
-        "bootstrap_mean_ci",
-        "theil_sen_slope_robust",
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd > 16:
-            continue  # the pin froze on the r01..r16 rows
-        with open(path) as f:
-            for name in json.load(f):
-                last[name] = max(last.get(name, 0), rnd)
-    head_pool = tuple(n for n in changed_r16 if n not in set(R16_WINDOW))
-    never_checked = tuple(n for n in head_pool if n not in last)
-    replanned = tuple(n for n in head_pool if n in last)
-    assert never_checked == ("streaming_ann_requantize_two_level",)
-    expect_head = never_checked + replanned
-    assert R17_CHANGED_HEAD == expect_head, (
-        "r17 head deviates from never-checked-first over "
-        "CHANGED_THIS_ROUND(r16) minus R16_WINDOW: "
-        f"{[(a, b) for a, b in zip(R17_CHANGED_HEAD, expect_head) if a != b]}"
-    )
-    unknown = [n for n in R17_WINDOW if n not in QUERIES]
-    assert not unknown, f"r17 window names unregistered queries: {unknown}"
-    overlap = set(R17_WINDOW) & set(R16_WINDOW)
-    assert not overlap, (
-        f"r17 window repeats r16-window names whose rows are freshest: {overlap}"
-    )
-    rest = [
-        n
-        for n in QUERIES
-        if n not in set(R17_CHANGED_HEAD) and n not in set(R16_WINDOW)
-    ]
-    rest.sort(key=lambda n: (last.get(n, 99), n))
-    expect = R17_CHANGED_HEAD + tuple(
-        rest[: DRIVER_WINDOW - len(R17_CHANGED_HEAD)]
-    )
-    assert R17_WINDOW == expect, (
-        "pinned R17_WINDOW deviates from the oldest-green-first rule: "
-        f"{[(a, b) for a, b in zip(R17_WINDOW, expect) if a != b]}"
-    )
-
-
-def test_changed_queries_are_manifested():
-    """VERDICT r9 #3: the rotation pin must be mechanical, not
-    reconstructed by hand at pin time (that slip happened twice — r8's
-    simhash omission, r9's seven stale rows). plans/query_manifest.json
-    freezes every registered query's implementation hash (transitive
-    in-package closure: own source incl. decorators/oracle, every
-    referenced same-module top-level def/constant, and the same across
-    package import edges — see plans/manifest.py) at the round-start
-    tree. Any commit that drifts a query's hash MUST name it in
-    registry.CHANGED_THIS_ROUND in the same commit; the set equality
-    here keeps the tuple exact in both directions, so the r11 window
-    head (CHANGED_THIS_ROUND minus R10_WINDOW) is derived from data."""
-    import json
-
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.manifest import (
-        MANIFEST_PATH,
-        compute_query_hashes,
-    )
-    from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (
-        CHANGED_THIS_ROUND,
-        QUERIES,
-    )
-
-    computed = compute_query_hashes()
-    with open(MANIFEST_PATH) as f:
-        baseline = json.load(f)
-    removed = sorted(n for n in baseline if n not in computed)
-    assert not removed, (
-        f"queries deleted since the manifest froze — refresh it: {removed}"
-    )
-    changed = {n for n, h in computed.items() if baseline.get(n) != h}
-    declared = set(CHANGED_THIS_ROUND)
-    undeclared = sorted(changed - declared)
-    assert not undeclared, (
-        "implementation hash drifted without a CHANGED_THIS_ROUND entry — "
-        "append these names in the SAME commit as the change so the next "
-        f"round's window head stays mechanical: {undeclared}"
-    )
-    stale = sorted(declared - changed)
-    assert not stale, (
-        "CHANGED_THIS_ROUND names queries whose hash matches the frozen "
-        f"manifest (change reverted, or name never drifted): {stale}"
-    )
-    # the static register() scan and the live registry must agree
-    all_queries()
-    assert set(computed) == set(QUERIES), (
-        "static manifest scan and live registry disagree: "
-        f"{sorted(set(computed) ^ set(QUERIES))}"
-    )
 
 
 def test_prefix_filter_recall_dominates_capped_index(spark, sf_dir):
