@@ -9,6 +9,8 @@ paths; Python only via Arrow-vectorized pandas UDFs where built-ins cannot
 express the semantics.
 """
 
+# imported for its side effect: the zip-directory guard (see shipping.py)
+from cqu_bigdata_recommender_system_for_movies_spark import shipping  # noqa: F401
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 
 __all__ = ["get_spark"]

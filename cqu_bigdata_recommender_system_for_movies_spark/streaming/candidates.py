@@ -273,22 +273,21 @@ def score_candidates_batch(
             nearest_cells_udf,
         )
 
+        # explode in the SAME select: a later explode lets Catalyst push
+        # the Generate's inferred size(cells) > 0 filter below the
+        # Project, which copies the UDF into a second ArrowEvalPython
         probed = rounded.select(
             "user_id",
             "interest",
-            nearest_cells_udf(seed_rows, REC_NPROBE)(F.col("interest")).alias(
-                "cells"
-            ),
-        ).withColumn("cell", F.explode("cells"))
+            F.explode(
+                nearest_cells_udf(seed_rows, REC_NPROBE)(F.col("interest"))
+            ).alias("cell"),
+        )
     else:
-        probed = (
-            rounded.crossJoin(F.broadcast(cents))
-            .select(
-                "user_id",
-                "interest",
-                _nearest_cells("interest", REC_NPROBE).alias("cells"),
-            )
-            .withColumn("cell", F.explode("cells"))
+        probed = rounded.crossJoin(F.broadcast(cents)).select(
+            "user_id",
+            "interest",
+            F.explode(_nearest_cells("interest", REC_NPROBE)).alias("cell"),
         )
     # items carry ONE cell each and users probe distinct cells, so the
     # cell join emits each (user, item) candidate at most once. r16: the

@@ -1534,3 +1534,49 @@ def test_arrow_assignment_path_is_wired(spark, sf_dir):
     _, item_dim, _ = cand.build_candidate_index(profiles)
     check(cand.score_candidates_batch(users, ccents, item_dim),
           "score_candidates_batch")
+
+
+def test_serving_probe_crosses_into_python_once(spark, sf_dir):
+    """Each serving batch must make ONE Python round trip for its probe.
+    Exploding the UDF's array in a later projection lets Catalyst push the
+    Generate's inferred `size(cells) > 0 AND isnotnull(cells)` filter
+    below the Project, which copies the UDF into a second ArrowEvalPython
+    node. Both index sides are checkpointed so every ArrowEvalPython in
+    the plan belongs to the per-batch probe; the batches carry no LIMIT,
+    which would stop the pushdown and hide the copy."""
+    import pyspark.sql.functions as F
+
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+        ann_index as ai,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+        ann_search as asrch,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+        candidates as cand,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+        item_profiles,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.tables import load
+
+    def arrow_nodes(df):
+        return _plan(df).count("ArrowEvalPython")
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
+    )
+    cents = ai._ann_cents_relation(emb, ai.derive_ann_cells(sf_dir))
+    index_df = ai.assign_batch(emb, cents).select(
+        F.col("vec_id").alias("neighbor_id"), "cell"
+    ).join(emb.select(F.col("vec_id").alias("neighbor_id"),
+                      F.col("e").alias("ne")), "neighbor_id"
+           ).localCheckpoint(eager=True)
+    assert arrow_nodes(asrch.score_query_batch(emb, cents, index_df)) == 1
+
+    profiles = item_profiles(spark, sf_dir).localCheckpoint(eager=True)
+    ccents, item_dim, _ = cand.build_candidate_index(profiles)
+    users = profiles.select(
+        F.col("item_ref").alias("user_id"), F.col("profile").alias("interest")
+    )
+    assert arrow_nodes(cand.score_candidates_batch(users, ccents, item_dim)) == 1
