@@ -1,4 +1,4 @@
-"""Arrow-vectorized nearest-quantizer-cell assignment (r16 optimization).
+"""Arrow-vectorized nearest-quantizer-cell assignment and serving kernels.
 
 The flat coarse-quantizer assignment used to run as an interpreted
 higher-order fold per row (`_nearest_cells` — a `transform` over the
@@ -39,11 +39,19 @@ the physical plan stays independent of quantizer width — the same
 property the single-row broadcast `__cents` relation pinned
 (test_ivf_assign_plan_size_independent_of_cells), now without the
 per-row interpreted fold.
+
+The two serving kernels (`candidate_scores_udf`, `ann_topk_udf`) apply
+the same replay to a whole request batch against a broadcast-sized
+index the driver holds as numpy arrays (`index_arrays`): probe the
+nearest cells, gather those cells' index rows, and fold the cosine
+``dot / (qn * nn + EPS)`` per (row, candidate) pair with the identical
+op order. The batch then needs no join, exchange or window: one
+narrow stage replaces the cell-key join and the per-key ranking.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable, Iterator, Tuple
 
 import pandas as pd
 
@@ -89,6 +97,25 @@ def _spark_double_keys(cos):
     return np.where(bits < 0, bits ^ np.int64(0x7FFFFFFFFFFFFFFF), bits)
 
 
+def _row_norms(M):
+    """sqrt of the left fold ``acc += m[d] * m[d]`` per row (d ascending,
+    from 0.0) — the JVM's ``sqrt(dot(v, v))``, bit for bit."""
+    import numpy as np
+
+    acc = np.zeros(M.shape[0])
+    for d in range(M.shape[1]):
+        col = M[:, d]
+        acc += col * col
+    return np.sqrt(acc)
+
+
+def _stack(s: pd.Series, dim: int):
+    """The vectors of a non-null Series as an (n, dim) float matrix."""
+    import numpy as np
+
+    return np.vstack(s.to_numpy()) if len(s) else np.zeros((0, dim))
+
+
 def _seed_arrays(seeds):
     import numpy as np
 
@@ -108,12 +135,7 @@ def topk_cells_np(E, cids, cmat, ncs, k):
 
     n, dim = E.shape
     m = cmat.shape[0]
-    # row norm: the same left fold acc += e[d]*e[d], then sqrt
-    ne = np.zeros(n)
-    for d in range(dim):
-        col = E[:, d]
-        ne += col * col
-    ne = np.sqrt(ne)
+    ne = _row_norms(E)
     # dots: acc += e[d] * c[d] per (row, cell), d ascending
     dots = np.zeros((n, m))
     for d in range(dim):
@@ -150,11 +172,7 @@ def nearest_cells_udf(seeds, k: int) -> Callable[..., Column]:
                 yield pd.Series([], dtype=object)
                 continue
             valid = s.notna()
-            E = (
-                np.vstack(s[valid].to_numpy())
-                if valid.any()
-                else np.zeros((0, cmat.shape[1]))
-            )
+            E = _stack(s[valid], cmat.shape[1])
             top = topk_cells_np(E, cids, cmat, ncs, kk)
             vals = np.empty(len(s), dtype=object)
             vals[:] = None
@@ -179,17 +197,150 @@ def nearest_cell_udf(seeds) -> Callable[..., Column]:
                 yield pd.Series([], dtype="Int32")
                 continue
             valid = s.notna()
-            E = (
-                np.vstack(s[valid].to_numpy())
-                if valid.any()
-                else np.zeros((0, cmat.shape[1]))
-            )
+            E = _stack(s[valid], cmat.shape[1])
             top = topk_cells_np(E, cids, cmat, ncs, 1)
             out = pd.Series([None] * len(s), dtype="Int32")
             out[np.asarray(valid)] = top[:, 0].astype("int32")
             yield out
 
     return F.pandas_udf(_top1, "int")
+
+
+def index_arrays(table, id_col: str, vec_col: str):
+    """A collected index (`pyarrow.Table` with ``id_col``, ``cell`` and
+    the vector column ``vec_col``) as cell-sorted numpy arrays
+    ``(ids, cells, V, norms)``; ``norms`` is the JVM's
+    ``sqrt(dot(v, v))`` replayed by `_row_norms`."""
+    import numpy as np
+
+    ids = table.column(id_col).to_numpy().astype(np.int64)
+    cells = table.column("cell").to_numpy().astype(np.int64)
+    vecs = table.column(vec_col).combine_chunks()
+    flat = vecs.flatten().to_numpy().astype(np.float64)
+    V = flat.reshape(len(vecs), -1) if len(vecs) else flat.reshape(0, 0)
+    order = np.argsort(cells, kind="stable")
+    V = V[order]
+    return ids[order], cells[order], V, _row_norms(V)
+
+
+def _probe_pairs(E, seed_arrays, nprobe, cells):
+    """(rows, pos): one pair per (row of E, index row whose cell is among
+    that row's ``nprobe`` nearest), rows ascending. ``cells`` is the
+    cell-sorted column of `index_arrays`."""
+    import numpy as np
+
+    top = topk_cells_np(E, *seed_arrays, nprobe)
+    lo = np.searchsorted(cells, top, "left").ravel()
+    lens = np.searchsorted(cells, top, "right").ravel() - lo
+    rows = np.repeat(np.repeat(np.arange(len(E)), top.shape[1]), lens)
+    pos = np.arange(lens.sum()) + np.repeat(lo - (np.cumsum(lens) - lens), lens)
+    return rows, pos
+
+
+def _pair_cosines(E, rows, V, norms, pos):
+    """``dot / (qn * nn + EPS)`` per pair, the dot a left fold over
+    ascending d from 0.0 — the JVM's cosine, bit for bit."""
+    import numpy as np
+
+    dots = np.zeros(len(rows))
+    if len(rows):
+        for d in range(E.shape[1]):
+            dots += E[rows, d] * V[pos, d]
+    return dots / (_row_norms(E)[rows] * norms[pos] + EPS)
+
+
+def candidate_scores_np(E, seed_arrays, index, nprobe):
+    """(rows, item ids, cosines) of every candidate of every row of E:
+    the items of its ``nprobe`` nearest cells, unranked."""
+    ids, cells, V, norms = index
+    rows, pos = _probe_pairs(E, seed_arrays, nprobe, cells)
+    return rows, ids[pos], _pair_cosines(E, rows, V, norms, pos)
+
+
+def candidate_scores_udf(seeds, index, nprobe: int, id_type: str):
+    """Pandas UDF mapping an interest-vector column to the row's candidate
+    set, ``array<struct<item_ref, cos>>``: the probe, cell fetch and
+    cosine of the cell-key join, with the JVM's fold order. Ranking is
+    left to the caller so Spark's own ``round`` decides score ties.
+
+    ``seeds``: the quantizer rows `nearest_cells_udf` takes; ``index``:
+    `index_arrays` of the candidate index. A null vector maps to NULL."""
+    _ship()
+    seed_arrays = _seed_arrays(seeds)
+    dim = seed_arrays[1].shape[1]
+    pp = int(nprobe)
+
+    def _scores(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        import numpy as np
+
+        for s in it:
+            valid = s.notna().to_numpy()
+            rows, refs, cos = candidate_scores_np(
+                _stack(s[valid], dim), seed_arrays, index, pp
+            )
+            bounds = np.searchsorted(rows, np.arange(int(valid.sum()) + 1))
+            vals = np.empty(len(s), dtype=object)
+            for i, a, b in zip(np.flatnonzero(valid), bounds[:-1], bounds[1:]):
+                vals[i] = [
+                    {"item_ref": r, "cos": c}
+                    for r, c in zip(refs[a:b].tolist(), cos[a:b].tolist())
+                ]
+            yield pd.Series(vals)
+
+    return F.pandas_udf(
+        _scores, f"array<struct<item_ref:{id_type},cos:double>>"
+    )
+
+
+def ann_topk_np(E, qids, seed_arrays, index, nprobe, k):
+    """Per row of E, the ids of its top-``k`` index rows among the
+    ``nprobe`` nearest cells, its own id (``qids``) excluded: cosine
+    DESC by Spark's double comparator (`_spark_double_keys`), ties to
+    the smaller id. Returns a list of int64 arrays, one per row."""
+    import numpy as np
+
+    ids, cells, V, norms = index
+    rows, pos = _probe_pairs(E, seed_arrays, nprobe, cells)
+    keep = ids[pos] != qids[rows]
+    rows, pos = rows[keep], pos[keep]
+    key = _spark_double_keys(_pair_cosines(E, rows, V, norms, pos))
+    # ~key reverses the order without the overflow of -key
+    order = np.lexsort((ids[pos], ~key, rows))
+    rows, pos = rows[order], pos[order]
+    starts = np.searchsorted(rows, np.arange(len(E) + 1))
+    top = np.arange(len(rows)) - starts[rows] < k
+    return np.split(ids[pos[top]], np.searchsorted(rows[top], np.arange(1, len(E))))
+
+
+def ann_topk_udf(seeds, index, nprobe: int, k: int, id_type: str):
+    """Pandas UDF over (query id, query vector) columns returning the
+    ``array<id>`` of `ann_topk_np`: the probe, cell fetch, cosine and
+    per-query top-k of the cell-key join + window, in one call. A null
+    id or vector maps to NULL."""
+    _ship()
+    seed_arrays = _seed_arrays(seeds)
+    dim = seed_arrays[1].shape[1]
+    pp, kk = int(nprobe), int(k)
+
+    def _topk(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+        import numpy as np
+
+        for qid, s in it:
+            valid = (qid.notna() & s.notna()).to_numpy()
+            top = ann_topk_np(
+                _stack(s[valid], dim),
+                qid[valid].to_numpy().astype(np.int64),
+                seed_arrays,
+                index,
+                pp,
+                kk,
+            )
+            vals = np.empty(len(s), dtype=object)
+            for i, ids in zip(np.flatnonzero(valid), top):
+                vals[i] = ids.tolist()
+            yield pd.Series(vals)
+
+    return F.pandas_udf(_topk, f"array<{id_type}>")
 
 
 def two_level_topk_np(E, rep_arrays, cell_arrays, probe, k):
@@ -210,11 +361,7 @@ def two_level_topk_np(E, rep_arrays, cell_arrays, probe, k):
     n, dim = E.shape
     n_reps = rmat.shape[0]
     m = cmat.shape[0]
-    ne = np.zeros(n)
-    for d in range(dim):
-        col = E[:, d]
-        ne += col * col
-    ne = np.sqrt(ne)
+    ne = _row_norms(E)
     # level 1: full (n, n_reps) scoring — the sqrt-width term
     rdots = np.zeros((n, n_reps))
     for d in range(dim):
@@ -294,11 +441,7 @@ def two_level_cells_udf(rep_rows, cell_rows, probe: int, k: int):
                 yield pd.Series([], dtype=object)
                 continue
             valid = s.notna()
-            E = (
-                np.vstack(s[valid].to_numpy())
-                if valid.any()
-                else np.zeros((0, cell_arrays[1].shape[1]))
-            )
+            E = _stack(s[valid], cell_arrays[1].shape[1])
             top = two_level_topk_np(E, rep_arrays, cell_arrays, pp, kk)
             vals = np.empty(len(s), dtype=object)
             vals[:] = None
@@ -324,11 +467,7 @@ def two_level_cell_udf(rep_rows, cell_rows, probe: int):
                 yield pd.Series([], dtype="Int32")
                 continue
             valid = s.notna()
-            E = (
-                np.vstack(s[valid].to_numpy())
-                if valid.any()
-                else np.zeros((0, cell_arrays[1].shape[1]))
-            )
+            E = _stack(s[valid], cell_arrays[1].shape[1])
             top = two_level_topk_np(E, rep_arrays, cell_arrays, pp, 1)
             out = pd.Series([None] * len(s), dtype="Int32")
             # ADVICE r16: the -1 unfilled sentinel (a vector whose probed

@@ -52,28 +52,39 @@ def fit_als(train: DataFrame, rank: int = 10, max_iter: int = 10, reg: float = 0
     return als.fit(train)
 
 
-# The materialized 80/20 split, keyed by (applicationId, sf_dir) like
-# the dedup family's checkpoint caches (a stopped context invalidates
-# its entries by key).
+# The materialized 80/20 split and the model fitted on it, both keyed by
+# (applicationId, sf_dir) like the dedup family's checkpoint caches: a
+# restarted context misses them instead of reading blocks or a model
+# bound to the dead one. Every lookup first drops the other
+# applications' entries from both caches.
 _SPLIT_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
-def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame, DataFrame]:
-    """Seeded 80/20 split + fitted model, cached per sf_dir.
+def _drop_other_apps(app_id: str) -> None:
+    """Forget the split and split-model entries of every application but
+    `app_id` (the split model shares its split's key)."""
+    for key in [k for k in _SPLIT_CACHE if k[0] != app_id]:
+        del _SPLIT_CACHE[key]
+        _MODEL_CACHE.pop(key, None)
 
-    r17 (VERDICT r16 #5, guide §5): the split is MATERIALIZED once
-    (serialized localCheckpoint — the r11 rule for corpus-sized
-    checkpoints) instead of re-running the ratings join + per-partition
-    sample on every action: the fit, the two conservation counts and
-    the RMSE evaluation each re-evaluated randomSplit's lineage
-    (measured ~5 s of the 11.4 s query at sf0.1; one materialization
-    costs ~2 s and every consumer reads blocks). randomSplit is seeded
-    and partition-deterministic, so the materialized rows are the SAME
-    rows each action saw — results bit-identical — and the conservation
-    anchor stays a real check: train and test are still independently
-    produced by randomSplit (neither derives from the other), the
-    checkpoint only pins WHERE they are read from."""
+
+def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame, DataFrame]:
+    """Seeded 80/20 split + fitted model, cached per (application, sf_dir).
+
+    The split is MATERIALIZED once (serialized localCheckpoint, the rule
+    for corpus-sized checkpoints) instead of re-running the ratings join
+    + per-partition sample on every action: the fit, the two
+    conservation counts and the RMSE evaluation each re-evaluated
+    randomSplit's lineage (measured ~5 s of the 11.4 s query at sf0.1;
+    one materialization costs ~2 s and every consumer reads blocks).
+    randomSplit is seeded and partition-deterministic, so the
+    materialized rows are the SAME rows each action saw — results
+    bit-identical — and the conservation anchor stays a real check:
+    train and test are still independently produced by randomSplit
+    (neither derives from the other), the checkpoint only pins WHERE
+    they are read from."""
     key = (spark.sparkContext.applicationId, sf_dir)
+    _drop_other_apps(key[0])
     if key not in _SPLIT_CACHE:
         from pyspark import StorageLevel
 
@@ -88,10 +99,9 @@ def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame,
             ),
         )
     train, test = _SPLIT_CACHE[key]
-    mkey = (sf_dir, "split80")
-    if mkey not in _MODEL_CACHE:
-        _MODEL_CACHE[mkey] = fit_als(train)
-    return _MODEL_CACHE[mkey], train, test
+    if key not in _MODEL_CACHE:
+        _MODEL_CACHE[key] = fit_als(train)
+    return _MODEL_CACHE[key], train, test
 
 
 def als_rmse_detail(spark: SparkSession, sf_dir: str) -> DataFrame:

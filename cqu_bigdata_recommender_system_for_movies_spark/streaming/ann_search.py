@@ -11,21 +11,28 @@ Shape, end to end:
   update/compact/upsert/delete loops produce — vectors stored
   cell-clustered, the classic IVF layout;
 - QUERY vectors arrive as micro-batches (a staged file stream); each
-  arriving query is assigned map-side to its SEARCH_NPROBE nearest
-  quantizer cells (the shared `_nearest_cells` fold over the broadcast
-  centroid row — no corpus-sized exchange on the query side), exploded
-  to one row per probed cell;
-- candidates = the probed cells' index rows, fetched ON THE CELL KEY —
-  a broadcast hash join while the index fits, the SMJ-on-bucketed-
-  files layout past that (the same two-regime story as
-  streaming/candidates.py; each corpus vector lives in exactly one
-  cell, so a candidate appears at most once per query);
+  arriving query probes its SEARCH_NPROBE nearest quantizer cells;
+- candidates = the probed cells' index rows (each corpus vector lives
+  in exactly one cell, so a candidate appears at most once per query);
 - exact cosine over the candidates (the JVM fold from
   operators/vectors.py — bit-identical to the oracle's
   list_dot_product form), per-query top-SEARCH_TOPK (cosine DESC,
   neighbor_id ASC), self-matches excluded;
 - per batch the results append to the staging sink; queries are
   disjoint across batches, so the final snapshot is their union.
+
+The index's size picks the serving shape of a batch, and nothing else
+does. When the planner would broadcast the index anyway (its
+optimized-plan size is at most spark.sql.autoBroadcastJoinThreshold)
+the batch collects the index to Arrow — the same fresh table — and
+runs as ONE narrow Spark stage: an Arrow UDF (functions/nearcell.py
+`ann_topk_udf`) probes, fetches, scores and ranks, and posexplode gives
+the rank; no join, exchange or window. Past that size the queries are
+probed map-side, joined to the index ON THE CELL KEY (the SMJ-on-
+bucketed-files layout) and ranked by a row_number window — the only
+path for an index the driver cannot hold, and the reference the kernel
+is tested against bit for bit (the same two-regime story as
+streaming/candidates.py).
 
 The DuckDB oracle replays the whole pipeline — quantizer, per-query
 nprobe cells, one-cell-per-corpus-vector assignment, cell-key
@@ -75,16 +82,51 @@ ANN_SEARCH_TABLE = "spark_graft_ann_search_index"
 N_SEARCH_SLICES = 2  # staged query-arrival batches
 
 
+def _broadcast_sized(df: DataFrame) -> bool:
+    """True when the planner would broadcast `df` into a join: its
+    optimized-plan size estimate is at most autoBroadcastJoinThreshold
+    (-1 disables broadcasting, and so this)."""
+    jdf = df._jdf  # noqa: SLF001
+    size = int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    conf = df.sparkSession._jsparkSession.sessionState().conf()  # noqa: SLF001
+    return size <= conf.autoBroadcastJoinThreshold()
+
+
 def score_query_batch(
     batch_df: DataFrame, cents: DataFrame, index_df: DataFrame
 ) -> DataFrame:
     """(query_id, rank, neighbor_id): one micro-batch of query vectors
-    answered from the index. Map-side nprobe cell assignment on the
-    query side (the Arrow-vectorized twin of the fold when the centroid
-    relation carries its seed list — r16, functions/nearcell.py);
-    candidates fetched on the cell key; exact cosine ranking inside the
-    candidate set."""
+    (vec_id, e) answered from the index (neighbor_id, cell, ne) — the
+    top SEARCH_TOPK by exact cosine (DESC, ties to the smaller
+    neighbor_id) among the SEARCH_NPROBE nearest cells, self excluded.
+
+    Precondition: query ids are distinct within `batch_df`. The kernel
+    path ranks each row on its own; the join path's window would pool
+    rows that share an id.
+
+    When the planner would broadcast the index anyway (`_broadcast_sized`)
+    and the quantizer carries its seed rows, the index is collected to
+    Arrow on every batch — the same fresh table the join reads — and
+    `ann_topk_udf` probes, fetches, scores and ranks in one narrow
+    stage; posexplode gives the rank. Otherwise the query side is probed
+    map-side, joined to the index on the cell key and ranked by a
+    row_number window: the path for an index the driver cannot hold."""
     seed_rows = getattr(cents, "_sg_seeds", None)
+    if seed_rows is not None and _broadcast_sized(index_df):
+        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+            ann_topk_udf,
+            index_arrays,
+        )
+
+        index = index_arrays(
+            index_df.select("neighbor_id", "cell", "ne").toArrow(), "neighbor_id", "ne"
+        )
+        id_type = index_df.schema["neighbor_id"].dataType.simpleString()
+        top = ann_topk_udf(seed_rows, index, SEARCH_NPROBE, SEARCH_TOPK, id_type)
+        return batch_df.select(
+            F.col("vec_id").alias("query_id"),
+            F.posexplode(top(F.col("vec_id"), F.col("e"))).alias("pos", "neighbor_id"),
+        ).select("query_id", (F.col("pos") + 1).alias("rank"), "neighbor_id")
     if seed_rows is not None:
         from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
             nearest_cells_udf,
@@ -103,11 +145,10 @@ def score_query_batch(
             F.col("e").alias("qe"),
             F.explode(_nearest_cells("e", SEARCH_NPROBE)).alias("cell"),
         )
-    # r16 (guide §2.3): both norms are join-invariant — fold them once
-    # per side BELOW the cell join instead of re-folding the 64-wide
-    # arrays inside the per-candidate cosine (projects don't collapse
-    # across the join, so each side's norm is evaluated once per row;
-    # the identical doubles keep the ranking bit-identical).
+    # both norms are join-invariant: fold them once per side BELOW the
+    # cell join instead of re-folding the 64-wide arrays inside the
+    # per-candidate cosine (the identical doubles keep the ranking
+    # bit-identical)
     probes = probes.withColumn("qn", F.sqrt(dot("qe", "qe")))
     indexed = index_df.withColumn("nn", F.sqrt(dot("ne", "ne")))
     cands = probes.join(indexed, "cell").filter(
@@ -191,9 +232,10 @@ def score_query_batch(
     f"{QUERY_REM}, {N_SEARCH_SLICES} staged arrival batches) are "
     f"assigned map-side to their {SEARCH_NPROBE} nearest quantizer "
     "cells and answered with an exact cosine "
-    f"top-{SEARCH_TOPK} over the probed cells' candidates (cell-key "
-    "fetch — broadcast under the ceiling, SMJ-on-bucketed-files past "
-    "it; self-matches excluded). Returns (query_id, rank, "
+    f"top-{SEARCH_TOPK} over the probed cells' candidates (one Arrow "
+    "UDF over the collected index while it is broadcast-sized, a "
+    "cell-key SMJ on the bucketed files past it; self-matches "
+    "excluded). Returns (query_id, rank, "
     "neighbor_id); the oracle replays the full pruned pipeline, so the "
     "served answer is exact-checked row by row.",
 )

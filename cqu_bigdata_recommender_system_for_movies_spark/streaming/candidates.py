@@ -20,20 +20,30 @@ cells nearest their interest vector.
   a catalog COUNT on BOTH engines — shipped as a single-row broadcast
   relation; production: sampled k-means centroids, equally
   driver-resident);
-- per micro-batch, each updated user's (rounded) interest vector is
-  assigned map-side to its REC_NPROBE nearest cells (multiprobe, the
-  same recall dial tools/probe_ivf_multiprobe.py curves offline);
-- scoring joins users to items ON THE CELL KEY — per-batch work drops
-  from users x catalog to users x ~(REC_NPROBE x sqrt(catalog)),
-  and the catalog side stays a broadcast dim while it fits (beyond
-  that, the cell key is exactly the hash-join key you'd shuffle on).
+- per micro-batch, each updated user's (rounded) interest vector
+  probes its REC_NPROBE nearest cells (multiprobe, the same recall dial
+  tools/probe_ivf_multiprobe.py curves offline) and is scored only
+  against those cells' items — per-batch work drops from users x
+  catalog to users x ~(REC_NPROBE x sqrt(catalog)).
 
-Everything downstream (cosine, 6-dp rounding, per-user top-10 window,
-append sink, latest-batch snapshot) is byte-identical to the full
-loop's proven pipeline, so the two queries differ ONLY in the candidate
-set. The DuckDB oracle replays the complete fold + quantizer + pruned
-scoring, making the approximation itself exact-checked: the engine must
-prune to precisely the cells the oracle computes.
+The catalog COUNT picks one of two serving shapes, by size alone:
+
+- up to REC_BROADCAST_MAX_ITEMS the index is collected to the driver
+  once, at build time, and a batch is ONE narrow Spark stage: an Arrow
+  UDF (functions/nearcell.py `candidate_scores_udf`) probes, fetches
+  and folds the cosines with the JVM's op order, and Spark's own
+  round(., 6), array_sort, slice and posexplode rank them — no join,
+  exchange or window;
+- past it the index is a cell-bucketed table, and a batch joins its
+  probed users to the items ON THE CELL KEY (the bucketed side never
+  reshuffles) and ranks with a row_number window. This join path is
+  the bit-for-bit reference the kernel is tested against.
+
+Either way the cosine, 6-dp rounding and per-user top-10 order match
+the full loop's proven pipeline, so the two queries differ ONLY in the
+candidate set. The DuckDB oracle replays the complete fold + quantizer +
+pruned scoring, making the approximation itself exact-checked: the
+engine must prune to precisely the cells the oracle computes.
 """
 
 from __future__ import annotations
@@ -217,11 +227,14 @@ def build_candidate_index(
 ) -> tuple[DataFrame, DataFrame, int]:
     """(cents, item_dim, n_items): the full offline half of the candidate
     index. One catalog COUNT sizes the quantizer width (derive_rec_cells,
-    unless pinned) and picks the join strategy: a broadcast-hinted
-    checkpoint while the catalog fits REC_BROADCAST_MAX_ITEMS; beyond it,
-    a cell-bucketed parquet table (a persistent artifact — the index IS
-    the deliverable, rebuilt per catalog refresh and reused across every
-    micro-batch, overwritten in place on rebuild)."""
+    unless pinned) and picks the serving regime. While the catalog fits
+    REC_BROADCAST_MAX_ITEMS the index is a broadcast-hinted checkpoint,
+    collected once to the driver and tagged onto `item_dim` as numpy
+    arrays (`_sg_items`, the `_sg_seeds` idiom) for the one-stage serving
+    kernel. Beyond it, a cell-bucketed parquet table (a persistent
+    artifact — the index IS the deliverable, rebuilt per catalog refresh
+    and reused across every micro-batch, overwritten in place on
+    rebuild)."""
     import os
     import tempfile
 
@@ -230,14 +243,24 @@ def build_candidate_index(
     if n_cells is None:
         n_cells = derive_rec_cells(n_items)
     cents = _centroid_relation(profiles, n_cells)
-    # r16 (guide §2.3): fold each item's norm ONCE into the index
-    # artifact — the per-batch cosine then runs one fold per candidate
-    # pair instead of three (same doubles, bit-identical scores).
+    # each item's norm folds ONCE into the index artifact: the join
+    # path's per-pair cosine is then one fold instead of three (same
+    # doubles, bit-identical scores)
     index = item_cell_assignments(profiles, cents).withColumn(
         "pnorm", F.sqrt(dot("profile", "profile"))
     )
     if n_items <= _rec_broadcast_max_items():
-        item_dim = F.broadcast(index.localCheckpoint(eager=True))
+        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+            index_arrays,
+        )
+
+        held = index.localCheckpoint(eager=True)
+        item_dim = F.broadcast(held)
+        item_dim._sg_items = index_arrays(  # noqa: SLF001 — engine-internal tag
+            held.select("item_ref", "cell", "profile").toArrow(),
+            "item_ref",
+            "profile",
+        )
     else:
         n_buckets = min(REC_INDEX_MAX_BUCKETS, n_cells)
         loc = os.path.join(
@@ -258,17 +281,58 @@ def build_candidate_index(
 def score_candidates_batch(
     batch_df: DataFrame, cents: DataFrame, item_dim: DataFrame, k: int = 10
 ) -> DataFrame:
-    """One micro-batch of the pruned scoring pipeline: fold emissions ->
-    6-dp round -> map-side cell probe (REC_NPROBE nearest) -> cell-key
-    join to the index -> cosine -> top-k per user. Shared verbatim by the
-    registered query and the scale probe so the measured plan IS the
-    shipped plan."""
+    """One micro-batch of the pruned scoring pipeline: (user_id, item_ref,
+    score, rnk), the top-k of each user's REC_NPROBE nearest cells by
+    6-dp rounded cosine (score DESC, item_ref ASC). Shared verbatim by
+    the registered query and the scale probe so the measured plan IS the
+    shipped plan.
+
+    Precondition: one row per user_id in `batch_df` (the update-mode
+    interest fold emits exactly that). The kernel path ranks each row on
+    its own; the join path's window would pool duplicate rows.
+
+    With a broadcast-sized index (`item_dim` carries `_sg_items`) the
+    batch is one narrow stage: `candidate_scores_udf` probes, fetches and
+    scores, then Spark's own round(., 6), array_sort on (-score,
+    item_ref), slice(k) and posexplode rank. Past the ceiling the
+    interest vector is probed map-side, joined to the bucketed index on
+    the cell key and ranked by a row_number window."""
     rounded = batch_df.withColumn(
         "interest", F.transform("interest", lambda x: F.round(x, 6))
     )
     seed_rows = getattr(cents, "_sg_seeds", None)
+    items = getattr(item_dim, "_sg_items", None)
+    if seed_rows is not None and items is not None:
+        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+            candidate_scores_udf,
+        )
+
+        ref_type = item_dim.schema["item_ref"].dataType.simpleString()
+        scores = candidate_scores_udf(seed_rows, items, REC_NPROBE, ref_type)
+        ranked = F.slice(
+            F.array_sort(
+                F.transform(
+                    scores(F.col("interest")),
+                    lambda c: F.struct(
+                        (-F.round(c["cos"], 6)).alias("neg"),
+                        c["item_ref"].alias("item_ref"),
+                    ),
+                )
+            ),
+            1,
+            k,
+        )
+        # posexplode in the UDF's own select: its input is then no bare
+        # attribute, so no inferred size() filter copies the UDF
+        return rounded.select(
+            "user_id", F.posexplode(ranked).alias("pos", "c")
+        ).select(
+            "user_id",
+            F.col("c.item_ref").alias("item_ref"),
+            (-F.col("c.neg")).alias("score"),
+            (F.col("pos") + 1).alias("rnk"),
+        )
     if seed_rows is not None:
-        # r16: Arrow-vectorized twin of the probe fold (nearcell.py)
         from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
             nearest_cells_udf,
         )
@@ -290,11 +354,11 @@ def score_candidates_batch(
             F.explode(_nearest_cells("interest", REC_NPROBE)).alias("cell"),
         )
     # items carry ONE cell each and users probe distinct cells, so the
-    # cell join emits each (user, item) candidate at most once. r16: the
+    # cell join emits each (user, item) candidate at most once. The
     # user-side norm folds once per user, the item-side norm rides the
     # prebuilt index (pnorm) — cosine per pair is then a single fold
-    # over the identical doubles (bit-identical scores; a dim built
-    # without pnorm falls back to the inline three-fold cosine).
+    # over the identical doubles (a dim built without pnorm falls back
+    # to the inline three-fold cosine).
     probed = probed.withColumn("inorm", F.sqrt(dot("interest", "interest")))
     if "pnorm" in item_dim.columns:
         score = F.round(
@@ -474,7 +538,8 @@ def item_cell_assignments(
     f"assigned map-side to its {REC_NPROBE} nearest quantizer cells "
     "(single-row broadcast centroid relation — the _ivf_assign_cells "
     "pattern), scored by cosine ONLY against the catalog items assigned "
-    "to those cells (cell-key join, broadcast dim), top-10 per user, "
+    "to those cells (one Arrow UDF over the driver-held index while the "
+    "catalog is broadcast-sized, a cell-key join past it), top-10 per user, "
     "appended to a recommendations table. Quantizer width = next power "
     "of two >= sqrt(catalog), derived from the catalog COUNT identically "
     "on both engines (derive_rec_cells / _rec_cells_sql), so per-batch "

@@ -1348,15 +1348,24 @@ def test_bench_inline_rotation_walks_the_map():
     assert len(union) > 45 * 2
 
 
+def _assert_one_narrow_stage(plan: str) -> None:
+    """A serving batch against a broadcast-sized index: no exchange of
+    any kind, no join, no window, and exactly one Python round trip."""
+    for node in ("Exchange", "Join", "CartesianProduct", "Window"):
+        assert node not in plan, f"{node} in the serving plan:\n{plan[:2000]}"
+    assert plan.count("ArrowEvalPython") == 1, plan[:2000]
+
+
 def test_candidate_loop_plan_shape(spark):
     """The candidate-pruned recommender's per-batch scoring plan
     (streaming/candidates.py): (a) the quantizer centroids ride the
     single-row broadcast relation, so plan size is independent of the
     cell count (the same guarantee test_ivf_assign_plan_size_... pins
-    for the offline family); (b) the cell-key candidate join is a
-    broadcast hash join, never a cartesian product — the whole point
-    is that scoring fans out users x cell-local items, not
-    users x catalog."""
+    for the offline family); (b) under the broadcast ceiling a batch is
+    one narrow stage (`_assert_one_narrow_stage`); (c) past it, the
+    cell-key candidate join is a sort-merge join on the bucketed index,
+    never a cartesian product — the whole point is that scoring fans
+    out users x cell-local items, not users x catalog."""
     from pyspark.sql import functions as F
 
     import cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates as cand
@@ -1380,8 +1389,8 @@ def test_candidate_loop_plan_shape(spark):
 
     # batch twin of the foreachBatch scoring plan (the SHARED
     # score_candidates_batch — the shipped plan, not a reconstruction):
-    # under the broadcast ceiling, probed users joined to cell-local
-    # items must compile to a broadcast hash join on `cell`
+    # under the broadcast ceiling the probe, fetch, cosine and top-k run
+    # in one Arrow UDF over the batch
     users = spark.range(50).select(
         F.col("id").alias("user_id"),
         F.array(*[(F.col("id") % (i + 2)).cast("double") for i in range(5)]).alias(
@@ -1391,9 +1400,7 @@ def test_candidate_loop_plan_shape(spark):
     cents, item_dim, n_items = cand.build_candidate_index(profiles)
     assert n_items == 400
     scored = cand.score_candidates_batch(users, cents, item_dim)
-    physical = scored._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in physical
-    assert "BroadcastHashJoin" in physical, physical[:2000]
+    _assert_one_narrow_stage(_plan(scored))
 
     # (c) past the broadcast ceiling (VERDICT r12 #4) the index persists
     # as a cell-BUCKETED table. With the fixture's 400 items the planner
@@ -1448,6 +1455,60 @@ def test_candidate_loop_plan_shape(spark):
         "dim side is not reading the bucketed table layout:\n"
         + physical2[:2000]
     )
+
+
+def test_ann_serving_plan_regimes(spark, sf_dir):
+    """score_query_batch picks its regime from the index's size alone.
+    Under spark.sql.autoBroadcastJoinThreshold the batch is one narrow
+    stage; with both broadcast thresholds at -1 (an index the planner
+    would not broadcast) it keeps the cell-key sort-merge join and the
+    row_number window."""
+    import os
+    import shutil
+    import tempfile
+
+    import pyspark.sql.functions as F
+
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+        ann_index as ai,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+        ann_search as asrch,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
+    )
+    cents = ai._ann_cents_relation(emb, ai.derive_ann_cells(sf_dir))
+    tbl = "spark_graft_ann_serving_plan_test"
+    loc = os.path.join(tempfile.gettempdir(), "spark_graft_tables", tbl)
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    shutil.rmtree(loc, ignore_errors=True)
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        ai.apply_index_batch(spark, tbl, loc, emb, cents, 0, 16, carry=("e",))
+        index_df = spark.table(tbl).select(
+            F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne")
+        )
+        queries = emb.filter(F.col("vec_id") % 50 == 7)
+        _assert_one_narrow_stage(
+            _plan(asrch.score_query_batch(queries, cents, index_df))
+        )
+        for k in keys:
+            spark.conf.set(k, "-1")
+        joined = _plan(asrch.score_query_batch(queries, cents, index_df))
+        assert "SortMergeJoin" in joined and "Window" in joined, joined[:2000]
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 def test_arrow_assignment_path_is_wired(spark, sf_dir):

@@ -36,6 +36,28 @@ def test_als_rmse_invariant_row(spark, sf_dir):
     assert row.conserved and row.rmse_in_band
 
 
+def test_split_model_ignores_and_drops_dead_app_entries(spark, sf_dir):
+    """The split and its model are keyed by (applicationId, sf_dir): an
+    entry left by a stopped SparkContext is never served and is dropped
+    from both caches on the next lookup."""
+    from cqu_bigdata_recommender_system_for_movies_spark.ml import als
+
+    dead = ("local-dead-app", sf_dir)
+    stale_model, stale_split = object(), (object(), object())
+    als._MODEL_CACHE[dead] = stale_model
+    als._SPLIT_CACHE[dead] = stale_split
+    try:
+        model, train, test = als._split_model(spark, sf_dir)
+        assert model is not stale_model
+        assert (train, test) != stale_split
+        assert dead not in als._MODEL_CACHE and dead not in als._SPLIT_CACHE
+        live = (spark.sparkContext.applicationId, sf_dir)
+        assert als._MODEL_CACHE[live] is model
+    finally:
+        als._MODEL_CACHE.pop(dead, None)
+        als._SPLIT_CACHE.pop(dead, None)
+
+
 def test_als_recommend_topk_shape(spark, sf_dir):
     rows = als_recommend_topk_detail(spark, sf_dir).collect()
     assert len(rows) == 5 * 10

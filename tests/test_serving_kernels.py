@@ -1,0 +1,234 @@
+"""The one-stage serving kernels (functions/nearcell.py) against the
+cell-key join + row_number window they replace on a broadcast-sized
+index. The join path stays in the engine as the reference: past the
+broadcast ceiling it is the only path. Every comparison is exact: rows,
+ranks, and scores by ``float.hex()``.
+
+The inputs are adversarial on purpose: duplicate vectors (exact cosine
+ties must fall to the smaller id), near-duplicates whose scores round to
+the same 6-dp value (the tie must fall to item_ref, not to the raw
+cosine), a zero vector, negative components (a small negative cosine
+rounds to zero and keeps Spark's sign), a duplicated quantizer seed
+(its cell owns no items), fewer candidates than k, and queries whose own
+id sits in their probed cells.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+    ann_index as ai,
+)
+from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+    ann_search as asrch,
+)
+from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
+    candidates as cand,
+)
+
+N_CELLS = 4  # seeds = ids 0..3; ids 0 and 1 are equal, so cell 1 is empty
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _vectors(rng, n: int, dim: int) -> list[list[float]]:
+    """Adversarial rows 0..n-1 (n >= 16): 0 and 1 equal, 10-12 equal,
+    13 zero, 14/15 near-duplicates (1e-12 apart), the rest uniform in
+    [-1, 1] (negative components included)."""
+    v = rng.uniform(-1.0, 1.0, size=(n, dim))
+    v[1] = v[0]
+    v[11] = v[10]
+    v[12] = v[10]
+    v[13] = 0.0
+    v[15] = v[14]
+    v[15, 0] += 1e-12
+    return [[float(x) for x in row] for row in v]
+
+
+def _catalog(rng) -> list[list[float]]:
+    """40 five-dim item profiles over `_vectors`, with fixed seeds so the
+    rounding cases below land in probed cells: user 3 ([1, 0, 0, 0, 0])
+    and user 4 both probe cell 3 (item 3's), where
+    - items 14 and 15 score about 0.90000003 and 0.90000007 for user 3:
+      the same rounded score, item 15 ahead on the raw cosine;
+    - item 3 scores about -3.6e-10 for user 4, which rounds to zero."""
+    v = _vectors(rng, 40, 5)
+    v[0] = v[1] = [-0.2, 0.3, -0.5, 0.1, 0.4]
+    v[2] = [0.1, 0.4, -0.3, 0.2, 0.0]
+    v[3] = [1.0, 1.0 + 1e-9, 0.0, 0.0, 0.0]
+    v[14] = [0.9, 0.4358898, 0.0, 0.0, 0.0]
+    v[15] = [0.9, 0.4358897, 0.0, 0.0, 0.0]
+    return v
+
+
+def _users(rng, profiles: list[list[float]], n_random: int) -> list:
+    rows = [
+        (0, [0.0] * 5),  # zero interest vector
+        (1, profiles[0]),  # probes the duplicated seed's empty cell
+        (2, profiles[10]),  # exact ties among items 10-12
+        (3, [1.0, 0.0, 0.0, 0.0, 0.0]),  # rounded tie of items 14/15
+        (4, [0.5, -0.5, 0.6, 0.0, 0.0]),  # negative cosine rounds to 0
+        (5, [-x for x in profiles[2]]),  # mostly negative cosines
+        (6, None),  # no vector: no rows on either path
+    ]
+    rows += [
+        (100 + i, [float(x) for x in rng.uniform(-1.0, 1.0, size=5)])
+        for i in range(n_random)
+    ]
+    return rows
+
+
+def _cand_rows(df) -> list[tuple]:
+    return sorted(
+        (int(r.user_id), int(r.rnk), int(r.item_ref), r.score.hex())
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("seed", [7, 8, 9])
+def test_candidate_kernel_matches_join_path(spark, seed):
+    rng = np.random.default_rng(seed)
+    profiles = _catalog(rng)
+    catalog = spark.createDataFrame(
+        list(enumerate(profiles)), "item_ref int, profile array<double>"
+    )
+    users = spark.createDataFrame(
+        _users(rng, profiles, 40), "user_id long, interest array<double>"
+    )
+    cents, item_dim, _ = cand.build_candidate_index(catalog, N_CELLS)
+    assert getattr(item_dim, "_sg_items", None) is not None
+    reference_dim = item_dim.select("*")  # untagged: the join + window path
+    for k in (3, 10, 50):  # k = 50 exceeds every user's candidate count
+        got = cand.score_candidates_batch(users, cents, item_dim, k)
+        want = cand.score_candidates_batch(users, cents, reference_dim, k)
+        assert "Window" not in _plan(got) and "Window" in _plan(want)
+        rows = _cand_rows(got)
+        assert rows == _cand_rows(want), f"k={k}"
+        per_user: dict[int, int] = {}
+        for u, *_ in rows:
+            per_user[u] = per_user.get(u, 0) + 1
+        assert 6 not in per_user and 0 in per_user
+        if k == 50:
+            assert max(per_user.values()) < k
+        else:
+            assert max(per_user.values()) == k
+    # the fixture reaches the cases it claims
+    ranked = {(u, i): (rk, sc) for u, rk, i, sc in rows}
+    (rank_a, score_a), (rank_b, score_b) = ranked[3, 14], ranked[3, 15]
+    assert score_a == score_b and rank_a + 1 == rank_b
+    assert ranked[4, 3][1] == (0.0).hex()
+    assert 1 not in set(item_dim.select("cell").toPandas()["cell"])
+
+
+def test_candidate_kernel_on_reference_catalog(spark, sf_dir):
+    """The reference item profiles at the derived quantizer width, every
+    item's profile also serving as a user's interest vector."""
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+        item_profiles,
+    )
+
+    profiles = item_profiles(spark, sf_dir).localCheckpoint(eager=True)
+    cents, item_dim, _ = cand.build_candidate_index(profiles)
+    users = profiles.select(
+        F.col("item_ref").cast("long").alias("user_id"),
+        F.col("profile").alias("interest"),
+    )
+    got = cand.score_candidates_batch(users, cents, item_dim)
+    want = cand.score_candidates_batch(users, cents, item_dim.select("*"))
+    assert _cand_rows(got) == _cand_rows(want)
+
+
+def _ann_index(spark, corpus: list[list[float]], n_cells: int, path: str):
+    """(queries, quantizer, index): the index is a parquet file, so the
+    planner knows its size, as it knows the served table's."""
+    emb = spark.createDataFrame(
+        list(enumerate(corpus)), "vec_id long, e array<double>"
+    )
+    cents = ai._ann_cents_relation(emb, n_cells)
+    ai.assign_batch(emb, cents, carry=("e",)).select(
+        F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne")
+    ).write.parquet(path)
+    return emb, cents, spark.read.parquet(path)
+
+
+def _ann_rows(df) -> list[tuple]:
+    return sorted((int(r.query_id), int(r["rank"]), int(r.neighbor_id))
+                  for r in df.collect())
+
+
+def _join_path(spark, fn):
+    """Run ``fn`` with both broadcast thresholds at -1: the index is no
+    longer broadcast-sized, so score_query_batch takes the join path."""
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        return fn()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("n, n_cells", [(16, 8), (120, N_CELLS)])
+def test_ann_kernel_matches_join_path(spark, tmp_path, n, n_cells):
+    """16 vectors over 8 cells leave some queries fewer than SEARCH_TOPK
+    candidates."""
+    rng = np.random.default_rng(n)
+    corpus = _vectors(rng, n, 6)
+    emb, cents, index_df = _ann_index(
+        spark, corpus, n_cells, str(tmp_path / "index")
+    )
+    # every corpus vector as a query (its own id sits in its probed
+    # cells), plus outside ids: a zero vector, a duplicate, negatives
+    extra = spark.createDataFrame(
+        [(1000, [0.0] * 6), (1001, corpus[10]), (1002, [-x for x in corpus[2]]),
+         (1003, None)],
+        "vec_id long, e array<double>",
+    )
+    queries = emb.unionByName(extra)
+    got = asrch.score_query_batch(queries, cents, index_df)
+    assert "Join" not in _plan(got) and "Window" not in _plan(got)
+    rows = _ann_rows(got)
+
+    def reference():
+        want = asrch.score_query_batch(queries, cents, index_df)
+        assert "Window" in _plan(want)
+        return _ann_rows(want)
+
+    assert rows == _join_path(spark, reference)
+    assert all(q != nb for q, _, nb in rows)
+    assert not any(q == 1003 for q, *_ in rows)
+    counts: dict[int, int] = {}
+    for q, *_ in rows:
+        counts[q] = counts.get(q, 0) + 1
+    assert max(counts.values()) == ai.SEARCH_TOPK
+    if n == 16:
+        assert min(counts.values()) < ai.SEARCH_TOPK
+
+
+def test_ann_kernel_ranks_exact_ties_by_id():
+    """Equal vectors score bit-equal cosines: the smaller id ranks first,
+    whatever order the index holds them in; so do two zero cosines."""
+    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+        _seed_arrays,
+        ann_topk_np,
+    )
+
+    seeds = _seed_arrays([(0, [1.0, 0.0], 1.0)])
+    ids = np.array([9, 4, 7, 2, 5], dtype=np.int64)
+    V = np.array([[1.0, 1.0], [1.0, 1.0], [0.0, 1.0], [0.0, -1.0], [1.0, 1.0]])
+    index = (ids, np.zeros(5, dtype=np.int64), V, np.sqrt((V * V).sum(axis=1)))
+    E = np.array([[1.0, 0.0], [1.0, 1.0]])
+    top = ann_topk_np(E, np.array([100, 4]), seeds, index, 1, 5)
+    assert top[0].tolist() == [4, 5, 9, 2, 7]
+    assert top[1].tolist() == [5, 9, 7, 2]  # self (4) excluded

@@ -1176,12 +1176,12 @@ def test_ann_index_delete_then_reinsert_revives(spark, sf_dir):
 
 
 def test_ann_search_plan_and_pruning(spark, sf_dir):
-    """The serving path's per-batch scoring plan: (a) the candidate
-    fetch joins on the CELL key (broadcast hash join at fixture scale,
-    never a cartesian product — pruned search must not degenerate to
-    scoring the whole corpus); (b) the pruned candidate set is a strict
-    subset of the corpus for every query; (c) self-matches excluded and
-    exactly top-k rows per query."""
+    """The serving path's per-batch scoring plan: (a) at fixture scale
+    the index is broadcast-sized, so the batch is one narrow stage (one
+    Arrow UDF; no exchange, join, cartesian product or window); (b) the
+    pruned candidate set is a strict subset of the corpus for every
+    query; (c) self-matches excluded and exactly top-k rows per
+    query."""
     import shutil
 
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import (
@@ -1210,8 +1210,9 @@ def test_ann_search_plan_and_pruning(spark, sf_dir):
         queries = emb.filter(F.col("vec_id") % 50 == 7)
         scored = score_query_batch(queries, cents, index_df)
         physical = scored._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in physical
-        assert "BroadcastHashJoin" in physical, physical[:2000]
+        for node in ("Exchange", "Join", "CartesianProduct", "Window"):
+            assert node not in physical, physical[:2000]
+        assert physical.count("ArrowEvalPython") == 1, physical[:2000]
 
         rows = scored.collect()
         per_query: dict[int, list[int]] = {}

@@ -13,8 +13,11 @@ setting, and alternates which side runs first. For every metric in the
 runs' result lines it prints each side's median and quartiles and the
 share of pairs the change won (ties count for neither), then applies the
 claim rule: the change wins at least 9 of 10 pairs and the medians
-differ by more than the parent's interquartile range. The benchmark is
-only run, never modified.
+differ by more than the parent's interquartile range. A run that exits
+non-zero is recorded with the tail of its stderr and the pairs go on;
+its pair drops out of the statistics, the "failed ops per run" line
+shows its exit status, no claim is reported as met and the tool exits 1.
+The benchmark is only run, never modified.
 """
 
 from __future__ import annotations
@@ -35,10 +38,15 @@ def run_once(cwd: str, workload: str, seed: int, seconds: float, trace: int) -> 
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=cwd, capture_output=True, text=True)
     if proc.returncode != 0:
-        sys.exit(f"run failed in {cwd} (seed {seed}):\n{proc.stderr[-3000:]}")
+        return {"exit": proc.returncode, "stderr": proc.stderr[-3000:]}
     result = json.loads(proc.stdout.strip().splitlines()[-1])
     return {"failed": result["failed"], "correct": result["correct"],
             **{k: m["value"] for k, m in result["metrics"].items()}}
+
+
+def failed_ops(r: dict):
+    """The run's failed-op count, or its exit status if the run failed."""
+    return f"exit {r['exit']}" if "exit" in r else r["failed"]
 
 
 def extract(tree: str, dest: str) -> None:
@@ -88,28 +96,36 @@ def main() -> int:
             for side in order:
                 r = run_once(dirs[side], args.workload, seed, bench["run_seconds"], args.trace)
                 runs[side].append(r)
+                if "exit" in r:
+                    print(f"pair {i + 1} seed {seed} {side}: run failed, exit {r['exit']}:\n"
+                          f"{r['stderr']}", file=sys.stderr, flush=True)
+                    continue
                 print(f"pair {i + 1} seed {seed} {side}: failed={r['failed']} "
                       + " ".join(f"{k}={r[k]:.4g}" for k in sorted(r)
                                  if k in better), file=sys.stderr, flush=True)
 
     n = args.pairs
-    print(f"{args.workload}: {n} pairs, seeds {args.seed}-{args.seed + n - 1}, "
-          f"parent {args.parent}, trace {args.trace}")
-    print("failed ops per run: parent", [r["failed"] for r in runs["parent"]],
-          "change", [r["failed"] for r in runs["change"]])
+    done = [(p, c) for p, c in zip(runs["parent"], runs["change"])
+            if "exit" not in p and "exit" not in c]
+    print(f"{args.workload}: {n} pairs ({len(done)} complete), seeds "
+          f"{args.seed}-{args.seed + n - 1}, parent {args.parent}, trace {args.trace}")
+    print("failed ops per run: parent", [failed_ops(r) for r in runs["parent"]],
+          "change", [failed_ops(r) for r in runs["change"]])
+    if not done:
+        return 1
     print(f"{'metric':36} {'parent q1/med/q3':>28} {'change q1/med/q3':>28} "
           f"{'delta':>8} {'won':>6}  claim")
-    for name in sorted(k for k in runs["parent"][0] if k in better):
-        p = [r[name] for r in runs["parent"]]
-        c = [r[name] for r in runs["change"]]
+    for name in sorted(k for k in done[0][0] if k in better):
+        p = [pr[name] for pr, _ in done]
+        c = [cr[name] for _, cr in done]
         sign = 1 if better[name] == "lower" else -1
         won = sum(sign * (pv - cv) > 0 for pv, cv in zip(p, c))
         (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
         delta = (cm - pm) / pm if pm else float("nan")
-        claim = won >= 0.9 * n and sign * (pm - cm) > (p3 - p1)
+        claim = len(done) == n and won >= 0.9 * n and sign * (pm - cm) > (p3 - p1)
         print(f"{name:36} {p1:9.4g}/{pm:9.4g}/{p3:9.4g} {c1:9.4g}/{cm:9.4g}/{c3:9.4g} "
-              f"{delta:+8.1%} {won:>2}/{n:<3}  {'yes' if claim else 'no'}")
-    return 0
+              f"{delta:+8.1%} {won:>2}/{len(done):<3}  {'yes' if claim else 'no'}")
+    return 0 if len(done) == n else 1
 
 
 if __name__ == "__main__":
