@@ -18,6 +18,8 @@ materialized user×item matrix.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.recommendation import ALS, ALSModel
 from pyspark.sql import DataFrame, SparkSession
@@ -31,9 +33,10 @@ SEED = 42
 # One ALS fit is the dominant cost of the whole registry at sf0.01; several
 # registry entries legitimately share the same (data, hyperparam) fit — e.g.
 # als_rmse and als_precision_recall_at_k both train on the seeded 80/20
-# split. Caching by (sf_dir, variant) makes the registry idempotent-cheap
-# without changing any result (fits are seeded and deterministic).
-_MODEL_CACHE: dict[tuple[str, str], ALSModel] = {}
+# split. Fits are seeded and deterministic, so caching changes no result.
+# Keys are (applicationId, *what): a model is bound to the SparkContext
+# that fitted it, so a restarted context must miss (see cached_model).
+_MODEL_CACHE: dict[tuple, ALSModel] = {}
 
 
 def fit_als(train: DataFrame, rank: int = 10, max_iter: int = 10, reg: float = 0.1) -> ALSModel:
@@ -52,20 +55,31 @@ def fit_als(train: DataFrame, rank: int = 10, max_iter: int = 10, reg: float = 0
     return als.fit(train)
 
 
-# The materialized 80/20 split and the model fitted on it, both keyed by
-# (applicationId, sf_dir) like the dedup family's checkpoint caches: a
-# restarted context misses them instead of reading blocks or a model
-# bound to the dead one. Every lookup first drops the other
-# applications' entries from both caches.
+# The materialized 80/20 split, keyed by (applicationId, sf_dir) like the
+# dedup family's checkpoint caches: a restarted context misses it instead
+# of reading blocks of the dead one.
 _SPLIT_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _drop_other_apps(app_id: str) -> None:
-    """Forget the split and split-model entries of every application but
-    `app_id` (the split model shares its split's key)."""
-    for key in [k for k in _SPLIT_CACHE if k[0] != app_id]:
-        del _SPLIT_CACHE[key]
-        _MODEL_CACHE.pop(key, None)
+    """Forget every split and model entry of every application but
+    `app_id`."""
+    for cache in (_SPLIT_CACHE, _MODEL_CACHE):
+        for key in [k for k in cache if k[0] != app_id]:
+            del cache[key]
+
+
+def cached_model(
+    spark: SparkSession, key: tuple, fit: Callable[[], ALSModel]
+) -> ALSModel:
+    """The model cached under (applicationId, *key), fitted by `fit()` on
+    a miss. Every lookup first drops the other applications' entries."""
+    app_id = spark.sparkContext.applicationId
+    _drop_other_apps(app_id)
+    full = (app_id, *key)
+    if full not in _MODEL_CACHE:
+        _MODEL_CACHE[full] = fit()
+    return _MODEL_CACHE[full]
 
 
 def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame, DataFrame]:
@@ -99,9 +113,7 @@ def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame,
             ),
         )
     train, test = _SPLIT_CACHE[key]
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit_als(train)
-    return _MODEL_CACHE[key], train, test
+    return cached_model(spark, (sf_dir,), lambda: fit_als(train)), train, test
 
 
 def als_rmse_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,10 +172,7 @@ def als_recommend_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spark_als.py:116-132 — the reference used rdd.flatMap). Consumed by
     the registered invariant query below and by pytest's shape checks."""
     r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-    key = (sf_dir, "full")
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit_als(r)
-    model = _MODEL_CACHE[key]
+    model = cached_model(spark, (sf_dir, "full"), lambda: fit_als(r))
     users = r.select("user_id").distinct().orderBy("user_id").limit(5)
     recs = model.recommendForUserSubset(users, 10)
     return recs.select(
@@ -363,12 +372,10 @@ def als_fixture_rmse_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r = movielens_shaped_ratings(spark)
     train, test = r.randomSplit([0.8, 0.2], seed=SEED)
-    key = ("fixture", "band")
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit_als(train)
+    model = cached_model(spark, ("fixture", "band"), lambda: fit_als(train))
     rmse = RegressionEvaluator(
         metricName="rmse", labelCol="rating", predictionCol="prediction"
-    ).evaluate(_MODEL_CACHE[key].transform(test))
+    ).evaluate(model.transform(test))
     lo, hi = FIXTURE_BAND
     return spark.createDataFrame(
         [(round(rmse, 4), lo, hi, bool(lo < rmse <= hi))],
@@ -621,22 +628,19 @@ def als_implicit_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "item_id")
         .agg(F.count("*").cast("float").alias("rating"))
     )
-    key = (sf_dir, "implicit")
-    if key not in _MODEL_CACHE:
-        als = ALS(
-            rank=10,
-            maxIter=10,
-            regParam=0.1,
-            implicitPrefs=True,
-            alpha=40.0,
-            userCol="user_id",
-            itemCol="item_id",
-            ratingCol="rating",
-            coldStartStrategy="drop",
-            seed=SEED,
-        )
-        _MODEL_CACHE[key] = als.fit(r)
-    model = _MODEL_CACHE[key]
+    als = ALS(
+        rank=10,
+        maxIter=10,
+        regParam=0.1,
+        implicitPrefs=True,
+        alpha=40.0,
+        userCol="user_id",
+        itemCol="item_id",
+        ratingCol="rating",
+        coldStartStrategy="drop",
+        seed=SEED,
+    )
+    model = cached_model(spark, (sf_dir, "implicit"), lambda: als.fit(r))
     users = r.select("user_id").distinct().orderBy("user_id").limit(5)
     recs = model.recommendForUserSubset(users, 5)
     return recs.select(

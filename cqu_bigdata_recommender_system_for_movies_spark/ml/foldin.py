@@ -49,7 +49,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cqu_bigdata_recommender_system_for_movies_spark.ml.als import _MODEL_CACHE, fit_als
+from cqu_bigdata_recommender_system_for_movies_spark.ml.als import cached_model, fit_als
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
 from cqu_bigdata_recommender_system_for_movies_spark.tables import RATINGS_SQL, ratings
 
@@ -63,13 +63,12 @@ REG = 0.1  # fit_als default regParam
 def _train_model(spark: SparkSession, sf_dir: str):
     """ALS fitted on the NON-holdout users only (so fold-in users are
     genuinely unseen by the factorization), cached per sf_dir."""
-    key = (sf_dir, "foldin_train")
-    if key not in _MODEL_CACHE:
-        r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-        _MODEL_CACHE[key] = fit_als(
-            r.filter(F.col("user_id") % HOLDOUT_MOD != 0)
-        )
-    return _MODEL_CACHE[key]
+    r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
+    return cached_model(
+        spark,
+        (sf_dir, "foldin_train"),
+        lambda: fit_als(r.filter(F.col("user_id") % HOLDOUT_MOD != 0)),
+    )
 
 
 def fold_in_factors(
@@ -209,13 +208,12 @@ def als_user_fold_in(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _train_model_item_holdout(spark: SparkSession, sf_dir: str):
     """ALS fitted with the holdout ITEMS' ratings removed (so fold-in
     items are genuinely unseen), cached per sf_dir."""
-    key = (sf_dir, "foldin_train_items")
-    if key not in _MODEL_CACHE:
-        r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-        _MODEL_CACHE[key] = fit_als(
-            r.filter(F.col("item_id") % HOLDOUT_MOD != 0)
-        )
-    return _MODEL_CACHE[key]
+    r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
+    return cached_model(
+        spark,
+        (sf_dir, "foldin_train_items"),
+        lambda: fit_als(r.filter(F.col("item_id") % HOLDOUT_MOD != 0)),
+    )
 
 
 @register(

@@ -1,91 +1,67 @@
-"""Streaming ANN index maintenance (beyond-reference — the write path of
-the similarity-search story at 100 TB).
+"""Streaming ANN index maintenance: the write path of the similarity-search
+family (the serving path is streaming/ann_search.py).
 
-The offline ANN family (operators/vectors.py) builds its IVF index in
-one pass: `_ivf_assign_cells` assigns every vector to its nearest
-coarse-quantizer cell map-side. At production scale the catalog is not
-static — new items (documents, movies, users' uploads) arrive
-continuously, and re-running the full assignment over a 100 TB corpus
-per arrival batch is the same wrong shape as the ALS full retrain the
-fold-in family replaces (ml/foldin.py). The production answer is
-INCREMENTAL index maintenance: the quantizer (a bounded, driver-resident
-seed set — production: sampled k-means centroids, refreshed rarely) is
-FROZEN; each arriving micro-batch of vectors is assigned map-side
-against the broadcast centroid row and APPENDED to the persistent
-cell-bucketed index table that the read path (candidate pruning,
-cell-local probe joins) consumes — the same bucketed-dim artifact
-streaming/candidates.py builds for catalogs past the broadcast ceiling,
-now maintained without rebuild.
+The quantizer of an index is frozen for its life: the flat `__cents`
+relation (`_ann_cents_relation`), or the `TwoLevel` quantizer for the wide
+lifecycle. Arriving vectors are assigned map-side against it and appended
+to a cell-bucketed index table. Assignment is per-row deterministic, so an
+index maintained batch by batch equals the one-pass assignment of the same
+rows; each registered query below checks exactly that against a DuckDB
+rebuild.
 
-Three lifecycle properties a long-lived index needs beyond the append
-itself (VERDICT r13 #3, ADVICE r13):
+Every lifecycle (update, compact, upsert, delete, and requantize in
+streaming/ann_requantize.py) runs through ONE loop, `_IndexLoop`, built
+from these steps:
 
-- IDEMPOTENT batches: foreachBatch is at-least-once, so a replayed
-  micro-batch must not double-append. Every row carries its batch_id
-  and the table itself is the durable ledger: a batch_id visible in the
-  table means that append's job COMMITTED (parquet writes stage task
-  files under _temporary and publish atomically at job commit, so a
-  mid-write crash leaves nothing visible) and the replay is skipped.
-- BOUNDED FILE GROWTH: each append adds at most one file per bucket
-  (the batch's tiny (vec_id, cell, batch_id) rows are repartitioned
-  onto the bucket layout before the write — the heavy embedding fold
-  stays at full map-side width), and every ANN_COMPACT_EVERY appends
-  the table is compacted back to ONE file per bucket via a
-  write-new-generation-then-swap rewrite (never in place), so the live
-  file count stays under n_buckets x (ANN_COMPACT_EVERY + 1) forever
-  instead of growing n_batches x n_buckets. Compaction is
-  content-invariant — exactly what the incremental-equals-rebuild hash
-  oracle proves end to end.
-- CONSTANT READ LAYOUT: appends and compactions both write under the
-  same bucketBy(cell) spec, so the cell-local probe join never
-  re-exchanges the index side (pinned by
-  tests/test_streaming_extras.py::test_ann_index_read_after_appends).
+- stage: the arrivals are written as `ver=` slice partitions in one job
+  and replayed one file per micro-batch (`_stage_arrivals`, `drain`);
+- open: a fresh run drops the table, its aside names and its generation
+  directories; a resume completes an interrupted swap and reads the resume
+  floor and the row anchor;
+- emit: per batch, the delete markers, then the idempotent append, then
+  the audit histogram, then compaction when it is due;
+- rewrite generation: compaction and migration both write a new
+  generation under a temp name and swap it in (`_rewrite_generation`);
+- snapshot (`_live_rows`, shared with compaction) and cleanup.
 
-`streaming_ann_index_update` runs the plain maintenance loop end to end
-on the embeddings table staged as a 3-slice file stream;
-`streaming_ann_index_compact` runs the full lifecycle (10 arrival
-batches, compaction every 4) and must produce the identical index;
-`streaming_ann_index_upsert` runs the RE-EMBEDDING path (later slices
-carry new versions of already-indexed vectors; last-writer-wins on a
-data-derived version column; compaction physically purges superseded
-versions) and must produce the latest-version assignment;
-`streaming_ann_index_delete` completes the CRUD story (keyed tombstones
-in a small delete-marker side table, applied physically at compaction)
-and must produce the post-CRUD assignment. The SERVING path lives in
-streaming/ann_search.py — queries answered from the index these loops
-maintain. Common to all:
+Invariants the loop rests on:
 
-- quantizer seeds = the derive_ann_cells(corpus) smallest vec_ids of
-  the EXISTING corpus (the candidates family's sqrt-corpus width —
-  VERDICT r14 #3: the serving probe measured width as the dominant cost
-  dial, so it is COUNT-derived on both engines via the
-  derive_rec_cells/_rec_cells_sql twins; the offline ann_ivf_topk keeps
-  its pinned fixed width), shipped once as the single-row broadcast
-  `__cents` relation (plan size independent of the cell count);
-- per micro-batch: one map-side fold per vector (the shared
-  `_nearest_cells` expression from streaming/candidates.py — let-bound
-  row norm, one pass over the cell structs, cos DESC / cid ASC ties),
-  then an idempotent APPEND into the bucketBy(cell) index table;
-- the returned DataFrame is the final index contents (vec_id, cell).
-
-Assignment is per-row deterministic given the frozen quantizer, so the
-incremental build MUST equal the one-pass rebuild — the DuckDB oracle
-computes the full-corpus assignment in one query, making "maintenance
-converges to rebuild" (and compaction neutrality) an exact,
-hash-checked property rather than a claim (the same argument the
-streaming dedup family uses for its batch twins).
+- Order independence. A row's order is data: `ver` is the arrival slice
+  in the plain loop and the version in the upsert/delete loop. A key's
+  live row is its max-`ver` row, and a delete marker at `ver = v` kills
+  every version up to v; the tombstone slice sits above every data
+  version. No result depends on the order in which the file source
+  replays the slices.
+- Idempotent batches. foreachBatch is at-least-once. Every row carries its
+  batch_id and a parquet job commit is atomic, so a visible batch_id
+  proves the append committed. After a restart, batch ids at or below the
+  table's max batch_id (the resume floor) probe that ledger and skip.
+- Marker before append. A batch's delete markers are written before its
+  index append, and the append is the batch's commit. A crash between the
+  two replays the batch and duplicates markers, which max(ver) per key
+  absorbs; the reverse order could lose deletes.
+- Rename-aside swap. A rewrite never touches the live generation. The new
+  generation is written under `{table}_compacting` or `{table}_migrating`,
+  the live table is renamed to `{table}_retiring`, the new one takes its
+  name, and the old files are deleted. Some catalog entry holds the data
+  at every instant, and `recover_swap` finishes a swap a crash cut short.
+- Bounded files. An append adds at most one file per bucket and
+  compaction rewrites to one, so the live file count stays under
+  n_buckets x (compact_every + 1) at any index age.
 """
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import shutil
-import time
-from typing import NamedTuple
+import tempfile
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     shuffle_partitions,
@@ -110,43 +86,27 @@ N_UPSERT_SLICES = 4  # upsert query: 2 insert-only slices + 2 update slices
 UPSERT_COMPACT_EVERY = 2  # purge superseded versions every 2 appends
 ANN_DELETE_TABLE = "spark_graft_ann_index_d"
 N_DELETE_SLICES = 5  # delete query: the upsert schedule + a tombstone slice
-# Appends between compactions. Each append adds <= 1 file per bucket, a
-# compaction rewrites to exactly 1, so the live file count is bounded by
-# n_buckets x (ANN_COMPACT_EVERY + 1) regardless of index age. 4 keeps
-# the rewrite amortized at ~1/4 of append volume while the read path
-# never sees more than 5 files per bucket.
+# Appends between compactions: the live file count stays under
+# n_buckets x (ANN_COMPACT_EVERY + 1), and the rewrite costs ~1/4 of the
+# append volume.
 ANN_COMPACT_EVERY = 4
-# Bucket-count ceiling for the index layout. The QUANTIZER width is
-# corpus-derived (derive_rec_cells — VERDICT r14 #3: the serving probe
-# measured width as THE cost dial, 600 -> 272 ms/query going 64 -> 256
-# cells at 2M vectors, and sqrt(corpus) is the balanced IVF point), but
-# the FILE layout need not follow it 1:1 — cells hash onto a bounded
-# bucket set (join key stays `cell`, so the bucketed scan still joins
-# with zero index-side exchange), keeping the compaction file bound
-# n_buckets x (ANN_COMPACT_EVERY + 1) independent of quantizer growth.
+# Bucket-count ceiling for the index layout. The quantizer width follows
+# the corpus (derive_rec_cells), but cells hash onto a bounded bucket set
+# (the join key stays `cell`, so the bucketed read still needs no
+# index-side exchange), keeping the file bound independent of the width.
 ANN_MAX_BUCKETS = 16
-# Rows per task for the pre-assignment fan-out (r16): the vectorized
-# assignment costs ~1 µs/row, so ~20k rows ≈ 20 ms of useful work per
-# task — below one task's scheduling overhead there is nothing to
-# spread and the round-robin exchange ahead of the fold is pure cost
-# (it existed to parallelize the ~1 ms/row interpreted fold). Batches
-# under this skip the exchange; a 500k-row decade batch still fans to
-# ~25 tasks, capped at machine width.
+# Rows per task for the pre-assignment fan-out. The vectorized assignment
+# costs ~1 µs/row, so below ~20k rows a task has less useful work than
+# its scheduling overhead and the round-robin exchange is pure cost.
 ASSIGN_ROWS_PER_TASK = 20_000
 
 
 def derive_fold_parts(spark: SparkSession, est_rows: int | None) -> int | None:
-    """Fan-out width for a pre-assignment exchange given the expected
-    batch row count: 0 = skip the exchange (small batch), capped at
-    machine width, None when the size is unknown (callers then keep the
-    historical full-width fan-out).
-
-    r17 (VERDICT r16 #4): parts == 1 is never returned — a
-    `repartition(1)` pays a full exchange to SERIALIZE the assignment,
-    strictly worse than skipping the exchange outright, and the
-    20k-40k-row band hit it (suite batches skip below 20k, decade
-    batches fan out above 40k, but real arrival batches live in
-    between). Below 2 derived tasks the exchange buys nothing: skip."""
+    """Fan-out width for the pre-assignment exchange given the expected
+    batch row count: 0 = skip the exchange, None = size unknown (callers
+    keep the full-width fan-out), else ~rows/ASSIGN_ROWS_PER_TASK capped
+    at machine width. Never 1: a `repartition(1)` pays a full exchange to
+    serialize the assignment, strictly worse than skipping it."""
     if est_rows is None:
         return None
     width = max(
@@ -156,18 +116,12 @@ def derive_fold_parts(spark: SparkSession, est_rows: int | None) -> int | None:
     return 0 if parts < 2 else min(width, parts)
 
 
-# Ceiling on the DERIVED quantizer width. Two measured curves cross
-# here (both at the 2M replica): SERVING cost falls with width (r14
-# probe: 600 -> 272 ms/query going 64 -> 256 cells — the dial VERDICT
-# r14 #3 cites), but INGEST cost rises linearly with it — the per-row
-# assignment is an interpreted higher-order fold over the cell structs
-# (measured r15: ~33k rows/s across 32 threads at 16 cells, 1.5k rows/s
-# at 256; the uncapped sqrt width at 2M would be 2048 cells — measured
-# 147 rows/s, nearly four hours per corpus pass). 256 pins the measured serving
-# optimum while keeping ingest feasible. Past the cap the honest scale
-# path is not a wider flat fold but a HIERARCHICAL coarse quantizer —
-# see ivf_two_level_assign below: O(2*sqrt(cells)) dots per row
-# restores width-insensitive ingest at production widths.
+# Ceiling on the DERIVED quantizer width. Serving cost falls with width
+# (600 -> 272 ms/query going 64 -> 256 cells on the 2M-vector replica)
+# while the flat fold's ingest cost rises linearly with it (the uncapped
+# sqrt width at 2M would be 2048 cells, ~147 rows/s). 256 keeps the
+# measured serving optimum with feasible ingest; past it the wide
+# lifecycle uses the two-level quantizer (ivf_two_level_assign below).
 ANN_DERIVED_CELLS_CAP = 256
 # Serving-convention constants, shared by the streaming serving path
 # (streaming/ann_search.py imports them from here — this module cannot
@@ -214,22 +168,24 @@ ANN_CELLS_SQL = (
 
 
 def derive_ann_cells_wide(sf_dir: str) -> int:
-    """Quantizer width for the WIDE (two-level) lifecycle family:
-    the same integer-exact sqrt-corpus derivation, UNCAPPED. The cap on
-    derive_ann_cells encodes the FLAT fold's measured ingest/serving
-    crossover (ingest linear in width — see ANN_DERIVED_CELLS_CAP);
-    under hierarchical assignment ingest is width-INSENSITIVE (measured
-    r15/r16: the two-level rate moves 8.9k -> 5.8k rows/s going
-    256 -> 2048 cells while the flat fold collapses 1.5k -> 147), so
-    the wide family lets the derivation follow sqrt(corpus) all the way
-    up and buys the wide-serving regime (16.2 ms/query at 2048 cells vs
-    272 at 256 — SCALE_r15 ann_two_level_serve_1000x). At the suite sfs
-    the corpus sits under the cap, so wide == capped width there."""
+    """Quantizer width for the WIDE (two-level) lifecycle: the same
+    sqrt-corpus derivation, uncapped. The cap on derive_ann_cells exists
+    because flat ingest is linear in width; two-level ingest is not
+    (8.9k -> 5.8k rows/s going 256 -> 2048 cells on the 2M-vector
+    replica, where the flat fold falls 1.5k -> 147). At the suite sfs the
+    corpus sits under the cap, so wide == capped width there."""
     return derive_rec_cells(table_row_count(sf_dir, "embeddings"))
 
 
 # SQL twin of derive_ann_cells_wide: the same scalar subquery, no cap.
 ANN_CELLS_WIDE_SQL = f"(SELECT {_rec_cells_sql('COUNT(*)')} FROM embeddings)"
+
+
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e): the embeddings corpus with double elements."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
+    )
 
 
 def _ann_cents_relation(emb: DataFrame, n_cells: int) -> DataFrame:
@@ -259,12 +215,19 @@ def _ann_cents_relation(emb: DataFrame, n_cells: int) -> DataFrame:
         [(seed_rows,)],
         schema="__cents array<struct<cid:int,ce:array<double>,nc:double>>",
     )
-    # r16: carry the driver-resident seed list beside the relation so the
-    # assignment path can run the Arrow-vectorized twin of the fold
-    # (functions/nearcell.py) instead of the interpreted per-row HOF —
-    # same bounded data, bit-identical selection, ~1000x per-cosine.
+    # the driver-resident seed list rides beside the relation so the
+    # assignment can run the Arrow-vectorized twin of the fold
+    # (functions/nearcell.py) — same bounded data, bit-identical selection
     cents_df._sg_seeds = seed_rows  # noqa: SLF001 — engine-internal tag
     return cents_df
+
+
+def _quantizer(emb: DataFrame, n_cells: int, two_level: bool):
+    """The frozen quantizer over ``emb``'s n_cells-seed prefix: the flat
+    `__cents` relation, or the TwoLevel quantizer of the wide lifecycle."""
+    if two_level:
+        return two_level_quantizer(emb, n_cells)
+    return _ann_cents_relation(emb, n_cells)
 
 
 def assign_batch(
@@ -275,22 +238,14 @@ def assign_batch(
     either way. `carry` names batch columns to keep beside the
     assignment (the upsert loop carries its version column).
 
-    ``cents`` picks the assignment algorithm (r16 — VERDICT r15 #2, the
-    lifecycle integration seam):
-    - a plain DataFrame (the `__cents` single-row relation) runs the
-      FLAT nearest-cell argmax — bit-identical to the historical
-      interpreted fold, but executed as the Arrow-vectorized numpy twin
-      (functions/nearcell.py) when the relation carries its seed list
-      (r16, guide §4.2 — the interpreted HOF measured 15-30 µs/cosine
-      and was linear in quantizer width: 33k/1.5k/147 rows/s at
-      16/256/2048 cells on the 2M replica; the vectorized twin removes
-      that wall). A bare relation without seeds falls back to the
-      expression fold;
-    - a ``TwoLevel`` quantizer runs the HIERARCHICAL selection
-      (_two_level_cell over the broadcast reps+grouped-cells rows) —
+    ``cents`` picks the algorithm:
+    - a plain DataFrame (the `__cents` relation) runs the FLAT
+      nearest-cell argmax: the Arrow-vectorized numpy twin
+      (functions/nearcell.py) when the relation carries its seed list,
+      else the interpreted expression fold (bit-identical results);
+    - a ``TwoLevel`` quantizer runs the HIERARCHICAL selection —
       O((1+probe)*sqrt(width)) dots per row, the width-insensitive
-      ingest path past the cap (measured: 8.9k vs 147 rows/s at 2048
-      cells on the 2M replica)."""
+      ingest path past the cap."""
     if isinstance(cents, TwoLevel):
         two_rows = _two_level_seed_rows(cents.reps, cents.gcents)
         if two_rows is not None:
@@ -322,25 +277,32 @@ def assign_batch(
 
 
 def batch_already_applied(spark: SparkSession, table: str, batch_id: int) -> bool:
-    """ADVICE r13: foreachBatch replays batches at least once. The index
-    table is its own commit ledger — batch_id rides every row, and the
-    parquet job commit is atomic (task files stay invisible under
-    _temporary until the committer publishes them), so a visible
-    batch_id row proves the append completed and the replay must skip.
-    The existence probe is a LIMIT 1 scan that parquet row-group
-    min/max stats prune; compaction keeps the file count it has to
-    consult bounded."""
+    """True when ``batch_id`` rows are visible in ``table``: the index is
+    its own commit ledger (batch_id rides every row and the parquet job
+    commit is atomic). The probe is a LIMIT 1 scan that row-group stats
+    prune."""
     if not spark.catalog.tableExists(table):
         return False
-    # foreachBatch appends run through the micro-batch's CLONED session,
-    # which invalidates only its own relation cache — this session's
-    # cached file listing would silently miss every file a prior batch
-    # committed (observed: the final snapshot read only the last slice).
-    # Refresh before any read that must see the latest committed append.
+    # foreachBatch writes go through the micro-batch's cloned session,
+    # which leaves this session's cached file listing stale: refresh
+    # before any read that must see the latest committed append
     spark.catalog.refreshTable(table)
     return (
         spark.table(table).where(F.col("batch_id") == int(batch_id)).limit(1).count()
         > 0
+    )
+
+
+def _bucketed_writer(df: DataFrame, n_buckets: int, mode: str):
+    """The index layout writer: rows repartitioned on `cell` (the same
+    murmur3 pmod as the bucket assignment), so each task holds one bucket
+    and a write adds at most one file per bucket."""
+    return (
+        df.repartition(n_buckets, "cell")
+        .write.mode(mode)
+        .bucketBy(n_buckets, "cell")
+        .sortBy("cell")
+        .format("parquet")
     )
 
 
@@ -356,31 +318,15 @@ def apply_index_batch(
     carry: tuple[str, ...] = (),
     fold_parts: int | None = None,
 ) -> bool:
-    """One idempotent maintenance append. Returns False when the batch
-    was already applied (a foreachBatch replay), True after a commit.
+    """One idempotent maintenance append of ``batch_df`` into ``table``
+    (created at ``loc`` on first use). Returns False when the batch was
+    already applied, True after a commit.
 
-    ``check_ledger=False`` skips the existence probe when the CALLER
-    already knows the batch is new — the maintenance loop reads the
-    table's max committed batch_id ONCE at startup and only probes for
-    ids at or below that resume floor (batch ids are monotonic per
-    checkpoint, so anything above the floor cannot be in the table),
-    making the steady-state cost zero scans per batch instead of one.
-
-    ``fold_parts`` sizes the pre-assignment fan-out exchange (r16): the
-    vectorized assignment (functions/nearcell.py) costs ~1 µs/row, so a
-    small batch is cheaper to assign in place than to round-robin
-    exchange first — callers derive the width from the expected batch
-    rows (maintain_index: corpus footers / n_slices) and pass 0/None to
-    skip the exchange entirely. Default None keeps the historical
-    full-width fan-out for callers that don't know their batch size.
-    Per-row-deterministic assignment means the partitioning never
-    touches results.
-
-    Only the assigned (vec_id, cell, batch_id) rows — bytes per row,
-    not the vectors — are then repartitioned onto the bucket layout so
-    each append adds AT MOST ONE FILE PER BUCKET (an un-repartitioned
-    bucketed write emits one file per bucket PER TASK, which is how
-    append-only bucketed tables blow up their file counts at scale)."""
+    ``check_ledger=False`` skips the ledger probe when the caller knows
+    the batch is new (ids above the resume floor). ``fold_parts`` sizes
+    the pre-assignment fan-out (derive_fold_parts; 0 = none, None = full
+    width). Only the assigned (vec_id, cell, batch_id, *carry) rows are
+    repartitioned onto the bucket layout; the assignment runs map-side."""
     if check_ledger and batch_already_applied(spark, table, batch_id):
         return False
     if fold_parts is None:
@@ -389,18 +335,12 @@ def apply_index_batch(
     assigned = assign_batch(fanned, cents, carry=carry).withColumn(
         "batch_id", F.lit(int(batch_id))
     )
-    writer = (
-        assigned.repartition(n_buckets, "cell")
-        .write.mode("append")
-        .bucketBy(n_buckets, "cell")
-        .sortBy("cell")
-        .format("parquet")
-    )
+    writer = _bucketed_writer(assigned, n_buckets, "append")
     if not spark.catalog.tableExists(table):
         writer = writer.option("path", loc)
     writer.saveAsTable(table)
-    # see batch_already_applied: writes from a cloned micro-batch session
-    # don't invalidate this session's relation cache
+    # see batch_already_applied: a cloned session's write leaves this
+    # session's relation cache stale
     spark.catalog.refreshTable(table)
     return True
 
@@ -414,28 +354,73 @@ def _table_location(spark: SparkSession, table: str) -> str:
     return row[0].data_type.removeprefix("file:")
 
 
+def _parquet_files(loc: str):
+    for root, _, files in os.walk(loc):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
 def _index_file_count(loc: str) -> int:
-    return sum(
-        1
-        for _, _, files in os.walk(loc)
-        for f in files
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+    return sum(1 for _ in _parquet_files(loc))
 
 
 def _index_row_count(loc: str) -> int:
-    """Total rows from parquet FOOTER metadata — a driver-side,
-    milliseconds read, never a Spark job (VERDICT r14 #7: the audit's
-    per-batch `rows` instrument must not cost an O(index) count; at a
-    real 100 TB index a full count per batch is the wrong tool)."""
+    """Total rows from parquet footers: a driver-side metadata read,
+    never a Spark job, so the audit never pays an O(index) count."""
     import pyarrow.parquet as pq
 
-    return sum(
-        pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        for root, _, files in os.walk(loc)
-        for f in files
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in _parquet_files(loc))
+
+
+def _live_rows(
+    df: DataFrame,
+    purge_latest_by: str | None = None,
+    tombstones: DataFrame | None = None,
+) -> DataFrame:
+    """The live rows of index rows ``df``: with ``purge_latest_by``, each
+    vec_id's max-version row; with ``tombstones`` (vec_id, __dver — the
+    newest marker per key), minus every row at or below its key's marker.
+    A version newer than the marker (a re-insert) revives the key. Shared
+    by compaction (which applies it physically) and the snapshot."""
+    if purge_latest_by is not None:
+        w = Window.partitionBy("vec_id").orderBy(F.desc(purge_latest_by))
+        df = (
+            df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+    if tombstones is not None:
+        df = (
+            df.join(tombstones, "vec_id", "left")
+            .filter(F.col("__dver").isNull() | (F.col("__dver") < F.col("ver")))
+            .drop("__dver")
+        )
+    return df
+
+
+def _rewrite_generation(
+    spark: SparkSession,
+    table: str,
+    suffix: str,
+    n_buckets: int,
+    new_loc: str,
+    rows: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Write ``rows(current contents)`` as a new generation of ``table``
+    at ``new_loc`` under the temp name ``{table}{suffix}``, then swap it
+    in. The live generation is only read, never rewritten in place."""
+    tmp = f"{table}{suffix}"
+    old_loc = _table_location(spark, table)
+    spark.catalog.refreshTable(table)  # see batch_already_applied
+    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+    shutil.rmtree(new_loc, ignore_errors=True)
+    (
+        _bucketed_writer(rows(spark.table(table)), n_buckets, "overwrite")
+        .option("path", new_loc)
+        .saveAsTable(tmp)
     )
+    _swap_generations(spark, table, tmp, old_loc)
 
 
 def compact_index_table(
@@ -446,110 +431,46 @@ def compact_index_table(
     purge_latest_by: str | None = None,
     tombstones: DataFrame | None = None,
 ) -> None:
-    """Rewrite the bucketed index back to ONE file per bucket.
+    """Rewrite the index to ONE file per bucket in a new generation.
 
-    ``purge_latest_by`` names a version column: the rewrite then keeps
-    only each vec_id's LATEST version (row_number over ver DESC) — the
-    upsert loop's merge-on-write, where superseded re-embeddings are
-    physically dropped at compaction time instead of filtered on every
-    read. A purging compaction necessarily shuffles (winner selection
-    keys on vec_id, the write layout on cell); the plain file merge
-    below stays exchange-free.
-
-    Write-then-swap, never in place: the current table is read into a
-    NEW generation directory under a temp catalog name (repartitioning
-    by the bucket column — HashPartitioning is the same murmur3 pmod as
-    the bucket assignment, so each task holds exactly one bucket and
-    writes exactly one file), then the catalog entries swap
-    (rename-aside, so a live catalog entry exists at every point — see
-    the swap comment below) and the old generation's files are deleted.
-    A crash mid-compaction never loses the live data. For the PLAIN
-    merge, contents (batch_id ledger included) are invariant — the
-    incremental-equals-rebuild hash oracle checks runs that compacted,
-    so neutrality is driver-proven, not asserted. ADVICE r14: the
-    PURGING modes (purge_latest_by / tombstones) physically drop
-    superseded rows, which can drop the only rows carrying an old
-    batch_id — after a purge, the in-table ledger no longer remembers
-    those batches. Results stay correct regardless: a replayed stale
-    batch re-appends rows that max-version/tombstone semantics
-    supersede again (and the next purge re-drops). The ZERO-re-append
-    idempotency guarantee therefore survives only non-purging
-    compactions; deployments that need a complete commit history under
-    purges should keep a tiny committed-batch_id side ledger."""
-    tmp = f"{table}_compacting"
-    old_loc = _table_location(spark, table)
-    spark.catalog.refreshTable(table)  # see batch_already_applied
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    shutil.rmtree(new_loc, ignore_errors=True)
-    # Force the BUCKETED scan for the rewrite: a plain scan→write has no
-    # join/agg on the bucket key, so DisableUnnecessaryBucketedScan would
-    # fall back to file-split partitions — while the planner has ALREADY
-    # removed the aligning repartition as redundant against the bucketed
-    # output partitioning (measured: 20 misaligned tasks → 37 files).
-    # With the bucketed scan pinned, each task reads exactly one bucket's
-    # files and writes exactly one — compaction is a bucket-local file
-    # merge with ZERO exchange, the cheapest possible rewrite.
-    prev_auto = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    Without ``purge_latest_by``/``tombstones`` the rewrite is a
+    content-invariant file merge. With them it applies `_live_rows`
+    physically: superseded versions and deleted keys are dropped
+    (merge-on-write), which necessarily shuffles on vec_id. A purge can
+    drop the only rows of an old batch_id, so the in-table ledger then
+    forgets that batch; a replay of it re-appends rows that max-version
+    and marker semantics supersede again, so results stay correct."""
+    # Pin the bucketed scan: a plain scan -> write has no join or
+    # aggregate on the bucket key, so the planner would fall back to
+    # file-split partitions after already removing the aligning
+    # repartition as redundant (measured 37 files instead of 16). With
+    # the bucketed scan, each task reads one bucket and writes one file.
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
     try:
-        cur = spark.table(table)
-        if purge_latest_by is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("vec_id").orderBy(F.desc(purge_latest_by))
-            cur = (
-                cur.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        if tombstones is not None:
-            # apply delete markers physically: drop every row at or
-            # below its key's newest marker version (newer re-inserts
-            # survive); the markers themselves stay in their side table
-            cur = (
-                cur.join(tombstones, "vec_id", "left")
-                .filter(
-                    F.col("__dver").isNull() | (F.col("__dver") < F.col("ver"))
-                )
-                .drop("__dver")
-            )
-        (
-            cur.repartition(n_buckets, "cell")
-            .write.mode("overwrite")
-            .option("path", new_loc)
-            .bucketBy(n_buckets, "cell")
-            .sortBy("cell")
-            .format("parquet")
-            .saveAsTable(tmp)
+        _rewrite_generation(
+            spark,
+            table,
+            "_compacting",
+            n_buckets,
+            new_loc,
+            lambda cur: _live_rows(cur, purge_latest_by, tombstones),
         )
     finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", prev_auto
-        )
-    _swap_generations(spark, table, tmp, old_loc)
+        spark.conf.set(key, prev)
 
 
 def _swap_generations(
     spark: SparkSession, table: str, tmp: str, old_loc: str
 ) -> None:
-    """Promote a fully-written new generation (catalog name ``tmp``) to
-    ``table`` and delete the old generation's files.
-
-    ADVICE r14: rename the live table ASIDE before promoting the new
-    generation — a DROP-then-RENAME swap has a window where NO catalog
-    entry exists for the data. With rename-aside, a crash at any point
-    leaves the data under SOME catalog entry: before the first rename
-    the old generation serves as ``table``; between the two renames the
-    complete new generation sits under ``tmp`` and the old one under
-    ``retiring`` (no entry named ``table`` exists for that instant);
-    after the second rename the new generation serves. ADVICE r15: the
-    mid-swap instant is not self-healing — a resume that only checked
-    ``tableExists(table)`` would see False and start a fresh gen0 while
-    the complete generation sat aside — so ``recover_swap`` (called by
-    every resume entry point) completes the promotion first: it renames
-    the surviving ``tmp`` to ``table`` and drops the retired entry.
-    Both tables are EXTERNAL (created with an explicit path), so
-    renames move only catalog entries, never files."""
+    """Promote the fully-written generation ``tmp`` to ``table`` by
+    rename-aside and delete the old generation's files. Before the first
+    rename the old generation serves; between the renames the new one
+    sits under ``tmp`` and the old under ``{table}_retiring``
+    (``recover_swap`` finishes from there); after the second the new one
+    serves. Both tables are EXTERNAL, so renames move only catalog
+    entries, never files."""
     retiring = f"{table}_retiring"
     spark.sql(f"DROP TABLE IF EXISTS {retiring}")
     spark.sql(f"ALTER TABLE {table} RENAME TO {retiring}")
@@ -560,23 +481,15 @@ def _swap_generations(
 
 
 def recover_swap(spark: SparkSession, table: str) -> bool:
-    """Startup recovery for a crash inside ``_swap_generations``
-    (ADVICE r15): if a COMPLETE new generation survives under a
-    temporary name (``{table}_compacting`` / ``{table}_migrating``)
-    while no entry named ``table`` exists — the mid-swap instant, after
-    the live table was renamed aside but before the promotion rename —
-    finish the promotion: rename the surviving generation to ``table``
-    and drop the retired entry (its files included). Also reclaims a
-    leftover ``{table}_retiring`` when ``table`` DOES exist (a crash
-    after the promotion rename but before the retire drop). Idempotent,
-    a metadata-only no-op in the steady state; every resume entry point
-    (``maintain_index`` ``fresh=False``) calls it before reading the
-    resume floor. Returns True when a promotion was completed.
-
-    The one state it cannot repair is a crash BEFORE the rename-aside
-    with a fully-written ``tmp``: both ``table`` (old generation, still
-    live and correct) and ``tmp`` exist — the swap simply re-runs at
-    the next maintenance window, so nothing needs recovering."""
+    """Finish a generation swap a crash interrupted. If no ``table``
+    exists but a complete ``{table}_compacting``/``_migrating`` does (the
+    instant between the two renames), promote it. A leftover
+    ``{table}_retiring`` (a crash after the promotion, before the drop)
+    is dropped with its files. Idempotent and metadata-only in the
+    steady state; every resume runs it before reading the resume floor.
+    Returns True when it promoted a generation. A crash before the
+    rename-aside needs nothing: the old generation still serves and the
+    rewrite re-runs at the next compaction."""
     promoted = False
     retiring = f"{table}_retiring"
     if not spark.catalog.tableExists(table):
@@ -601,36 +514,312 @@ def migrate_index_table(
     new_loc: str,
     new_cents: DataFrame,
 ) -> None:
-    """The staleness alarm's ACTUATOR (VERDICT r14 #4): re-assign every
-    stored vector map-side under a REFRESHED quantizer and swap
-    generations. The detector (the audit's per-batch cell-skew signal)
-    says the frozen quantizer no longer fits arriving data; remediation
-    is a one-generation rewrite of the index under new seeds — the same
-    write-new-then-swap machinery as compaction, with the assignment
-    fold applied during the rewrite. Requires a vector-bearing index
-    (maintain_index carry_vectors=True — the IVF-list shape): the
-    migration reads vectors FROM THE INDEX ITSELF, never a trip back to
-    the source corpus. One exchange total: the re-assigned rows
-    repartition onto the (new) bucket layout; the assignment itself is
-    the broadcast-fold, exactly the append path's shape."""
-    tmp = f"{table}_migrating"
-    old_loc = _table_location(spark, table)
-    spark.catalog.refreshTable(table)  # see batch_already_applied
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    shutil.rmtree(new_loc, ignore_errors=True)
-    cur = spark.table(table)
-    carry = tuple(c for c in cur.columns if c not in ("vec_id", "cell"))
-    reassigned = assign_batch(cur.drop("cell"), new_cents, carry=carry)
-    (
-        reassigned.repartition(n_buckets, "cell")
-        .write.mode("overwrite")
-        .option("path", new_loc)
-        .bucketBy(n_buckets, "cell")
-        .sortBy("cell")
-        .format("parquet")
-        .saveAsTable(tmp)
+    """Re-assign every stored vector under a refreshed quantizer into a
+    new generation and swap it in (the requantize actuator). Needs a
+    vector-bearing index (`e` carried), so it never goes back to the
+    source corpus. One exchange: the re-assigned rows onto the bucket
+    layout."""
+
+    def reassign(cur: DataFrame) -> DataFrame:
+        carry = tuple(c for c in cur.columns if c not in ("vec_id", "cell"))
+        return assign_batch(cur.drop("cell"), new_cents, carry=carry)
+
+    _rewrite_generation(spark, table, "_migrating", n_buckets, new_loc, reassign)
+
+
+def _slice_arrivals(emb: DataFrame, n_slices: int) -> DataFrame:
+    """(vec_id, e, ver): the corpus cut into n_slices arrival slices,
+    ver = vec_id % n_slices."""
+    return emb.withColumn("ver", F.pmod("vec_id", F.lit(n_slices)).cast("int"))
+
+
+def _crud_arrivals(emb: DataFrame, n_slices: int, deletes: bool) -> DataFrame:
+    """(vec_id, e, ver, op): the versioned arrival schedule. With
+    mod = n_slices (n_slices - 1 when ``deletes``): every original at
+    ver = vec_id % mod; a sign-flipped re-embedding of each key with
+    vec_id % mod < mod - 2 at ver + 2; with ``deletes``, a tombstone
+    (op 'd', e NULL) for each key with vec_id % mod == 2 at ver = mod,
+    above every data version."""
+    mod = n_slices - 1 if deletes else n_slices
+    key = F.pmod("vec_id", F.lit(mod))
+    rows = emb.select(
+        "vec_id", "e", key.cast("int").alias("ver"), F.lit("u").alias("op")
+    ).unionByName(
+        emb.filter(key < mod - 2).select(
+            "vec_id",
+            F.transform("e", lambda x: -x).alias("e"),
+            (key + 2).cast("int").alias("ver"),
+            F.lit("u").alias("op"),
+        )
     )
-    _swap_generations(spark, table, tmp, old_loc)
+    if deletes:
+        rows = rows.unionByName(
+            emb.filter(key == 2).select(
+                "vec_id",
+                F.lit(None).cast("array<double>").alias("e"),
+                F.lit(mod).cast("int").alias("ver"),
+                F.lit("d").alias("op"),
+            )
+        )
+    return rows
+
+
+def _stage_arrivals(arrivals: DataFrame, stage_dir: str, n_slices: int) -> None:
+    """Write ``arrivals`` under ``stage_dir`` as one ``ver=`` partition
+    (one file) per slice, in one job."""
+    (
+        arrivals.repartition(n_slices, "ver")
+        .write.mode("overwrite")
+        .partitionBy("ver")
+        .parquet(stage_dir)
+    )
+
+
+class _IndexLoop:
+    """One maintenance run over ``table``: the state its steps share.
+
+    ``versioned`` runs last-writer-wins on `ver` (arrivals carry `op`;
+    compaction purges superseded versions); ``deletes`` adds the
+    delete-marker side table ``{table}_tombs``. ``carry`` names extra
+    columns stored beside the assignment (`e` for a vector-bearing
+    index). ``audit``, when given, receives one dict per applied batch
+    (batch_id, files, rows, batch_rows, cell_skew), one per compaction
+    (compacted_after, files, rows) and one per skipped replay
+    (replay_skipped). cell_skew is the batch's largest cell over the mean
+    across ALL quantizer cells: the quantizer-staleness signal, which a
+    drifted batch concentrated in few cells drives up."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        sf_dir: str,
+        table: str,
+        n_slices: int,
+        n_cells: int,
+        cents,
+        carry: tuple[str, ...] = (),
+        versioned: bool = False,
+        deletes: bool = False,
+        compact_every: int | None = None,
+        audit: list | None = None,
+    ) -> None:
+        self.spark, self.table, self.n_slices = spark, table, n_slices
+        self.n_cells, self.cents, self.audit = n_cells, cents, audit
+        self.versioned, self.deletes = versioned, deletes
+        self.compact_every = compact_every
+        self.carry = (("ver",) if versioned else ()) + carry
+        self.n_buckets = min(ANN_MAX_BUCKETS, n_cells)
+        self.loc_base = os.path.join(tempfile.gettempdir(), "spark_graft_tables", table)
+        self.tombs = f"{table}_tombs"
+        rows_per_slice = table_row_count(sf_dir, "embeddings") // max(n_slices, 1)
+        self.fold_parts = derive_fold_parts(spark, max(1, rows_per_slice))
+        self.floor, self.rows, self.gen, self.appends = -1, 0, 0, 0
+        self.loc = f"{self.loc_base}_gen0"
+
+    def run(
+        self,
+        arrivals: DataFrame,
+        stage_dir: str | None = None,
+        fresh: bool = True,
+        checkpoint_dir: str | None = None,
+    ) -> None:
+        """Stage, open and drain. A caller-owned ``stage_dir`` is kept,
+        and on a resume it is re-read as staged."""
+        own_stage = stage_dir is None
+        if own_stage:
+            stage_dir = tempfile.mkdtemp(prefix="spark_graft_ann_stage_")
+        if own_stage or fresh or not os.path.isdir(stage_dir):
+            _stage_arrivals(arrivals, stage_dir, self.n_slices)
+        self.open(fresh)
+        try:
+            self.drain(stage_dir, arrivals.schema, checkpoint_dir)
+        finally:
+            if own_stage:
+                shutil.rmtree(stage_dir, ignore_errors=True)
+
+    def open(self, fresh: bool) -> None:
+        """Fresh: drop the table, its aside names, its markers and every
+        generation directory. Resume: finish an interrupted swap, then
+        read the resume floor (max committed batch_id) and anchor the row
+        counter and generation number on the live generation."""
+        spark, table = self.spark, self.table
+        if fresh:
+            for name in ("", "_compacting", "_migrating", "_retiring", "_tombs"):
+                spark.sql(f"DROP TABLE IF EXISTS {table}{name}")
+            for path in glob.glob(f"{self.loc_base}_gen*") + [f"{self.loc_base}_tombs"]:
+                shutil.rmtree(path, ignore_errors=True)
+            return
+        recover_swap(spark, table)
+        if not spark.catalog.tableExists(table):
+            return
+        spark.catalog.refreshTable(table)
+        top = spark.table(table).agg(F.max("batch_id")).collect()[0][0]
+        self.floor = -1 if top is None else int(top)
+        self.loc = _table_location(spark, table)
+        self.rows = _index_row_count(self.loc)
+        suffix = self.loc.rsplit("_gen", 1)[-1]
+        self.gen = int(suffix) if suffix.isdigit() else 0
+
+    def drain(
+        self, stage_dir: str, schema, checkpoint_dir: str | None = None
+    ) -> None:
+        """Replay the staged slices through `emit`, one file per
+        micro-batch, until the stage is exhausted. A persistent
+        ``checkpoint_dir`` makes a restart replay the same batch ids and
+        contents, which the resume floor assumes."""
+        writer = (
+            self.spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage_dir)
+            .writeStream.foreachBatch(self.emit)
+            .outputMode("append")
+            .trigger(availableNow=True)
+        )
+        if checkpoint_dir is not None:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        q = writer.start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+    def emit(self, batch_df: DataFrame, batch_id: int) -> None:
+        """One micro-batch: markers, then the append (the batch's
+        commit), then the audit row, then compaction when due."""
+        batch_id = int(batch_id)
+        if batch_id <= self.floor and batch_already_applied(
+            self.spark, self.table, batch_id
+        ):
+            self._log({"replay_skipped": batch_id})
+            return
+        if self.deletes:
+            self.write_markers(batch_df, batch_id)
+        if self.versioned:
+            batch_df = batch_df.filter(F.col("op") == "u").drop("op")
+        apply_index_batch(
+            self.spark,
+            self.table,
+            self.loc,
+            batch_df,
+            self.cents,
+            batch_id,
+            self.n_buckets,
+            check_ledger=False,  # the floor check above already ran
+            carry=self.carry,
+            fold_parts=self.fold_parts,
+        )
+        self.appends += 1
+        if self.audit is not None:
+            self._audit_batch(batch_id)
+        if self.compact_every and self.appends % self.compact_every == 0:
+            self.compact(batch_id)
+
+    def write_markers(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Append the batch's tombstones (vec_id, ver, batch_id) to the
+        marker table; a batch without tombstones writes nothing."""
+        dels = batch_df.filter(F.col("op") == "d").select(
+            "vec_id", "ver", F.lit(batch_id).alias("batch_id")
+        )
+        if dels.isEmpty():
+            return
+        writer = dels.coalesce(1).write.mode("append").format("parquet")
+        if not self.spark.catalog.tableExists(self.tombs):
+            writer = writer.option("path", f"{self.loc_base}_tombs")
+        writer.saveAsTable(self.tombs)
+        self.spark.catalog.refreshTable(self.tombs)
+
+    def tombstones(self) -> DataFrame | None:
+        """Newest marker version per key (vec_id, __dver), or None."""
+        if not (self.deletes and self.spark.catalog.tableExists(self.tombs)):
+            return None
+        self.spark.catalog.refreshTable(self.tombs)
+        return (
+            self.spark.table(self.tombs)
+            .groupBy("vec_id")
+            .agg(F.max("ver").alias("__dver"))
+        )
+
+    def _audit_batch(self, batch_id: int) -> None:
+        # this batch's cell histogram: <= n_cells rows off a
+        # batch_id-pruned scan
+        cells = (
+            self.spark.table(self.table)
+            .where(F.col("batch_id") == batch_id)
+            .groupBy("cell")
+            .count()
+            .collect()
+        )
+        counts = [r["count"] for r in cells]
+        self.rows += sum(counts)
+        self._log(
+            {
+                "batch_id": batch_id,
+                "files": _index_file_count(self.loc),
+                "rows": self.rows,
+                "batch_rows": sum(counts),
+                # None for a batch with no index rows (tombstones only)
+                "cell_skew": (
+                    round(max(counts) / (sum(counts) / self.n_cells), 3)
+                    if counts
+                    else None
+                ),
+            }
+        )
+
+    def _next_loc(self) -> str:
+        self.gen += 1
+        self.loc = f"{self.loc_base}_gen{self.gen}"
+        return self.loc
+
+    def compact(self, batch_id: int) -> None:
+        compact_index_table(
+            self.spark,
+            self.table,
+            self.n_buckets,
+            self._next_loc(),
+            purge_latest_by="ver" if self.versioned else None,
+            tombstones=self.tombstones(),
+        )
+        if self.audit is not None:
+            # a purge changes the row count: re-anchor on the footers
+            self.rows = _index_row_count(self.loc)
+            self._log(
+                {
+                    "compacted_after": batch_id,
+                    "files": _index_file_count(self.loc),
+                    "rows": self.rows,
+                }
+            )
+
+    def migrate(self, new_cents) -> None:
+        """Move the whole index one generation forward under
+        ``new_cents`` (see migrate_index_table)."""
+        migrate_index_table(
+            self.spark, self.table, self.n_buckets, self._next_loc(), new_cents
+        )
+
+    def _log(self, entry: dict) -> None:
+        if self.audit is not None:
+            self.audit.append(entry)
+
+    def snapshot(self) -> DataFrame:
+        """The live (vec_id, cell) rows, materialized off the table."""
+        live = _live_rows(
+            self.spark.table(self.table),
+            "ver" if self.versioned else None,
+            self.tombstones(),
+        )
+        return live.select("vec_id", "cell").localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+
+    def cleanup(self) -> None:
+        self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
+        self.spark.sql(f"DROP TABLE IF EXISTS {self.tombs}")
+        for path in [self.loc, f"{self.loc_base}_tombs"] + glob.glob(
+            f"{self.loc_base}_gen*"
+        ):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def maintain_index(
@@ -650,414 +839,57 @@ def maintain_index(
     n_cells: int | None = None,
     two_level: bool = False,
 ) -> DataFrame:
-    """Run the incremental-maintenance loop end to end and return the
-    final index contents (vec_id, cell). `audit`, when given, receives
-    one dict per applied batch (file count + per-batch cell skew — the
-    quantizer-staleness signal: drift in arriving data shows up as the
-    largest-cell/mean-cell ratio climbing across appends).
+    """Maintain ``table`` over the embeddings corpus replayed as
+    ``n_slices`` arrival batches and return the live (vec_id, cell) rows.
 
-    ``upsert=True`` runs the RE-EMBEDDING scenario: later slices carry
-    NEW versions of already-indexed vectors (the deterministic payload:
-    vec_id % 4 < 2 gets its embedding sign-flipped in arrival slice
-    (vec_id % 4) + 2). Index semantics become last-writer-wins on the
-    data-derived version column — the snapshot keeps each vec_id's
-    max-ver row, and compaction physically PURGES superseded versions
-    (merge-on-write), so the steady-state table holds one row per
-    vector regardless of re-embedding traffic.
-
-    ``deletes=True`` (implies the versioned staging) reserves the LAST
-    slice for TOMBSTONES (vec_id % mod == 2, at ver = mod — the delete
-    arrives after every version it kills): deletes land in a small side
-    table of (vec_id, ver, batch_id) delete markers — the Iceberg
-    delete-file shape, since a keyed tombstone cannot be routed into
-    the cell-bucketed layout without knowing the key's cell — the
-    snapshot anti-joins markers newer than the winning version (an even
-    newer re-insert would revive the key), and compaction applies them
-    PHYSICALLY to the index rewrite. Markers are retained (bounded:
-    one row per deleted key) so replays and late versions stay
-    correct.
-
-    ``fresh=False`` RESUMES an existing index instead of dropping it
-    (ADVICE r14: with an unconditional drop the resume-floor/ledger
-    guard could never engage in the streaming path): the table survives,
-    the resume floor is read from its max committed batch_id, and every
-    replayed batch at or below the floor consults the in-table ledger.
-    Resuming requires ``checkpoint_dir`` (batch-id monotonicity — the
-    floor's correctness argument — holds only PER CHECKPOINT; a fresh
-    checkpoint restarts ids at 0 and relies on the source replaying the
-    SAME batches, which only the original checkpoint's offset log
-    guarantees) and ``stage_dir`` pointing at the already-staged
-    arrivals. The registered queries run fresh=True end to end;
-    tests/test_streaming_extras.py::test_ann_index_resume_skips_replayed_batch
-    constructs the resume by dropping the newest checkpoint commit.
-
-    ``carry_vectors=True`` stores each row's embedding beside its cell
-    assignment (the IVF-list shape the serving path reads) so the
-    maintained artifact can answer searches and be MIGRATED under a
-    refreshed quantizer without a trip back to the source corpus.
-
-    ``n_cells`` overrides the corpus-derived quantizer width — PROBE
-    USE ONLY (decade replicas pin a narrow width so a multi-pass run
-    stays inside the harness budget; the flat fold is linear in width).
-    The registered queries never pass it: an override would desync the
-    engine from its COUNT-derived oracle twin.
-
-    ``two_level=True`` runs the WIDE lifecycle (r16 — VERDICT r15 #2):
-    the quantizer width is the UNCAPPED sqrt-corpus derivation
-    (derive_ann_cells_wide) and every assignment — appends and any
-    migration built on this loop — goes through the hierarchical
-    two-level selection instead of the flat fold, which is what makes
-    the uncapped width affordable (flat ingest is linear in width,
-    two-level is O((1+probe)*sqrt(width)) — see assign_batch). File
-    layout is unchanged: cells still hash onto the bounded bucket set,
-    so the compaction file bound and the zero-exchange bucketed read
-    survive the wider quantizer."""
-    import tempfile
-
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _snapshot_and_clean,
-    )
-
+    - ``compact_every``: compact after every that many appends.
+    - ``audit``: list receiving the per-batch/per-compaction rows
+      (see `_IndexLoop`).
+    - ``upsert``: the re-embedding schedule (`_crud_arrivals`): later
+      slices carry new versions of indexed vectors, max `ver` wins, and
+      compaction purges superseded versions.
+    - ``deletes``: the last slice carries tombstones (vec_id % mod == 2).
+      Implies the versioned schedule.
+    - ``fresh=False`` resumes an existing run. It needs the original
+      ``checkpoint_dir`` (batch ids are monotonic only per checkpoint)
+      and ``stage_dir`` (re-read as staged).
+    - ``carry_vectors``: store `e` beside the assignment, so the index
+      can serve searches and be migrated.
+    - ``n_cells``: pin the quantizer width (probes only; the registered
+      queries derive it, like their oracles).
+    - ``two_level``: the wide lifecycle (uncapped width, hierarchical
+      assignment; same file layout)."""
     if not fresh and (checkpoint_dir is None or stage_dir is None):
         raise ValueError(
             "fresh=False resumes an existing run: pass the original "
             "checkpoint_dir and stage_dir (see docstring)"
         )
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    versioned = upsert or deletes
+    emb = _vectors(spark, sf_dir)
     if n_cells is None:
-        # ADVICE r15: honor a caller-pinned width — an unconditional
-        # reassignment here silently ran every "pinned" probe at the
-        # derived width (tests/test_streaming_extras.py::
-        # test_maintain_index_honors_pinned_width pins the regression).
-        n_cells = (
-            derive_ann_cells_wide(sf_dir) if two_level else derive_ann_cells(sf_dir)
-        )
-    cents = (
-        two_level_quantizer(emb, n_cells)
-        if two_level
-        else _ann_cents_relation(emb, n_cells)
+        n_cells = derive_ann_cells_wide(sf_dir) if two_level else derive_ann_cells(sf_dir)
+    loop = _IndexLoop(
+        spark,
+        sf_dir,
+        table,
+        n_slices,
+        n_cells,
+        _quantizer(emb, n_cells, two_level),
+        carry=("e",) if carry_vectors else (),
+        versioned=versioned,
+        deletes=deletes,
+        compact_every=compact_every,
+        audit=audit,
     )
-
-    own_stage = stage_dir is None
-    if own_stage:
-        stage_dir = tempfile.mkdtemp(prefix="spark_graft_ann_stage_")
-        restage = True
-    else:
-        # caller owns the staging dir (the resume path re-reads it)
-        restage = fresh or not os.path.isdir(stage_dir)
-    if restage:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-    if upsert:
-        # versioned staging: slice s = the originals with vec_id%n==s
-        # (ver=s), plus for s >= 2 the re-embedded updates of slice s-2
-        # (ver=s — ver doubles as the arrival slice, so winners are
-        # data-derived and immune to the file source merging batches).
-        # Slices are written SEQUENTIALLY so file mtimes follow version
-        # order; correctness never depends on it (max-ver wins), it just
-        # makes the replay realistic.
-        mod = n_slices - 1 if deletes else n_slices
-        orig = emb.select(
-            "vec_id",
-            "e",
-            F.pmod("vec_id", F.lit(mod)).cast("int").alias("ver"),
-            F.lit("u").alias("op"),
-        )
-        upd = emb.filter(F.pmod("vec_id", F.lit(mod)) < mod - 2).select(
-            "vec_id",
-            F.transform("e", lambda x: -x).alias("e"),
-            (F.pmod("vec_id", F.lit(mod)) + 2).cast("int").alias("ver"),
-            F.lit("u").alias("op"),
-        )
-        versions = orig.unionByName(upd)
-        if deletes:
-            tombs = emb.filter(F.pmod("vec_id", F.lit(mod)) == 2).select(
-                "vec_id",
-                F.lit(None).cast("array<double>").alias("e"),
-                F.lit(mod).cast("int").alias("ver"),
-                F.lit("d").alias("op"),
-            )
-            versions = versions.unionByName(tombs)
-        if restage:
-            # ONE staging job, partitioned by the version slice (r17 —
-            # the non-upsert branch's shape): the old per-slice loop ran
-            # n_slices sequential jobs, each re-evaluating the full
-            # versions union to filter out one slice (~0.3-0.5 s of pure
-            # job overhead per slice at suite scale). partitionBy("ver")
-            # yields the same one-file-per-slice layout in one pass.
-            # Correctness never depended on replay order — winners are
-            # data-derived (max ver per key; the r14 batch-merge note) —
-            # but the file source orders equal-mtime files arbitrarily,
-            # so the mtimes are staggered driver-side (microseconds of
-            # os.utime, no Spark job) to keep the REALISTIC replay the
-            # old sequential writes produced: versions arrive in order,
-            # the tombstone slice last.
-            (
-                versions.repartition(n_slices, "ver")
-                .write.mode("overwrite")
-                .partitionBy("ver")
-                .parquet(stage_dir)
-            )
-            base_t = time.time()
-            for s in range(n_slices):
-                vdir = os.path.join(stage_dir, f"ver={s}")
-                if os.path.isdir(vdir):
-                    for f in os.listdir(vdir):
-                        t = base_t + s * 2.0
-                        os.utime(os.path.join(vdir, f), (t, t))
-        read_schema = "vec_id long, e array<double>, ver integer, op string"
-        stream = (
-            spark.readStream.schema(read_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-    else:
-        # stage the corpus as n_slices arrival batches (pmod keeps the
-        # slicing deterministic; one file per trigger = one batch per slice)
-        if restage:
-            (
-                emb.withColumn(
-                    "slice", F.pmod("vec_id", F.lit(n_slices)).cast("int")
-                )
-                .repartition(n_slices, "slice")
-                .write.mode("overwrite")
-                .partitionBy("slice")
-                .parquet(stage_dir)
-            )
-        read_schema = "vec_id long, e array<double>, slice integer"
-        stream = (
-            spark.readStream.schema(read_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-            .drop("slice")
-        )
-
-    loc_base = os.path.join(tempfile.gettempdir(), "spark_graft_tables", table)
-    tomb_table = f"{table}_tombs"
-    n_buckets = min(ANN_MAX_BUCKETS, n_cells)
-    if fresh:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_compacting")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_retiring")
-        for gen in range(n_slices + 2):
-            shutil.rmtree(f"{loc_base}_gen{gen}", ignore_errors=True)
-        if deletes:
-            spark.sql(f"DROP TABLE IF EXISTS {tomb_table}")
-            shutil.rmtree(f"{loc_base}_tombs", ignore_errors=True)
-        resume_floor = -1  # nothing to resume: zero ledger probes
-    else:
-        # a crash inside a generation swap leaves the complete new
-        # generation under an aside name — complete the promotion before
-        # reading the resume floor (ADVICE r15; see recover_swap)
-        recover_swap(spark, table)
-        # resume floor: the max batch_id already committed to the table
-        # (a restart resuming an existing index under its ORIGINAL
-        # checkpoint — see docstring). Batch ids are monotonic per
-        # checkpoint, so only ids AT OR BELOW the floor can be replays —
-        # ids above it skip the per-batch ledger probe entirely (zero
-        # existence scans in the steady state).
-        if spark.catalog.tableExists(table):
-            spark.catalog.refreshTable(table)
-            row = spark.table(table).agg(F.max("batch_id")).collect()[0]
-            resume_floor = -1 if row[0] is None else int(row[0])
-        else:
-            resume_floor = -1
-    # audit row counter: running sum of applied batch rows, re-anchored
-    # from the rewrite's own parquet footers after each compaction
-    # (VERDICT r14 #7 — no O(index) count in the per-batch path). On
-    # resume, re-anchor from the live generation's footers; its directory
-    # suffix also tells the compactor which generation number is next
-    # (writing into the LIVE generation's directory would destroy it).
-    if not fresh and spark.catalog.tableExists(table):
-        live_loc = _table_location(spark, table)
-        start_rows = _index_row_count(live_loc)
-        gen_suffix = live_loc.rsplit("_gen", 1)[-1]
-        start_gen = int(gen_suffix) if gen_suffix.isdigit() else 0
-    else:
-        start_rows, start_gen = 0, 0
-    state = {"appends": 0, "gen": start_gen, "rows": start_rows}
-
-    def _tombstones() -> DataFrame | None:
-        """Newest delete marker per key, or None when nothing is
-        tombstoned yet. Bounded: one row per ever-deleted vec_id."""
-        if not (deletes and spark.catalog.tableExists(tomb_table)):
-            return None
-        spark.catalog.refreshTable(tomb_table)
-        return spark.table(tomb_table).groupBy("vec_id").agg(
-            F.max("ver").alias("__dver")
-        )
-
-    # r16: size the pre-assignment fan-out from the staged corpus footers
-    # (driver-side metadata) — small batches skip the exchange entirely,
-    # decade batches fan to ~rows/ASSIGN_ROWS_PER_TASK tasks
-    fold_parts = derive_fold_parts(
-        spark, max(1, table_row_count(sf_dir, "embeddings") // max(n_slices, 1))
+    arrivals = (
+        _crud_arrivals(emb, n_slices, deletes)
+        if versioned
+        else _slice_arrivals(emb, n_slices)
     )
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        upserts = batch_df
-        if upsert:
-            upserts = batch_df.filter(F.col("op") == "u").drop("op")
-        check_ledger = int(batch_id) <= resume_floor
-        if check_ledger and batch_already_applied(spark, table, batch_id):
-            if audit is not None:
-                audit.append({"replay_skipped": int(batch_id)})
-            return
-        if deletes:
-            # delete markers ride a SMALL side table (the Iceberg
-            # delete-file shape — a keyed tombstone can't be routed into
-            # the cell-bucketed layout without knowing the key's cell).
-            # Markers are written BEFORE the index append — the append is
-            # the batch's commit marker, so a crash in between replays
-            # the whole batch and merely duplicates markers, which the
-            # max(ver)-per-key aggregation absorbs; the reverse order
-            # could LOSE deletes forever.
-            dels = batch_df.filter(F.col("op") == "d").select(
-                "vec_id", "ver", F.lit(int(batch_id)).alias("batch_id")
-            )
-            # r17: most arrival batches carry no tombstones — probing
-            # emptiness (a LIMIT 1 over the batch with the op filter
-            # pushed down) is ~4x cheaper than the append job + catalog
-            # write it skips. Batches WITH deletes keep the exact
-            # marker-before-append ordering (a skipped batch has no
-            # markers to lose, so the crash-safety argument is intact).
-            if not dels.isEmpty():
-                writer = dels.coalesce(1).write.mode("append").format("parquet")
-                if not spark.catalog.tableExists(tomb_table):
-                    writer = writer.option("path", f"{loc_base}_tombs")
-                writer.saveAsTable(tomb_table)
-                spark.catalog.refreshTable(tomb_table)
-        applied = apply_index_batch(
-            spark,
-            table,
-            f"{loc_base}_gen0",
-            upserts,
-            cents,
-            batch_id,
-            n_buckets,
-            check_ledger=False,  # the guard above already ran
-            carry=(("ver",) if upsert else ())
-            + (("e",) if carry_vectors else ()),
-            fold_parts=fold_parts,
-        )
-        assert applied
-        state["appends"] += 1
-        if audit is not None:
-            # THIS batch's cell histogram (bounded: <= n_cells rows) —
-            # the quantizer-staleness signal: the frozen quantizer is
-            # correct by construction, but drift in the arriving data
-            # shows up as this per-batch largest-cell/mean-cell ratio
-            # spiking (a drifted batch concentrates in few cells), long
-            # before the cumulative distribution moves.
-            cells = (
-                spark.table(table)
-                .where(F.col("batch_id") == int(batch_id))
-                .groupBy("cell")
-                .count()
-                .collect()
-            )
-            counts = [r["count"] for r in cells]
-            state["rows"] += int(sum(counts))
-            audit.append(
-                {
-                    "batch_id": int(batch_id),
-                    "files": _index_file_count(_table_location(spark, table)),
-                    # VERDICT r14 #7: running sum of applied batch rows —
-                    # never an O(index) count in the per-batch path
-                    "rows": int(state["rows"]),
-                    "batch_rows": int(sum(counts)),
-                    # largest cell vs the mean over ALL quantizer cells
-                    # (not just occupied ones — a fully-concentrated
-                    # drifted batch occupies ONE cell, and max/mean over
-                    # occupied cells would read a flat 1.0 exactly when
-                    # the drift is worst). None for a batch with no
-                    # upsert rows (e.g. a tombstone-only delete batch).
-                    "cell_skew": (
-                        round(max(counts) / (sum(counts) / n_cells), 3)
-                        if counts
-                        else None
-                    ),
-                }
-            )
-        if compact_every and state["appends"] % compact_every == 0:
-            state["gen"] += 1
-            compact_index_table(
-                spark,
-                table,
-                n_buckets,
-                f"{loc_base}_gen{state['gen']}",
-                purge_latest_by="ver" if upsert else None,
-                tombstones=_tombstones(),
-            )
-            if audit is not None:
-                # re-anchor the running row counter from the rewrite's
-                # OWN output (parquet footers of the new generation — a
-                # purging compaction changes the row count; footers are
-                # a driver-side metadata read, not a table scan)
-                new_loc = _table_location(spark, table)
-                state["rows"] = _index_row_count(new_loc)
-                audit.append(
-                    {
-                        "compacted_after": int(batch_id),
-                        "files": _index_file_count(new_loc),
-                        "rows": int(state["rows"]),
-                    }
-                )
-
-    writer = (
-        stream.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        # a PERSISTENT checkpoint makes the resume path constructible
-        # (ADVICE r14): batch ids and batch contents replay from its
-        # offset log, which is what the resume floor's monotonicity
-        # argument assumes. Without it Spark uses an ephemeral
-        # checkpoint — fine for the fresh one-shot registered queries.
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-    final_loc = _table_location(spark, table)
-    contents = spark.table(table)
-    if upsert:
-        # last-writer-wins: each vec_id's max-ver row is the live index
-        # entry (whatever compaction has or hasn't purged yet)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("vec_id").orderBy(F.desc("ver"))
-        contents = (
-            contents.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    tombs = _tombstones()
-    if tombs is not None:
-        # a marker kills every version up to its own; a NEWER version
-        # (a re-insert after the delete) revives the key
-        contents = (
-            contents.join(tombs, "vec_id", "left")
-            .filter(F.col("__dver").isNull() | (F.col("__dver") < F.col("ver")))
-            .drop("__dver")
-        )
-    # materialize the snapshot, then clean only staging WE created — a
-    # caller-provided stage_dir backs the resume path's second run
-    snap = _snapshot_and_clean(
-        contents.select("vec_id", "cell"),
-        stage_dir if own_stage else os.path.join(stage_dir, "__keep_sentinel__"),
-    )
+    loop.run(arrivals, stage_dir, fresh, checkpoint_dir)
+    snap = loop.snapshot()
     if cleanup:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {tomb_table}")
-        shutil.rmtree(final_loc, ignore_errors=True)
-        shutil.rmtree(f"{loc_base}_tombs", ignore_errors=True)
-        for gen in range(n_slices + 2):
-            shutil.rmtree(f"{loc_base}_gen{gen}", ignore_errors=True)
+        loop.cleanup()
     return snap
 
 
@@ -1112,9 +944,9 @@ def streaming_ann_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compaction every 4) has to hash-match the same one-pass rebuild
     # the plain maintenance loop matches.
     oracle=_ANN_ORACLE,
-    doc="Streaming ANN index LIFECYCLE (VERDICT r13 #3 — a production "
-    "index lives long enough that unbounded append files dominate read "
-    f"cost): {N_COMPACT_SLICES} arrival batches with compaction every "
+    doc="Streaming ANN index LIFECYCLE (a production index lives long "
+    "enough that unbounded append files dominate read cost): "
+    f"{N_COMPACT_SLICES} arrival batches with compaction every "
     f"{ANN_COMPACT_EVERY} appends — the bucketed table is rewritten to "
     "one file per bucket into a NEW generation directory and swapped "
     "into the catalog (crash-safe: the live table is never rewritten "
@@ -1277,7 +1109,6 @@ def streaming_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         ANN_DELETE_TABLE,
         N_DELETE_SLICES,
         compact_every=UPSERT_COMPACT_EVERY,
-        upsert=True,
         deletes=True,
     )
 
@@ -1357,7 +1188,7 @@ def _two_level_relations(
             "__gcents array<struct<cid:int,ce:array<double>,nc:double,gid:int>>"
         ),
     )
-    # r16: the driver-resident seed rows ride beside the relations so
+    # the driver-resident seed rows ride beside the relations so
     # assignment/probe sites can run the Arrow-vectorized hierarchical
     # twin (functions/nearcell.py) instead of the interpreted HOF
     reps_df._sg_seeds = rep_rows  # noqa: SLF001 — engine-internal tag
@@ -1378,7 +1209,7 @@ def _two_level_seed_rows(reps: DataFrame, gcents: DataFrame):
 class TwoLevel(NamedTuple):
     """The hierarchical coarse quantizer as a first-class value the
     maintenance/migration machinery can carry in place of the flat
-    `__cents` relation (r16 — VERDICT r15 #2): ``assign_batch``
+    `__cents` relation: ``assign_batch``
     dispatches on this type, so ``maintain_index``,
     ``migrate_index_table`` and every loop built on them inherit the
     width-insensitive hierarchical ingest without a second write path."""
@@ -1498,15 +1329,13 @@ def ivf_two_level_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer — one map-side hierarchical selection per row against the
     two broadcast seed rows; the one exchange is the pinned round-robin
     repartition for parallelism (the _ivf_assign_cells convention)."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     n_cells = derive_ann_cells(sf_dir)
     n_reps = derive_group_width(n_cells)
     reps, gcents = _two_level_relations(emb, n_cells, n_reps)
     two_rows = _two_level_seed_rows(reps, gcents)
     if two_rows is not None:
-        # r16: Arrow-vectorized hierarchical twin (functions/nearcell.py)
+        # Arrow-vectorized hierarchical twin (functions/nearcell.py)
         from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
             two_level_cell_udf,
         )
@@ -1542,10 +1371,10 @@ def two_level_serve(
     queries_df: DataFrame, index_df: DataFrame, quant: TwoLevel
 ) -> DataFrame:
     """(query_id, rank, neighbor_id): answer query vectors from a
-    vector-bearing index through the hierarchical probe (VERDICT r15
-    #3 — the serving side of the two-level quantizer as a reusable
-    piece, so it can serve the MAINTAINED CRUD artifact, not only an
-    inline-built assignment). Query side: top-ANN_GROUP_PROBE level-1
+    vector-bearing index through the hierarchical probe (the serving
+    side of the two-level quantizer as a reusable piece, so it can
+    serve the MAINTAINED CRUD artifact, not only an inline-built
+    assignment). Query side: top-ANN_GROUP_PROBE level-1
     groups, then the top-SEARCH_NPROBE cells inside them
     (_two_level_cells), exploded to one row per probed cell — map-side
     against the two broadcast seed rows. Candidates are fetched on the
@@ -1562,7 +1391,7 @@ def two_level_serve(
 
     two_rows = _two_level_seed_rows(quant.reps, quant.gcents)
     if two_rows is not None:
-        # r16: Arrow-vectorized hierarchical probe (functions/nearcell.py)
+        # Arrow-vectorized hierarchical probe (functions/nearcell.py)
         from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
             two_level_cells_udf,
         )
@@ -1586,7 +1415,7 @@ def two_level_serve(
                 F.explode(_two_level_cells("e", SEARCH_NPROBE)).alias("cell"),
             )
         )
-    # r16 (guide §2.3): per-side norms fold once below the cell join —
+    # per-side norms fold once below the cell join —
     # bit-identical ranking, one fold per candidate pair instead of three
     probes = probes.withColumn("qn", F.sqrt(dot("qe", "qe")))
     indexed = index_df.withColumn("nn", F.sqrt(dot("ne", "ne")))
@@ -1805,14 +1634,12 @@ def ann_two_level_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "by row.",
 )
 def ann_two_level_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     n_cells = derive_ann_cells(sf_dir)
     quant = two_level_quantizer(emb, n_cells)
     two_rows = _two_level_seed_rows(quant.reps, quant.gcents)
     if two_rows is not None:
-        # r16: Arrow-vectorized hierarchical assignment (nearcell.py)
+        # Arrow-vectorized hierarchical assignment (nearcell.py)
         from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
             two_level_cell_udf,
         )

@@ -1,50 +1,27 @@
-"""Quantizer staleness REMEDIATION for the maintained ANN index
-(beyond-reference — VERDICT r14 #4: the per-batch cell-skew DETECTOR
-existed since r13; this module is its ACTUATOR).
+"""Quantizer staleness remediation for the maintained ANN index.
 
-The maintenance loop's quantizer is frozen (streaming/ann_index.py): at
-production scale that is the right default — re-deriving centroids per
-batch would re-shuffle the corpus continuously — but a frozen quantizer
-goes STALE when the arriving distribution drifts (a new embedding model,
-a new content domain): drifted arrivals concentrate into few cells,
-cell lists stop pruning, and serving cost climbs. The lifecycle is:
+A maintained index's quantizer is frozen (streaming/ann_index.py). When the
+arriving distribution drifts (a new embedding model, a new content domain),
+drifted arrivals concentrate into few cells, cell lists stop pruning and
+serving cost climbs. `requantize_loop` runs the shared maintenance loop
+(`ann_index._IndexLoop`, vectors carried) and adds:
 
-- DETECT: each applied batch's cell histogram (bounded: <= n_cells
-  rows) yields the largest-cell/mean-over-all-cells ratio; organic
-  batches sit in a tight band (measured 1.7-2.3 across three sfs and
-  the 2M replica), a drifted batch spikes (measured >= n_cells/4 even
-  when the file source merges a drifted slice with organic ones; the
-  fully-drifted slice reads n_cells exactly). ANN_SKEW_REFRESH = 6.0
-  splits every measured organic point (<= 3.58, incl. the 2M replica)
-  from every measured drift point (>= 8.8) with >= 1.47x margin.
-- REFRESH: re-seed the quantizer from the index's own CURRENT contents
-  (the n_cells smallest live vec_ids with their stored — i.e. arrived —
-  embeddings). The refreshed seeds therefore reflect the drift; no trip
-  back to the source corpus (the index carries vectors:
-  maintain_index carry_vectors=True, the IVF-list shape).
-- MIGRATE: rewrite the index one generation forward with every stored
-  vector re-assigned map-side under the refreshed quantizer
-  (migrate_index_table — the compaction write-then-swap machinery with
-  the assignment fold applied during the rewrite; one exchange total,
-  onto the new bucket layout). Remediation runs at the next maintenance
-  window (stream end here), not mid-batch: the alarm only marks the
-  index stale, the rewrite is deferred work like compaction.
+- detect: the loop's audit already computes each batch's cell skew
+  (largest cell over the mean across all cells). A batch above
+  ANN_SKEW_REFRESH raises the alarm;
+- refresh: at stream end, re-seed the quantizer from the index's own
+  stored vectors (the n_cells smallest live vec_ids), so the new seeds
+  reflect the drift without a trip back to the source corpus;
+- migrate: rewrite the index one generation forward with every stored
+  vector re-assigned under the refreshed quantizer
+  (`migrate_index_table`, the same rename-aside swap as compaction).
 
-`streaming_ann_index_requantize` runs the full drift story end to end:
-3 organic arrival slices + 1 drifted slice (the deterministic payload
-e -> abs(e) + 1.0 for vec_id % 4 == 3 — near-parallel vectors, the
-worst-case concentration a stale quantizer can see), alarm fires on the
-drifted batch, refresh + migration run at stream end. The DuckDB oracle
-computes the one-pass assignment of the POST-DRIFT corpus under the
-REFRESHED quantizer, so "migrated index equals a fresh rebuild under
-the new quantizer" is an exact, hash-checked property — if the alarm
-ever failed to fire, the un-migrated index would hash-mismatch loudly.
+The registered queries check "migrated index equals a fresh rebuild under
+the refreshed quantizer" exactly against DuckDB; a missed alarm leaves an
+un-migrated index that hash-mismatches.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,16 +31,14 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import 
     ANN_CELLS_SQL,
     ANN_CELLS_WIDE_SQL,
     ANN_GROUP_PROBE,
-    ANN_MAX_BUCKETS,
-    _ann_cents_relation,
     _group_sql,
-    apply_index_batch,
+    _IndexLoop,
+    _quantizer,
+    _slice_arrivals,
+    _vectors,
     derive_ann_cells,
     derive_ann_cells_wide,
-    migrate_index_table,
-    two_level_quantizer,
 )
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load
 
 ANN_REQUANT_TABLE = "spark_graft_ann_index_q"
 N_REQUANT_SLICES = 4  # 3 organic arrival slices + 1 drifted slice
@@ -88,173 +63,54 @@ def requantize_loop(
     drift: bool = True,
     two_level: bool = False,
 ) -> DataFrame:
-    """Maintenance loop with the staleness detector live and the
-    refresh+migrate actuator armed: appends run exactly as
-    maintain_index's (idempotent, bucketed, vector-carrying), each
-    applied batch's cell histogram is read back (a batch_id-pruned
-    scan — O(batch), the audit instrument) and scored against
-    ANN_SKEW_REFRESH, and at stream end a fired alarm triggers the
-    quantizer refresh from the index's own contents plus the
-    one-generation migration rewrite. Returns the final (vec_id, cell)
-    snapshot — post-migration when the alarm fired. ``drift=False`` is
-    the CONTROL arm (organic arrivals only): the alarm must stay silent
-    and no migration may run — asserted by
-    tests/test_streaming_extras.py::test_requantize_alarm_and_control.
+    """Run the maintenance loop with the staleness alarm armed and return
+    the final (vec_id, cell) rows, post-migration when the alarm fired.
 
-    ``two_level=True`` runs the WIDE lifecycle end to end (r16 —
-    VERDICT r15 #2): uncapped sqrt-corpus width, appends AND the
-    migration rewrite assigning through the hierarchical two-level
-    selection (assign_batch dispatches on the TwoLevel quantizer), and
-    the refresh re-deriving the two-level relations — reps, grouping
-    and all — from the index's own stored vectors. This is what removes
-    the flat requantize's width ceiling: the 2M migration paid 1201 s
-    re-assigning through the flat fold at 256 cells (SCALE_r15
-    ann_requantize_1000x); the two-level re-assignment is
-    width-insensitive. The alarm detector is unchanged — measured
-    two-level organic band 1.79-2.56 across the three sfs (r16) vs the
-    drifted batch's n_cells exactly, so ANN_SKEW_REFRESH = 6.0 keeps
-    >= 2.3x margin on both sides."""
-    import tempfile
-
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _snapshot_and_clean,
-    )
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    With ``drift`` the last slice carries a new model's embeddings
+    (deterministic payload abs(x) + 1.0: near-parallel vectors, the
+    worst-case concentration). ``drift=False`` is the control arm: the
+    alarm must stay silent and no migration may run. Each audited batch
+    row gains ``alarm``; a migration appends {"migrated", "alarms"}.
+    ``two_level`` runs appends, refresh and migration through the
+    two-level quantizer at the uncapped width."""
+    audit = [] if audit is None else audit
+    first = len(audit)
+    emb = _vectors(spark, sf_dir)
     n_cells = derive_ann_cells_wide(sf_dir) if two_level else derive_ann_cells(sf_dir)
-    cents = (
-        two_level_quantizer(emb, n_cells)
-        if two_level
-        else _ann_cents_relation(emb, n_cells)
+    loop = _IndexLoop(
+        spark,
+        sf_dir,
+        table,
+        n_slices,
+        n_cells,
+        _quantizer(emb, n_cells, two_level),
+        carry=("e",),
+        audit=audit,
     )
-    n_buckets = min(ANN_MAX_BUCKETS, n_cells)
-
-    # the drift scenario: the last arrival slice carries a NEW embedding
-    # model's output for its vectors — deterministic payload
-    # abs(x) + 1.0 (all-positive, near-parallel: the worst-case
-    # concentration; bit-exact on both engines)
-    arrived = emb
+    arrived = _slice_arrivals(emb, n_slices)
     if drift:
-        arrived = emb.withColumn(
+        arrived = arrived.withColumn(
             "e",
             F.when(
-                F.pmod("vec_id", F.lit(n_slices)) == n_slices - 1,
+                F.col("ver") == n_slices - 1,
                 F.transform("e", lambda x: F.abs(x) + F.lit(1.0)),
             ).otherwise(F.col("e")),
         )
-
-    stage_dir = tempfile.mkdtemp(prefix="spark_graft_ann_requant_stage_")
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    os.makedirs(stage_dir, exist_ok=True)
-    # sequential staging (distinct mtimes) so the drifted slice arrives
-    # last; correctness never depends on the batching — the alarm
-    # threshold holds even if the file source merges slices (measured:
-    # full merge still reads >= 8.8 vs the 6.0 threshold)
-    for s in range(n_slices):
-        (
-            arrived.filter(F.pmod("vec_id", F.lit(n_slices)) == s)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(stage_dir)
-        )
-    stream = (
-        spark.readStream.schema("vec_id long, e array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-
-    loc_base = os.path.join(tempfile.gettempdir(), "spark_graft_tables", table)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_migrating")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_retiring")
-    for gen in range(2):
-        shutil.rmtree(f"{loc_base}_gen{gen}", ignore_errors=True)
-    state = {"alarms": 0}
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        applied = apply_index_batch(
-            spark,
-            table,
-            f"{loc_base}_gen0",
-            batch_df,
-            cents,
-            batch_id,
-            n_buckets,
-            check_ledger=False,  # fresh one-shot loop (see maintain_index)
-            carry=("e",),
-        )
-        assert applied
-        # the DETECTOR: this batch's cell histogram, read back off the
-        # just-committed rows (batch_id predicate -> row-group pruned;
-        # bounded <= n_cells result rows)
-        cells = (
-            spark.table(table)
-            .where(F.col("batch_id") == int(batch_id))
-            .groupBy("cell")
-            .count()
-            .collect()
-        )
-        counts = [r["count"] for r in cells]
-        skew = max(counts) / (sum(counts) / n_cells) if counts else 0.0
-        fired = skew > ANN_SKEW_REFRESH
-        if fired:
-            state["alarms"] += 1
-        if audit is not None:
-            audit.append(
-                {
-                    "batch_id": int(batch_id),
-                    "batch_rows": int(sum(counts)),
-                    "cell_skew": round(skew, 3),
-                    "alarm": fired,
-                }
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-    if state["alarms"]:
-        # the ACTUATOR: refresh the quantizer from the index's own live
-        # contents (the n_cells smallest vec_ids with their STORED —
-        # arrived — embeddings; every corpus id is live here, so the
-        # seed filter is the same vec_id < n_cells form), then migrate
-        # the whole index one generation forward under the new seeds.
+    loop.run(arrived)
+    batches = [a for a in audit[first:] if "batch_id" in a]
+    for a in batches:
+        a["alarm"] = (a["cell_skew"] or 0.0) > ANN_SKEW_REFRESH
+    alarms = sum(a["alarm"] for a in batches)
+    if alarms:
+        # refresh from the index's own stored (arrived) vectors; every
+        # corpus id is live here, so the seeds are vec_id < n_cells
         spark.catalog.refreshTable(table)
         stored = spark.table(table).select("vec_id", "e")
-        new_cents = (
-            two_level_quantizer(stored, n_cells)
-            if two_level
-            else _ann_cents_relation(stored, n_cells)
-        )
-        migrate_index_table(spark, table, n_buckets, f"{loc_base}_gen1", new_cents)
-        if audit is not None:
-            audit.append({"migrated": True, "alarms": state["alarms"]})
-
-    final_loc = None
-    if spark.catalog.tableExists(table):
-        from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import (
-            _table_location,
-        )
-
-        final_loc = _table_location(spark, table)
-    snap = _snapshot_and_clean(
-        spark.table(table).select("vec_id", "cell"), stage_dir
-    )
+        loop.migrate(_quantizer(stored, n_cells, two_level))
+        audit.append({"migrated": True, "alarms": alarms})
+    snap = loop.snapshot()
     if cleanup:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        if final_loc:
-            shutil.rmtree(final_loc, ignore_errors=True)
-        for gen in range(2):
-            shutil.rmtree(f"{loc_base}_gen{gen}", ignore_errors=True)
+        loop.cleanup()
     return snap
 
 
@@ -295,7 +151,7 @@ def requantize_loop(
     SELECT vec_id, CAST(cid AS INTEGER) AS cell FROM scored WHERE rn = 1
     """,
     doc="Streaming ANN index QUANTIZER REFRESH + MIGRATION (beyond-"
-    "reference — the staleness alarm's actuator, VERDICT r14 #4): "
+    "reference — the staleness alarm's actuator): "
     f"{N_REQUANT_SLICES - 1} organic arrival slices append under the "
     "frozen quantizer, a final DRIFTED slice (deterministic "
     "abs(x) + 1.0 payload — a new embedding model's near-parallel "
@@ -392,9 +248,9 @@ ANN_REQUANT2_TABLE = "spark_graft_ann_index_q2"
     SELECT vec_id, CAST(cid AS INTEGER) AS cell FROM l2
     """,
     doc="Streaming ANN index quantizer refresh + migration through the "
-    "WIDE (two-level) lifecycle (beyond-reference — r16, VERDICT r15 "
-    "#2: the hierarchical quantizer wired into the MAINTAINED index, "
-    "not a standalone assignment): arrival appends assign through the "
+    "WIDE (two-level) lifecycle (beyond-reference — the hierarchical "
+    "quantizer wired into the MAINTAINED index, not a standalone "
+    "assignment): arrival appends assign through the "
     "two-level selection at the UNCAPPED sqrt-corpus width, the final "
     "drifted slice (abs(x) + 1.0) trips the per-batch cell-skew alarm "
     "(measured two-level organic band 1.79-2.56 vs the drifted batch's "

@@ -640,6 +640,34 @@ def test_bench_headline_names_are_registered():
     assert not missing, f"bench.py HEADLINE names unregistered queries: {missing}"
 
 
+def test_tool_and_benchmark_engine_imports_resolve():
+    """tools/ and perfbench/ import engine names that no other test
+    imports; a rename must fail here, not in the benchmark or a probe."""
+    import importlib
+    import importlib.util
+
+    root = pathlib.Path(__file__).parents[1]
+    pkg = "cqu_bigdata_recommender_system_for_movies_spark"
+    checked, missing = 0, []
+    for path in sorted([*root.glob("tools/*.py"), *root.glob("perfbench/*.py")]):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and (node.module or "").split(".")[0] == pkg
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                checked += 1
+                if not hasattr(mod, alias.name) and (
+                    importlib.util.find_spec(f"{node.module}.{alias.name}") is None
+                ):
+                    missing.append(f"{path.relative_to(root)}: {node.module}.{alias.name}")
+    assert checked, "no engine imports found under tools/ or perfbench/"
+    assert not missing, missing
+
+
 
 def test_prefix_filter_recall_dominates_capped_index(spark, sf_dir):
     """The AllPairs prefix filter is EXACT (no false negatives), while the

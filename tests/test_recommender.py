@@ -43,18 +43,23 @@ def test_split_model_ignores_and_drops_dead_app_entries(spark, sf_dir):
     from cqu_bigdata_recommender_system_for_movies_spark.ml import als
 
     dead = ("local-dead-app", sf_dir)
+    dead_full = ("local-dead-app", sf_dir, "full")
     stale_model, stale_split = object(), (object(), object())
     als._MODEL_CACHE[dead] = stale_model
+    als._MODEL_CACHE[dead_full] = stale_model
     als._SPLIT_CACHE[dead] = stale_split
     try:
         model, train, test = als._split_model(spark, sf_dir)
         assert model is not stale_model
         assert (train, test) != stale_split
         assert dead not in als._MODEL_CACHE and dead not in als._SPLIT_CACHE
+        # a model entry with no split of its own is dropped too
+        assert dead_full not in als._MODEL_CACHE
         live = (spark.sparkContext.applicationId, sf_dir)
         assert als._MODEL_CACHE[live] is model
     finally:
         als._MODEL_CACHE.pop(dead, None)
+        als._MODEL_CACHE.pop(dead_full, None)
         als._SPLIT_CACHE.pop(dead, None)
 
 
@@ -402,7 +407,7 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from cqu_bigdata_recommender_system_for_movies_spark.ml.als import (
-        _MODEL_CACHE,
+        cached_model,
         fit_als,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.ml.foldin import (
@@ -439,12 +444,11 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
 
     # full retrain: the expensive path the fold-in replaces — ALL ratings,
     # same hyperparameters, evaluated on the SAME scorable holdout rows
-    key = (sf_dir, "foldin_full_retrain")
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit_als(
-            ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-        )
-    full = _MODEL_CACHE[key]
+    full = cached_model(
+        spark,
+        (sf_dir, "foldin_full_retrain"),
+        lambda: fit_als(ratings(spark, sf_dir).select("user_id", "item_id", "rating")),
+    )
     retrain_rmse = (
         full.transform(joined.select("user_id", "item_id", "rating"))
         .select(((F.col("prediction") - F.col("rating")) ** 2).alias("se"))

@@ -66,20 +66,15 @@ COLLECT_WHITELIST = {
     # _ann_cents_relation
     ("streaming/ann_index.py", "_two_level_relations"),
     # one catalog-metadata row (the table's Location string) — feeds the
-    # compaction generation swap and the audit's file counter
+    # generation swap and a resumed run's live-generation anchor
     ("streaming/ann_index.py", "_table_location"),
-    # the staleness DETECTOR'S per-batch cell histogram: <= n_cells
-    # rows read back off a batch_id-pruned scan — here it is the
-    # operator itself (the alarm arming the refresh+migrate actuator),
-    # not an optional audit
-    ("streaming/ann_requantize.py", "emit"),
-    # audit-only per-batch cell histogram: <= n_cells rows (the
-    # quantizer-staleness/skew signal); skipped entirely when no audit
-    # list is passed (the registered queries pass none)
-    ("streaming/ann_index.py", "emit"),
-    # one max(batch_id) scalar at loop startup — the resume floor that
+    # the maintenance loop's per-batch cell histogram: <= n_cells rows
+    # off a batch_id-pruned scan (the quantizer-staleness signal; the
+    # requantize alarm reads it, the other lifecycles only when audited)
+    ("streaming/ann_index.py", "_audit_batch"),
+    # one max(batch_id) scalar when a run resumes — the resume floor that
     # lets every batch above it skip the per-batch ledger probe
-    ("streaming/ann_index.py", "maintain_index"),
+    ("streaming/ann_index.py", "open"),
 }
 
 DRIVER_SINKS = ("collect", "toPandas", "toLocalIterator")

@@ -1055,6 +1055,158 @@ def test_ann_index_delete_tombstones_and_physical_purge(spark, sf_dir):
         shutil.rmtree(base + "_gen2_purgetest", ignore_errors=True)
 
 
+def _post_crud_rebuild(spark, sf_dir) -> tuple[dict, set]:
+    """(vec_id -> cell, deleted keys) of the delete schedule rebuilt in
+    one pass: vec_id % 4 < 2 re-embedded (sign flip), % 4 == 3 original,
+    % 4 == 2 deleted; assigned under the quantizer of the original
+    corpus."""
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import (
+        _ann_cents_relation,
+        _vectors,
+        assign_batch,
+    )
+
+    emb = _vectors(spark, sf_dir)
+    key = F.pmod("vec_id", F.lit(4))
+    live = emb.filter(key != 2).select(
+        "vec_id",
+        F.when(key < 2, F.transform("e", lambda x: -x)).otherwise(F.col("e")).alias("e"),
+    )
+    cents = _ann_cents_relation(emb, derive_ann_cells(sf_dir))
+    expected = {r.vec_id: r.cell for r in assign_batch(live, cents).collect()}
+    deleted = {r.vec_id for r in emb.filter(key == 2).select("vec_id").collect()}
+    return expected, deleted
+
+
+def test_ann_index_crud_result_ignores_arrival_order(spark, sf_dir):
+    """Results rest on `ver`, not on the order the file source replays
+    the slices. Stage the delete schedule and force the reverse order
+    through file mtimes: the tombstone slice first, then the update
+    slices, then the originals they supersede. The snapshot still equals
+    the post-CRUD one-pass rebuild, and the marker table holds exactly
+    the deleted keys."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    import cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index as ai
+
+    n = ai.N_DELETE_SLICES
+    tbl = "spark_graft_ann_order_test"
+    emb = ai._vectors(spark, sf_dir)
+    n_cells = ai.derive_ann_cells(sf_dir)
+    arrivals = ai._crud_arrivals(emb, n, deletes=True)
+    audit: list = []
+    loop = ai._IndexLoop(
+        spark,
+        sf_dir,
+        tbl,
+        n,
+        n_cells,
+        ai._ann_cents_relation(emb, n_cells),
+        versioned=True,
+        deletes=True,
+        compact_every=ai.UPSERT_COMPACT_EVERY,
+        audit=audit,
+    )
+    stage = tempfile.mkdtemp(prefix="spark_graft_ann_order_stage_")
+    try:
+        ai._stage_arrivals(arrivals, stage, n)
+        # the file source replays in mtime order: ver=4 oldest, ver=0 newest
+        base = time.time() - 100.0
+        for ver in range(n):
+            vdir = os.path.join(stage, f"ver={ver}")
+            t = base + 2.0 * (n - 1 - ver)
+            for f in os.listdir(vdir):
+                os.utime(os.path.join(vdir, f), (t, t))
+        loop.open(fresh=True)
+        loop.drain(stage, arrivals.schema)
+        got = {r.vec_id: r.cell for r in loop.snapshot().collect()}
+
+        expected, deleted = _post_crud_rebuild(spark, sf_dir)
+        assert got == expected
+        spark.catalog.refreshTable(f"{tbl}_tombs")
+        markers = spark.table(f"{tbl}_tombs").collect()
+        assert {r.vec_id for r in markers} == deleted
+        # the forced order took effect: the tombstones rode batch 0
+        assert {r.batch_id for r in markers} == {0}
+        batches = [a for a in audit if "batch_id" in a]
+        assert len(batches) == n and batches[0]["batch_rows"] == 0
+    finally:
+        loop.cleanup()
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def test_ann_index_crash_between_markers_and_append(spark, sf_dir, monkeypatch):
+    """Crash point: a batch's delete markers are written and its index
+    append never runs. Restarting from the checkpoint replays that batch
+    under the same id; it writes its markers a second time and appends.
+    max(ver) per key absorbs the duplicate markers, and the snapshot
+    equals the post-CRUD rebuild."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    import cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index as ai
+
+    tbl = "spark_graft_ann_crash_test"
+    ckpt = tempfile.mkdtemp(prefix="spark_graft_ann_crash_ckpt_")
+    stage = tempfile.mkdtemp(prefix="spark_graft_ann_crash_stage_")
+    run = dict(
+        compact_every=ai.UPSERT_COMPACT_EVERY,
+        deletes=True,
+        cleanup=False,
+        checkpoint_dir=ckpt,
+        stage_dir=stage,
+    )
+    real_apply = ai.apply_index_batch
+    crashed: list[int] = []
+
+    def crash_after_markers(spark_, table, loc, batch_df, cents, batch_id, *a, **kw):
+        if not crashed and spark_.catalog.tableExists(f"{tbl}_tombs"):
+            crashed.append(int(batch_id))
+            raise RuntimeError("crash between marker write and append")
+        return real_apply(spark_, table, loc, batch_df, cents, batch_id, *a, **kw)
+
+    monkeypatch.setattr(ai, "apply_index_batch", crash_after_markers)
+    try:
+        with pytest.raises(StreamingQueryException, match="crash between marker"):
+            ai.maintain_index(spark, sf_dir, tbl, ai.N_DELETE_SLICES, **run)
+        assert crashed
+        expected, deleted = _post_crud_rebuild(spark, sf_dir)
+        spark.catalog.refreshTable(f"{tbl}_tombs")
+        assert spark.table(f"{tbl}_tombs").count() == len(deleted)
+
+        audit: list = []
+        got = ai.maintain_index(
+            spark, sf_dir, tbl, ai.N_DELETE_SLICES, audit=audit, fresh=False, **run
+        )
+        assert {r.vec_id: r.cell for r in got.collect()} == expected
+        # the crashed batch was replayed under its own id and applied
+        assert crashed[0] in [a["batch_id"] for a in audit if "batch_id" in a]
+        spark.catalog.refreshTable(f"{tbl}_tombs")
+        markers = spark.table(f"{tbl}_tombs")
+        assert markers.count() == 2 * len(deleted)
+        assert {r.batch_id for r in markers.select("batch_id").distinct().collect()} == {
+            crashed[0]
+        }
+        newest = markers.groupBy("vec_id").agg(F.max("ver").alias("v")).collect()
+        assert {r.vec_id for r in newest} == deleted
+        assert {r.v for r in newest} == {ai.N_DELETE_SLICES - 1}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}_tombs")
+        base = os.path.join(tempfile.gettempdir(), "spark_graft_tables", tbl)
+        for path in glob.glob(f"{base}_*"):
+            shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def test_ann_index_resume_floor_skips_replays_only(spark, sf_dir):
     """The restart path's guard arithmetic: after a restart the loop
     reads the table's max committed batch_id ONCE (the resume floor);
