@@ -488,62 +488,21 @@ def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> Dat
     cells (descending cosine, ties to the smaller cid — the same order
     as the oracles' ROW_NUMBER OVER (ORDER BY cos DESC, cid)).
 
-    MAP-SIDE: the n_cells seed rows are a bounded driver-side list
-    (production: sampled k-means centroids, equally driver-resident)
-    shipped ONCE as a single-row broadcast relation and cross-joined in
-    (BroadcastNestedLoopJoin over exactly one row — the same shape as
-    the epoch-anchor scalars), then folded per row as one array
-    expression. There is no corpus x n_cells exchange; the one exchange
-    is the pinned 1x-corpus round-robin repartition for parallelism
-    (ADVICE r10 — the r10 1000x probe caught the previous broadcast
-    cross-score + window-argmin plan shuffling corpus x n_cells rows
-    WITH their embedding payloads, 16 GB / 298 s at 2M vectors for
-    ann_ivf_topk). An earlier form inlined the centroids as literal
-    expression NODES (n_cells x dim of them): fine at 16 cells, but a
-    realistic 4096-cell quantizer would put ~260k literals in the plan
-    and choke Catalyst before the executors see a row (VERDICT r10 #3)
-    — the broadcast row keeps plan size independent of n_cells
-    (tests/test_plans.py::test_ivf_assign_plan_size_independent_of_cells).
-
-    The seed norms are precomputed into the broadcast row (same left
-    fold + correctly-rounded sqrt the JVM would do, bit-identical), the
-    row norm is let-bound ONCE via a single-element transform lambda
-    (higher-order functions are interpreted with no CSE — an inline
-    sqrt(dot(e,e)) would re-run the 64-wide fold n_cells times/row),
-    and the pinned repartition precedes the CPU-dense fold because AQE
-    widens by bytes, not downstream CPU (one parquet file at the 1000x
-    replica scanned as ~3 partitions would starve 29 of 32 cores)."""
-    import math
+    The quantizer (the n_cells smallest vec_ids as seeds) is
+    driver-resident data that travels in the UDF closure, so the plan
+    stays independent of n_cells
+    (tests/test_plans.py::test_ivf_assign_plan_size_independent_of_cells)
+    and no corpus x n_cells exchange exists. The one exchange is a
+    pinned 1x-corpus round-robin repartition ahead of the CPU-dense
+    selection: AQE widens by bytes, not downstream CPU."""
+    # deferred: the functions package imports this module
+    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+        cells_udf,
+        seed_quantizer,
+    )
 
     spark = emb.sparkSession
-    seeds = (
-        emb.filter(F.col("vec_id") < n_cells)
-        .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .collect()
-    )
-
-    def _norm(ce: list[float]) -> float:
-        acc = 0.0
-        for x in ce:
-            acc += x * x
-        return math.sqrt(acc)
-
-    seed_rows = [
-        (int(r.cid), [float(x) for x in r.ce], _norm(list(r.ce)))
-        for r in sorted(seeds, key=lambda r: r.cid)
-    ]
-    # r16 (guide §4.2): the scoring fold runs as the Arrow-vectorized
-    # numpy twin (functions/nearcell.py) — bit-identical selection (cos
-    # DESC, cid ASC, Double.compare total order), ~1000x per cosine vs
-    # the interpreted HOF, and the plan stays independent of n_cells
-    # (the seeds ride the UDF closure instead of a broadcast relation —
-    # test_ivf_assign_plan_size_independent_of_cells still pins it).
-    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        nearest_cells_udf,
-    )
-
-    ensure_shipped(spark)
-    cells = nearest_cells_udf(seed_rows, k)(F.col("e"))
+    cells = cells_udf(seed_quantizer(emb, "vec_id", "e", n_cells), k)(F.col("e"))
     return (
         emb.repartition(shuffle_partitions(spark))
         .select("vec_id", "e", cells.alias("cells"))
@@ -588,19 +547,12 @@ def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> Dat
     doc="Approximate nearest neighbors, IVF-style (north-star scale path "
     "beside sign-LSH): a deterministic coarse quantizer (the first "
     f"{N_IVF_CELLS} vectors as cell seeds) assigns every vector to its "
-    "nearest cell MAP-SIDE — the seeds are a bounded driver-side list "
-    "(production: sampled k-means centroids, equally driver-resident), "
-    "shipped once as a single-row broadcast relation and folded per row "
-    "as one array expression. No corpus x n_cells exchange; the one "
-    "exchange is a pinned 1x-corpus repartition for parallelism (the "
-    "r10 1000x probe caught the previous broadcast cross-score + "
-    "window-argmin plan shuffling corpus x n_cells rows WITH their "
-    "embedding payloads — 16 GB at 2M vectors, 298 s; map-side assign "
-    "+ the cell-local probe join runs the same query in ~17 s per "
-    "execution — 34 s under the probe convention, which executes "
-    "twice: noop sink + count). "
-    "Candidates are cell-local only (single-probe). Top-3 cell-local "
-    "neighbors for the first 50 ids.",
+    "nearest cell MAP-SIDE — the seeds are driver-resident data that "
+    "travels in the assignment UDF's closure (production: sampled "
+    "k-means centroids, equally driver-resident). No corpus x n_cells "
+    "exchange; the one exchange is a pinned 1x-corpus repartition for "
+    "parallelism. Candidates are cell-local only (single-probe). Top-3 "
+    "cell-local neighbors for the first 50 ids.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
@@ -614,7 +566,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "e", F.element_at("cells", 1).alias("cid"))
         .localCheckpoint(eager=False)
     )
-    # r16 (guide §2.3): norms are pair-invariant — fold each side's once
+    # norms are pair-invariant — fold each side's once
     # below the join (projects don't collapse across joins) instead of
     # re-folding the 64-wide arrays in every pair's cosine; identical
     # doubles, bit-identical scores, one fold per pair instead of three.

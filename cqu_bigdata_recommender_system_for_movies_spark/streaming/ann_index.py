@@ -1,10 +1,11 @@
 """Streaming ANN index maintenance: the write path of the similarity-search
 family (the serving path is streaming/ann_search.py).
 
-The quantizer of an index is frozen for its life: the flat `__cents`
-relation (`_ann_cents_relation`), or the `TwoLevel` quantizer for the wide
-lifecycle. Arriving vectors are assigned map-side against it and appended
-to a cell-bucketed index table. Assignment is per-row deterministic, so an
+The quantizer of an index is frozen for its life: a `Flat` value, or a
+`TwoLevel` one for the wide lifecycle (functions/nearcell.py). It is
+driver-resident data that travels in the assignment UDF's closure.
+Arriving vectors are assigned map-side against it and appended to a
+cell-bucketed index table. Assignment is per-row deterministic, so an
 index maintained batch by batch equals the one-pass assignment of the same
 rows; each registered query below checks exactly that against a DuckDB
 rebuild.
@@ -57,18 +58,25 @@ import math
 import os
 import shutil
 import tempfile
-from typing import Callable, NamedTuple
+from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+    Flat,
+    TwoLevel,
+    _fold_dot,
+    cell_udf,
+    seed_quantizer,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     shuffle_partitions,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
-    _nearest_cells,
     _rec_cells_sql,
     derive_rec_cells,
 )
@@ -139,8 +147,7 @@ QUERY_REM = 7
 # production widths the probe multiplier is noise next to the flat
 # fold's linear width cost (256 cells: 80 vs 256 dots; 2048: 225 vs
 # 2048; 45k: ~1.1k vs 45k) — buy agreement. Floored in
-# tests/test_streaming_extras.py::test_two_level_assign_agreement;
-# tools/probe_ann_two_level.py re-measures at replica scale.
+# tests/test_streaming_extras.py::test_two_level_assign_agreement.
 ANN_GROUP_PROBE = 4
 
 
@@ -188,92 +195,28 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_cents_relation(emb: DataFrame, n_cells: int) -> DataFrame:
-    """The frozen quantizer as the single-row broadcast `__cents`
-    relation (cid, ce, nc) — seeds = the n_cells smallest vec_ids of the
-    existing corpus, norms precomputed with the same left fold +
-    correctly-rounded sqrt as the oracle's sqrt(list_dot_product)
-    (the `_ivf_assign_cells` / candidates `_centroid_relation` shape)."""
-    spark = emb.sparkSession
-    seeds = (
-        emb.filter(F.col("vec_id") < n_cells)
-        .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .collect()
-    )
-
-    def _norm(ce: list[float]) -> float:
-        acc = 0.0
-        for x in ce:
-            acc += x * x
-        return math.sqrt(acc)
-
-    seed_rows = [
-        (int(r.cid), [float(x) for x in r.ce], _norm(list(r.ce)))
-        for r in sorted(seeds, key=lambda r: r.cid)
-    ]
-    cents_df = spark.createDataFrame(
-        [(seed_rows,)],
-        schema="__cents array<struct<cid:int,ce:array<double>,nc:double>>",
-    )
-    # the driver-resident seed list rides beside the relation so the
-    # assignment can run the Arrow-vectorized twin of the fold
-    # (functions/nearcell.py) — same bounded data, bit-identical selection
-    cents_df._sg_seeds = seed_rows  # noqa: SLF001 — engine-internal tag
-    return cents_df
+def _ann_cents_relation(emb: DataFrame, n_cells: int) -> Flat:
+    """The frozen flat quantizer: seeds = the n_cells smallest vec_ids of
+    the existing corpus."""
+    return seed_quantizer(emb, "vec_id", "e", n_cells)
 
 
-def _quantizer(emb: DataFrame, n_cells: int, two_level: bool):
-    """The frozen quantizer over ``emb``'s n_cells-seed prefix: the flat
-    `__cents` relation, or the TwoLevel quantizer of the wide lifecycle."""
+def _quantizer(emb: DataFrame, n_cells: int, two_level: bool) -> Flat | TwoLevel:
+    """The frozen quantizer over ``emb``'s n_cells-seed prefix: flat, or
+    the TwoLevel quantizer of the wide lifecycle."""
     if two_level:
         return two_level_quantizer(emb, n_cells)
     return _ann_cents_relation(emb, n_cells)
 
 
 def assign_batch(
-    batch_df: DataFrame, cents, carry: tuple[str, ...] = ()
+    batch_df: DataFrame, cents: Flat | TwoLevel, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """(vec_id, cell, *carry): map-side cell assignment of one arrival
-    batch against the frozen quantizer — no corpus-sized exchange
-    either way. `carry` names batch columns to keep beside the
-    assignment (the upsert loop carries its version column).
-
-    ``cents`` picks the algorithm:
-    - a plain DataFrame (the `__cents` relation) runs the FLAT
-      nearest-cell argmax: the Arrow-vectorized numpy twin
-      (functions/nearcell.py) when the relation carries its seed list,
-      else the interpreted expression fold (bit-identical results);
-    - a ``TwoLevel`` quantizer runs the HIERARCHICAL selection —
-      O((1+probe)*sqrt(width)) dots per row, the width-insensitive
-      ingest path past the cap."""
-    if isinstance(cents, TwoLevel):
-        two_rows = _two_level_seed_rows(cents.reps, cents.gcents)
-        if two_rows is not None:
-            from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-                two_level_cell_udf,
-            )
-
-            cell = two_level_cell_udf(*two_rows, ANN_GROUP_PROBE)(F.col("e"))
-            return batch_df.select("vec_id", cell.alias("cell"), *carry)
-        return (
-            batch_df.crossJoin(F.broadcast(cents.gcents))
-            .crossJoin(F.broadcast(cents.reps))
-            .select("vec_id", _two_level_cell("e").alias("cell"), *carry)
-        )
-    seed_rows = getattr(cents, "_sg_seeds", None)
-    if seed_rows is not None:
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            nearest_cell_udf,
-        )
-
-        return batch_df.select(
-            "vec_id", nearest_cell_udf(seed_rows)(F.col("e")).alias("cell"), *carry
-        )
-    return batch_df.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        F.element_at(_nearest_cells("e", 1), 1).alias("cell"),
-        *carry,
-    )
+    batch against the frozen quantizer — no exchange. `carry` names
+    batch columns to keep beside the assignment (the upsert loop carries
+    its version column)."""
+    return batch_df.select("vec_id", cell_udf(cents)(F.col("e")).alias("cell"), *carry)
 
 
 def batch_already_applied(spark: SparkSession, table: str, batch_id: int) -> bool:
@@ -311,7 +254,7 @@ def apply_index_batch(
     table: str,
     loc: str,
     batch_df: DataFrame,
-    cents: DataFrame,
+    cents: Flat | TwoLevel,
     batch_id: int,
     n_buckets: int,
     check_ledger: bool = True,
@@ -512,7 +455,7 @@ def migrate_index_table(
     table: str,
     n_buckets: int,
     new_loc: str,
-    new_cents: DataFrame,
+    new_cents: Flat | TwoLevel,
 ) -> None:
     """Re-assign every stored vector under a refreshed quantizer into a
     new generation and swap it in (the requantize actuator). Needs a
@@ -1128,229 +1071,40 @@ def derive_group_width(n_cells: int) -> int:
     return 1 << math.ceil(math.log2(max(n_cells, 2)) / 2)
 
 
-def _fold_dot(a: list[float], b: list[float]) -> float:
-    """Left-to-right fold — the exact evaluation order of the engines'
-    aggregate/list_dot_product, so driver-side seed arithmetic lands on
-    the same bits (the _norm convention)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc += x * y
-    return acc
+def two_level_quantizer(emb: DataFrame, n_cells: int) -> TwoLevel:
+    """The hierarchical quantizer over ``emb``'s n_cells seeds: the
+    derive_group_width(n_cells) smallest seeds are the representatives,
+    and every cell is grouped under its own nearest representative (cos
+    DESC, rid ASC). The geometry-aware grouping makes level-1 pruning
+    informative: a cid-block grouping measured only 0.24-0.55 flat
+    agreement. The grouping runs driver-side over the bounded seed set
+    with the engines' fold order, so the DuckDB oracle replays it bit
+    for bit."""
+    cells = seed_quantizer(emb, "vec_id", "e", n_cells)
+    is_rep = cells.cids < derive_group_width(n_cells)
+    reps = Flat(*(a[is_rep] for a in cells))
+    vecs, norms = cells.cmat.tolist(), cells.ncs.tolist()
+    rep_at = list(zip(reps.cids.tolist(), reps.cmat.tolist(), reps.ncs.tolist()))
 
-
-def _two_level_relations(
-    emb: DataFrame, n_cells: int, n_reps: int
-) -> tuple[DataFrame, DataFrame]:
-    """The hierarchical quantizer as TWO single-row broadcast relations:
-
-    - `__reps` (rid, re, nr): the n_reps smallest seeds, the level-1
-      quantizer;
-    - `__gcents` (cid, ce, nc, gid): every cell seed tagged with its
-      GROUP = its own nearest representative (cos DESC, rid ASC) — the
-      geometry-aware grouping that makes level-1 pruning informative (a
-      cid-block grouping measured only 0.24-0.55 flat agreement; cells
-      clustered under their nearest rep co-locate with the vectors that
-      would choose them).
-
-    All seed arithmetic (norms, the cell->rep grouping) runs driver-side
-    over the bounded collected seed set with the engines' exact fold
-    order, so the DuckDB oracle reproduces the grouping bit for bit."""
-    spark = emb.sparkSession
-    seeds = sorted(
-        emb.filter(F.col("vec_id") < n_cells)
-        .select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .collect(),
-        key=lambda r: r.cid,
-    )
-    vecs = {int(r.cid): [float(x) for x in r.ce] for r in seeds}
-    norms = {cid: math.sqrt(_fold_dot(v, v)) for cid, v in vecs.items()}
-    reps = [cid for cid in sorted(vecs) if cid < n_reps]
-
-    def _group(cid: int) -> int:
+    def _group(i: int) -> int:
         best, best_cos = -1, None
-        for rid in reps:
-            cos = _fold_dot(vecs[cid], vecs[rid]) / (
-                norms[cid] * norms[rid] + 1e-8
-            )
+        for rid, rv, nr in rep_at:
+            cos = _fold_dot(vecs[i], rv) / (norms[i] * nr + 1e-8)
             if best_cos is None or cos > best_cos:
                 best, best_cos = rid, cos
         return best
 
-    rep_rows = [(rid, vecs[rid], norms[rid]) for rid in reps]
-    cell_rows = [(cid, vecs[cid], norms[cid], _group(cid)) for cid in sorted(vecs)]
-    reps_df = spark.createDataFrame(
-        [(rep_rows,)],
-        schema="__reps array<struct<rid:int,re:array<double>,nr:double>>",
-    )
-    gcents_df = spark.createDataFrame(
-        [(cell_rows,)],
-        schema=(
-            "__gcents array<struct<cid:int,ce:array<double>,nc:double,gid:int>>"
-        ),
-    )
-    # the driver-resident seed rows ride beside the relations so
-    # assignment/probe sites can run the Arrow-vectorized hierarchical
-    # twin (functions/nearcell.py) instead of the interpreted HOF
-    reps_df._sg_seeds = rep_rows  # noqa: SLF001 — engine-internal tag
-    gcents_df._sg_seeds = cell_rows  # noqa: SLF001
-    return reps_df, gcents_df
-
-
-def _two_level_seed_rows(reps: DataFrame, gcents: DataFrame):
-    """(rep_rows, cell_rows) when both relations carry their seed tags,
-    else None — the dispatch guard for the vectorized hierarchical twin."""
-    rep_rows = getattr(reps, "_sg_seeds", None)
-    cell_rows = getattr(gcents, "_sg_seeds", None)
-    if rep_rows is not None and cell_rows is not None:
-        return rep_rows, cell_rows
-    return None
-
-
-class TwoLevel(NamedTuple):
-    """The hierarchical coarse quantizer as a first-class value the
-    maintenance/migration machinery can carry in place of the flat
-    `__cents` relation: ``assign_batch``
-    dispatches on this type, so ``maintain_index``,
-    ``migrate_index_table`` and every loop built on them inherit the
-    width-insensitive hierarchical ingest without a second write path."""
-
-    reps: DataFrame
-    gcents: DataFrame
-
-
-def two_level_quantizer(emb: DataFrame, n_cells: int) -> TwoLevel:
-    """Build the two-level quantizer over ``emb``'s seed prefix — the
-    derive_group_width(n_cells) representative row plus the
-    geometry-grouped cell row (see _two_level_relations)."""
-    return TwoLevel(*_two_level_relations(emb, n_cells, derive_group_width(n_cells)))
-
-
-def _two_level_cells(vec_col: str, k: int):
-    """Column expression: the top-k hierarchically-selected quantizer
-    cells of `vec_col` (cos DESC, cid ASC within the probed groups) —
-    the SEARCH side of the two-level quantizer: a query probes its
-    ANN_GROUP_PROBE best level-1 groups and then its k best cells
-    inside them, the hierarchical analogue of the flat _nearest_cells
-    multiprobe. k=1 is the assignment path (_two_level_cell)."""
-
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
-        EPS,
-        dot,
-    )
-
-    def _scored(arr, vecf, normf, idf, ne):
-        return F.transform(
-            arr,
-            lambda c: F.struct(
-                (dot(F.col(vec_col), c[vecf]) / (ne * c[normf] + F.lit(EPS))).alias(
-                    "cos"
-                ),
-                (-c[idf]).alias("negid"),
-            ),
-        )
-
-    return F.element_at(
-        F.transform(
-            F.array(F.sqrt(dot(vec_col, vec_col))),
-            lambda ne: F.element_at(
-                F.transform(
-                    # let-bind the TOP-ANN_GROUP_PROBE winning rep ids
-                    # (level-1 multiprobe: cos DESC, rid ASC)
-                    F.array(
-                        F.transform(
-                            F.slice(
-                                F.reverse(
-                                    F.array_sort(
-                                        _scored(
-                                            F.col("__reps"), "re", "nr", "rid", ne
-                                        )
-                                    )
-                                ),
-                                1,
-                                ANN_GROUP_PROBE,
-                            ),
-                            lambda s: -s["negid"],
-                        )
-                    ),
-                    lambda gids: F.transform(
-                        F.slice(
-                            F.reverse(
-                                F.array_sort(
-                                    _scored(
-                                        F.filter(
-                                            F.col("__gcents"),
-                                            lambda c: F.array_contains(
-                                                gids, c["gid"]
-                                            ),
-                                        ),
-                                        "ce",
-                                        "nc",
-                                        "cid",
-                                        ne,
-                                    )
-                                )
-                            ),
-                            1,
-                            k,
-                        ),
-                        lambda s: -s["negid"],
-                    ),
-                ),
-                1,
-            ),
-        ),
-        1,
-    )
-
-
-def _two_level_cell(vec_col: str):
-    """Column expression: the hierarchically-selected quantizer cell of
-    `vec_col` — level 1 picks the top-ANN_GROUP_PROBE representatives
-    from the broadcast `__reps` row (cos DESC, rid ASC), level 2 picks
-    the best cell among the probed groups' members from the broadcast
-    `__gcents` row (cos DESC, cid ASC) — the k=1 case of
-    _two_level_cells. Work per row: ~(1 + ANN_GROUP_PROBE) *
-    sqrt(n_cells) interpreted dots instead of the flat fold's n_cells
-    (measured at the 2M replica: the flat fold runs ~1.5k rows/s across
-    32 threads at 256 cells and ~147 rows/s at 2048 — linear in width;
-    tools/probe_ann_two_level.py measures the hierarchical rate). The
-    price is approximation: the true nearest cell can live outside the
-    probed groups — the same pruning bet IVF serving makes at the cell
-    level, measured as flat-agreement in the probe and floored in
-    tests. Selection is deterministic given the seeds, so the DuckDB
-    oracle replays it exactly. The row norm and the winning rep ids are
-    let-bound via single-element transforms (higher-order functions
-    have no CSE)."""
-    return F.element_at(_two_level_cells(vec_col, 1), 1)
+    gids = np.array([_group(i) for i in range(len(vecs))], dtype=np.int64)
+    return TwoLevel(reps, cells, gids, ANN_GROUP_PROBE)
 
 
 def ivf_two_level_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cell): the full corpus assigned through the two-level
-    quantizer — one map-side hierarchical selection per row against the
-    two broadcast seed rows; the one exchange is the pinned round-robin
-    repartition for parallelism (the _ivf_assign_cells convention)."""
+    quantizer; the one exchange is the pinned round-robin repartition
+    for parallelism."""
     emb = _vectors(spark, sf_dir)
-    n_cells = derive_ann_cells(sf_dir)
-    n_reps = derive_group_width(n_cells)
-    reps, gcents = _two_level_relations(emb, n_cells, n_reps)
-    two_rows = _two_level_seed_rows(reps, gcents)
-    if two_rows is not None:
-        # Arrow-vectorized hierarchical twin (functions/nearcell.py)
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            two_level_cell_udf,
-        )
-
-        cell = two_level_cell_udf(*two_rows, ANN_GROUP_PROBE)(F.col("e"))
-        return (
-            emb.repartition(shuffle_partitions(spark))
-            .select("vec_id", cell.alias("cell"))
-        )
-    return (
-        emb.repartition(shuffle_partitions(spark))
-        .crossJoin(F.broadcast(gcents))
-        .crossJoin(F.broadcast(reps))
-        .select("vec_id", _two_level_cell("e").alias("cell"))
-    )
+    quant = two_level_quantizer(emb, derive_ann_cells(sf_dir))
+    return assign_batch(emb.repartition(shuffle_partitions(spark)), quant)
 
 
 def _group_sql(cells_sql: str) -> str:
@@ -1367,72 +1121,6 @@ def _group_sql(cells_sql: str) -> str:
 ANN_GROUP_SQL = _group_sql(ANN_CELLS_SQL)
 
 
-def two_level_serve(
-    queries_df: DataFrame, index_df: DataFrame, quant: TwoLevel
-) -> DataFrame:
-    """(query_id, rank, neighbor_id): answer query vectors from a
-    vector-bearing index through the hierarchical probe (the serving
-    side of the two-level quantizer as a reusable piece, so it can
-    serve the MAINTAINED CRUD artifact, not only an inline-built
-    assignment). Query side: top-ANN_GROUP_PROBE level-1
-    groups, then the top-SEARCH_NPROBE cells inside them
-    (_two_level_cells), exploded to one row per probed cell — map-side
-    against the two broadcast seed rows. Candidates are fetched on the
-    cell key (broadcast under the ceiling, SMJ over the bucketed files
-    past it — zero index-side exchange either way), ranked by exact
-    cosine, top-SEARCH_TOPK per query, self-matches excluded.
-    ``queries_df``: (vec_id, e); ``index_df``: (neighbor_id, cell, ne)."""
-    from pyspark.sql import Window
-
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
-        EPS,
-        dot,
-    )
-
-    two_rows = _two_level_seed_rows(quant.reps, quant.gcents)
-    if two_rows is not None:
-        # Arrow-vectorized hierarchical probe (functions/nearcell.py)
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            two_level_cells_udf,
-        )
-
-        probes = queries_df.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.explode(
-                two_level_cells_udf(*two_rows, ANN_GROUP_PROBE, SEARCH_NPROBE)(
-                    F.col("e")
-                )
-            ).alias("cell"),
-        )
-    else:
-        probes = (
-            queries_df.crossJoin(F.broadcast(quant.gcents))
-            .crossJoin(F.broadcast(quant.reps))
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("e").alias("qe"),
-                F.explode(_two_level_cells("e", SEARCH_NPROBE)).alias("cell"),
-            )
-        )
-    # per-side norms fold once below the cell join —
-    # bit-identical ranking, one fold per candidate pair instead of three
-    probes = probes.withColumn("qn", F.sqrt(dot("qe", "qe")))
-    indexed = index_df.withColumn("nn", F.sqrt(dot("ne", "ne")))
-    cands = probes.join(indexed, "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    score = dot("qe", "ne") / (F.col("qn") * F.col("nn") + F.lit(EPS))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(score), F.asc("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= SEARCH_TOPK)
-        .select("query_id", "rank", "neighbor_id")
-    )
-
-
 @register(
     "ann_two_level_assign",
     # The oracle replays the grouping AND both selection levels:
@@ -1442,7 +1130,7 @@ def two_level_serve(
     # (cos DESC, cid ASC). Deterministic given the seeds, so the
     # hierarchical assignment is exact-checked even though it is an
     # APPROXIMATION of the flat argmax (agreement vs flat is the
-    # separately measured dial — tools/probe_ann_two_level.py).
+    # separately floored dial, test_two_level_assign_agreement).
     oracle=f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
     width AS (SELECT {ANN_CELLS_SQL} AS n),
@@ -1511,156 +1199,3 @@ def two_level_serve(
 )
 def ann_two_level_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_two_level_assign(spark, sf_dir)
-
-
-@register(
-    "ann_two_level_search",
-    # The serving side of the hierarchical quantizer, exact-checked end
-    # to end: the oracle replays the corpus grouping + assignment (the
-    # ann_two_level_assign pipeline), the QUERY side's hierarchical
-    # probe (top-ANN_GROUP_PROBE reps, then top-SEARCH_NPROBE cells
-    # within the probed groups — cos DESC, cid ASC across their union,
-    # the _two_level_cells sort order), the cell-key candidate fetch,
-    # and the exact cosine top-k (cos DESC, neighbor ASC; self
-    # excluded). Integer ranks ride the hash; no float columns.
-    oracle=f"""
-    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    width AS (SELECT {ANN_CELLS_SQL} AS n),
-    gw AS (SELECT {ANN_GROUP_SQL} AS g),
-    cent AS (
-        SELECT vec_id AS cid, e AS ce FROM base
-        WHERE vec_id < (SELECT n FROM width)
-    ),
-    reps AS (SELECT cid AS rid, ce AS re FROM cent WHERE cid < (SELECT g FROM gw)),
-    grouped AS (
-        SELECT cid, ce, rid AS gid FROM (
-            SELECT c.cid, c.ce, r.rid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY c.cid
-                       ORDER BY list_dot_product(c.ce, r.re) /
-                                (sqrt(list_dot_product(c.ce, c.ce)) *
-                                 sqrt(list_dot_product(r.re, r.re)) + 1e-8) DESC,
-                                r.rid
-                   ) AS rn
-            FROM cent c CROSS JOIN reps r
-        ) WHERE rn = 1
-    ),
-    corpus_l1 AS (
-        SELECT vec_id, rid AS gid FROM (
-            SELECT b.vec_id, r.rid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY b.vec_id
-                       ORDER BY list_dot_product(b.e, r.re) /
-                                (sqrt(list_dot_product(b.e, b.e)) *
-                                 sqrt(list_dot_product(r.re, r.re)) + 1e-8) DESC,
-                                r.rid
-                   ) AS rn
-            FROM base b CROSS JOIN reps r
-        ) WHERE rn <= {ANN_GROUP_PROBE}
-    ),
-    corpus AS (
-        SELECT vec_id AS neighbor_id, ne, cell FROM (
-            SELECT b.vec_id, b.e AS ne, c.cid AS cell,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY b.vec_id
-                       ORDER BY list_dot_product(b.e, c.ce) /
-                                (sqrt(list_dot_product(b.e, b.e)) *
-                                 sqrt(list_dot_product(c.ce, c.ce)) + 1e-8) DESC,
-                                c.cid
-                   ) AS rn
-            FROM corpus_l1 w
-            JOIN base b ON b.vec_id = w.vec_id
-            JOIN grouped c ON c.gid = w.gid
-        ) WHERE rn = 1
-    ),
-    queries AS (
-        SELECT vec_id AS query_id, e AS qe FROM base
-        WHERE vec_id % {QUERY_MOD} = {QUERY_REM}
-    ),
-    query_l1 AS (
-        SELECT query_id, qe, rid AS gid FROM (
-            SELECT q.query_id, q.qe, r.rid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY list_dot_product(q.qe, r.re) /
-                                (sqrt(list_dot_product(q.qe, q.qe)) *
-                                 sqrt(list_dot_product(r.re, r.re)) + 1e-8) DESC,
-                                r.rid
-                   ) AS rn
-            FROM queries q CROSS JOIN reps r
-        ) WHERE rn <= {ANN_GROUP_PROBE}
-    ),
-    qcells AS (
-        SELECT query_id, qe, cid AS cell FROM (
-            SELECT w.query_id, w.qe, c.cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY w.query_id
-                       ORDER BY list_dot_product(w.qe, c.ce) /
-                                (sqrt(list_dot_product(w.qe, w.qe)) *
-                                 sqrt(list_dot_product(c.ce, c.ce)) + 1e-8) DESC,
-                                c.cid
-                   ) AS rn
-            FROM query_l1 w
-            JOIN grouped c ON c.gid = w.gid
-        ) WHERE rn <= {SEARCH_NPROBE}
-    ),
-    ranked AS (
-        SELECT qc.query_id, co.neighbor_id,
-               ROW_NUMBER() OVER (
-                   PARTITION BY qc.query_id
-                   ORDER BY list_dot_product(qc.qe, co.ne) /
-                            (sqrt(list_dot_product(qc.qe, qc.qe)) *
-                             sqrt(list_dot_product(co.ne, co.ne)) + 1e-8) DESC,
-                            co.neighbor_id
-               ) AS rank
-        FROM qcells qc JOIN corpus co USING (cell)
-        WHERE co.neighbor_id != qc.query_id
-    )
-    SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-    FROM ranked WHERE rank <= {SEARCH_TOPK}
-    """,
-    doc="Hierarchical vector SEARCH through the two-level quantizer "
-    "(beyond-reference — the serving side of ann_two_level_assign, "
-    "exact-checked): the corpus is assigned hierarchically "
-    "(vector-bearing IVF layout), each query probes its top-"
-    f"{ANN_GROUP_PROBE} level-1 groups and then its top query-nprobe "
-    "cells inside them (the _two_level_cells multiprobe), candidates "
-    "are fetched on the cell key, and the answer is an exact cosine "
-    "top-k (self-matches excluded). At replica scale this is the "
-    "16.2 ms/query wide-width regime the flat fold cannot build "
-    "(SCALE_r15.json ann_two_level_serve_1000x); the oracle replays "
-    "grouping, both per-side selection levels, the fetch, and the "
-    "ranking, so the served hierarchical answer is hash-checked row "
-    "by row.",
-)
-def ann_two_level_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _vectors(spark, sf_dir)
-    n_cells = derive_ann_cells(sf_dir)
-    quant = two_level_quantizer(emb, n_cells)
-    two_rows = _two_level_seed_rows(quant.reps, quant.gcents)
-    if two_rows is not None:
-        # Arrow-vectorized hierarchical assignment (nearcell.py)
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            two_level_cell_udf,
-        )
-
-        corpus = emb.repartition(shuffle_partitions(spark)).select(
-            F.col("vec_id").alias("neighbor_id"),
-            two_level_cell_udf(*two_rows, ANN_GROUP_PROBE)(F.col("e")).alias(
-                "cell"
-            ),
-            F.col("e").alias("ne"),
-        )
-    else:
-        corpus = (
-            emb.repartition(shuffle_partitions(spark))
-            .crossJoin(F.broadcast(quant.gcents))
-            .crossJoin(F.broadcast(quant.reps))
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                _two_level_cell("e").alias("cell"),
-                F.col("e").alias("ne"),
-            )
-        )
-    queries = emb.filter(F.pmod("vec_id", F.lit(QUERY_MOD)) == QUERY_REM)
-    return two_level_serve(queries, corpus, quant)

@@ -1,47 +1,16 @@
-"""Streaming vector search over the maintained ANN index (beyond-
-reference — the SERVING path that closes the similarity-search loop:
-streaming/ann_index.py maintains the cell-bucketed index, this module
-answers arriving queries from it).
+"""Vector search over the maintained ANN index: the serving side of
+streaming/ann_index.py.
 
-Shape, end to end:
-
-- the INDEX is built by the maintenance write path itself
-  (`apply_index_batch` with the embedding payload carried), so the
-  served artifact is literally the bucketBy(cell) table the
-  update/compact/upsert/delete loops produce — vectors stored
-  cell-clustered, the classic IVF layout;
-- QUERY vectors arrive as micro-batches (a staged file stream); each
-  arriving query probes its SEARCH_NPROBE nearest quantizer cells;
-- candidates = the probed cells' index rows (each corpus vector lives
-  in exactly one cell, so a candidate appears at most once per query);
-- exact cosine over the candidates (the JVM fold from
-  operators/vectors.py — bit-identical to the oracle's
-  list_dot_product form), per-query top-SEARCH_TOPK (cosine DESC,
-  neighbor_id ASC), self-matches excluded;
-- per batch the results append to the staging sink; queries are
-  disjoint across batches, so the final snapshot is their union.
-
-The index's size picks the serving shape of a batch, and nothing else
-does. When the planner would broadcast the index anyway (its
-optimized-plan size is at most spark.sql.autoBroadcastJoinThreshold)
-the batch collects the index to Arrow — the same fresh table — and
-runs as ONE narrow Spark stage: an Arrow UDF (functions/nearcell.py
-`ann_topk_udf`) probes, fetches, scores and ranks, and posexplode gives
-the rank; no join, exchange or window. Past that size the queries are
-probed map-side, joined to the index ON THE CELL KEY (the SMJ-on-
-bucketed-files layout) and ranked by a row_number window — the only
-path for an index the driver cannot hold, and the reference the kernel
-is tested against bit for bit (the same two-regime story as
-streaming/candidates.py).
-
-The DuckDB oracle replays the whole pipeline — quantizer, per-query
-nprobe cells, one-cell-per-corpus-vector assignment, cell-key
-candidate fetch, exact cosine ranking — so the PRUNED search result is
-exact-checked: the engine must return precisely the neighbors the
-pruned search defines, in rank order (ranks are integers; no float
-column rides the hash). Recall vs exhaustive search is the separately
-measured dial (tools/probe_candidates_recall.py,
-tools/probe_ivf_multiprobe.py).
+The quantizer is driver-resident data (a `Flat` or `TwoLevel` value,
+functions/nearcell.py) that travels in the probe UDF's closure. A batch
+of query vectors probes its SEARCH_NPROBE nearest cells and takes the
+exact-cosine top-SEARCH_TOPK of those cells' index rows (cos DESC,
+neighbor_id ASC, self excluded). The index's size picks the shape: while
+the planner would broadcast it, the index is collected to Arrow and one
+narrow stage runs `ann_topk_udf`; past that size the probed queries join
+the bucketed index on the cell key and a row_number window ranks them.
+The DuckDB oracles replay the whole pruned pipeline, so every served row
+is exact-checked.
 """
 
 from __future__ import annotations
@@ -52,33 +21,41 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+    Flat,
+    TwoLevel,
+    ann_topk_udf,
+    cells_udf,
+    index_arrays,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     EPS,
     dot,
+    shuffle_partitions,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import (
     ANN_CELLS_SQL,
+    ANN_GROUP_PROBE,
+    ANN_GROUP_SQL,
     ANN_MAX_BUCKETS,
     QUERY_MOD,
     QUERY_REM,
     SEARCH_NPROBE,
     SEARCH_TOPK,
     _ann_cents_relation,
+    _vectors,
     apply_index_batch,
+    assign_batch,
     derive_ann_cells,
     derive_fold_parts,
+    two_level_quantizer,
 )
-from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
-    _nearest_cells,
-)
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load, table_row_count
+from cqu_bigdata_recommender_system_for_movies_spark.tables import table_row_count
 
 ANN_SEARCH_TABLE = "spark_graft_ann_search_index"
-# SEARCH_NPROBE / SEARCH_TOPK / QUERY_MOD / QUERY_REM moved to
-# streaming/ann_index.py (r15: the hierarchical batch search shares the
-# serving convention and this module imports ann_index, not vice versa);
-# re-exported here so existing importers keep working.
+# SEARCH_NPROBE / SEARCH_TOPK / QUERY_MOD / QUERY_REM live in
+# streaming/ann_index.py and are re-exported here.
 N_SEARCH_SLICES = 2  # staged query-arrival batches
 
 
@@ -93,58 +70,42 @@ def _broadcast_sized(df: DataFrame) -> bool:
 
 
 def score_query_batch(
-    batch_df: DataFrame, cents: DataFrame, index_df: DataFrame
+    batch_df: DataFrame, cents: Flat | TwoLevel, index_df: DataFrame
 ) -> DataFrame:
     """(query_id, rank, neighbor_id): one micro-batch of query vectors
     (vec_id, e) answered from the index (neighbor_id, cell, ne) — the
     top SEARCH_TOPK by exact cosine (DESC, ties to the smaller
-    neighbor_id) among the SEARCH_NPROBE nearest cells, self excluded.
+    neighbor_id) among the SEARCH_NPROBE nearest cells of ``cents``,
+    self excluded.
 
     Precondition: query ids are distinct within `batch_df`. The kernel
     path ranks each row on its own; the join path's window would pool
     rows that share an id.
 
     When the planner would broadcast the index anyway (`_broadcast_sized`)
-    and the quantizer carries its seed rows, the index is collected to
-    Arrow on every batch — the same fresh table the join reads — and
-    `ann_topk_udf` probes, fetches, scores and ranks in one narrow
-    stage; posexplode gives the rank. Otherwise the query side is probed
-    map-side, joined to the index on the cell key and ranked by a
-    row_number window: the path for an index the driver cannot hold."""
-    seed_rows = getattr(cents, "_sg_seeds", None)
-    if seed_rows is not None and _broadcast_sized(index_df):
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            ann_topk_udf,
-            index_arrays,
-        )
-
+    it is collected to Arrow on every batch — the same fresh table the
+    join reads — and `ann_topk_udf` probes, fetches, scores and ranks in
+    one narrow stage; posexplode gives the rank. Otherwise the query side
+    is probed map-side, joined to the index on the cell key and ranked by
+    a row_number window: the path for an index the driver cannot hold."""
+    if _broadcast_sized(index_df):
         index = index_arrays(
             index_df.select("neighbor_id", "cell", "ne").toArrow(), "neighbor_id", "ne"
         )
         id_type = index_df.schema["neighbor_id"].dataType.simpleString()
-        top = ann_topk_udf(seed_rows, index, SEARCH_NPROBE, SEARCH_TOPK, id_type)
+        top = ann_topk_udf(cents, index, SEARCH_NPROBE, SEARCH_TOPK, id_type)
         return batch_df.select(
             F.col("vec_id").alias("query_id"),
             F.posexplode(top(F.col("vec_id"), F.col("e"))).alias("pos", "neighbor_id"),
         ).select("query_id", (F.col("pos") + 1).alias("rank"), "neighbor_id")
-    if seed_rows is not None:
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            nearest_cells_udf,
-        )
-
-        probes = batch_df.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.explode(
-                nearest_cells_udf(seed_rows, SEARCH_NPROBE)(F.col("e"))
-            ).alias("cell"),
-        )
-    else:
-        probes = batch_df.crossJoin(F.broadcast(cents)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.explode(_nearest_cells("e", SEARCH_NPROBE)).alias("cell"),
-        )
+    # explode in the UDF's own select: a later explode lets Catalyst push
+    # the Generate's inferred size(cell) > 0 filter below the Project,
+    # which copies the UDF into a second ArrowEvalPython
+    probes = batch_df.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.explode(cells_udf(cents, SEARCH_NPROBE)(F.col("e"))).alias("cell"),
+    )
     # both norms are join-invariant: fold them once per side BELOW the
     # cell join instead of re-folding the 64-wide arrays inside the
     # per-candidate cosine (the identical doubles keep the ranking
@@ -246,9 +207,7 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         _snapshot_and_clean,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     n_cells = derive_ann_cells(sf_dir)
     cents = _ann_cents_relation(emb, n_cells)
 
@@ -269,7 +228,7 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         0,
         n_buckets,
         carry=("e",),
-        # r16: size the pre-assignment fan-out from the corpus footers
+        # size the pre-assignment fan-out from the corpus footers
         fold_parts=derive_fold_parts(spark, table_row_count(sf_dir, "embeddings")),
     )
     index_df = spark.table(tbl).select(
@@ -324,3 +283,132 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     shutil.rmtree(loc, ignore_errors=True)
     return snap
+
+
+@register(
+    "ann_two_level_search",
+    # The serving side of the hierarchical quantizer, exact-checked end
+    # to end: the oracle replays the corpus grouping + assignment (the
+    # ann_two_level_assign pipeline), the QUERY side's hierarchical
+    # probe (top-ANN_GROUP_PROBE reps, then top-SEARCH_NPROBE cells
+    # within the probed groups — cos DESC, cid ASC across their union,
+    # the TwoLevel.topk order), the cell-key candidate fetch,
+    # and the exact cosine top-k (cos DESC, neighbor ASC; self
+    # excluded). Integer ranks ride the hash; no float columns.
+    oracle=f"""
+    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    width AS (SELECT {ANN_CELLS_SQL} AS n),
+    gw AS (SELECT {ANN_GROUP_SQL} AS g),
+    cent AS (
+        SELECT vec_id AS cid, e AS ce FROM base
+        WHERE vec_id < (SELECT n FROM width)
+    ),
+    reps AS (SELECT cid AS rid, ce AS re FROM cent WHERE cid < (SELECT g FROM gw)),
+    grouped AS (
+        SELECT cid, ce, rid AS gid FROM (
+            SELECT c.cid, c.ce, r.rid,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY c.cid
+                       ORDER BY list_dot_product(c.ce, r.re) /
+                                (sqrt(list_dot_product(c.ce, c.ce)) *
+                                 sqrt(list_dot_product(r.re, r.re)) + 1e-8) DESC,
+                                r.rid
+                   ) AS rn
+            FROM cent c CROSS JOIN reps r
+        ) WHERE rn = 1
+    ),
+    corpus_l1 AS (
+        SELECT vec_id, rid AS gid FROM (
+            SELECT b.vec_id, r.rid,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY b.vec_id
+                       ORDER BY list_dot_product(b.e, r.re) /
+                                (sqrt(list_dot_product(b.e, b.e)) *
+                                 sqrt(list_dot_product(r.re, r.re)) + 1e-8) DESC,
+                                r.rid
+                   ) AS rn
+            FROM base b CROSS JOIN reps r
+        ) WHERE rn <= {ANN_GROUP_PROBE}
+    ),
+    corpus AS (
+        SELECT vec_id AS neighbor_id, ne, cell FROM (
+            SELECT b.vec_id, b.e AS ne, c.cid AS cell,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY b.vec_id
+                       ORDER BY list_dot_product(b.e, c.ce) /
+                                (sqrt(list_dot_product(b.e, b.e)) *
+                                 sqrt(list_dot_product(c.ce, c.ce)) + 1e-8) DESC,
+                                c.cid
+                   ) AS rn
+            FROM corpus_l1 w
+            JOIN base b ON b.vec_id = w.vec_id
+            JOIN grouped c ON c.gid = w.gid
+        ) WHERE rn = 1
+    ),
+    queries AS (
+        SELECT vec_id AS query_id, e AS qe FROM base
+        WHERE vec_id % {QUERY_MOD} = {QUERY_REM}
+    ),
+    query_l1 AS (
+        SELECT query_id, qe, rid AS gid FROM (
+            SELECT q.query_id, q.qe, r.rid,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY q.query_id
+                       ORDER BY list_dot_product(q.qe, r.re) /
+                                (sqrt(list_dot_product(q.qe, q.qe)) *
+                                 sqrt(list_dot_product(r.re, r.re)) + 1e-8) DESC,
+                                r.rid
+                   ) AS rn
+            FROM queries q CROSS JOIN reps r
+        ) WHERE rn <= {ANN_GROUP_PROBE}
+    ),
+    qcells AS (
+        SELECT query_id, qe, cid AS cell FROM (
+            SELECT w.query_id, w.qe, c.cid,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY w.query_id
+                       ORDER BY list_dot_product(w.qe, c.ce) /
+                                (sqrt(list_dot_product(w.qe, w.qe)) *
+                                 sqrt(list_dot_product(c.ce, c.ce)) + 1e-8) DESC,
+                                c.cid
+                   ) AS rn
+            FROM query_l1 w
+            JOIN grouped c ON c.gid = w.gid
+        ) WHERE rn <= {SEARCH_NPROBE}
+    ),
+    ranked AS (
+        SELECT qc.query_id, co.neighbor_id,
+               ROW_NUMBER() OVER (
+                   PARTITION BY qc.query_id
+                   ORDER BY list_dot_product(qc.qe, co.ne) /
+                            (sqrt(list_dot_product(qc.qe, qc.qe)) *
+                             sqrt(list_dot_product(co.ne, co.ne)) + 1e-8) DESC,
+                            co.neighbor_id
+               ) AS rank
+        FROM qcells qc JOIN corpus co USING (cell)
+        WHERE co.neighbor_id != qc.query_id
+    )
+    SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
+    FROM ranked WHERE rank <= {SEARCH_TOPK}
+    """,
+    doc="Hierarchical vector SEARCH through the two-level quantizer "
+    "(beyond-reference — the serving side of ann_two_level_assign, "
+    "exact-checked): the corpus is assigned hierarchically "
+    "(vector-bearing IVF layout), each query probes its top-"
+    f"{ANN_GROUP_PROBE} level-1 groups and then its top query-nprobe "
+    "cells inside them, candidates are scored from the collected index "
+    "while it is broadcast-sized (a cell-key join past it), and the "
+    "answer is an exact cosine top-k (self-matches excluded); the "
+    "oracle replays "
+    "grouping, both per-side selection levels, the fetch, and the "
+    "ranking, so the served hierarchical answer is hash-checked row "
+    "by row.",
+)
+def ann_two_level_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _vectors(spark, sf_dir)
+    quant = two_level_quantizer(emb, derive_ann_cells(sf_dir))
+    corpus = assign_batch(
+        emb.repartition(shuffle_partitions(spark)), quant, carry=("e",)
+    ).select(F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne"))
+    queries = emb.filter(F.pmod("vec_id", F.lit(QUERY_MOD)) == QUERY_REM)
+    return score_query_batch(queries, quant, corpus)

@@ -1,49 +1,13 @@
-"""Candidate-generation pruning for the real-time recommender (ST6 + M8
-at catalog scale — the beyond-reference scale path SCALE_r12's
-recommend_emit_100x reading names).
+"""Candidate-generation pruning for the real-time recommender.
 
 The reference's streaming loop (streaming_rec.py:106-126) scores every
-updated user against EVERY item profile — fine for its ~100-movie
-catalog, but the scoring side of the registered full loop
-(`streaming_recommend_emit`) is users x catalog per micro-batch: a
-1M-item catalog at 100 TB turns each batch into a trillion-cosine
-cross join. The production fix is the one the ANN family already
-provides offline (operators/vectors.py `_ivf_assign_cells`): a coarse
-quantizer over the ITEM side, so each user scores only the items in the
-cells nearest their interest vector.
-
-`streaming_recommend_candidates` is that loop end to end:
-
-- the item-profile dim is assigned ONCE to its nearest quantizer cell
-  (deterministic seeds: the derive_rec_cells(catalog) smallest
-  item_refs — width = next power of two >= sqrt(catalog), derived from
-  a catalog COUNT on BOTH engines — shipped as a single-row broadcast
-  relation; production: sampled k-means centroids, equally
-  driver-resident);
-- per micro-batch, each updated user's (rounded) interest vector
-  probes its REC_NPROBE nearest cells (multiprobe, the same recall dial
-  tools/probe_ivf_multiprobe.py curves offline) and is scored only
-  against those cells' items — per-batch work drops from users x
-  catalog to users x ~(REC_NPROBE x sqrt(catalog)).
-
-The catalog COUNT picks one of two serving shapes, by size alone:
-
-- up to REC_BROADCAST_MAX_ITEMS the index is collected to the driver
-  once, at build time, and a batch is ONE narrow Spark stage: an Arrow
-  UDF (functions/nearcell.py `candidate_scores_udf`) probes, fetches
-  and folds the cosines with the JVM's op order, and Spark's own
-  round(., 6), array_sort, slice and posexplode rank them — no join,
-  exchange or window;
-- past it the index is a cell-bucketed table, and a batch joins its
-  probed users to the items ON THE CELL KEY (the bucketed side never
-  reshuffles) and ranks with a row_number window. This join path is
-  the bit-for-bit reference the kernel is tested against.
-
-Either way the cosine, 6-dp rounding and per-user top-10 order match
-the full loop's proven pipeline, so the two queries differ ONLY in the
-candidate set. The DuckDB oracle replays the complete fold + quantizer +
-pruned scoring, making the approximation itself exact-checked: the
-engine must prune to precisely the cells the oracle computes.
+updated user against every item profile. `streaming_recommend_candidates`
+cuts that to the items of each user's REC_NPROBE nearest quantizer cells.
+The quantizer is driver-resident data (a `Flat` value over the
+derive_rec_cells(catalog) smallest item_refs, functions/nearcell.py)
+that travels in the assignment and probe UDFs' closures. The DuckDB
+oracle replays fold, quantizer and pruned scoring, so the engine must
+prune to exactly the oracle's cells.
 """
 
 from __future__ import annotations
@@ -54,9 +18,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+    Flat,
+    candidate_scores_udf,
+    cell_udf,
+    cells_udf,
+    index_arrays,
+    seed_quantizer,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     EPS,
-    cosine,
     dot,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
@@ -125,74 +96,6 @@ def derive_rec_cells(catalog_size: int) -> int:
     )
 
 
-def _centroid_relation(profiles: DataFrame, n_cells: int | None = None) -> DataFrame:
-    """The quantizer seeds as a single-row broadcast relation
-    `__cents array<struct<cid,ce,nc>>` — exactly n_cells item-profile
-    rows (catalog-derived via derive_rec_cells unless pinned), the
-    `_ivf_assign_cells` pattern: plan size stays independent of the cell
-    count, and the seed norms are precomputed with the same left fold +
-    correctly-rounded sqrt the JVM (and the oracle's list_reduce + sqrt)
-    would produce."""
-    spark = profiles.sparkSession
-    if n_cells is None:
-        n_cells = derive_rec_cells(profiles.count())
-    seeds = (
-        profiles.filter(F.col("item_ref") < n_cells)
-        .select(F.col("item_ref").alias("cid"), F.col("profile").alias("ce"))
-        .collect()
-    )
-
-    def _norm(ce: list[float]) -> float:
-        acc = 0.0
-        for x in ce:
-            acc += x * x
-        return math.sqrt(acc)
-
-    seed_rows = [
-        (int(r.cid), [float(x) for x in r.ce], _norm(list(r.ce)))
-        for r in sorted(seeds, key=lambda r: r.cid)
-    ]
-    cents_df = spark.createDataFrame(
-        [(seed_rows,)],
-        schema="__cents array<struct<cid:int,ce:array<double>,nc:double>>",
-    )
-    # r16: seed list rides beside the relation so assignment sites can
-    # run the Arrow-vectorized twin of the fold (functions/nearcell.py)
-    cents_df._sg_seeds = seed_rows  # noqa: SLF001 — engine-internal tag
-    return cents_df
-
-
-def _nearest_cells(vec_col: str, k: int):
-    """Column expression: the top-k quantizer cells of `vec_col` against
-    the broadcast `__cents` row (cosine DESC, ties to the smaller cid —
-    the oracle's ROW_NUMBER ORDER BY cos DESC, cid). Map-side: one
-    let-bound row norm (higher-order functions have no CSE), one fold
-    over the n_cells structs, ascending array_sort on (cos, -cid)
-    reversed = the exact oracle order."""
-
-    def _scored(ne):
-        return F.transform(
-            F.col("__cents"),
-            lambda c: F.struct(
-                (dot(F.col(vec_col), c["ce"]) / (ne * c["nc"] + F.lit(EPS))).alias(
-                    "cos"
-                ),
-                (-c["cid"]).alias("negid"),
-            ),
-        )
-
-    return F.element_at(
-        F.transform(
-            F.array(F.sqrt(dot(vec_col, vec_col))),
-            lambda ne: F.transform(
-                F.slice(F.reverse(F.array_sort(_scored(ne))), 1, k),
-                lambda s: -s["negid"],
-            ),
-        ),
-        1,
-    )
-
-
 # Broadcast ceiling for the candidate index: at ~100 B/row (item_ref +
 # 5-double profile + cell) 65536 items is ~6.5 MB, inside Spark's default
 # 10 MB autoBroadcastJoinThreshold with headroom. Beyond it the index
@@ -224,14 +127,13 @@ def _rec_broadcast_max_items() -> int:
 
 def build_candidate_index(
     profiles: DataFrame, n_cells: int | None = None
-) -> tuple[DataFrame, DataFrame, int]:
+) -> tuple[Flat, DataFrame, int]:
     """(cents, item_dim, n_items): the full offline half of the candidate
     index. One catalog COUNT sizes the quantizer width (derive_rec_cells,
     unless pinned) and picks the serving regime. While the catalog fits
     REC_BROADCAST_MAX_ITEMS the index is a broadcast-hinted checkpoint,
     collected once to the driver and tagged onto `item_dim` as numpy
-    arrays (`_sg_items`, the `_sg_seeds` idiom) for the one-stage serving
-    kernel. Beyond it, a cell-bucketed parquet table (a persistent
+    arrays (`_sg_items`) for the one-stage serving kernel. Beyond it, a cell-bucketed parquet table (a persistent
     artifact — the index IS the deliverable, rebuilt per catalog refresh
     and reused across every micro-batch, overwritten in place on
     rebuild)."""
@@ -242,7 +144,7 @@ def build_candidate_index(
     n_items = profiles.count()
     if n_cells is None:
         n_cells = derive_rec_cells(n_items)
-    cents = _centroid_relation(profiles, n_cells)
+    cents = seed_quantizer(profiles, "item_ref", "profile", n_cells)
     # each item's norm folds ONCE into the index artifact: the join
     # path's per-pair cosine is then one fold instead of three (same
     # doubles, bit-identical scores)
@@ -250,10 +152,6 @@ def build_candidate_index(
         "pnorm", F.sqrt(dot("profile", "profile"))
     )
     if n_items <= _rec_broadcast_max_items():
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            index_arrays,
-        )
-
         held = index.localCheckpoint(eager=True)
         item_dim = F.broadcast(held)
         item_dim._sg_items = index_arrays(  # noqa: SLF001 — engine-internal tag
@@ -279,7 +177,7 @@ def build_candidate_index(
 
 
 def score_candidates_batch(
-    batch_df: DataFrame, cents: DataFrame, item_dim: DataFrame, k: int = 10
+    batch_df: DataFrame, cents: Flat, item_dim: DataFrame, k: int = 10
 ) -> DataFrame:
     """One micro-batch of the pruned scoring pipeline: (user_id, item_ref,
     score, rnk), the top-k of each user's REC_NPROBE nearest cells by
@@ -300,15 +198,10 @@ def score_candidates_batch(
     rounded = batch_df.withColumn(
         "interest", F.transform("interest", lambda x: F.round(x, 6))
     )
-    seed_rows = getattr(cents, "_sg_seeds", None)
     items = getattr(item_dim, "_sg_items", None)
-    if seed_rows is not None and items is not None:
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            candidate_scores_udf,
-        )
-
+    if items is not None:
         ref_type = item_dim.schema["item_ref"].dataType.simpleString()
-        scores = candidate_scores_udf(seed_rows, items, REC_NPROBE, ref_type)
+        scores = candidate_scores_udf(cents, items, REC_NPROBE, ref_type)
         ranked = F.slice(
             F.array_sort(
                 F.transform(
@@ -332,42 +225,24 @@ def score_candidates_batch(
             (-F.col("c.neg")).alias("score"),
             (F.col("pos") + 1).alias("rnk"),
         )
-    if seed_rows is not None:
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            nearest_cells_udf,
-        )
-
-        # explode in the SAME select: a later explode lets Catalyst push
-        # the Generate's inferred size(cells) > 0 filter below the
-        # Project, which copies the UDF into a second ArrowEvalPython
-        probed = rounded.select(
-            "user_id",
-            "interest",
-            F.explode(
-                nearest_cells_udf(seed_rows, REC_NPROBE)(F.col("interest"))
-            ).alias("cell"),
-        )
-    else:
-        probed = rounded.crossJoin(F.broadcast(cents)).select(
-            "user_id",
-            "interest",
-            F.explode(_nearest_cells("interest", REC_NPROBE)).alias("cell"),
-        )
+    # explode in the SAME select: a later explode lets Catalyst push
+    # the Generate's inferred size(cells) > 0 filter below the
+    # Project, which copies the UDF into a second ArrowEvalPython
+    probed = rounded.select(
+        "user_id",
+        "interest",
+        F.explode(cells_udf(cents, REC_NPROBE)(F.col("interest"))).alias("cell"),
+    )
     # items carry ONE cell each and users probe distinct cells, so the
     # cell join emits each (user, item) candidate at most once. The
     # user-side norm folds once per user, the item-side norm rides the
     # prebuilt index (pnorm) — cosine per pair is then a single fold
-    # over the identical doubles (a dim built without pnorm falls back
-    # to the inline three-fold cosine).
+    # over the identical doubles.
     probed = probed.withColumn("inorm", F.sqrt(dot("interest", "interest")))
-    if "pnorm" in item_dim.columns:
-        score = F.round(
-            dot("interest", "profile")
-            / (F.col("inorm") * F.col("pnorm") + F.lit(EPS)),
-            6,
-        )
-    else:
-        score = F.round(cosine("interest", "profile"), 6)
+    score = F.round(
+        dot("interest", "profile") / (F.col("inorm") * F.col("pnorm") + F.lit(EPS)),
+        6,
+    )
     scored = probed.join(item_dim, "cell").select(
         "user_id",
         "item_ref",
@@ -379,37 +254,21 @@ def score_candidates_batch(
 
 def item_cell_assignments(
     profiles: DataFrame,
-    cents: DataFrame | None = None,
+    cents: Flat | None = None,
     n_cells: int | None = None,
 ) -> DataFrame:
     """(item_ref, profile, cell): each catalog item's single nearest
     quantizer cell — the offline half of the candidate index, computed
-    once per (re)build, not per batch. Pass a prebuilt `cents` relation
-    to reuse one seed collect across the index build and the per-batch
-    user assignment (the registered query and the scale probe both hold
-    the two); `n_cells` pins the width explicitly (plan tests, probes) —
-    default derives it from the catalog COUNT."""
+    once per (re)build, not per batch. Pass a prebuilt `cents` to reuse
+    one seed collect across the index build and the per-batch user
+    assignment; `n_cells` pins the width explicitly (plan tests, probes)
+    — default derives it from the catalog COUNT."""
     if cents is None:
-        cents = _centroid_relation(profiles, n_cells)
-    seed_rows = getattr(cents, "_sg_seeds", None)
-    if seed_rows is not None:
-        # r16: Arrow-vectorized twin of the assignment fold (nearcell.py)
-        from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-            nearest_cell_udf,
-        )
-
-        return profiles.select(
-            "item_ref",
-            "profile",
-            nearest_cell_udf(seed_rows)(F.col("profile")).alias("cell"),
-        )
-    return (
-        profiles.crossJoin(F.broadcast(cents))
-        .select(
-            "item_ref",
-            "profile",
-            F.element_at(_nearest_cells("profile", 1), 1).alias("cell"),
-        )
+        if n_cells is None:
+            n_cells = derive_rec_cells(profiles.count())
+        cents = seed_quantizer(profiles, "item_ref", "profile", n_cells)
+    return profiles.select(
+        "item_ref", "profile", cell_udf(cents)(F.col("profile")).alias("cell")
     )
 
 
@@ -536,8 +395,8 @@ def item_cell_assignments(
     "SCALE_r12's recommend_emit_100x reading names): per micro-batch, "
     "the stateful interest fold emits updated user vectors; each is "
     f"assigned map-side to its {REC_NPROBE} nearest quantizer cells "
-    "(single-row broadcast centroid relation — the _ivf_assign_cells "
-    "pattern), scored by cosine ONLY against the catalog items assigned "
+    "(the driver-held seed quantizer in the probe UDF's closure), "
+    "scored by cosine ONLY against the catalog items assigned "
     "to those cells (one Arrow UDF over the driver-held index while the "
     "catalog is broadcast-sized, a cell-key join past it), top-10 per user, "
     "appended to a recommendations table. Quantizer width = next power "

@@ -55,13 +55,6 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("interest", ArrayType(DoubleType())),
-    ]
-)
-
 # State-sharding knob (VERDICT r11 #1, simdedup.py:STATE_SHARDS pattern):
 # users hash into this many state GROUPS, each holding its users'
 # accumulators as parallel arrays. Bounds per-batch Python invocations
@@ -192,84 +185,5 @@ def interest_fold_stream(stream_df, output_mode: str = "update"):
             SHARD_STATE_SCHEMA,
             output_mode,
             GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def interest_fold_stream_tws(stream_df):
-    """The same per-key fold on Spark 4's transformWithStateInPandas —
-    typed ValueState in the RocksDB state store instead of the legacy
-    GroupState API. Everything the processor needs is defined INSIDE this
-    function and captured by value (cloudpickle serializes nested classes
-    whole), because the transformWithState Python runner is a separate
-    long-lived process that cannot import this package when the driver
-    starts outside the repo (unlike pandas-UDF workers, it ignores
-    addPyFile).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    lam, scale, dim = LAMBDA, RATING_SCALE, DIM
-    types = EVENT_TYPES
-    out_schema, state_schema = OUTPUT_SCHEMA, STATE_SCHEMA
-
-    class InterestProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.state = handle.getValueState("interest", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as pd
-
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if self.state.exists():
-                n_events, vec = self.state.get()
-                interest = np.array(vec)
-            else:
-                n_events, interest = 0, np.zeros(dim)
-            # closed-form fold (same math as fold_events, inlined so the
-            # class pickles without any reference to this package)
-            ordered = pdf.sort_values(["ts", "event_id"])
-            n = len(ordered)
-            if n:
-                r = ordered["value"].to_numpy(dtype=np.float64) / scale
-                a = 1.0 - lam * r
-                lr = lam * r
-                suffix = np.ones(n)
-                if n > 1:
-                    suffix[:-1] = np.cumprod(a[::-1])[::-1][1:]
-                idx = {t: i for i, t in enumerate(types)}
-                type_idx = np.fromiter(
-                    (idx.get(t, -1) for t in ordered["event_type"]),
-                    dtype=np.int64,
-                    count=n,
-                )
-                contrib = np.zeros(dim)
-                mask = type_idx >= 0
-                np.add.at(contrib, type_idx[mask], lr[mask] * suffix[mask])
-                interest = interest * np.prod(a) + contrib
-            n_events += n
-            self.state.update((n_events, [float(x) for x in interest]))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "interest": [[float(x) for x in interest]],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.select("user_id", "ts", "event_id", "event_type", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=InterestProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
         )
     )

@@ -45,7 +45,6 @@ from cqu_bigdata_recommender_system_for_movies_spark.operators.windows import (
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
     interest_fold_stream,
-    interest_fold_stream_tws,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load
 
@@ -701,42 +700,6 @@ def streaming_socket_parse_records(spark: SparkSession, sf_dir: str) -> DataFram
         q.stop()
         server.close()
     return spark.table(name).dropDuplicates(["event_id"])
-
-
-def streaming_interest_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST3 on Spark 4's transformWithStateInPandas: the identical interest
-    fold as typed ValueState in the RocksDB state store — the modern
-    arbitrary-stateful-processing API (timers/TTL-capable) next to the
-    legacy GroupState twin. NOT a registry entry: the transformWithState
-    Python runner requires ``protobuf``, which this container does not
-    ship, so the driver would error; the pytest twin-equality check is
-    skipif-gated on the import instead (tests/test_streaming_state.py)."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _events_stream(spark, sf_dir)
-        folded = interest_fold_stream_tws(stream)
-        result = _run_to_memory(folded, "update")
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    latest = (
-        result.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "interest")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.n_events").alias("n_events"),
-            F.col("s.interest").alias("interest"),
-        )
-    )
-    return latest.select(
-        "user_id", "n_events", F.posexplode("interest").alias("pos", "weight")
-    ).withColumn("weight", F.round("weight", 6))
 
 
 @register(

@@ -145,61 +145,156 @@ def test_shuffle_partitions_helper_handles_non_numeric_conf(spark):
     assert shuffle_partitions(_NoCtx(), default=13) == 13
 
 
+def _scored_cells(arr, vec_col, vecf, normf, idf, ne):
+    """(cos, -id) structs of ``vec_col`` against every struct of ``arr``."""
+    from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
+        EPS,
+        dot,
+    )
+
+    return F.transform(
+        arr,
+        lambda c: F.struct(
+            (dot(F.col(vec_col), c[vecf]) / (ne * c[normf] + F.lit(EPS))).alias("cos"),
+            (-c[idf]).alias("negid"),
+        ),
+    )
+
+
+def _ranked_ids(scored, k):
+    """The ids of the top-k (cos DESC, id ASC) structs of ``scored``."""
+    return F.transform(
+        F.slice(F.reverse(F.array_sort(scored)), 1, k), lambda s: -s["negid"]
+    )
+
+
+def _let_norm(vec_col, body):
+    """``body(ne)`` with the row norm let-bound once (higher-order
+    functions have no CSE)."""
+    from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import dot
+
+    return F.element_at(F.transform(F.array(F.sqrt(dot(vec_col, vec_col))), body), 1)
+
+
+def _nearest_cells(vec_col: str, k: int):
+    """Reference: the interpreted fold over the single-row `__cents`
+    relation (cid, ce, nc) — top-k cells, cos DESC, ties to the smaller
+    cid."""
+    return _let_norm(
+        vec_col,
+        lambda ne: _ranked_ids(
+            _scored_cells(F.col("__cents"), vec_col, "ce", "nc", "cid", ne), k
+        ),
+    )
+
+
+def _two_level_cells(vec_col: str, k: int, probe: int):
+    """Reference: the interpreted two-level selection over the single-row
+    `__reps` (rid, re, nr) and `__gcents` (cid, ce, nc, gid) relations —
+    the top-``probe`` representatives, then the top-k cells of their
+    groups."""
+
+    def body(ne):
+        return F.element_at(
+            F.transform(
+                F.array(
+                    _ranked_ids(
+                        _scored_cells(F.col("__reps"), vec_col, "re", "nr", "rid", ne),
+                        probe,
+                    )
+                ),
+                lambda gids: _ranked_ids(
+                    _scored_cells(
+                        F.filter(
+                            F.col("__gcents"),
+                            lambda c: F.array_contains(gids, c["gid"]),
+                        ),
+                        vec_col,
+                        "ce",
+                        "nc",
+                        "cid",
+                        ne,
+                    ),
+                    k,
+                ),
+            ),
+            1,
+        )
+
+    return _let_norm(vec_col, body)
+
+
+def _rows(flat):
+    return [
+        (int(c), v.tolist(), float(n)) for c, v, n in zip(flat.cids, flat.cmat, flat.ncs)
+    ]
+
+
+def _flat_relation(spark, quant):
+    return spark.createDataFrame(
+        [(_rows(quant),)],
+        "__cents array<struct<cid:int,ce:array<double>,nc:double>>",
+    )
+
+
+def _two_level_relations(spark, quant):
+    reps = spark.createDataFrame(
+        [(_rows(quant.reps),)],
+        "__reps array<struct<rid:int,re:array<double>,nr:double>>",
+    )
+    gcents = spark.createDataFrame(
+        [([r + (int(g),) for r, g in zip(_rows(quant.cells), quant.gids)],)],
+        "__gcents array<struct<cid:int,ce:array<double>,nc:double,gid:int>>",
+    )
+    return reps.crossJoin(gcents)
+
+
 def test_nearest_cells_udf_matches_interpreted_fold(spark, sf_dir):
-    """r16 optimization guard: the Arrow-vectorized nearest-cell
-    assignment (functions/nearcell.py) must be BIT-identical to the
-    interpreted `_nearest_cells` fold it replaced — same IEEE op order,
-    same Double.compare total order, same smaller-cid tie-break — at
+    """The Arrow-vectorized flat selection (functions/nearcell.py) must
+    be BIT-identical to the interpreted fold the oracles mirror — same
+    IEEE op order, same comparator, same smaller-cid tie-break — at
     k = 1 (scalar and array forms) and the probe ks, on the real corpus
     against the real derived quantizer."""
-    from pyspark.sql import functions as F
-
     from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        nearest_cell_udf,
-        nearest_cells_udf,
+        cell_udf,
+        cells_udf,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import (
         _ann_cents_relation,
         derive_ann_cells,
-    )
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
-        _nearest_cells,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
-    cents = _ann_cents_relation(emb, derive_ann_cells(sf_dir))
-    seeds = cents._sg_seeds  # noqa: SLF001 — the engine-internal tag
-    assert seeds, "seed list must ride the cents relation"
+    quant = _ann_cents_relation(emb, derive_ann_cells(sf_dir))
+    with_cents = emb.crossJoin(F.broadcast(_flat_relation(spark, quant)))
 
     for k in (1, 2, 4):
         ref = {
             r.vec_id: list(r.cells)
-            for r in emb.crossJoin(F.broadcast(cents))
-            .select("vec_id", _nearest_cells("e", k).alias("cells"))
-            .collect()
+            for r in with_cents.select(
+                "vec_id", _nearest_cells("e", k).alias("cells")
+            ).collect()
         }
         got = {
             r.vec_id: list(r.cells)
             for r in emb.select(
-                "vec_id", nearest_cells_udf(seeds, k)(F.col("e")).alias("cells")
+                "vec_id", cells_udf(quant, k)(F.col("e")).alias("cells")
             ).collect()
         }
         assert got == ref, f"k={k}: vectorized top-k diverged from the fold"
 
     ref1 = {
         r.vec_id: r.cell
-        for r in emb.crossJoin(F.broadcast(cents))
-        .select("vec_id", F.element_at(_nearest_cells("e", 1), 1).alias("cell"))
-        .collect()
+        for r in with_cents.select(
+            "vec_id", F.element_at(_nearest_cells("e", 1), 1).alias("cell")
+        ).collect()
     }
     got1 = {
         r.vec_id: r.cell
-        for r in emb.select(
-            "vec_id", nearest_cell_udf(seeds)(F.col("e")).alias("cell")
-        ).collect()
+        for r in emb.select("vec_id", cell_udf(quant)(F.col("e")).alias("cell")).collect()
     }
     assert got1 == ref1
 
@@ -208,15 +303,12 @@ def test_nearest_cells_udf_null_and_tie_semantics():
     """An exact cosine tie selects the smaller cid — including the
     -0.0 vs +0.0 edge: Spark orders doubles with
     SQLOrderingUtil.compareDoubles, whose primitive ``==`` check makes
-    -0.0 and +0.0 EQUAL (ADVICE r16 — java.lang.Double.compare would
-    rank -0.0 < +0.0; the key normalizes signed zeros so both
-    configurations fall through to the cid tie-break, matching Spark's
-    comparator by construction)."""
-    import numpy as np
-
+    -0.0 and +0.0 EQUAL (java.lang.Double.compare would rank
+    -0.0 < +0.0; the key normalizes signed zeros so both configurations
+    fall through to the cid tie-break, matching Spark's comparator by
+    construction)."""
     from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        topk_cells_np,
-        _seed_arrays,
+        Flat,
     )
 
     # seeds y and -y; query along x gives dot +0.0 with one seed and
@@ -226,15 +318,12 @@ def test_nearest_cells_udf_null_and_tie_semantics():
     # key would diverge (+0.0 on the larger cid).
     E = np.array([[1.0, 0.0]])
     seeds = [(3, [0.0, 1.0], 1.0), (7, [0.0, -1.0], 1.0)]
-    cids, cmat, ncs = _seed_arrays(seeds)
-    assert topk_cells_np(E, cids, cmat, ncs, 2).tolist() == [[3, 7]]
+    assert Flat.of(seeds).topk(E, 2).tolist() == [[3, 7]]
     seeds_flipped = [(3, [0.0, -1.0], 1.0), (7, [0.0, 1.0], 1.0)]
-    cids, cmat, ncs = _seed_arrays(seeds_flipped)
-    assert topk_cells_np(E, cids, cmat, ncs, 2).tolist() == [[3, 7]]
+    assert Flat.of(seeds_flipped).topk(E, 2).tolist() == [[3, 7]]
     # a true bitwise tie falls to the smaller cid
     seeds_tie = [(5, [0.0, 1.0], 1.0), (9, [0.0, 1.0], 1.0)]
-    cids, cmat, ncs = _seed_arrays(seeds_tie)
-    top = topk_cells_np(np.array([[0.5, 0.5]]), cids, cmat, ncs, 2)
+    top = Flat.of(seeds_tie).topk(np.array([[0.5, 0.5]]), 2)
     assert top.tolist() == [[5, 9]]
 
 
@@ -250,95 +339,76 @@ def test_nearcell_eps_matches_vectors():
 
 
 def test_two_level_cell_udf_masks_unfilled_sentinel(spark):
-    """ADVICE r16: a vector whose probed level-1 groups own ZERO member
-    cells gets the -1 unfilled sentinel from two_level_topk_np; the
-    scalar UDF must surface that as NULL (the array variant's c >= 0
-    filter), never as a real cell id -1."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
+    """A vector whose probed level-1 groups own ZERO member cells gets
+    the -1 unfilled sentinel from TwoLevel.topk; the scalar UDF must
+    surface that as NULL (the array form drops the slot), never as a
+    real cell id -1."""
     from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        two_level_cell_udf,
-        two_level_topk_np,
-        _two_level_arrays,
+        Flat,
+        TwoLevel,
+        cell_udf,
+        cells_udf,
     )
 
     # two reps; every cell grouped under rep 0; probe=1 — a query much
     # closer to rep 1 probes only the cell-less group
-    rep_rows = [(0, [1.0, 0.0], 1.0), (1, [0.0, 1.0], 1.0)]
-    cell_rows = [(0, [1.0, 0.0], 1.0, 0), (2, [0.9, 0.1], 0.905538, 0)]
-    rep_arrays, cell_arrays = _two_level_arrays(rep_rows, cell_rows)
-    top = two_level_topk_np(
-        np.array([[0.0, 1.0]]), rep_arrays, cell_arrays, 1, 1
-    )
-    assert top.tolist() == [[-1]]  # the sentinel is reachable here
-    # the real UDF end to end: the sentinel row comes back as NULL
+    reps = Flat.of([(0, [1.0, 0.0], 1.0), (1, [0.0, 1.0], 1.0)])
+    cells = Flat.of([(0, [1.0, 0.0], 1.0), (2, [0.9, 0.1], 0.905538)])
+    quant = TwoLevel(reps, cells, np.array([0, 0]), 1)
+    assert quant.topk(np.array([[0.0, 1.0]]), 1).tolist() == [[-1]]
+    # the real UDFs end to end: the sentinel row comes back as NULL / []
     df = spark.createDataFrame(
         [([0.0, 1.0],), ([1.0, 0.0],)], "e array<double>"
     )
     got = df.select(
-        two_level_cell_udf(rep_rows, cell_rows, 1)(F.col("e")).alias("cell")
+        cell_udf(quant)(F.col("e")).alias("cell"),
+        cells_udf(quant, 2)(F.col("e")).alias("cells"),
     ).collect()
-    cells = sorted((r.cell is None, r.cell) for r in got)
-    assert cells == [(False, 0), (True, None)]
+    rows = sorted((r.cell is None, r.cell, list(r.cells)) for r in got)
+    assert rows == [(False, 0, [0, 2]), (True, None, [])]
 
 
 def test_two_level_cells_udf_matches_interpreted_expression(spark, sf_dir):
-    """r16 optimization guard: the Arrow-vectorized hierarchical
-    selection (two_level_cells_udf) must be BIT-identical to the
-    interpreted `_two_level_cells` expression at the assignment (k=1,
-    scalar and array) and serving (k=SEARCH_NPROBE) shapes, on the real
-    corpus against the real derived two-level quantizer."""
-    from pyspark.sql import functions as F
-
+    """The Arrow-vectorized hierarchical selection (TwoLevel.topk) must
+    be BIT-identical to the interpreted two-level expression at the
+    assignment (k=1, scalar and array) and serving (k=SEARCH_NPROBE)
+    shapes, on the real corpus against the real derived two-level
+    quantizer."""
     import cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index as ai
     from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        two_level_cell_udf,
-        two_level_cells_udf,
+        cell_udf,
+        cells_udf,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
-    n_cells = ai.derive_ann_cells(sf_dir)
-    reps, gcents = ai._two_level_relations(
-        emb, n_cells, ai.derive_group_width(n_cells)
-    )
-    rep_rows = reps._sg_seeds  # noqa: SLF001
-    cell_rows = gcents._sg_seeds  # noqa: SLF001
+    quant = ai.two_level_quantizer(emb, ai.derive_ann_cells(sf_dir))
+    with_seeds = emb.crossJoin(F.broadcast(_two_level_relations(spark, quant)))
     for k in (1, ai.SEARCH_NPROBE):
         ref = {
             r.vec_id: list(r.cells)
-            for r in emb.crossJoin(F.broadcast(gcents))
-            .crossJoin(F.broadcast(reps))
-            .select("vec_id", ai._two_level_cells("e", k).alias("cells"))
-            .collect()
+            for r in with_seeds.select(
+                "vec_id", _two_level_cells("e", k, quant.probe).alias("cells")
+            ).collect()
         }
         got = {
             r.vec_id: list(r.cells)
             for r in emb.select(
-                "vec_id",
-                two_level_cells_udf(rep_rows, cell_rows, ai.ANN_GROUP_PROBE, k)(
-                    F.col("e")
-                ).alias("cells"),
+                "vec_id", cells_udf(quant, k)(F.col("e")).alias("cells")
             ).collect()
         }
         assert got == ref, f"k={k}: vectorized hierarchical selection diverged"
     ref1 = {
         r.vec_id: r.cell
-        for r in emb.crossJoin(F.broadcast(gcents))
-        .crossJoin(F.broadcast(reps))
-        .select("vec_id", ai._two_level_cell("e").alias("cell"))
-        .collect()
+        for r in with_seeds.select(
+            "vec_id",
+            F.element_at(_two_level_cells("e", 1, quant.probe), 1).alias("cell"),
+        ).collect()
     }
     got1 = {
         r.vec_id: r.cell
-        for r in emb.select(
-            "vec_id",
-            two_level_cell_udf(rep_rows, cell_rows, ai.ANN_GROUP_PROBE)(
-                F.col("e")
-            ).alias("cell"),
-        ).collect()
+        for r in emb.select("vec_id", cell_udf(quant)(F.col("e")).alias("cell")).collect()
     }
     assert got1 == ref1

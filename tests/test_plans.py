@@ -1540,14 +1540,11 @@ def test_ann_serving_plan_regimes(spark, sf_dir):
 
 
 def test_arrow_assignment_path_is_wired(spark, sf_dir):
-    """VERDICT r16 #7 / ADVICE r16: the ~1000x-faster Arrow-vectorized
-    assignment dispatches on a dynamic `_sg_seeds` attribute tagged onto
-    the centroid DataFrames; any intervening transformation silently
-    drops the tag and falls back to the interpreted fold — correct but
-    slow, and invisible without a pin. One representative wired site per
-    family must compile to an ArrowEvalPython node with NO
-    BroadcastNestedLoopJoin (the interpreted fallback's broadcast
-    `__cents` shape); a dropped tag fails here, not in a bench."""
+    """Every cell assignment and probe runs the Arrow-vectorized
+    selection over the driver-held quantizer. One representative site
+    per family must compile to an ArrowEvalPython node with NO
+    BroadcastNestedLoopJoin (the shape of an interpreted fold over a
+    broadcast seed relation)."""
     import pyspark.sql.functions as F
 
     from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
@@ -1573,7 +1570,7 @@ def test_arrow_assignment_path_is_wired(spark, sf_dir):
             f"interpreted fold (no ArrowEvalPython):\n{plan[:2000]}"
         )
         assert "BroadcastNestedLoopJoin" not in plan, (
-            f"{label}: the broadcast __cents fallback shape is live:\n"
+            f"{label}: a broadcast seed-relation join is live:\n"
             f"{plan[:2000]}"
         )
 
@@ -1607,20 +1604,19 @@ def test_arrow_assignment_path_is_wired(spark, sf_dir):
     check(asrch.score_query_batch(emb.limit(10), cents, index_df),
           "score_query_batch")
 
-    # family 5: two-level serving (ann_two_level_search / two_level_serve)
+    # family 5: two-level serving (ann_two_level_search)
     check(queries["ann_two_level_search"](spark, sf_dir),
           "ann_two_level_search")
 
     # family 6: the candidate index + per-batch probe
     # (streaming_recommend_candidates' offline and online halves)
     profiles = item_profiles(spark, sf_dir).localCheckpoint(eager=True)
-    ccents = cand._centroid_relation(profiles)
+    ccents, item_dim, _ = cand.build_candidate_index(profiles)
     check(cand.item_cell_assignments(profiles, ccents),
           "item_cell_assignments")
     users = profiles.select(
         F.col("item_ref").alias("user_id"), F.col("profile").alias("interest")
     ).limit(10)
-    _, item_dim, _ = cand.build_candidate_index(profiles)
     check(cand.score_candidates_batch(users, ccents, item_dim),
           "score_candidates_batch")
 

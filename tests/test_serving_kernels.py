@@ -143,13 +143,14 @@ def test_candidate_kernel_on_reference_catalog(spark, sf_dir):
     assert _cand_rows(got) == _cand_rows(want)
 
 
-def _ann_index(spark, corpus: list[list[float]], n_cells: int, path: str):
+def _ann_index(spark, corpus: list[list[float]], n_cells: int, path: str,
+               two_level: bool = False):
     """(queries, quantizer, index): the index is a parquet file, so the
     planner knows its size, as it knows the served table's."""
     emb = spark.createDataFrame(
         list(enumerate(corpus)), "vec_id long, e array<double>"
     )
-    cents = ai._ann_cents_relation(emb, n_cells)
+    cents = ai._quantizer(emb, n_cells, two_level)
     ai.assign_batch(emb, cents, carry=("e",)).select(
         F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne")
     ).write.parquet(path)
@@ -179,15 +180,26 @@ def _join_path(spark, fn):
                 spark.conf.set(k, v)
 
 
-@pytest.mark.parametrize("n, n_cells", [(16, 8), (120, N_CELLS)])
-def test_ann_kernel_matches_join_path(spark, tmp_path, n, n_cells):
+@pytest.mark.parametrize(
+    "n, n_cells, two_level",
+    [
+        pytest.param(16, 8, False, id="16-8"),
+        pytest.param(120, N_CELLS, False, id="120-4"),
+        pytest.param(16, 8, True, id="16-8-two_level"),
+        pytest.param(120, N_CELLS, True, id="120-4-two_level"),
+        # 8 representatives, 4 probed: level 1 prunes
+        pytest.param(120, 32, True, id="120-32-two_level"),
+    ],
+)
+def test_ann_kernel_matches_join_path(spark, tmp_path, n, n_cells, two_level):
     """16 vectors over 8 cells leave some queries fewer than SEARCH_TOPK
-    candidates."""
+    candidates. The two-level cases serve through `two_level_quantizer`."""
     rng = np.random.default_rng(n)
     corpus = _vectors(rng, n, 6)
     emb, cents, index_df = _ann_index(
-        spark, corpus, n_cells, str(tmp_path / "index")
+        spark, corpus, n_cells, str(tmp_path / "index"), two_level
     )
+    assert isinstance(cents, ai.TwoLevel) == two_level
     # every corpus vector as a query (its own id sits in its probed
     # cells), plus outside ids: a zero vector, a duplicate, negatives
     extra = spark.createDataFrame(
@@ -216,15 +228,51 @@ def test_ann_kernel_matches_join_path(spark, tmp_path, n, n_cells):
         assert min(counts.values()) < ai.SEARCH_TOPK
 
 
+def test_ann_kernel_skips_rows_without_a_cell(spark, tmp_path):
+    """A two-level quantizer leaves a vector whose probed groups own no
+    cell unassigned (NULL cell). Such index rows join no probe, and
+    queries with no probed cell get no rows, on both paths."""
+    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+        Flat,
+    )
+
+    # two representatives, every cell grouped under rep 0, one group
+    # probed: vectors nearer rep 1 have no cell
+    reps = Flat.of([(0, [1.0, 0.0], 1.0), (1, [0.0, 1.0], 1.0)])
+    cells = Flat.of([(0, [1.0, 0.0], 1.0), (2, [1.0, 0.5], 1.25 ** 0.5)])
+    quant = ai.TwoLevel(reps, cells, np.array([0, 0]), 1)
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.uniform(0.0, 1.0, 2)]) for i in range(60)],
+        "vec_id long, e array<double>",
+    )
+    path = str(tmp_path / "index")
+    ai.assign_batch(emb, quant, carry=("e",)).select(
+        F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne")
+    ).write.parquet(path)
+    index_df = spark.read.parquet(path)
+    unassigned = {r.neighbor_id for r in index_df.filter("cell IS NULL").collect()}
+    assert unassigned and len(unassigned) < 60
+
+    got = asrch.score_query_batch(emb, quant, index_df)
+    assert "Window" not in _plan(got)
+    rows = _ann_rows(got)
+    assert rows == _join_path(
+        spark, lambda: _ann_rows(asrch.score_query_batch(emb, quant, index_df))
+    )
+    assert rows and not {q for q, *_ in rows} & unassigned
+    assert not {nb for *_, nb in rows} & unassigned
+
+
 def test_ann_kernel_ranks_exact_ties_by_id():
     """Equal vectors score bit-equal cosines: the smaller id ranks first,
     whatever order the index holds them in; so do two zero cosines."""
     from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        _seed_arrays,
+        Flat,
         ann_topk_np,
     )
 
-    seeds = _seed_arrays([(0, [1.0, 0.0], 1.0)])
+    seeds = Flat.of([(0, [1.0, 0.0], 1.0)])
     ids = np.array([9, 4, 7, 2, 5], dtype=np.int64)
     V = np.array([[1.0, 1.0], [1.0, 1.0], [0.0, 1.0], [0.0, -1.0], [1.0, 1.0]])
     index = (ids, np.zeros(5, dtype=np.int64), V, np.sqrt((V * V).sum(axis=1)))

@@ -35,12 +35,11 @@ COLLECT_WHITELIST = {
     ("operators/sketches.py", "bloom_semi_join_prune"),
     # d x d Gramian partials (embedding-dim-squared, data-size-free)
     ("operators/vectors.py", "embedding_pca_top_component_detail"),
-    # exactly n_cells coarse-quantizer seed rows (constant,
-    # data-size-free) — becomes the single-row broadcast centroid
-    # relation the map-side cell assignment folds over (production:
-    # sampled k-means centroids, equally driver-resident); shared by
-    # the three IVF queries
-    ("operators/vectors.py", "_ivf_assign_cells"),
+    # exactly n_cells coarse-quantizer seed rows, the one collect behind
+    # every quantizer (IVF, candidate index, flat and two-level ANN
+    # index): n_cells is fixed or ~sqrt(corpus), never data-sized
+    # (production: sampled k-means centroids, equally driver-resident)
+    ("functions/nearcell.py", "seed_quantizer"),
     # one count per partition: the distributed-rank offset map
     ("operators/windows.py", "global_row_number"),
     # test-fixture staging for the binary-file source (not a hot path)
@@ -48,23 +47,6 @@ COLLECT_WHITELIST = {
     # the records to feed through the live loopback socket (bounded
     # fixture; the socket SOURCE side is the operator under test)
     ("streaming/queries.py", "streaming_socket_parse_records"),
-    # exactly derive_rec_cells(catalog) item-profile seed rows
-    # (~sqrt(catalog) quantizer seeds) — the single-row broadcast
-    # centroid relation for streaming candidate pruning, same bound as
-    # operators/vectors.py _ivf_assign_cells
-    ("streaming/candidates.py", "_centroid_relation"),
-    # exactly derive_ann_cells(corpus) seed rows (~sqrt(corpus)
-    # quantizer seeds) — the frozen quantizer of the streaming ANN
-    # index maintenance loop, same bound as
-    # _ivf_assign_cells / _centroid_relation
-    ("streaming/ann_index.py", "_ann_cents_relation"),
-    # exactly n_cells seed rows, collected ONCE to build the two-level
-    # quantizer's broadcast `__reps` (~sqrt(n_cells) representatives)
-    # and `__gcents` (cells tagged with their nearest-rep group — the
-    # geometry-aware grouping computed driver-side over the bounded
-    # seed set) relations; same driver-resident-seed bound as
-    # _ann_cents_relation
-    ("streaming/ann_index.py", "_two_level_relations"),
     # one catalog-metadata row (the table's Location string) — feeds the
     # generation swap and a resumed run's live-generation anchor
     ("streaming/ann_index.py", "_table_location"),

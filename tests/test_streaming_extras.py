@@ -2087,7 +2087,7 @@ def test_two_level_serve_of_crud_maintained_index(spark, sf_dir):
     through the full CRUD history — the WIDE maintenance loop
     (two-level assignment, re-embedding upserts, tombstoned deletes,
     purging compactions, vectors carried) produces the artifact, and
-    two_level_serve answers the standard query set from it. Checked
+    score_query_batch answers the standard query set from it. Checked
     against an independent DuckDB replay of the post-CRUD live set
     assigned and probed through the hierarchical quantizer."""
     import shutil
@@ -2108,7 +2108,9 @@ def test_two_level_serve_of_crud_maintained_index(spark, sf_dir):
         derive_ann_cells_wide,
         maintain_index,
         two_level_quantizer,
-        two_level_serve,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_search import (
+        score_query_batch,
     )
 
     tbl = "spark_graft_ann_crud_serve2_test"
@@ -2158,7 +2160,7 @@ def test_two_level_serve_of_crud_maintained_index(spark, sf_dir):
         queries = emb.filter(F.pmod("vec_id", F.lit(QUERY_MOD)) == QUERY_REM)
         served = {
             (int(r.query_id), int(r.rank), int(r.neighbor_id))
-            for r in two_level_serve(queries, live, quant).collect()
+            for r in score_query_batch(queries, quant, live).collect()
         }
         assert served
 

@@ -118,57 +118,6 @@ def test_fold_events_closed_form_equals_iterative():
     check()
 
 
-def test_tws_plan_constructs_without_runner(spark, sf_dir):
-    """VERDICT r12 #9 capability gate: the transformWithStateInPandas
-    twin's PLAN-CONSTRUCTION path runs unconditionally — protobuf is a
-    runtime dependency of the TWS Python runner process only, so the
-    logical plan (processor class pickling, output/state schema wiring,
-    the TransformWithState operator node) must build and analyze in this
-    container even though execution cannot start. This is the half of
-    the twin CI can always exercise; the execution-equality half below
-    documents its own impossibility."""
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
-        OUTPUT_SCHEMA,
-        interest_fold_stream_tws,
-    )
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _events_stream,
-    )
-
-    df = interest_fold_stream_tws(_events_stream(spark, sf_dir))
-    assert df.isStreaming
-    # same output contract as the applyInPandasWithState fold
-    assert df.schema.simpleString() == OUTPUT_SCHEMA.simpleString(), (
-        df.schema.simpleString()
-    )
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithState" in analyzed, analyzed[:1500]
-
-
-def test_tws_fold_equals_group_state_fold(spark, sf_dir):
-    """The transformWithStateInPandas fold must emit exactly the same final
-    per-user state as the applyInPandasWithState twin. DOCUMENTED
-    IMPOSSIBILITY in this container (VERDICT r12 #9): the TWS Python
-    runner process imports google.protobuf at execution time; protobuf is
-    not shipped here and installs are forbidden, so only the
-    plan-construction half (previous test, always green) can run. On any
-    protobuf-bearing deployment this test executes in full."""
-    pytest.importorskip("google.protobuf")
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        streaming_interest_tws,
-    )
-
-    legacy = {
-        (r.user_id, r.pos): (r.n_events, r.weight)
-        for r in streaming_interest_fold(spark, sf_dir).collect()
-    }
-    tws = {
-        (r.user_id, r.pos): (r.n_events, r.weight)
-        for r in streaming_interest_tws(spark, sf_dir).collect()
-    }
-    assert tws == legacy
-
-
 def test_sharded_fold_split_invariant_randomized():
     """Property test of the SHARDED fold callback (VERDICT r11 #1): for
     random event corpora, random user->shard mixes, random TIME-ORDERED

@@ -39,14 +39,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+    cells_udf,
+    seed_quantizer,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     cosine,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
     REC_NPROBE,
-    _centroid_relation,
-    _nearest_cells,
     derive_rec_cells,
     item_cell_assignments,
 )
@@ -120,7 +122,7 @@ def main() -> None:
     )
     n_items = profiles.count()
     width = n_cells or derive_rec_cells(n_items)
-    cents = _centroid_relation(profiles, width)
+    cents = seed_quantizer(profiles, "item_ref", "profile", width)
     item_cells = item_cell_assignments(profiles, cents).localCheckpoint(eager=True)
     users = _folded_users(spark, sf_dir, limit_users).localCheckpoint(eager=True)
     n_users = users.count()
@@ -128,12 +130,10 @@ def main() -> None:
     w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_ref"))
 
     t0 = time.perf_counter()
-    probed = (
-        users.crossJoin(F.broadcast(cents))
-        .select(
-            "user_id", "interest", _nearest_cells("interest", nprobe).alias("cells")
-        )
-        .withColumn("cell", F.explode("cells"))
+    probed = users.select(
+        "user_id",
+        "interest",
+        F.explode(cells_udf(cents, nprobe)(F.col("interest"))).alias("cell"),
     )
     pruned = (
         probed.join(F.broadcast(item_cells), "cell")
