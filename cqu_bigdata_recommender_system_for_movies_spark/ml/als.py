@@ -18,14 +18,13 @@ materialized user×item matrix.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.recommendation import ALS, ALSModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
+from cqu_bigdata_recommender_system_for_movies_spark.session import session_cache
 from cqu_bigdata_recommender_system_for_movies_spark.tables import RATINGS_SQL, ratings
 
 SEED = 42
@@ -33,10 +32,8 @@ SEED = 42
 # One ALS fit is the dominant cost of the whole registry at sf0.01; several
 # registry entries legitimately share the same (data, hyperparam) fit — e.g.
 # als_rmse and als_precision_recall_at_k both train on the seeded 80/20
-# split. Fits are seeded and deterministic, so caching changes no result.
-# Keys are (applicationId, *what): a model is bound to the SparkContext
-# that fitted it, so a restarted context must miss (see cached_model).
-_MODEL_CACHE: dict[tuple, ALSModel] = {}
+# split. Fits are seeded and deterministic, so caching them (and the CV and
+# sweep metric rows) in the session cache changes no result.
 
 
 def fit_als(train: DataFrame, rank: int = 10, max_iter: int = 10, reg: float = 0.1) -> ALSModel:
@@ -55,33 +52,6 @@ def fit_als(train: DataFrame, rank: int = 10, max_iter: int = 10, reg: float = 0
     return als.fit(train)
 
 
-# The materialized 80/20 split, keyed by (applicationId, sf_dir) like the
-# dedup family's checkpoint caches: a restarted context misses it instead
-# of reading blocks of the dead one.
-_SPLIT_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
-def _drop_other_apps(app_id: str) -> None:
-    """Forget every split and model entry of every application but
-    `app_id`."""
-    for cache in (_SPLIT_CACHE, _MODEL_CACHE):
-        for key in [k for k in cache if k[0] != app_id]:
-            del cache[key]
-
-
-def cached_model(
-    spark: SparkSession, key: tuple, fit: Callable[[], ALSModel]
-) -> ALSModel:
-    """The model cached under (applicationId, *key), fitted by `fit()` on
-    a miss. Every lookup first drops the other applications' entries."""
-    app_id = spark.sparkContext.applicationId
-    _drop_other_apps(app_id)
-    full = (app_id, *key)
-    if full not in _MODEL_CACHE:
-        _MODEL_CACHE[full] = fit()
-    return _MODEL_CACHE[full]
-
-
 def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame, DataFrame]:
     """Seeded 80/20 split + fitted model, cached per (application, sf_dir).
 
@@ -97,23 +67,18 @@ def _split_model(spark: SparkSession, sf_dir: str) -> tuple[ALSModel, DataFrame,
     train and test are still independently produced by randomSplit
     (neither derives from the other), the checkpoint only pins WHERE
     they are read from."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _drop_other_apps(key[0])
-    if key not in _SPLIT_CACHE:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
+    def split() -> tuple[DataFrame, DataFrame]:
         r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-        train, test = r.randomSplit([0.8, 0.2], seed=SEED)
-        _SPLIT_CACHE[key] = (
-            train.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            ),
-            test.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            ),
+        return tuple(
+            part.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+            for part in r.randomSplit([0.8, 0.2], seed=SEED)
         )
-    train, test = _SPLIT_CACHE[key]
-    return cached_model(spark, (sf_dir,), lambda: fit_als(train)), train, test
+
+    train, test = session_cache(spark, ("als_split", sf_dir), split)
+    model = session_cache(spark, ("als_split_model", sf_dir), lambda: fit_als(train))
+    return model, train, test
 
 
 def als_rmse_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,7 +137,7 @@ def als_recommend_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spark_als.py:116-132 — the reference used rdd.flatMap). Consumed by
     the registered invariant query below and by pytest's shape checks."""
     r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-    model = cached_model(spark, (sf_dir, "full"), lambda: fit_als(r))
+    model = session_cache(spark, ("als_full", sf_dir), lambda: fit_als(r))
     users = r.select("user_id").distinct().orderBy("user_id").limit(5)
     recs = model.recommendForUserSubset(users, 10)
     return recs.select(
@@ -257,20 +222,21 @@ def _topk_contract_invariants(detail: DataFrame, catalog: DataFrame, k: int) -> 
     )
 
 
-# CV/tuning harnesses surface their metrics as driver-side scalar lists
-# (RegressionEvaluator.evaluate returns a float), so the detail twin and
-# the registered invariant query share one cached fit set per sf_dir —
-# the fits are seeded and deterministic, caching changes no result.
-_CV_CACHE: dict[str, tuple[list[tuple[str, float, int]], int, int]] = {}
-
-
 def _cv_rows(spark: SparkSession, sf_dir: str) -> tuple[list[tuple[str, float, int]], int, int]:
     """Seeded 3-fold CV: ((fold, rmse, max_iter) rows, sum of fold counts,
     total ratings count) — reference doc/课程报告.md:890-892,
     train_topn.py:209-215 ran 5 folds; k=3 bounds this entry's share of
-    the per-round budget, the reference's k=5 is one constant away."""
-    if sf_dir in _CV_CACHE:
-        return _CV_CACHE[sf_dir]
+    the per-round budget, the reference's k=5 is one constant away. The
+    detail twin and the registered invariant query share one cached fit
+    set per session and sf_dir."""
+    return session_cache(
+        spark, ("als_cv", sf_dir), lambda: _cross_validate(spark, sf_dir)
+    )
+
+
+def _cross_validate(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[str, float, int]], int, int]:
     r = ratings(spark, sf_dir).select("user_id", "item_id", "rating").cache()
     n_total = r.count()
     folds = r.randomSplit([1.0 / 3] * 3, seed=SEED)
@@ -301,8 +267,7 @@ def _cv_rows(spark: SparkSession, sf_dir: str) -> tuple[list[tuple[str, float, i
     r.unpersist()
     short = [v for name, v, it in rows if it == 3]
     rows.append(("mean", round(sum(short) / len(short), 4), 3))
-    _CV_CACHE[sf_dir] = (rows, fold_total, n_total)
-    return _CV_CACHE[sf_dir]
+    return rows, fold_total, n_total
 
 
 def als_cross_validation_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,7 +337,7 @@ def als_fixture_rmse_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r = movielens_shaped_ratings(spark)
     train, test = r.randomSplit([0.8, 0.2], seed=SEED)
-    model = cached_model(spark, ("fixture", "band"), lambda: fit_als(train))
+    model = session_cache(spark, ("als_fixture_band",), lambda: fit_als(train))
     rmse = RegressionEvaluator(
         metricName="rmse", labelCol="rating", predictionCol="prediction"
     ).evaluate(model.transform(test))
@@ -433,14 +398,15 @@ _GRID_VALUES_SQL = ", ".join(
     f"({rank}, {reg})" for rank in SWEEP_RANKS for reg in SWEEP_REGS
 )
 
-_SWEEP_CACHE: dict[str, list[tuple[int, float, float, bool]]] = {}
 
-
-def _sweep_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, float, bool]]:
+def _sweep_rows(spark: SparkSession) -> list[tuple[int, float, float, bool]]:
     """(rank, reg_param, avg_rmse, is_best) per grid cell from MLlib
-    CrossValidator, cached per sf_dir (seeded end-to-end)."""
-    if sf_dir in _SWEEP_CACHE:
-        return _SWEEP_CACHE[sf_dir]
+    CrossValidator over the ratings fixture, cached per session (seeded
+    end-to-end; the fixture does not depend on sf_dir)."""
+    return session_cache(spark, ("als_sweep",), lambda: _sweep(spark))
+
+
+def _sweep(spark: SparkSession) -> list[tuple[int, float, float, bool]]:
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
     from cqu_bigdata_recommender_system_for_movies_spark.ml.fixtures import (
@@ -474,7 +440,7 @@ def _sweep_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, floa
     )
     model = cv.fit(movielens_shaped_ratings(spark))
     best = min(range(len(grid)), key=lambda i: model.avgMetrics[i])
-    _SWEEP_CACHE[sf_dir] = [
+    return [
         (
             pm[als.rank],
             pm[als.regParam],
@@ -483,14 +449,13 @@ def _sweep_rows(spark: SparkSession, sf_dir: str) -> list[tuple[int, float, floa
         )
         for i, pm in enumerate(grid)
     ]
-    return _SWEEP_CACHE[sf_dir]
 
 
 def als_hyperparam_search_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-sweep detail rows (rank, reg_param, avg_rmse, is_best) — the
     RMSE values and winner are pytest-gated
     (test_recommender.py::test_als_hyperparam_search_selects_best)."""
-    rows = _sweep_rows(spark, sf_dir)
+    rows = _sweep_rows(spark)
     return spark.createDataFrame(
         rows, "rank int, reg_param double, avg_rmse double, is_best boolean"
     )
@@ -526,7 +491,7 @@ def als_hyperparam_search_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows live in als_hyperparam_search_detail (pytest).",
 )
 def als_hyperparam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rows = _sweep_rows(spark, sf_dir)
+    rows = _sweep_rows(spark)
     n_best = sum(1 for _, _, _, best in rows if best)
     min_rmse = min(rmse for _, _, rmse, _ in rows)
     best_is_min = n_best == 1 and all(
@@ -640,7 +605,7 @@ def als_implicit_topk_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
         coldStartStrategy="drop",
         seed=SEED,
     )
-    model = cached_model(spark, (sf_dir, "implicit"), lambda: als.fit(r))
+    model = session_cache(spark, ("als_implicit", sf_dir), lambda: als.fit(r))
     users = r.select("user_id").distinct().orderBy("user_id").limit(5)
     recs = model.recommendForUserSubset(users, 5)
     return recs.select(

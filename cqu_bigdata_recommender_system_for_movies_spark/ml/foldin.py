@@ -49,8 +49,9 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cqu_bigdata_recommender_system_for_movies_spark.ml.als import cached_model, fit_als
+from cqu_bigdata_recommender_system_for_movies_spark.ml.als import fit_als
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
+from cqu_bigdata_recommender_system_for_movies_spark.session import session_cache
 from cqu_bigdata_recommender_system_for_movies_spark.tables import RATINGS_SQL, ratings
 
 # key % 20 == 0 -> a "new" key (5%): users 8/75/749, items 10/100/1000
@@ -64,9 +65,9 @@ def _train_model(spark: SparkSession, sf_dir: str):
     """ALS fitted on the NON-holdout users only (so fold-in users are
     genuinely unseen by the factorization), cached per sf_dir."""
     r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-    return cached_model(
+    return session_cache(
         spark,
-        (sf_dir, "foldin_train"),
+        ("foldin_train", sf_dir),
         lambda: fit_als(r.filter(F.col("user_id") % HOLDOUT_MOD != 0)),
     )
 
@@ -209,9 +210,9 @@ def _train_model_item_holdout(spark: SparkSession, sf_dir: str):
     """ALS fitted with the holdout ITEMS' ratings removed (so fold-in
     items are genuinely unseen), cached per sf_dir."""
     r = ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-    return cached_model(
+    return session_cache(
         spark,
-        (sf_dir, "foldin_train_items"),
+        ("foldin_train_items", sf_dir),
         lambda: fit_als(r.filter(F.col("item_id") % HOLDOUT_MOD != 0)),
     )
 

@@ -26,8 +26,19 @@ to local[N] testing):
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+
+# Every cross-query cache of the engine: checkpointed base tables, fitted
+# models, driver-side metric rows. An entry lives exactly as long as the
+# SparkContext that built it: its key starts with that context's
+# applicationId, and every lookup drops the entries of every other
+# application (their checkpoint blocks died with their context, and
+# keeping them would pin py4j refs for the life of the process).
+_SESSION_CACHE: dict[tuple, Any] = {}
 
 
 def get_spark(app_name: str = "cqu-bigdata-spark-engine") -> SparkSession:
@@ -52,6 +63,20 @@ def get_spark(app_name: str = "cqu-bigdata-spark-engine") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_cache(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """The value cached under (applicationId, *key), built by ``build()``
+    on a miss. Every lookup first drops other applications' entries.
+    ``key`` names what is cached first, then what it depends on, e.g.
+    ``("als_split", sf_dir)``."""
+    app_id = spark.sparkContext.applicationId
+    for k in [k for k in _SESSION_CACHE if k[0] != app_id]:
+        del _SESSION_CACHE[k]
+    full = (app_id, *key)
+    if full not in _SESSION_CACHE:
+        _SESSION_CACHE[full] = build()
+    return _SESSION_CACHE[full]
 
 
 def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:

@@ -44,11 +44,14 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED_SESSIONS: set[int] = set()
+# applicationIds of the contexts the package was shipped to. Not an
+# id(): CPython reuses a freed object's id, so a restarted context could
+# pass for a shipped one and its workers could not import the engine.
+_SHIPPED_SESSIONS: set[str] = set()
 
 
 def ensure_shipped(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
+    key = spark.sparkContext.applicationId
     if key in _SHIPPED_SESSIONS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))

@@ -124,12 +124,17 @@ def derive_fold_parts(spark: SparkSession, est_rows: int | None) -> int | None:
     return 0 if parts < 2 else min(width, parts)
 
 
-# Ceiling on the DERIVED quantizer width. Serving cost falls with width
-# (600 -> 272 ms/query going 64 -> 256 cells on the 2M-vector replica)
-# while the flat fold's ingest cost rises linearly with it (the uncapped
-# sqrt width at 2M would be 2048 cells, ~147 rows/s). 256 keeps the
-# measured serving optimum with feasible ingest; past it the wide
-# lifecycle uses the two-level quantizer (ivf_two_level_assign below).
+# Ceiling on the DERIVED flat quantizer width. Flat assignment costs
+# one dot per cell per row, so its ingest falls linearly with width:
+# `assign_batch` over the numpy `Flat.topk` kernel measured 25-31k
+# rows/s at 256 cells and 3.3k rows/s at 2048, where `TwoLevel` at 2048
+# cells measured 51-55k rows/s (200k-vector replica, local[4] on a
+# 4-core x86 host, 8 partitions, noop sink, 3 reps each). Past the cap
+# the wide lifecycle therefore uses the two-level quantizer
+# (derive_ann_cells_wide, ivf_two_level_assign below). The value 256
+# itself came from serving cost on the 2M-vector replica (600 -> 272
+# ms/query going 64 -> 256 cells), measured before the one-stage
+# serving kernel and not re-measured since.
 ANN_DERIVED_CELLS_CAP = 256
 # Serving-convention constants, shared by the streaming serving path
 # (streaming/ann_search.py imports them from here — this module cannot
@@ -177,10 +182,10 @@ ANN_CELLS_SQL = (
 def derive_ann_cells_wide(sf_dir: str) -> int:
     """Quantizer width for the WIDE (two-level) lifecycle: the same
     sqrt-corpus derivation, uncapped. The cap on derive_ann_cells exists
-    because flat ingest is linear in width; two-level ingest is not
-    (8.9k -> 5.8k rows/s going 256 -> 2048 cells on the 2M-vector
-    replica, where the flat fold falls 1.5k -> 147). At the suite sfs the
-    corpus sits under the cap, so wide == capped width there."""
+    because flat ingest is linear in width; two-level ingest is not (at
+    2048 cells 51-55k rows/s against flat's 3.3k, see the cap). At the
+    suite sfs the corpus sits under the cap, so wide == capped width
+    there."""
     return derive_rec_cells(table_row_count(sf_dir, "embeddings"))
 
 
@@ -1184,10 +1189,11 @@ ANN_GROUP_SQL = _group_sql(ANN_CELLS_SQL)
     SELECT vec_id, CAST(cid AS INTEGER) AS cell FROM l2
     """,
     doc="Two-level (hierarchical) coarse quantization (beyond-reference "
-    "— the INGEST scale path past the flat fold's width cap: the flat "
-    "per-row fold is linear in quantizer width, measured 1.5k rows/s "
-    "at 256 cells and 147 rows/s at 2048 on the 2M replica, while "
-    "production widths grow as sqrt(corpus)). Level 1 scores the "
+    "— the INGEST scale path past the flat width cap: flat assignment "
+    "is linear in quantizer width, measured 25-31k rows/s at 256 cells "
+    "and 3.3k rows/s at 2048 on a 200k-vector replica (two-level at "
+    "2048: 51-55k), while production widths grow as sqrt(corpus)). "
+    "Level 1 scores the "
     "~sqrt(n_cells) representatives; every cell is grouped under its "
     "own nearest rep (geometry-aware, driver-side over the bounded "
     f"seed set); level 2 scores only the top-{ANN_GROUP_PROBE} probed "

@@ -260,9 +260,9 @@ ANN_REQUANT2_TABLE = "spark_graft_ann_index_q2"
     "stored vector two-level under the refreshed seeds. This is the "
     "path that removes the flat requantize's width ceiling: ingest and "
     "migration cost O((1+probe)*sqrt(width)) dots per row instead of "
-    "the flat fold's width (measured 8.9k vs 147 rows/s at 2048 cells "
-    "on the 2M replica). The oracle replays the fresh two-level "
-    "rebuild under the refreshed quantizer, so "
+    "the flat quantizer's width (measured 51-55k vs 3.3k rows/s at "
+    "2048 cells on a 200k-vector replica). The oracle replays the "
+    "fresh two-level rebuild under the refreshed quantizer, so "
     "post-migration-equals-rebuild stays hash-checked in the wide "
     "regime.",
 )

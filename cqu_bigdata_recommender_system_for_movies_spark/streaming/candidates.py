@@ -42,33 +42,19 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
 # Quantizer width floor: below this the cell join degenerates toward the
 # full cross join and the index isn't paying for itself.
 REC_CELLS_MIN = 8
-# Multiprobe width — the pruning family's cost/recall dial (VERDICT r13
-# #7: no silent knobs). The measured curve at the derived sqrt-catalog
-# quantizer width (tools/probe_candidates_recall.py, 10k-item catalog,
-# distinct interest vectors): nprobe 1/2/4 keeps 42/65/84% of the
-# exhaustive top-10 at ~58/37/23x less scoring work. 2 is the shipped
-# cost/recall point: the first probe past the assigned cell buys the
-# largest marginal recall (+23 points for ~1.6x the scoring of nprobe 1,
-# still ~37x under exhaustive), and the 0.30 recall@10 floor pinned in
-# tests/test_streaming_extras.py (test_candidate_pruning_recall_floor) fails loudly if a degenerated quantizer ever
-# drops below the band. Deployments trade along the measured curve via
-# SPARK_GRAFT_REC_NPROBE rather than editing a constant — read once at
-# import so the registered query AND its oracle SQL (an f-string over
-# this module constant) bake the SAME width; a per-call read could
-# desync the twins mid-session.
-def _env_nprobe(raw: str | None) -> int:
-    """ADVICE r14: a malformed env value must degrade to the shipped
-    default, not raise at import time and take down the whole query
-    registry. Non-integer -> 2; anything below 1 -> 1 (a width above
-    the derived cell count is harmless — the probe list is just the
-    full cell ranking, i.e. exhaustive scoring)."""
-    try:
-        return max(1, int(raw if raw is not None else 2))
-    except ValueError:
-        return 2
-
-
-REC_NPROBE = _env_nprobe(os.environ.get("SPARK_GRAFT_REC_NPROBE"))
+# Multiprobe width — the pruning family's cost/recall dial. The measured
+# curve at the derived sqrt-catalog quantizer width
+# (tools/probe_candidates_recall.py, 10k-item catalog, distinct interest
+# vectors): nprobe 1/2/4 keeps 42/65/84% of the exhaustive top-10 at
+# ~58/37/23x less scoring work. 2 is the shipped cost/recall point: the
+# first probe past the assigned cell buys the largest marginal recall
+# (+23 points for ~1.6x the scoring of nprobe 1, still ~37x under
+# exhaustive), and the 0.30 recall@10 floor pinned in
+# tests/test_streaming_extras.py (test_candidate_pruning_recall_floor)
+# fails loudly if a degenerated quantizer ever drops below the band. The
+# registered query AND its oracle SQL (an f-string over this constant)
+# bake the SAME width.
+REC_NPROBE = 2
 
 
 def _rec_cells_sql(count_expr: str) -> str:
@@ -107,7 +93,6 @@ def derive_rec_cells(catalog_size: int) -> int:
 # repartition was measured NOT to survive into the LogicalRDD's
 # outputPartitioning — the dim re-exchanged every batch — which is why
 # the bucketed table, not a checkpoint, is the big-catalog shape.)
-# SPARK_GRAFT_REC_BROADCAST_MAX overrides for probes.
 REC_BROADCAST_MAX_ITEMS = 65536
 # Bucket width for the persisted index: bounded by the cell count (one
 # key per cell) and capped — at 1M items the derived 1024 cells land on
@@ -115,14 +100,6 @@ REC_BROADCAST_MAX_ITEMS = 65536
 # executor count the way io_sinks.N_BUCKETS documents.
 REC_INDEX_MAX_BUCKETS = 256
 CANDIDATE_INDEX_TABLE = "spark_graft_candidate_index"
-
-
-def _rec_broadcast_max_items() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_REC_BROADCAST_MAX", REC_BROADCAST_MAX_ITEMS)
-    )
 
 
 def build_candidate_index(
@@ -137,7 +114,6 @@ def build_candidate_index(
     artifact — the index IS the deliverable, rebuilt per catalog refresh
     and reused across every micro-batch, overwritten in place on
     rebuild)."""
-    import os
     import tempfile
 
     spark = profiles.sparkSession
@@ -151,7 +127,7 @@ def build_candidate_index(
     index = item_cell_assignments(profiles, cents).withColumn(
         "pnorm", F.sqrt(dot("profile", "profile"))
     )
-    if n_items <= _rec_broadcast_max_items():
+    if n_items <= REC_BROADCAST_MAX_ITEMS:
         held = index.localCheckpoint(eager=True)
         item_dim = F.broadcast(held)
         item_dim._sg_items = index_arrays(  # noqa: SLF001 — engine-internal tag

@@ -74,8 +74,8 @@ _counter = itertools.count()
 #     never below the floor — per-partition state compute now dominates,
 #     so match task count to the lesser of the shard width (the state
 #     keyspace's parallelism ceiling for the sharded families) and the
-#     cores actually available. SPARK_GRAFT_STATE_PARTITIONS overrides
-#     both branches for probes and deployments.
+#     cores actually available. Probes pin a width by passing n=
+#     explicitly.
 STREAM_STATE_PARTITIONS = 8
 # Per-batch input-row count where shard compute starts to dominate the
 # fixed store cost: the r12 probes saw the crossover well below the 3.3M
@@ -94,9 +94,6 @@ def derive_state_partitions(
     shards: int = STATE_SHARDS_WIDTH,
 ) -> int:
     """Scale-aware state-partition count (module comment above)."""
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     if source_rows is not None and source_rows < STATE_SCALE_ROWS:
         return STREAM_STATE_PARTITIONS
     cores = spark.sparkContext.defaultParallelism

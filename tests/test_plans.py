@@ -1384,7 +1384,7 @@ def _assert_one_narrow_stage(plan: str) -> None:
     assert plan.count("ArrowEvalPython") == 1, plan[:2000]
 
 
-def test_candidate_loop_plan_shape(spark):
+def test_candidate_loop_plan_shape(spark, monkeypatch):
     """The candidate-pruned recommender's per-batch scoring plan
     (streaming/candidates.py): (a) the quantizer centroids ride the
     single-row broadcast relation, so plan size is independent of the
@@ -1439,10 +1439,9 @@ def test_candidate_loop_plan_shape(spark):
     # key is the whole point — the catalog never reshuffles per batch),
     # while the probe side (the batch's users) exchanges onto the bucket
     # layout. Never a cartesian product.
-    import os
     import re
 
-    os.environ["SPARK_GRAFT_REC_BROADCAST_MAX"] = "100"
+    monkeypatch.setattr(cand, "REC_BROADCAST_MAX_ITEMS", 100)
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         prev_aqe_thresh = spark.conf.get(
@@ -1457,7 +1456,6 @@ def test_candidate_loop_plan_shape(spark):
         scored2 = cand.score_candidates_batch(users, cents2, item_dim2)
         physical2 = scored2._jdf.queryExecution().executedPlan().toString()
     finally:
-        del os.environ["SPARK_GRAFT_REC_BROADCAST_MAX"]
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         if prev_aqe_thresh is not None:
             spark.conf.set(

@@ -37,30 +37,33 @@ def test_als_rmse_invariant_row(spark, sf_dir):
 
 
 def test_split_model_ignores_and_drops_dead_app_entries(spark, sf_dir):
-    """The split and its model are keyed by (applicationId, sf_dir): an
-    entry left by a stopped SparkContext is never served and is dropped
-    from both caches on the next lookup."""
+    """The split and its model live in the session cache under
+    (applicationId, name, sf_dir): an entry left by a stopped SparkContext
+    is never served, and every entry of another application is dropped
+    on the next lookup."""
     from cqu_bigdata_recommender_system_for_movies_spark.ml import als
+    from cqu_bigdata_recommender_system_for_movies_spark.session import _SESSION_CACHE
 
-    dead = ("local-dead-app", sf_dir)
-    dead_full = ("local-dead-app", sf_dir, "full")
     stale_model, stale_split = object(), (object(), object())
-    als._MODEL_CACHE[dead] = stale_model
-    als._MODEL_CACHE[dead_full] = stale_model
-    als._SPLIT_CACHE[dead] = stale_split
+    dead = {
+        ("local-dead-app", "als_split", sf_dir): stale_split,
+        ("local-dead-app", "als_split_model", sf_dir): stale_model,
+        # an entry no split lookup would ever read is dropped too
+        ("local-dead-app", "dedup_pair_edges", sf_dir): object(),
+    }
+    _SESSION_CACHE.update(dead)
     try:
         model, train, test = als._split_model(spark, sf_dir)
         assert model is not stale_model
         assert (train, test) != stale_split
-        assert dead not in als._MODEL_CACHE and dead not in als._SPLIT_CACHE
-        # a model entry with no split of its own is dropped too
-        assert dead_full not in als._MODEL_CACHE
-        live = (spark.sparkContext.applicationId, sf_dir)
-        assert als._MODEL_CACHE[live] is model
+        assert not set(dead) & set(_SESSION_CACHE)
+        app_id = spark.sparkContext.applicationId
+        assert _SESSION_CACHE[(app_id, "als_split_model", sf_dir)] is model
+        split = _SESSION_CACHE[(app_id, "als_split", sf_dir)]
+        assert split[0] is train and split[1] is test
     finally:
-        als._MODEL_CACHE.pop(dead, None)
-        als._MODEL_CACHE.pop(dead_full, None)
-        als._SPLIT_CACHE.pop(dead, None)
+        for key in dead:
+            _SESSION_CACHE.pop(key, None)
 
 
 def test_als_recommend_topk_shape(spark, sf_dir):
@@ -406,15 +409,13 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from cqu_bigdata_recommender_system_for_movies_spark.ml.als import (
-        cached_model,
-        fit_als,
-    )
+    from cqu_bigdata_recommender_system_for_movies_spark.ml.als import fit_als
     from cqu_bigdata_recommender_system_for_movies_spark.ml.foldin import (
         HOLDOUT_MOD,
         _train_model,
         fold_in_user_factors,
     )
+    from cqu_bigdata_recommender_system_for_movies_spark.session import session_cache
 
     model = _train_model(spark, sf_dir)
     factors = model.itemFactors.select(
@@ -444,9 +445,9 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
 
     # full retrain: the expensive path the fold-in replaces — ALL ratings,
     # same hyperparameters, evaluated on the SAME scorable holdout rows
-    full = cached_model(
+    full = session_cache(
         spark,
-        (sf_dir, "foldin_full_retrain"),
+        ("foldin_full_retrain", sf_dir),
         lambda: fit_als(ratings(spark, sf_dir).select("user_id", "item_id", "rating")),
     )
     retrain_rmse = (

@@ -130,3 +130,18 @@ def test_worker_skips_unchanged_pyspark_zip(spark):
     on_path, n_reads = spark.range(1).select(worker_reads("id").alias("r")).first().r
     assert on_path == 1, "pyspark.zip is not imported from in the worker"
     assert n_reads == 0
+
+
+def test_context_with_a_reused_id_is_still_shipped(spark, monkeypatch):
+    """CPython reuses a freed object's id(), so a restarted context can
+    carry the id of a context the package was shipped to. The record is
+    keyed by applicationId: the package still ships once to this one."""
+    from cqu_bigdata_recommender_system_for_movies_spark import shipping
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(shipping, "_SHIPPED_SESSIONS", {id(sc)})
+    added: list[str] = []
+    monkeypatch.setattr(sc, "addPyFile", added.append)
+    shipping.ensure_shipped(spark)
+    shipping.ensure_shipped(spark)
+    assert len(added) == 1

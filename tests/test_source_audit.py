@@ -14,6 +14,10 @@ here so they cannot silently erode:
    Arrow-batched (pandas_udf / applyInPandas / mapInPandas / mapInArrow
    / Python UDTFs / applyInPandasWithState). `F.udf(...)` or `@udf` in
    the package would put a per-row Python round-trip in the hot path.
+
+3. One session cache: every cross-query cache is `session._SESSION_CACHE`
+   (one key rule, one eviction), and only `session.py` and `shipping.py`
+   read a context's `applicationId`.
 """
 
 from __future__ import annotations
@@ -166,4 +170,38 @@ def test_no_forced_broadcast_of_growing_tables():
     assert not offenders, (
         "forced broadcast of a table that grows with scale factor — drop "
         f"the hint and let AQE pick the strategy: {offenders}"
+    )
+
+
+def _module_cache_names():
+    for py in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(py.read_text()).body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                    yield str(py.relative_to(PKG)), t.id
+
+
+def test_session_cache_is_the_only_module_cache():
+    assert sorted(_module_cache_names()) == [("session.py", "_SESSION_CACHE")], (
+        "a module-level cache outside session.py keys and evicts its own "
+        "way — route it through session_cache"
+    )
+
+
+def test_application_id_read_only_by_session_and_shipping():
+    readers = sorted(
+        f"{py.relative_to(PKG)}:{node.lineno}"
+        for py in PKG.rglob("*.py")
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId"
+        and str(py.relative_to(PKG)) not in ("session.py", "shipping.py")
+    )
+    assert not readers, (
+        f"applicationId read outside session.py/shipping.py: {readers} — "
+        "key per-session state through session_cache"
     )

@@ -287,8 +287,8 @@ def _run_recommend_candidates(
     instead of users x catalog. Run beside recommend_emit at the same
     --catalog-mult to measure the pruning win directly."""
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
+        REC_BROADCAST_MAX_ITEMS,
         REC_NPROBE,
-        _rec_broadcast_max_items,
         build_candidate_index,
         score_candidates_batch,
     )
@@ -305,10 +305,10 @@ def _run_recommend_candidates(
     )
     # the probe's --cells flag pins the width; the registered query
     # derives it from the catalog COUNT (derive_rec_cells). The shared
-    # build also picks the join strategy: broadcast under
-    # SPARK_GRAFT_REC_BROADCAST_MAX (default 65536 items), cell-keyed
-    # bucketed dim beyond — lower the env to force the shuffle path at
-    # probe catalogs (VERDICT r12 #4).
+    # build also picks the join strategy: broadcast up to
+    # REC_BROADCAST_MAX_ITEMS (65536 items), cell-keyed bucketed dim
+    # beyond — patch that constant to force the shuffle path at probe
+    # catalogs.
     cents, item_dim, n_items = build_candidate_index(profiles, n_cells)
     sizes = sorted(
         (r.n for r in item_dim.groupBy("cell").count().withColumnRenamed("count", "n").collect()),
@@ -324,7 +324,7 @@ def _run_recommend_candidates(
                 "worst_candidates_per_user": sum(sizes[:REC_NPROBE]),
                 "join_strategy": (
                     "broadcast"
-                    if n_items <= _rec_broadcast_max_items()
+                    if n_items <= REC_BROADCAST_MAX_ITEMS
                     else "cell-partitioned"
                 ),
             }
