@@ -1,9 +1,9 @@
-"""Coarse-quantizer cell selection and the one-stage serving kernels.
+"""Coarse-quantizer cell selection and the one-stage serving kernel.
 
 A quantizer is driver-resident data: a `Flat` (seed cells) or a
 `TwoLevel` (representatives over grouped cells) value of numpy arrays
 with one ``topk(E, k)`` selection. Every assignment and probe hands the
-value to `cells_udf` / `cell_udf` or to a serving kernel, so it travels
+value to `cells_udf` / `cell_udf` or to `cell_scores_udf`, so it travels
 in the UDF closure and the plan stays independent of the quantizer width.
 
 Selection is bit-identical to the oracles' SQL replay:
@@ -19,7 +19,7 @@ Selection is bit-identical to the oracles' SQL replay:
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterator, NamedTuple, Tuple
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -225,29 +225,39 @@ def cell_udf(quant) -> Callable[..., Column]:
     return F.pandas_udf(_top1, "int")
 
 
-def index_arrays(table, id_col: str, vec_col: str):
-    """A collected index (`pyarrow.Table` with ``id_col``, ``cell`` and
-    the vector column ``vec_col``) as cell-sorted numpy arrays
-    ``(ids, cells, V, norms)``; ``norms`` is the JVM's
-    ``sqrt(dot(v, v))`` replayed by `_row_norms`. A row without a cell
-    joins no probe, so it is left out."""
+class IndexArrays(NamedTuple):
+    """A collected index, cell-sorted: ``ids``, ``cells``, vectors ``V``
+    and their ``norms`` (the JVM's ``sqrt(dot(v, v))`` replayed by
+    `_row_norms`), with ``id_type``, the Spark type of the id column."""
+
+    ids: np.ndarray
+    cells: np.ndarray
+    V: np.ndarray
+    norms: np.ndarray
+    id_type: str
+
+
+def index_arrays(table, id_type: str) -> IndexArrays:
+    """A collected index (`pyarrow.Table` with ``id``, ``cell`` and the
+    vector column ``vec``) as `IndexArrays`. A row without a cell joins
+    no probe, so it is left out."""
     import pyarrow.compute as pc
 
     table = table.filter(pc.is_valid(table.column("cell")))
-    ids = table.column(id_col).to_numpy().astype(np.int64)
+    ids = table.column("id").to_numpy().astype(np.int64)
     cells = table.column("cell").to_numpy().astype(np.int64)
-    vecs = table.column(vec_col).combine_chunks()
+    vecs = table.column("vec").combine_chunks()
     flat = vecs.flatten().to_numpy().astype(np.float64)
     V = flat.reshape(len(vecs), -1) if len(vecs) else flat.reshape(0, 0)
     order = np.argsort(cells, kind="stable")
     V = V[order]
-    return ids[order], cells[order], V, _row_norms(V)
+    return IndexArrays(ids[order], cells[order], V, _row_norms(V), id_type)
 
 
 def _probe_pairs(E, quant, nprobe, cells):
     """(rows, pos): one pair per (row of E, index row whose cell is among
     that row's ``nprobe`` nearest), rows ascending. ``cells`` is the
-    cell-sorted column of `index_arrays`; a -1 slot matches no row."""
+    cell-sorted column of `IndexArrays`; a -1 slot matches no row."""
     top = quant.topk(E, nprobe)
     lo = np.searchsorted(cells, top, "left").ravel()
     lens = np.searchsorted(cells, top, "right").ravel() - lo
@@ -266,15 +276,14 @@ def _pair_cosines(E, rows, V, norms, pos):
     return dots / (_row_norms(E)[rows] * norms[pos] + EPS)
 
 
-def candidate_scores_udf(quant, index, nprobe: int, id_type: str):
-    """Pandas UDF mapping an interest-vector column to the row's candidate
-    set, ``array<struct<item_ref, cos>>``: the items of its ``nprobe``
+def cell_scores_udf(quant, index: IndexArrays, nprobe: int):
+    """Pandas UDF mapping a vector column to the row's candidate set,
+    ``array<struct<id, cos>>``: the rows of ``index`` in its ``nprobe``
     nearest cells with their cosines, unranked, so Spark's own ``round``
-    decides score ties. ``index``: `index_arrays` of the candidate
-    index. A null vector maps to NULL."""
+    and comparator decide ties. A null vector maps to NULL."""
     _ship()
     pp = int(nprobe)
-    ids, cells, V, norms = index
+    ids, cells, V, norms, id_type = index
 
     def _scores(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in it:
@@ -286,56 +295,9 @@ def candidate_scores_udf(quant, index, nprobe: int, id_type: str):
             vals = np.empty(len(s), dtype=object)
             for i, a, b in zip(np.flatnonzero(valid), bounds[:-1], bounds[1:]):
                 vals[i] = [
-                    {"item_ref": r, "cos": c}
+                    {"id": r, "cos": c}
                     for r, c in zip(refs[a:b].tolist(), cos[a:b].tolist())
                 ]
             yield pd.Series(vals)
 
-    return F.pandas_udf(
-        _scores, f"array<struct<item_ref:{id_type},cos:double>>"
-    )
-
-
-def ann_topk_np(E, qids, quant, index, nprobe, k):
-    """Per row of E, the ids of its top-``k`` index rows among the
-    ``nprobe`` nearest cells, its own id (``qids``) excluded: cosine
-    DESC by Spark's double comparator (`_spark_double_keys`), ties to
-    the smaller id. Returns a list of int64 arrays, one per row."""
-    ids, cells, V, norms = index
-    rows, pos = _probe_pairs(E, quant, nprobe, cells)
-    keep = ids[pos] != qids[rows]
-    rows, pos = rows[keep], pos[keep]
-    key = _spark_double_keys(_pair_cosines(E, rows, V, norms, pos))
-    # ~key reverses the order without the overflow of -key
-    order = np.lexsort((ids[pos], ~key, rows))
-    rows, pos = rows[order], pos[order]
-    starts = np.searchsorted(rows, np.arange(len(E) + 1))
-    top = np.arange(len(rows)) - starts[rows] < k
-    return np.split(ids[pos[top]], np.searchsorted(rows[top], np.arange(1, len(E))))
-
-
-def ann_topk_udf(quant, index, nprobe: int, k: int, id_type: str):
-    """Pandas UDF over (query id, query vector) columns returning the
-    ``array<id>`` of `ann_topk_np`: the probe, cell fetch, cosine and
-    per-query top-k of the cell-key join + window, in one call. A null
-    id or vector maps to NULL."""
-    _ship()
-    pp, kk = int(nprobe), int(k)
-
-    def _topk(it: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for qid, s in it:
-            valid = (qid.notna() & s.notna()).to_numpy()
-            top = ann_topk_np(
-                _stack(s[valid], quant.dim),
-                qid[valid].to_numpy().astype(np.int64),
-                quant,
-                index,
-                pp,
-                kk,
-            )
-            vals = np.empty(len(s), dtype=object)
-            for i, ids in zip(np.flatnonzero(valid), top):
-                vals[i] = ids.tolist()
-            yield pd.Series(vals)
-
-    return F.pandas_udf(_topk, f"array<{id_type}>")
+    return F.pandas_udf(_scores, f"array<struct<id:{id_type},cos:double>>")

@@ -4,25 +4,33 @@ similarity search).
 The reference stored embeddings as comma-joined strings in graph-node
 properties and computed cosine in per-row numpy lambdas
 (streaming_rec.py:74,97,111,153-167). Here embeddings are native
-``array<float>`` columns and all math is JVM-side column expressions
-(``zip_with`` + ``aggregate``) — no Python in the hot path, whole-stage
-codegen applies, and the per-row cost is independent of cluster size.
+``array<float>`` columns and the math is JVM-side column expressions
+(``zip_with`` + ``aggregate``) — whole-stage codegen applies, and the
+per-row cost is independent of cluster size.
 
 Determinism for the DuckDB oracle: both engines fold the array
 left-to-right in double precision; scores are rounded to 6 decimals on
 both sides and every LIMIT is tie-broken on vec_id.
 
+`cell_topk` is the one cell-pruned top-k: probe a quantizer value, fetch
+the probed cells' rows, score them by cosine and keep each query's top
+k. The IVF queries here, the candidate recommender
+(streaming/candidates.py) and the ANN search (streaming/ann_search.py)
+all rank through it. A broadcast-sized index is collected and scored in
+one Arrow UDF (functions/nearcell.py) with the same left-fold doubles;
+past that size a cell-key join and a row_number window rank it.
+
 On N_IVF_CELLS staying a fixed 16 while the streaming candidate
-quantizer derives its width from the catalog (derive_rec_cells,
-VERDICT r12 #2): the balanced width depends on the QUERY volume, not
-just the corpus. The streaming recommender assigns and scores EVERY
-user per batch, so assignment cost and cell-local scoring both scale
-with users and the sqrt-catalog width balances them; here the query
-side is a fixed small panel (50 ids) while assignment touches the
-whole corpus — widening to sqrt(corpus) (2048 cells at the 2M replica)
-would multiply the corpus-side assign fold ~128x to shrink a candidate
-set the panel cap already bounds. The recall/cost dial at fixed width
-is nprobe (ann_ivf_multiprobe_topk — curve measured in
+quantizer derives its width from the catalog (derive_rec_cells): the
+balanced width depends on the QUERY volume, not just the corpus. The
+streaming recommender assigns and scores EVERY user per batch, so
+assignment cost and cell-local scoring both scale with users and the
+sqrt-catalog width balances them; here the query side is a fixed small
+panel (50 ids) while assignment touches the whole corpus — widening to
+sqrt(corpus) (2048 cells at the 2M replica) would multiply the
+corpus-side assign fold ~128x to shrink a candidate set the panel cap
+already bounds. The recall/cost dial at fixed width is nprobe
+(ann_ivf_multiprobe_topk — curve measured in
 tools/probe_ivf_multiprobe.py); a production deploy re-sizes the
 quantizer with sampled k-means centroids offline, not per query.
 """
@@ -56,6 +64,143 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)) + F.lit(EPS))
+
+
+# ---------------------------------------------------------------------------
+# Cell-pruned top-k: the one ranking behind every IVF query and serving batch
+# ---------------------------------------------------------------------------
+
+
+def broadcast_sized(df: DataFrame) -> bool:
+    """True when the planner would broadcast `df` into a join: its
+    optimized-plan size estimate is at most autoBroadcastJoinThreshold
+    (-1 disables broadcasting, and so this)."""
+    jdf = df._jdf  # noqa: SLF001
+    size = int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    conf = df.sparkSession._jsparkSession.sessionState().conf()  # noqa: SLF001
+    return size <= conf.autoBroadcastJoinThreshold()
+
+
+def collect_index(df: DataFrame, id_col: str = "id", vec_col: str = "vec"):
+    """The index ``df`` (``id_col``, cell, ``vec_col``) collected to the
+    driver as `nearcell.IndexArrays`, the value `cell_topk` scores in one
+    kernel."""
+    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+        index_arrays,
+    )
+
+    table = df.select(
+        F.col(id_col).alias("id"), "cell", F.col(vec_col).alias("vec")
+    ).toArrow()
+    return index_arrays(table, df.schema[id_col].dataType.simpleString())
+
+
+def serving_index(df: DataFrame, id_col: str, vec_col: str):
+    """What `cell_topk` serves ``df`` (``id_col``, cell, ``vec_col``)
+    from: its collected arrays while ``df`` is `broadcast_sized`, else
+    the DataFrame (id, cell, vec). The size is read off ``df`` itself, so
+    a caller serving many batches from one DataFrame optimizes it once."""
+    if broadcast_sized(df):
+        return collect_index(df, id_col, vec_col)
+    return df.select(F.col(id_col).alias("id"), "cell", F.col(vec_col).alias("vec"))
+
+
+def cell_topk(
+    queries: DataFrame,
+    quant,
+    index,
+    nprobe: int,
+    k: int,
+    *,
+    rounded: bool,
+    exclude_self: bool,
+    qid: str = "qid",
+    vec: Column | str = "vec",
+    out: tuple = ("qid", "rank", "id", "score"),
+) -> DataFrame:
+    """For each query, the top ``k`` index rows by cosine among the
+    query's ``nprobe`` nearest cells of the quantizer value ``quant``
+    (score DESC, ties to the smaller id). ``rounded`` ranks by, and
+    returns, the cosine rounded to 6 dp; ``exclude_self`` drops the index
+    row whose id is the query's own.
+
+    ``qid`` names the queries' id column and ``vec`` their vector (a
+    column name or a Column). The result columns are (query id, rank,
+    index id, score) named by ``out``; a None name leaves that column
+    out. Callers name their own columns here instead of renaming around
+    the call: every DataFrame step is an eager analysis on each batch.
+
+    Precondition: qids are distinct. The kernel ranks each row on its
+    own; the join path's window would pool rows that share a qid.
+
+    ``index`` picks the regime. Collected (`collect_index`), the batch is
+    one narrow stage: `cell_scores_udf` probes, fetches and scores, and
+    Spark ranks the pairs with its own round, filter (self), array_sort
+    on (-score, id), slice and inline. A DataFrame (id, cell, vec) is
+    joined to the exploded probes on the cell key, both norms folded
+    below the join (the index's own ``norm`` column when it has one), and
+    ranked by a row_number window. The two give identical rows."""
+    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+        cell_scores_udf,
+        cells_udf,
+    )
+
+    q_out, rank, id_out, score = out
+    qvec = F.col(vec) if isinstance(vec, str) else vec
+    if not isinstance(index, DataFrame):
+        scored = queries.select(
+            F.col(qid).alias(q_out),
+            cell_scores_udf(quant, index, nprobe)(qvec).alias("pairs"),
+        )
+        # the tail is one SQL expression: built from Python lambdas it
+        # costs tens of py4j round trips on every batch. inline runs over
+        # an expression, not a bare attribute, so no inferred size()
+        # filter below it copies the UDF
+        neg = "-round(p.cos, 6)" if rounded else "-p.cos"
+        pairs = f"filter(pairs, p -> p.id != `{q_out}`)" if exclude_self else "pairs"
+        fields = ", ".join(
+            f"{expr} AS `{name}`"
+            for expr, name in (("i + 1", rank), ("p.id", id_out), ("-p.neg", score))
+            if name is not None
+        )
+        return scored.select(
+            q_out,
+            F.expr(
+                f"inline(transform(slice(array_sort(transform({pairs}, "
+                f"p -> struct({neg} AS neg, p.id AS id))), 1, {int(k)}), "
+                f"(p, i) -> struct({fields})))"
+            ),
+        )
+    # explode in the UDF's own select: exploding the bare attribute later
+    # infers a size() filter below the Project that copies the UDF
+    probes = queries.select(
+        F.col(qid).alias("qid"),
+        qvec.alias("qvec"),
+        F.explode(cells_udf(quant, nprobe)(qvec)).alias("cell"),
+    ).withColumn("qnorm", F.sqrt(dot("qvec", "qvec")))
+    inorm = F.col("norm") if "norm" in index.columns else F.sqrt(dot("vec", "vec"))
+    indexed = index.select("id", "cell", "vec", inorm.alias("inorm"))
+    # each index row has one cell and a query probes distinct cells, so
+    # the join emits each (query, row) pair at most once
+    pairs = probes.join(indexed, "cell")
+    if exclude_self:
+        pairs = pairs.filter(F.col("id") != F.col("qid"))
+    cos = dot("qvec", "vec") / (F.col("qnorm") * F.col("inorm") + F.lit(EPS))
+    if rounded:
+        cos = F.round(cos, 6)
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
+    ranked = (
+        pairs.select("qid", "id", cos.alias("score"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+    return ranked.select(
+        *(
+            F.col(c).alias(name)
+            for c, name in zip(("qid", "rank", "id", "score"), out)
+            if name is not None
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -483,14 +628,16 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_IVF_CELLS = 16  # deterministic coarse quantizer: first 16 vectors as seeds
 
 
-def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> DataFrame:
+def _ivf_assign_cells(
+    emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS, quant=None
+) -> DataFrame:
     """(vec_id, e, cells): each vector's top-k nearest coarse-quantizer
     cells (descending cosine, ties to the smaller cid — the same order
     as the oracles' ROW_NUMBER OVER (ORDER BY cos DESC, cid)).
 
-    The quantizer (the n_cells smallest vec_ids as seeds) is
-    driver-resident data that travels in the UDF closure, so the plan
-    stays independent of n_cells
+    The quantizer (``quant``, default the n_cells smallest vec_ids as
+    seeds) is driver-resident data that travels in the UDF closure, so
+    the plan stays independent of n_cells
     (tests/test_plans.py::test_ivf_assign_plan_size_independent_of_cells)
     and no corpus x n_cells exchange exists. The one exchange is a
     pinned 1x-corpus round-robin repartition ahead of the CPU-dense
@@ -502,10 +649,43 @@ def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> Dat
     )
 
     spark = emb.sparkSession
-    cells = cells_udf(seed_quantizer(emb, "vec_id", "e", n_cells), k)(F.col("e"))
+    if quant is None:
+        quant = seed_quantizer(emb, "vec_id", "e", n_cells)
     return (
         emb.repartition(shuffle_partitions(spark))
-        .select("vec_id", "e", cells.alias("cells"))
+        .select("vec_id", "e", cells_udf(quant, k)(F.col("e")).alias("cells"))
+    )
+
+
+N_IVF_QUERIES = 50  # the query panel: ids below this
+IVF_TOPK = 3
+
+
+def _ivf_topk(emb: DataFrame, nprobe: int) -> DataFrame:
+    """(vec_id, neighbor_id, cosine): for each of the first N_IVF_QUERIES
+    ids, the top IVF_TOPK other vectors by 6-dp rounded cosine among its
+    ``nprobe`` nearest cells, every vector indexed in its nearest one.
+    The index is served collected while it is broadcast-sized (one
+    narrow stage), past that by the cell-key join (`cell_topk`)."""
+    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+        seed_quantizer,
+    )
+
+    quant = seed_quantizer(emb, "vec_id", "e", N_IVF_CELLS)
+    index = _ivf_assign_cells(emb, 1, quant=quant).select(
+        "vec_id", F.element_at("cells", 1).alias("cell"), "e"
+    )
+    return cell_topk(
+        emb.filter(F.col("vec_id") < N_IVF_QUERIES),
+        quant,
+        serving_index(index, "vec_id", "e"),
+        nprobe,
+        IVF_TOPK,
+        rounded=True,
+        exclude_self=True,
+        qid="vec_id",
+        vec="e",
+        out=("vec_id", None, "neighbor_id", "cosine"),
     )
 
 
@@ -533,7 +713,7 @@ def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> Dat
                       sqrt(list_dot_product(x.e, x.e)) + 1e-8), 6) AS cosine
         FROM assigned a
         JOIN assigned x ON a.cid = x.cid AND a.vec_id <> x.vec_id
-        WHERE a.vec_id < 50
+        WHERE a.vec_id < {N_IVF_QUERIES}
     ),
     ranked AS (
         SELECT vec_id, neighbor_id, cosine,
@@ -542,7 +722,7 @@ def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> Dat
                ) AS rnk
         FROM pairs
     )
-    SELECT vec_id, neighbor_id, cosine FROM ranked WHERE rnk <= 3
+    SELECT vec_id, neighbor_id, cosine FROM ranked WHERE rnk <= {IVF_TOPK}
     """,
     doc="Approximate nearest neighbors, IVF-style (north-star scale path "
     "beside sign-LSH): a deterministic coarse quantizer (the first "
@@ -551,50 +731,16 @@ def _ivf_assign_cells(emb: DataFrame, k: int, n_cells: int = N_IVF_CELLS) -> Dat
     "travels in the assignment UDF's closure (production: sampled "
     "k-means centroids, equally driver-resident). No corpus x n_cells "
     "exchange; the one exchange is a pinned 1x-corpus repartition for "
-    "parallelism. Candidates are cell-local only (single-probe). Top-3 "
-    "cell-local neighbors for the first 50 ids.",
+    "parallelism. Candidates are cell-local only (single-probe). Top-"
+    f"{IVF_TOPK} cell-local neighbors for the first {N_IVF_QUERIES} ids, "
+    "ranked by the shared cell_topk: one Arrow UDF over the collected "
+    "index while it is broadcast-sized, a cell-key join past it.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
-    # checkpoint: both sides of the cell-local probe join read the
-    # assignment — without it the corpus-sized map-side fold runs twice
-    # (measured 134 s vs 34 s at the 1000x replica)
-    assigned = (
-        _ivf_assign_cells(emb, 1)
-        .select("vec_id", "e", F.element_at("cells", 1).alias("cid"))
-        .localCheckpoint(eager=False)
-    )
-    # norms are pair-invariant — fold each side's once
-    # below the join (projects don't collapse across joins) instead of
-    # re-folding the 64-wide arrays in every pair's cosine; identical
-    # doubles, bit-identical scores, one fold per pair instead of three.
-    left = assigned.filter(F.col("vec_id") < 50).select(
-        "vec_id",
-        F.col("e").alias("e_a"),
-        "cid",
-        F.sqrt(dot("e", "e")).alias("na"),
-    )
-    right = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("e_x"),
-        F.col("cid").alias("cid_x"),
-        F.sqrt(dot("e", "e")).alias("nx"),
-    )
-    pair_cos = dot("e_a", "e_x") / (F.col("na") * F.col("nx") + F.lit(EPS))
-    pairs = left.join(
-        right,
-        (F.col("cid") == F.col("cid_x")) & (F.col("vec_id") != F.col("neighbor_id")),
-    ).select(
-        "vec_id", "neighbor_id", F.round(pair_cos, 6).alias("cosine")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
+    return _ivf_topk(emb, 1)
 
 
 N_CB_USERS = 20  # bounded demo subset, like the reference's per-user loop
@@ -1315,7 +1461,7 @@ IVF_N_PROBES = 2
     ),
     assigned AS (SELECT vec_id, e, cid FROM scored WHERE rn = 1),
     probes AS (SELECT vec_id, e, cid FROM scored
-               WHERE rn <= {IVF_N_PROBES} AND vec_id < 50),
+               WHERE rn <= {IVF_N_PROBES} AND vec_id < {N_IVF_QUERIES}),
     pairs AS (
         SELECT q.vec_id, x.vec_id AS neighbor_id,
                ROUND(list_dot_product(q.e, x.e) /
@@ -1331,7 +1477,7 @@ IVF_N_PROBES = 2
                ) AS rnk
         FROM pairs
     )
-    SELECT vec_id, neighbor_id, cosine FROM ranked WHERE rnk <= 3
+    SELECT vec_id, neighbor_id, cosine FROM ranked WHERE rnk <= {IVF_TOPK}
     """,
     doc=f"Multi-probe IVF ANN — the recall/cost knob single-probe "
     f"ann_ivf_topk lacks: each QUERY probes its {IVF_N_PROBES} nearest "
@@ -1339,48 +1485,16 @@ IVF_N_PROBES = 2
     "candidates roughly double but recall recovers the near-boundary "
     "neighbors single-probe misses (the classic IVF nprobe parameter; "
     "probing is a query-side choice needing NO index rebuild). Same "
-    "deterministic first-16 coarse quantizer, same broadcast "
-    "assign/probe plan; the probe table is query-bounded so the join "
-    "fan-out stays cells-local. The recall gain over single-probe is "
+    "deterministic first-16 coarse quantizer and the same cell_topk "
+    "ranking as ann_ivf_topk at nprobe "
+    f"{IVF_N_PROBES}. The recall gain over single-probe is "
     "asserted in tests/test_graph_pq.py.",
 )
 def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
-    cells = _ivf_assign_cells(emb, IVF_N_PROBES).localCheckpoint(
-        eager=False  # probes AND assignment read it
-    )
-    # r16 (guide §2.3): per-side norm folds once below the join — see
-    # ann_ivf_topk; bit-identical scores, one fold per probed pair.
-    assigned = cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("e_x"),
-        F.element_at("cells", 1).alias("cid_x"),
-        F.sqrt(dot("e", "e")).alias("nx"),
-    )
-    probes = (
-        cells.filter(F.col("vec_id") < 50)
-        .select(
-            "vec_id",
-            F.col("e").alias("e_q"),
-            F.explode("cells").alias("cid"),
-            F.sqrt(dot("e", "e")).alias("nq"),
-        )
-    )
-    probe_cos = dot("e_q", "e_x") / (F.col("nq") * F.col("nx") + F.lit(EPS))
-    pairs = probes.join(
-        assigned,
-        (F.col("cid") == F.col("cid_x")) & (F.col("vec_id") != F.col("neighbor_id")),
-    ).select(
-        "vec_id", "neighbor_id", F.round(probe_cos, 6).alias("cosine")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("vec_id", "neighbor_id", "cosine")
-    )
+    return _ivf_topk(emb, IVF_N_PROBES)
 
 
 # ---------------------------------------------------------------------------

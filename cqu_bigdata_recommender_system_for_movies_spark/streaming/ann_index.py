@@ -80,6 +80,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import
     _rec_cells_sql,
     derive_rec_cells,
 )
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import drain
 from cqu_bigdata_recommender_system_for_movies_spark.tables import (
     load,
     table_row_count,
@@ -621,15 +622,10 @@ class _IndexLoop:
             .parquet(stage_dir)
             .writeStream.foreachBatch(self.emit)
             .outputMode("append")
-            .trigger(availableNow=True)
         )
         if checkpoint_dir is not None:
             writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        drain(writer)
 
     def emit(self, batch_df: DataFrame, batch_id: int) -> None:
         """One micro-batch: markers, then the append (the batch's

@@ -5,12 +5,12 @@ The quantizer is driver-resident data (a `Flat` or `TwoLevel` value,
 functions/nearcell.py) that travels in the probe UDF's closure. A batch
 of query vectors probes its SEARCH_NPROBE nearest cells and takes the
 exact-cosine top-SEARCH_TOPK of those cells' index rows (cos DESC,
-neighbor_id ASC, self excluded). The index's size picks the shape: while
-the planner would broadcast it, the index is collected to Arrow and one
-narrow stage runs `ann_topk_udf`; past that size the probed queries join
-the bucketed index on the cell key and a row_number window ranks them.
-The DuckDB oracles replay the whole pruned pipeline, so every served row
-is exact-checked.
+neighbor_id ASC, self excluded) through the shared `cell_topk`
+(operators/vectors.py). The index's size picks the regime per batch:
+while the planner would broadcast it, it is collected and scored in one
+narrow stage; past that size the probed queries join the bucketed index
+on the cell key. The DuckDB oracles replay the whole pruned pipeline, so
+every served row is exact-checked.
 """
 
 from __future__ import annotations
@@ -18,19 +18,16 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
     Flat,
     TwoLevel,
-    ann_topk_udf,
-    cells_udf,
-    index_arrays,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
-    EPS,
-    dot,
+    cell_topk,
+    serving_index,
     shuffle_partitions,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
@@ -51,22 +48,13 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import 
     derive_fold_parts,
     two_level_quantizer,
 )
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import drain
 from cqu_bigdata_recommender_system_for_movies_spark.tables import table_row_count
 
 ANN_SEARCH_TABLE = "spark_graft_ann_search_index"
 # SEARCH_NPROBE / SEARCH_TOPK / QUERY_MOD / QUERY_REM live in
 # streaming/ann_index.py and are re-exported here.
 N_SEARCH_SLICES = 2  # staged query-arrival batches
-
-
-def _broadcast_sized(df: DataFrame) -> bool:
-    """True when the planner would broadcast `df` into a join: its
-    optimized-plan size estimate is at most autoBroadcastJoinThreshold
-    (-1 disables broadcasting, and so this)."""
-    jdf = df._jdf  # noqa: SLF001
-    size = int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    conf = df.sparkSession._jsparkSession.sessionState().conf()  # noqa: SLF001
-    return size <= conf.autoBroadcastJoinThreshold()
 
 
 def score_query_batch(
@@ -78,51 +66,23 @@ def score_query_batch(
     neighbor_id) among the SEARCH_NPROBE nearest cells of ``cents``,
     self excluded.
 
-    Precondition: query ids are distinct within `batch_df`. The kernel
-    path ranks each row on its own; the join path's window would pool
-    rows that share an id.
+    Precondition: query ids are distinct within `batch_df`.
 
-    When the planner would broadcast the index anyway (`_broadcast_sized`)
-    it is collected to Arrow on every batch — the same fresh table the
-    join reads — and `ann_topk_udf` probes, fetches, scores and ranks in
-    one narrow stage; posexplode gives the rank. Otherwise the query side
-    is probed map-side, joined to the index on the cell key and ranked by
-    a row_number window: the path for an index the driver cannot hold."""
-    if _broadcast_sized(index_df):
-        index = index_arrays(
-            index_df.select("neighbor_id", "cell", "ne").toArrow(), "neighbor_id", "ne"
-        )
-        id_type = index_df.schema["neighbor_id"].dataType.simpleString()
-        top = ann_topk_udf(cents, index, SEARCH_NPROBE, SEARCH_TOPK, id_type)
-        return batch_df.select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(top(F.col("vec_id"), F.col("e"))).alias("pos", "neighbor_id"),
-        ).select("query_id", (F.col("pos") + 1).alias("rank"), "neighbor_id")
-    # explode in the UDF's own select: a later explode lets Catalyst push
-    # the Generate's inferred size(cell) > 0 filter below the Project,
-    # which copies the UDF into a second ArrowEvalPython
-    probes = batch_df.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.explode(cells_udf(cents, SEARCH_NPROBE)(F.col("e"))).alias("cell"),
-    )
-    # both norms are join-invariant: fold them once per side BELOW the
-    # cell join instead of re-folding the 64-wide arrays inside the
-    # per-candidate cosine (the identical doubles keep the ranking
-    # bit-identical)
-    probes = probes.withColumn("qn", F.sqrt(dot("qe", "qe")))
-    indexed = index_df.withColumn("nn", F.sqrt(dot("ne", "ne")))
-    cands = probes.join(indexed, "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    score = dot("qe", "ne") / (F.col("qn") * F.col("nn") + F.lit(EPS))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(score), F.asc("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= SEARCH_TOPK)
-        .select("query_id", "rank", "neighbor_id")
+    The regime is decided per batch (`serving_index`): an index the
+    planner would broadcast is collected afresh, the same table the join
+    would read, and served in one narrow stage; a bigger one is joined
+    on the cell key."""
+    return cell_topk(
+        batch_df,
+        cents,
+        serving_index(index_df, "neighbor_id", "ne"),
+        SEARCH_NPROBE,
+        SEARCH_TOPK,
+        rounded=False,
+        exclude_self=True,
+        qid="vec_id",
+        vec="e",
+        out=("query_id", "rank", "neighbor_id", None),
     )
 
 
@@ -130,8 +90,8 @@ def score_query_batch(
     "streaming_ann_search",
     # The oracle replays the full pruned-search pipeline: quantizer =
     # the derive_ann_cells(corpus) smallest corpus vectors (the same
-    # COUNT-derived sqrt width as the index family — VERDICT r14 #3,
-    # via the derive_rec_cells/_rec_cells_sql twins); each corpus vector in its
+    # COUNT-derived sqrt width as the index family, via the
+    # derive_rec_cells/_rec_cells_sql twins); each corpus vector in its
     # single nearest cell; each query probing its SEARCH_NPROBE nearest
     # cells; exact cosine top-SEARCH_TOPK within the fetched candidates
     # (cos DESC, neighbor ASC; self excluded). Every row of the pruned
@@ -193,10 +153,10 @@ def score_query_batch(
     f"{QUERY_REM}, {N_SEARCH_SLICES} staged arrival batches) are "
     f"assigned map-side to their {SEARCH_NPROBE} nearest quantizer "
     "cells and answered with an exact cosine "
-    f"top-{SEARCH_TOPK} over the probed cells' candidates (one Arrow "
-    "UDF over the collected index while it is broadcast-sized, a "
-    "cell-key SMJ on the bucketed files past it; self-matches "
-    "excluded). Returns (query_id, rank, "
+    f"top-{SEARCH_TOPK} over the probed cells' candidates, ranked by the "
+    "shared cell_topk (one Arrow UDF over the collected index while it "
+    "is broadcast-sized, a cell-key SMJ on the bucketed files past it; "
+    "self-matches excluded). Returns (query_id, rank, "
     "neighbor_id); the oracle replays the full pruned pipeline, so the "
     "served answer is exact-checked row by row.",
 )
@@ -267,16 +227,7 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(emit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(emit).outputMode("append"))
 
     snap = _snapshot_and_clean(spark.read.parquet(out_dir), out_dir)
     shutil.rmtree(stage_dir, ignore_errors=True)
@@ -396,9 +347,10 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-checked): the corpus is assigned hierarchically "
     "(vector-bearing IVF layout), each query probes its top-"
     f"{ANN_GROUP_PROBE} level-1 groups and then its top query-nprobe "
-    "cells inside them, candidates are scored from the collected index "
-    "while it is broadcast-sized (a cell-key join past it), and the "
-    "answer is an exact cosine top-k (self-matches excluded); the "
+    "cells inside them, and the shared cell_topk ranks the candidates "
+    "(scored from the collected index while it is broadcast-sized, a "
+    "cell-key join past it) into an exact cosine top-k (self-matches "
+    "excluded); the "
     "oracle replays "
     "grouping, both per-side selection levels, the fetch, and the "
     "ranking, so the served hierarchical answer is hash-checked row "

@@ -5,9 +5,12 @@ updated user against every item profile. `streaming_recommend_candidates`
 cuts that to the items of each user's REC_NPROBE nearest quantizer cells.
 The quantizer is driver-resident data (a `Flat` value over the
 derive_rec_cells(catalog) smallest item_refs, functions/nearcell.py)
-that travels in the assignment and probe UDFs' closures. The DuckDB
-oracle replays fold, quantizer and pruned scoring, so the engine must
-prune to exactly the oracle's cells.
+that travels in the assignment and probe UDFs' closures. Each batch is
+ranked by the shared `cell_topk` (operators/vectors.py) on 6-dp rounded
+scores. The catalog size picks its index once, at build: collected
+arrays under REC_BROADCAST_MAX_ITEMS, a cell-bucketed table past it. The
+DuckDB oracle replays fold, quantizer and pruned scoring, so the engine
+must prune to exactly the oracle's cells.
 """
 
 from __future__ import annotations
@@ -15,19 +18,18 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
     Flat,
-    candidate_scores_udf,
+    IndexArrays,
     cell_udf,
-    cells_udf,
-    index_arrays,
     seed_quantizer,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
-    EPS,
+    cell_topk,
+    collect_index,
     dot,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
@@ -36,6 +38,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
 )
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
     _events_stream,
+    drain,
     item_profiles,
 )
 
@@ -58,10 +61,10 @@ REC_NPROBE = 2
 
 
 def _rec_cells_sql(count_expr: str) -> str:
-    """SQL twin of derive_rec_cells (the _n_planes_sql discipline —
-    VERDICT r12 #2: fixed-cardinality knobs are scale bombs; both
-    engines derive the width from the SAME catalog COUNT so the
-    approximation stays exact-checked at every sf). ceil(log2(n)/2) is
+    """SQL twin of derive_rec_cells (the _n_planes_sql discipline:
+    fixed-cardinality knobs are scale bombs; both engines derive the
+    width from the SAME catalog COUNT so the approximation stays
+    exact-checked at every sf). ceil(log2(n)/2) is
     the exact-integer form of "next power of two >= sqrt(n)":
     2^k >= sqrt(n) <=> k >= log2(n)/2."""
     return (
@@ -82,9 +85,10 @@ def derive_rec_cells(catalog_size: int) -> int:
     )
 
 
-# Broadcast ceiling for the candidate index: at ~100 B/row (item_ref +
+# Ceiling for the collected candidate index: at ~100 B/row (item_ref +
 # 5-double profile + cell) 65536 items is ~6.5 MB, inside Spark's default
-# 10 MB autoBroadcastJoinThreshold with headroom. Beyond it the index
+# 10 MB autoBroadcastJoinThreshold with headroom, so the arrays travel in
+# the scoring UDF's closure as a broadcast table would. Beyond it the index
 # persists as a cell-BUCKETED parquet table (the io_sinks co-located-join
 # recipe): bucketed on the join key ONCE at build time, so every
 # micro-batch's cell join reads the catalog side pre-partitioned — no
@@ -104,16 +108,18 @@ CANDIDATE_INDEX_TABLE = "spark_graft_candidate_index"
 
 def build_candidate_index(
     profiles: DataFrame, n_cells: int | None = None
-) -> tuple[Flat, DataFrame, int]:
+) -> tuple[Flat, IndexArrays | DataFrame, int]:
     """(cents, item_dim, n_items): the full offline half of the candidate
     index. One catalog COUNT sizes the quantizer width (derive_rec_cells,
     unless pinned) and picks the serving regime. While the catalog fits
-    REC_BROADCAST_MAX_ITEMS the index is a broadcast-hinted checkpoint,
-    collected once to the driver and tagged onto `item_dim` as numpy
-    arrays (`_sg_items`) for the one-stage serving kernel. Beyond it, a cell-bucketed parquet table (a persistent
-    artifact — the index IS the deliverable, rebuilt per catalog refresh
-    and reused across every micro-batch, overwritten in place on
-    rebuild)."""
+    REC_BROADCAST_MAX_ITEMS, ``item_dim`` is the index collected once to
+    the driver (`IndexArrays`). Beyond it, a cell-bucketed parquet table
+    in `cell_topk`'s index shape (id = item_ref, cell, vec = profile,
+    norm): a persistent artifact rebuilt per catalog refresh, reused
+    across every micro-batch and overwritten in place on rebuild. Each
+    item's norm folds once into the table, so the join path's per-pair
+    cosine is one fold instead of three (same doubles, bit-identical
+    scores)."""
     import tempfile
 
     spark = profiles.sparkSession
@@ -121,111 +127,61 @@ def build_candidate_index(
     if n_cells is None:
         n_cells = derive_rec_cells(n_items)
     cents = seed_quantizer(profiles, "item_ref", "profile", n_cells)
-    # each item's norm folds ONCE into the index artifact: the join
-    # path's per-pair cosine is then one fold instead of three (same
-    # doubles, bit-identical scores)
-    index = item_cell_assignments(profiles, cents).withColumn(
-        "pnorm", F.sqrt(dot("profile", "profile"))
-    )
+    index = item_cell_assignments(profiles, cents)
     if n_items <= REC_BROADCAST_MAX_ITEMS:
-        held = index.localCheckpoint(eager=True)
-        item_dim = F.broadcast(held)
-        item_dim._sg_items = index_arrays(  # noqa: SLF001 — engine-internal tag
-            held.select("item_ref", "cell", "profile").toArrow(),
-            "item_ref",
-            "profile",
+        return cents, collect_index(index, "item_ref", "profile"), n_items
+    n_buckets = min(REC_INDEX_MAX_BUCKETS, n_cells)
+    loc = os.path.join(
+        tempfile.gettempdir(), "spark_graft_tables", CANDIDATE_INDEX_TABLE
+    )
+    (
+        index.select(
+            F.col("item_ref").alias("id"),
+            "cell",
+            F.col("profile").alias("vec"),
+            F.sqrt(dot("profile", "profile")).alias("norm"),
         )
-    else:
-        n_buckets = min(REC_INDEX_MAX_BUCKETS, n_cells)
-        loc = os.path.join(
-            tempfile.gettempdir(), "spark_graft_tables", CANDIDATE_INDEX_TABLE
-        )
-        (
-            index.write.mode("overwrite")
-            .option("path", loc)
-            .bucketBy(n_buckets, "cell")
-            .sortBy("cell")
-            .format("parquet")
-            .saveAsTable(CANDIDATE_INDEX_TABLE)
-        )
-        item_dim = spark.table(CANDIDATE_INDEX_TABLE)
-    return cents, item_dim, n_items
+        .write.mode("overwrite")
+        .option("path", loc)
+        .bucketBy(n_buckets, "cell")
+        .sortBy("cell")
+        .format("parquet")
+        .saveAsTable(CANDIDATE_INDEX_TABLE)
+    )
+    return cents, spark.table(CANDIDATE_INDEX_TABLE), n_items
 
 
 def score_candidates_batch(
-    batch_df: DataFrame, cents: Flat, item_dim: DataFrame, k: int = 10
+    batch_df: DataFrame,
+    cents: Flat,
+    item_dim: IndexArrays | DataFrame,
+    k: int = 10,
 ) -> DataFrame:
-    """One micro-batch of the pruned scoring pipeline: (user_id, item_ref,
-    score, rnk), the top-k of each user's REC_NPROBE nearest cells by
-    6-dp rounded cosine (score DESC, item_ref ASC). Shared verbatim by
-    the registered query and the scale probe so the measured plan IS the
-    shipped plan.
+    """One micro-batch of the pruned scoring pipeline: (user_id, rnk,
+    item_ref, score), the top-k of each user's REC_NPROBE nearest cells
+    by 6-dp rounded cosine (score DESC, item_ref ASC), the interest
+    vector rounded to 6 dp before both probe and score. Shared verbatim
+    by the registered query and the scale probe so the measured plan IS
+    the shipped plan.
 
     Precondition: one row per user_id in `batch_df` (the update-mode
-    interest fold emits exactly that). The kernel path ranks each row on
-    its own; the join path's window would pool duplicate rows.
+    interest fold emits exactly that).
 
-    With a broadcast-sized index (`item_dim` carries `_sg_items`) the
-    batch is one narrow stage: `candidate_scores_udf` probes, fetches and
-    scores, then Spark's own round(., 6), array_sort on (-score,
-    item_ref), slice(k) and posexplode rank. Past the ceiling the
-    interest vector is probed map-side, joined to the bucketed index on
-    the cell key and ranked by a row_number window."""
-    rounded = batch_df.withColumn(
-        "interest", F.transform("interest", lambda x: F.round(x, 6))
+    ``item_dim`` is `build_candidate_index`'s, passed to `cell_topk` as
+    is: collected arrays serve the batch in one narrow stage, the
+    bucketed table through the cell-key join."""
+    return cell_topk(
+        batch_df,
+        cents,
+        item_dim,
+        REC_NPROBE,
+        k,
+        rounded=True,
+        exclude_self=False,
+        qid="user_id",
+        vec=F.expr("transform(interest, x -> round(x, 6))"),
+        out=("user_id", "rnk", "item_ref", "score"),
     )
-    items = getattr(item_dim, "_sg_items", None)
-    if items is not None:
-        ref_type = item_dim.schema["item_ref"].dataType.simpleString()
-        scores = candidate_scores_udf(cents, items, REC_NPROBE, ref_type)
-        ranked = F.slice(
-            F.array_sort(
-                F.transform(
-                    scores(F.col("interest")),
-                    lambda c: F.struct(
-                        (-F.round(c["cos"], 6)).alias("neg"),
-                        c["item_ref"].alias("item_ref"),
-                    ),
-                )
-            ),
-            1,
-            k,
-        )
-        # posexplode in the UDF's own select: its input is then no bare
-        # attribute, so no inferred size() filter copies the UDF
-        return rounded.select(
-            "user_id", F.posexplode(ranked).alias("pos", "c")
-        ).select(
-            "user_id",
-            F.col("c.item_ref").alias("item_ref"),
-            (-F.col("c.neg")).alias("score"),
-            (F.col("pos") + 1).alias("rnk"),
-        )
-    # explode in the SAME select: a later explode lets Catalyst push
-    # the Generate's inferred size(cells) > 0 filter below the
-    # Project, which copies the UDF into a second ArrowEvalPython
-    probed = rounded.select(
-        "user_id",
-        "interest",
-        F.explode(cells_udf(cents, REC_NPROBE)(F.col("interest"))).alias("cell"),
-    )
-    # items carry ONE cell each and users probe distinct cells, so the
-    # cell join emits each (user, item) candidate at most once. The
-    # user-side norm folds once per user, the item-side norm rides the
-    # prebuilt index (pnorm) — cosine per pair is then a single fold
-    # over the identical doubles.
-    probed = probed.withColumn("inorm", F.sqrt(dot("interest", "interest")))
-    score = F.round(
-        dot("interest", "profile") / (F.col("inorm") * F.col("pnorm") + F.lit(EPS)),
-        6,
-    )
-    scored = probed.join(item_dim, "cell").select(
-        "user_id",
-        "item_ref",
-        score.alias("score"),
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_ref"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
 def item_cell_assignments(
@@ -367,14 +323,14 @@ def item_cell_assignments(
     )
     SELECT user_id, item_ref, rnk, score FROM ranked WHERE rnk <= 10
     """,
-    doc="ST6 + M8 with candidate-generation pruning (the 100 TB knob "
-    "SCALE_r12's recommend_emit_100x reading names): per micro-batch, "
+    doc="ST6 + M8 with candidate-generation pruning: per micro-batch, "
     "the stateful interest fold emits updated user vectors; each is "
     f"assigned map-side to its {REC_NPROBE} nearest quantizer cells "
     "(the driver-held seed quantizer in the probe UDF's closure), "
     "scored by cosine ONLY against the catalog items assigned "
-    "to those cells (one Arrow UDF over the driver-held index while the "
-    "catalog is broadcast-sized, a cell-key join past it), top-10 per user, "
+    "to those cells and ranked by the shared cell_topk (one Arrow UDF "
+    "over the collected index while the catalog is broadcast-sized, a "
+    "cell-key join past it), top-10 per user, "
     "appended to a recommendations table. Quantizer width = next power "
     "of two >= sqrt(catalog), derived from the catalog COUNT identically "
     "on both engines (derive_rec_cells / _rec_cells_sql), so per-batch "
@@ -390,8 +346,8 @@ def streaming_recommend_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     # The candidate index is built ONCE (foreachBatch re-evaluates every
     # closed-over DataFrame per micro-batch without the checkpoint —
     # same pin as streaming_recommend_emit's profile dim). The index
-    # build also picks the join strategy: broadcast under
-    # REC_BROADCAST_MAX_ITEMS, cell-partitioned bucketed dim beyond.
+    # build also picks the regime: collected arrays under
+    # REC_BROADCAST_MAX_ITEMS, cell-bucketed table beyond.
     profiles = item_profiles(spark, sf_dir).localCheckpoint(eager=True)
     cents, item_dim, _ = build_candidate_index(profiles)
     out_dir = tempfile.mkdtemp(prefix="spark_graft_cand_recs_")
@@ -410,16 +366,7 @@ def streaming_recommend_candidates(spark: SparkSession, sf_dir: str) -> DataFram
 
     stream = _events_stream(spark, sf_dir)
     folded = interest_fold_stream(stream, output_mode="update")
-    q = (
-        folded.writeStream.foreachBatch(emit)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
 
     recs = spark.read.parquet(out_dir)
     last = recs.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))

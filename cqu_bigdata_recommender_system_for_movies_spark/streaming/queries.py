@@ -38,6 +38,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from cqu_bigdata_recommender_system_for_movies_spark.operators.windows import (
     SESSION_GAP_MIN,
@@ -179,20 +180,22 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Execute the streaming query to completion; return the sink table."""
-    name = f"sink_{next(_counter)}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run a configured ``writer`` over everything its source holds now
+    (an availableNow trigger) and return the stopped query, whose
+    ``recentProgress`` stays readable."""
+    q = writer.trigger(availableNow=True).start()
     try:
         q.awaitTermination()
     finally:
         q.stop()
+    return q
+
+
+def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
+    """Execute the streaming query to completion; return the sink table."""
+    name = f"sink_{next(_counter)}"
+    drain(stream_df.writeStream.format("memory").queryName(name).outputMode(mode))
     return stream_df.sparkSession.table(name)
 
 
@@ -509,16 +512,7 @@ def streaming_recommend_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, sf_dir)
     folded = interest_fold_stream(stream, output_mode="update")
-    q = (
-        folded.writeStream.foreachBatch(emit)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
 
     recs = spark.read.parquet(out_dir)
     last = recs.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))
@@ -549,19 +543,13 @@ def run_console_sink(stream_df: DataFrame, mode: str = "append") -> int:
     streaming query to completion printing each micro-batch to stdout.
     Returns the total input-row count summed over the query's progress
     events, so callers can assert the sink consumed the whole source."""
-    q = (
+    q = drain(
         stream_df.writeStream.format("console")
         .option("numRows", 5)
         .option("truncate", True)
         .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination()
-        return int(sum(p["numInputRows"] for p in q.recentProgress))
-    finally:
-        q.stop()
+    return int(sum(p["numInputRows"] for p in q.recentProgress))
 
 
 @register(
@@ -1096,16 +1084,7 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(stage_dir)
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(merge_batch).outputMode("update"))
 
     return spark.read.parquet(f"{snap_root}/v{state['version']}")
 

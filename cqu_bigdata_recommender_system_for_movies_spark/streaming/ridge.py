@@ -189,6 +189,7 @@ def streaming_online_ridge_detail(spark: SparkSession, sf_dir: str) -> DataFrame
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
         _events_stream,
         _stream_state_partitions,
+        drain,
         item_profiles,
     )
 
@@ -209,17 +210,11 @@ def streaming_online_ridge_detail(spark: SparkSession, sf_dir: str) -> DataFrame
     # out to min(256, cores), silently polluting the bench attribution),
     # decade replays still fan out.
     with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
-        q = (
+        drain(
             ridge_fold_stream(_events_stream(spark, sf_dir), profiles)
             .writeStream.foreachBatch(emit)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
 
     rows = spark.read.parquet(out_dir)
     last = rows.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))

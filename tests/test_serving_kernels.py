@@ -1,8 +1,8 @@
-"""The one-stage serving kernels (functions/nearcell.py) against the
-cell-key join + row_number window they replace on a broadcast-sized
-index. The join path stays in the engine as the reference: past the
-broadcast ceiling it is the only path. Every comparison is exact: rows,
-ranks, and scores by ``float.hex()``.
+"""The one-stage serving kernel of `cell_topk` (operators/vectors.py)
+against the cell-key join + row_number window it replaces on a
+broadcast-sized index. The join path stays in the engine as the
+reference: past the broadcast ceiling it is the only path. Every
+comparison is exact: rows, ranks, and scores by ``float.hex()``.
 
 The inputs are adversarial on purpose: duplicate vectors (exact cosine
 ties must fall to the smaller id), near-duplicates whose scores round to
@@ -19,6 +19,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
+    Flat,
+    IndexArrays,
+)
+from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
+    cell_topk,
+    collect_index,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
     ann_index as ai,
 )
@@ -90,8 +98,16 @@ def _cand_rows(df) -> list[tuple]:
     )
 
 
+def _bucketed_dim(monkeypatch, profiles, n_cells=None):
+    """The candidate index past the collect ceiling: the bucketed table
+    `cell_topk` serves by the cell-key join + window."""
+    with monkeypatch.context() as m:
+        m.setattr(cand, "REC_BROADCAST_MAX_ITEMS", 0)
+        return cand.build_candidate_index(profiles, n_cells)[1]
+
+
 @pytest.mark.parametrize("seed", [7, 8, 9])
-def test_candidate_kernel_matches_join_path(spark, seed):
+def test_candidate_kernel_matches_join_path(spark, monkeypatch, seed):
     rng = np.random.default_rng(seed)
     profiles = _catalog(rng)
     catalog = spark.createDataFrame(
@@ -101,8 +117,8 @@ def test_candidate_kernel_matches_join_path(spark, seed):
         _users(rng, profiles, 40), "user_id long, interest array<double>"
     )
     cents, item_dim, _ = cand.build_candidate_index(catalog, N_CELLS)
-    assert getattr(item_dim, "_sg_items", None) is not None
-    reference_dim = item_dim.select("*")  # untagged: the join + window path
+    assert isinstance(item_dim, IndexArrays)
+    reference_dim = _bucketed_dim(monkeypatch, catalog, N_CELLS)
     for k in (3, 10, 50):  # k = 50 exceeds every user's candidate count
         got = cand.score_candidates_batch(users, cents, item_dim, k)
         want = cand.score_candidates_batch(users, cents, reference_dim, k)
@@ -122,10 +138,10 @@ def test_candidate_kernel_matches_join_path(spark, seed):
     (rank_a, score_a), (rank_b, score_b) = ranked[3, 14], ranked[3, 15]
     assert score_a == score_b and rank_a + 1 == rank_b
     assert ranked[4, 3][1] == (0.0).hex()
-    assert 1 not in set(item_dim.select("cell").toPandas()["cell"])
+    assert 1 not in set(item_dim.cells.tolist())
 
 
-def test_candidate_kernel_on_reference_catalog(spark, sf_dir):
+def test_candidate_kernel_on_reference_catalog(spark, monkeypatch, sf_dir):
     """The reference item profiles at the derived quantizer width, every
     item's profile also serving as a user's interest vector."""
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
@@ -139,7 +155,9 @@ def test_candidate_kernel_on_reference_catalog(spark, sf_dir):
         F.col("profile").alias("interest"),
     )
     got = cand.score_candidates_batch(users, cents, item_dim)
-    want = cand.score_candidates_batch(users, cents, item_dim.select("*"))
+    want = cand.score_candidates_batch(
+        users, cents, _bucketed_dim(monkeypatch, profiles)
+    )
     assert _cand_rows(got) == _cand_rows(want)
 
 
@@ -232,10 +250,6 @@ def test_ann_kernel_skips_rows_without_a_cell(spark, tmp_path):
     """A two-level quantizer leaves a vector whose probed groups own no
     cell unassigned (NULL cell). Such index rows join no probe, and
     queries with no probed cell get no rows, on both paths."""
-    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        Flat,
-    )
-
     # two representatives, every cell grouped under rep 0, one group
     # probed: vectors nearer rep 1 have no cell
     reps = Flat.of([(0, [1.0, 0.0], 1.0), (1, [0.0, 1.0], 1.0)])
@@ -264,19 +278,79 @@ def test_ann_kernel_skips_rows_without_a_cell(spark, tmp_path):
     assert not {nb for *_, nb in rows} & unassigned
 
 
-def test_ann_kernel_ranks_exact_ties_by_id():
+def test_ann_kernel_ranks_exact_ties_by_id(spark):
     """Equal vectors score bit-equal cosines: the smaller id ranks first,
     whatever order the index holds them in; so do two zero cosines."""
-    from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-        Flat,
-        ann_topk_np,
-    )
-
     seeds = Flat.of([(0, [1.0, 0.0], 1.0)])
     ids = np.array([9, 4, 7, 2, 5], dtype=np.int64)
     V = np.array([[1.0, 1.0], [1.0, 1.0], [0.0, 1.0], [0.0, -1.0], [1.0, 1.0]])
-    index = (ids, np.zeros(5, dtype=np.int64), V, np.sqrt((V * V).sum(axis=1)))
-    E = np.array([[1.0, 0.0], [1.0, 1.0]])
-    top = ann_topk_np(E, np.array([100, 4]), seeds, index, 1, 5)
-    assert top[0].tolist() == [4, 5, 9, 2, 7]
-    assert top[1].tolist() == [5, 9, 7, 2]  # self (4) excluded
+    index = IndexArrays(
+        ids, np.zeros(5, dtype=np.int64), V, np.sqrt((V * V).sum(axis=1)), "bigint"
+    )
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0]), (4, [1.0, 1.0])], "qid long, vec array<double>"
+    )
+    top: dict[int, list[int]] = {}
+    for r in sorted(
+        cell_topk(queries, seeds, index, 1, 5, rounded=False, exclude_self=True)
+        .collect(),
+        key=lambda r: (r.qid, r["rank"]),
+    ):
+        top.setdefault(r.qid, []).append(r.id)
+    assert top[100] == [4, 5, 9, 2, 7]
+    assert top[4] == [5, 9, 7, 2]  # self (4) excluded
+
+
+def _topk_rows(df) -> list[tuple]:
+    return sorted(
+        (int(r.qid), int(r["rank"]), int(r.id), r.score.hex()) for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "nprobe, two_level",
+    [
+        pytest.param(1, False, id="ivf-nprobe1"),
+        pytest.param(2, False, id="ivf-nprobe2"),
+        pytest.param(2, True, id="ivf-two_level"),
+    ],
+)
+def test_cell_topk_kernel_matches_join_path(spark, tmp_path, nprobe, two_level):
+    """The IVF queries' combination, rounded scores with self excluded,
+    in both regimes of `cell_topk` on the adversarial corpus, scores
+    compared by ``float.hex()``: the collected index against the same
+    index passed as a DataFrame. The candidate and ANN combinations are
+    compared through their own entry points above."""
+    rng = np.random.default_rng(11)
+    corpus = _vectors(rng, 120, 6)
+    emb, quant, index_df = _ann_index(
+        spark, corpus, 8, str(tmp_path / "index"), two_level
+    )
+    extra = spark.createDataFrame(
+        [(1000, [0.0] * 6), (1001, corpus[14]), (1002, [-x for x in corpus[2]]),
+         (1003, None)],
+        "vec_id long, e array<double>",
+    )
+    queries = emb.unionByName(extra)
+
+    def topk(index):
+        return cell_topk(
+            queries, quant, index, nprobe, 5, rounded=True, exclude_self=True,
+            qid="vec_id", vec="e",
+        )
+
+    got = topk(collect_index(index_df, "neighbor_id", "ne"))
+    want = topk(
+        index_df.select(
+            F.col("neighbor_id").alias("id"), "cell", F.col("ne").alias("vec")
+        )
+    )
+    assert "Window" not in _plan(got) and "Window" in _plan(want)
+    rows = _topk_rows(got)
+    assert rows == _topk_rows(want)
+    assert not any(q == 1003 for q, *_ in rows)
+    assert not any(q == i for q, _, i, _ in rows)
+    # items 14 and 15 are 1e-12 apart: rounding ties them, 14 ranks first
+    near = {i: (rk, sc) for q, rk, i, sc in rows if q == 1001 and i in (14, 15)}
+    assert len(near) == 2
+    assert near[14][1] == near[15][1] and near[14][0] < near[15][0]

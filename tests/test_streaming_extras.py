@@ -1207,6 +1207,88 @@ def test_ann_index_crash_between_markers_and_append(spark, sf_dir, monkeypatch):
         shutil.rmtree(stage, ignore_errors=True)
 
 
+def test_ann_index_crash_between_compaction_write_and_swap(spark, sf_dir, monkeypatch):
+    """Crash point: compaction has written the new generation under its
+    temp name and the swap never runs. The old generation still serves.
+    Restarting from the checkpoint replays the crashed batch, compacts
+    again at a later due batch over the leftover temp table, and the
+    snapshot equals the post-CRUD rebuild.
+
+    The file source orders the staged slices by modification time, so
+    the crashed batch may be any slice. When its append left index rows
+    the ledger skips the replay; the tombstone-only slice appends none,
+    leaves no ledger row, and is applied again (its markers a second
+    time, which max(ver) per key absorbs)."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    import cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index as ai
+
+    tbl = "spark_graft_ann_swap_crash_test"
+    ckpt = tempfile.mkdtemp(prefix="spark_graft_ann_swap_crash_ckpt_")
+    stage = tempfile.mkdtemp(prefix="spark_graft_ann_swap_crash_stage_")
+    run = dict(
+        compact_every=ai.UPSERT_COMPACT_EVERY,
+        deletes=True,
+        cleanup=False,
+        checkpoint_dir=ckpt,
+        stage_dir=stage,
+    )
+    real_swap = ai._swap_generations
+    crashed: list[str] = []
+
+    def crash_before_swap(spark_, table, tmp, old_loc):
+        if not crashed:
+            crashed.append(old_loc)
+            raise RuntimeError("crash between compaction write and swap")
+        return real_swap(spark_, table, tmp, old_loc)
+
+    monkeypatch.setattr(ai, "_swap_generations", crash_before_swap)
+    try:
+        first: list = []
+        with pytest.raises(StreamingQueryException, match="crash between compaction"):
+            ai.maintain_index(
+                spark, sf_dir, tbl, ai.N_DELETE_SLICES, audit=first, **run
+            )
+        assert crashed
+        # compaction runs after the batch's audit row: the last one is
+        # the crashed batch's
+        last = [a for a in first if "batch_id" in a][-1]
+        # the rewrite is complete under the temp name; the old generation serves
+        assert spark.catalog.tableExists(f"{tbl}_compacting")
+        assert ai._table_location(spark, tbl) == crashed[0]
+
+        audit: list = []
+        got = ai.maintain_index(
+            spark, sf_dir, tbl, ai.N_DELETE_SLICES, audit=audit, fresh=False, **run
+        )
+        expected, _ = _post_crud_rebuild(spark, sf_dir)
+        rows = got.collect()
+        assert len(rows) == len(expected)
+        assert {r.vec_id: r.cell for r in rows} == expected
+        assert [a for a in audit if "compacted_after" in a]
+        applied = [a["batch_id"] for a in audit if "batch_id" in a]
+        if last["batch_rows"]:
+            assert {"replay_skipped": last["batch_id"]} in audit
+            assert last["batch_id"] not in applied
+        else:
+            assert last["batch_id"] in applied
+        assert not spark.catalog.tableExists(f"{tbl}_compacting")
+        assert ai._table_location(spark, tbl) != crashed[0]
+    finally:
+        for name in ("", "_tombs", "_compacting", "_retiring"):
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}{name}")
+        base = os.path.join(tempfile.gettempdir(), "spark_graft_tables", tbl)
+        for path in glob.glob(f"{base}_*"):
+            shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def test_ann_index_resume_floor_skips_replays_only(spark, sf_dir):
     """The restart path's guard arithmetic: after a restart the loop
     reads the table's max committed batch_id ONCE (the resume floor);

@@ -17,7 +17,8 @@ the determinism argument the registered oracles already rely on):
   2. inflate the catalog by --catalog-mult (probe_streaming_scale's
      deterministic jittered replication);
   3. pruned top-10: derive_rec_cells width, REC_NPROBE nearest cells,
-     cell-local cosine — the exact score_candidates_batch pipeline;
+     cell-local cosine — the shipped `cell_topk` ranking that
+     score_candidates_batch runs;
   4. exhaustive top-10: users x full catalog cosine;
   5. recall@10 = |pruned  exhaustive| / |exhaustive| averaged over
      users (ties broken identically on both sides: score DESC, item_ref
@@ -40,11 +41,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
-    cells_udf,
     seed_quantizer,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
+    cell_topk,
     cosine,
+    serving_index,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
@@ -130,22 +132,20 @@ def main() -> None:
     w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_ref"))
 
     t0 = time.perf_counter()
-    probed = users.select(
-        "user_id",
-        "interest",
-        F.explode(cells_udf(cents, nprobe)(F.col("interest"))).alias("cell"),
-    )
+    index = serving_index(item_cells, "item_ref", "profile")
     pruned = (
-        probed.join(F.broadcast(item_cells), "cell")
-        .select(
-            "user_id",
-            "item_ref",
-            F.round(cosine("interest", "profile"), 6).alias("score"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("user_id", "item_ref")
-        .localCheckpoint(eager=True)
+        cell_topk(
+            users,
+            cents,
+            index,
+            nprobe,
+            10,
+            rounded=True,
+            exclude_self=False,
+            qid="user_id",
+            vec="interest",
+            out=("user_id", None, "item_ref", None),
+        ).localCheckpoint(eager=True)
     )
     pruned_sec = round(time.perf_counter() - t0, 1)
 

@@ -33,21 +33,20 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
-    _ivf_assign_cells,
+    IVF_TOPK,
+    N_IVF_QUERIES,
+    _ivf_topk,
     cosine,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load
-
-N_QUERIES = 50
-TOP_K = 3
 
 
 def _top3(pairs):
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
+        .filter(F.col("rnk") <= IVF_TOPK)
         .select("vec_id", "neighbor_id")
     )
 
@@ -70,7 +69,7 @@ def main() -> None:
 
     # brute-force ground truth: one corpus scan scores all 50 queries
     t0 = time.perf_counter()
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    q = emb.filter(F.col("vec_id") < N_IVF_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("e").alias("e_q")
     )
     truth_pairs = (
@@ -93,23 +92,7 @@ def main() -> None:
     for nprobe in nprobes:
         t0 = time.perf_counter()
         # the registered ann_ivf_multiprobe_topk plan, nprobe-parameterized
-        cells = _ivf_assign_cells(emb, nprobe).localCheckpoint(eager=False)
-        assigned = cells.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("e").alias("e_x"),
-            F.element_at("cells", 1).alias("cid_x"),
-        )
-        probes = cells.filter(F.col("vec_id") < N_QUERIES).select(
-            "vec_id", F.col("e").alias("e_q"), F.explode("cells").alias("cid")
-        )
-        pairs = probes.join(
-            assigned,
-            (F.col("cid") == F.col("cid_x"))
-            & (F.col("vec_id") != F.col("neighbor_id")),
-        ).select(
-            "vec_id", "neighbor_id", F.round(cosine("e_q", "e_x"), 6).alias("cosine")
-        )
-        got = _collect_sets(_top3(pairs))
+        got = _collect_sets(_ivf_topk(emb, nprobe))
         wall = round(time.perf_counter() - t0, 1)
         recall = sum(
             len(got.get(qid, set()) & t) / len(t) for qid, t in truth.items()
@@ -120,7 +103,7 @@ def main() -> None:
             ),
             flush=True,
         )
-        del cells, assigned, probes, pairs, got
+        del got
         gc.collect()
 
 

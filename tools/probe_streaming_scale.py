@@ -290,6 +290,7 @@ def _run_recommend_candidates(
         REC_BROADCAST_MAX_ITEMS,
         REC_NPROBE,
         build_candidate_index,
+        item_cell_assignments,
         score_candidates_batch,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
@@ -305,13 +306,20 @@ def _run_recommend_candidates(
     )
     # the probe's --cells flag pins the width; the registered query
     # derives it from the catalog COUNT (derive_rec_cells). The shared
-    # build also picks the join strategy: broadcast up to
+    # build also picks the regime: a collected index up to
     # REC_BROADCAST_MAX_ITEMS (65536 items), cell-keyed bucketed dim
     # beyond — patch that constant to force the shuffle path at probe
     # catalogs.
     cents, item_dim, n_items = build_candidate_index(profiles, n_cells)
     sizes = sorted(
-        (r.n for r in item_dim.groupBy("cell").count().withColumnRenamed("count", "n").collect()),
+        (
+            r.n
+            for r in item_cell_assignments(profiles, cents)
+            .groupBy("cell")
+            .count()
+            .withColumnRenamed("count", "n")
+            .collect()
+        ),
         reverse=True,
     )
     print(
@@ -323,7 +331,7 @@ def _run_recommend_candidates(
                 "largest_cells": sizes[:4],
                 "worst_candidates_per_user": sum(sizes[:REC_NPROBE]),
                 "join_strategy": (
-                    "broadcast"
+                    "collected"
                     if n_items <= REC_BROADCAST_MAX_ITEMS
                     else "cell-partitioned"
                 ),
