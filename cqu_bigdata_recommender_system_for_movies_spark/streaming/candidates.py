@@ -38,6 +38,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
 )
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
     _events_stream,
+    _stream_state_partitions,
     drain,
     item_profiles,
 )
@@ -364,9 +365,9 @@ def streaming_recommend_candidates(spark: SparkSession, sf_dir: str) -> DataFram
             .parquet(out_dir)
         )
 
-    stream = _events_stream(spark, sf_dir)
-    folded = interest_fold_stream(stream, output_mode="update")
-    drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
+    folded = interest_fold_stream(_events_stream(spark, sf_dir))
+    with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
+        drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
 
     recs = spark.read.parquet(out_dir)
     last = recs.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))

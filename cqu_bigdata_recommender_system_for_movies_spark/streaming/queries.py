@@ -47,58 +47,39 @@ from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import regis
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
     interest_fold_stream,
 )
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import STATE_SHARDS
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load
 
 _counter = itertools.count()
 
-# Stateful micro-batch queries pay a FIXED per-partition state-store cost
-# (open / commit / maintenance / watermark-advance scan) every batch on
-# every stateful operator, independent of data volume. Measured at sf0.1
-# (VERDICT r6 #4 isolation protocol): the stream-stream join's
-# watermark-advance batch processes 0 input rows in 3.6 s at 32 shuffle
-# partitions vs 1.0 s at 8, and total runtime is 19.0 s at 64 / 10.7 s at
-# 32 / 7.1 s at 8 — the store count, not the join, is the bottleneck at
-# test scale. Spark pins state partitioning from spark.sql.shuffle.
-# partitions at the query's FIRST run (it lives in the checkpoint), so
-# sizing it to the stateful-key cardinality is a real deployment decision,
-# not a test hack.
-#
-# Sizing is SCALE-AWARE (VERDICT r12 #1 — the old unconditional 8-pin was
-# a benchmark-suite constant shipped as the documented configuration; it
-# serialized 256 state shards into 8 tasks at decade scale, measured
-# 1876.7 s -> 881.8 s per 1000x interest-fold run when raised to 32 on a
-# 32-core box, SCALE_r12 interest_fold_1000x):
-#   - source rows below STATE_SCALE_ROWS -> STREAM_STATE_PARTITIONS (=8),
-#     the small-input floor where the fixed per-partition store cost
-#     dominates the per-row work (the sf0.1 measurement above);
-#   - at or above it (or size unknown)  -> min(STATE_SHARDS, cores),
-#     never below the floor — per-partition state compute now dominates,
-#     so match task count to the lesser of the shard width (the state
-#     keyspace's parallelism ceiling for the sharded families) and the
-#     cores actually available. Probes pin a width by passing n=
-#     explicitly.
+# State partitions (spark.sql.shuffle.partitions when a stateful stream
+# first starts; the checkpoint keeps them) are sized from the source:
+#   - below STATE_SCALE_ROWS source rows -> STREAM_STATE_PARTITIONS. Each
+#     state partition pays a fixed store cost every batch (open, commit,
+#     maintenance, the watermark-advance scan) whatever its row count; at
+#     sf0.1 the stream-stream join ran 7.1 s at 8 partitions against
+#     19.0 s at 64, and its empty watermark-advance batch 1.0 s against
+#     3.6 s at 32.
+#   - at or above it, or size unknown -> min(STATE_SHARDS, cores), never
+#     below the floor: per-partition state compute dominates there, and
+#     no sharded stream has more than STATE_SHARDS state groups.
+# Every stateful stream starts inside _stream_state_partitions; probes
+# pin a width with n=.
 STREAM_STATE_PARTITIONS = 8
-# Per-batch input-row count where shard compute starts to dominate the
-# fixed store cost: the r12 probes saw the crossover well below the 3.3M
-# rows/batch of the 100x replay (14 s of shard work vs ~0.1 s/partition
-# of store overhead), while the full sf0.1 suite (100k-row sources) still
-# times better at 8. One decade above sf0.1 is the conservative cut.
+# Source rows where per-row shard work overtakes the fixed store cost: a
+# 3.3M-row batch spent 14 s in shard work against ~0.1 s/partition of
+# store cost, while 100k-row sources still run faster at 8.
 STATE_SCALE_ROWS = 1_000_000
-# Shard width of the sharded stateful families (interest/ridge/simdedup
-# all pin 256 — asserted equal in tests so this stays the true ceiling).
-STATE_SHARDS_WIDTH = 256
 
 
 def derive_state_partitions(
-    spark: SparkSession,
-    source_rows: int | None = None,
-    shards: int = STATE_SHARDS_WIDTH,
+    spark: SparkSession, source_rows: int | None = None
 ) -> int:
     """Scale-aware state-partition count (module comment above)."""
     if source_rows is not None and source_rows < STATE_SCALE_ROWS:
         return STREAM_STATE_PARTITIONS
     cores = spark.sparkContext.defaultParallelism
-    return max(STREAM_STATE_PARTITIONS, min(shards, cores))
+    return max(STREAM_STATE_PARTITIONS, min(STATE_SHARDS, cores))
 
 
 def _parquet_rows(path: str) -> int | None:
@@ -510,9 +491,9 @@ def streaming_recommend_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    stream = _events_stream(spark, sf_dir)
-    folded = interest_fold_stream(stream, output_mode="update")
-    drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
+    folded = interest_fold_stream(_events_stream(spark, sf_dir))
+    with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
+        drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
 
     recs = spark.read.parquet(out_dir)
     last = recs.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))
@@ -793,9 +774,9 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emitted as (user_id, n_events, pos, weight) rows.",
 )
 def streaming_interest_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _events_stream(spark, sf_dir)
-    folded = interest_fold_stream(stream, output_mode="update")
-    result = _run_to_memory(folded, "update")
+    folded = interest_fold_stream(_events_stream(spark, sf_dir))
+    with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
+        result = _run_to_memory(folded, "update")
     # memory sink in update mode may hold one row per key per batch; keep the
     # final state per user (max n_events), exploded to scalar rows for hashing
     latest = (

@@ -1,77 +1,31 @@
-"""Streaming SimHash near-duplicate detection — per-bucket fingerprint
-state over a document stream.
+"""Online SimHash near-duplicate detection over a document stream.
 
-The batch near-dup surface (operators/dedup.py: simhash_near_dup_pairs)
-answers "which pairs in a static corpus are near-dups". A crawl
-pipeline needs the ONLINE form: documents arrive continuously, and each
-must be checked against everything already ingested — the streaming
-twin of the reference's "process new arrivals against accumulated
-state" loop (reference streaming_rec.py keeps per-user state the same
-way; here the state is the fingerprint index itself).
+The batch query (operators/dedup.py ``simhash_near_dup_pairs``) finds
+the near-duplicate pairs of a static corpus. The online form checks each
+arriving document against everything ingested before it, with the
+fingerprint index kept in sharded streaming state (streaming/state.py).
 
-Design (Spark-first):
-- The 64-bit SimHash fingerprint is computed PER ROW with pure column
-  expressions (``fingerprint_col``): distinct md5 token-hash pairs via
-  ``array_distinct``/``transform``, per-bit popcounts via one
-  ``aggregate`` + ``zip_with`` fold, majority rule ``2*p_b >= n`` —
-  bit-for-bit the same rule as the batch groupBy majority
-  (``sum(±1) >= 0``), verified by
-  tests/test_streaming_extras.py::test_rowwise_fingerprint_matches_batch.
-  No aggregation state is needed to fingerprint a stream.
-- Manku's 4 disjoint 16-bit blocks (operators/dedup.py:SIMHASH_BANDS)
-  key the state: a doc lands in 4 (band, block-value) buckets, and by
-  pigeonhole every pair within hamming <= 3 shares at least one bucket,
-  so per-bucket comparison is LOSSLESS for the <= 3 threshold.
-- ``applyInPandasWithState`` keeps ONE record per (bucket, distinct
-  fingerprint) GROUP: ``(fp, min_id, count)`` — the fp-collapse the
-  batch side's ``_simhash_groups`` applies, taken to its logical
-  conclusion (VERDICT r10 #2). No member ids are stored, and the
-  answer is still EXACT, because under the final ``min`` aggregation
-  only two facts about a group ever matter:
-  (a) an arriving doc d's best partner from a matching group is the
-      group MIN (its emission is ``(d, min_f)`` — any other member
-      m < d satisfies m >= min_f and cannot improve d's answer);
-  (b) members of a matching group that are LARGER than d (including
-      ones that join the group in the future — d is a genuine partner
-      of every present and future member, since all of them share the
-      group's exact fingerprint) gain d as a partner; that whole set
-      is addressed without enumeration by a group-level CORRECTION
-      record ``(grp=f, of_id=d)``, which the caller joins back to docs
-      on ``fp == f`` and filters to ``of_id < doc_id``.
-  Emissions therefore come in two kinds — direct ``(dup_id, of_id)``
-  rows and corrections ``(grp, of_id)`` — and ``min`` over their union
-  per doc converges to the batch LEFT-JOIN-min answer REGARDLESS of
-  how the stream is micro-batched: for any qualifying pair, whichever
-  side arrives later finds the other's group in state (same-batch rows
-  are processed in ascending doc_id order).
-
-Scale notes (100 TB) — r11 1000x probe evidence
-(tools/probe_simdedup_scale.py, 5M docs = 1000x sf0.1 documents, 10
-micro-batches of 500k):
-- State per bucket is O(DISTINCT fingerprints in the bucket), not
-  O(members): exact-duplicate skew — the 100-TB failure mode, where a
-  boilerplate page repeats millions of times — adds ONE count
-  increment, not one state entry. Measured: 5M docs (1000 byte-exact
-  replicas of 4,992 texts, 3,905 distinct fingerprints) end at ~3.7 MB
-  of store-reported state across 256 shard rows; the per-member form
-  this replaced would have held 20M member entries and reserialized
-  them every batch.
-- Per-batch cost tracks GROUPS, not corpus: addBatch grew 21 s -> 52 s
-  across the probe only because the slice staging (pmod by id, replica
-  offsets a multiple of the slice count) feeds each batch a fresh
-  tenth of the distinct fingerprints; emissions saturate at ~24
-  rows/doc (4 bucket rows x ~4.8 matching groups + per-bucket directs)
-  once all groups are seen, per the banded structure. A same-sized
-  batch of pure re-arrivals costs the saturated floor, not O(corpus).
-- The probe's first run found the OTHER defect: the fingerprint fold
-  (~1 ms/doc interpreted HOF) ran at the source stage's parallelism —
-  ONE task under maxFilesPerTrigger=1 — serializing 500k-doc batches
-  onto one core (>500 s/batch). dedup_stream now pins a full-width
-  repartition ahead of the fold: 21 s/batch.
-- Unbounded-history dedup still accumulates distinct-fp state without
-  bound; production would run the RocksDB state store provider so the
-  working set pages to disk, with STATE_SHARDS raised to the cluster's
-  state partitions.
+Invariants:
+- ``fingerprint_col`` computes each row's 64-bit SimHash with column
+  expressions only, bit for bit the batch side's majority rule, so a
+  stream needs no aggregation state to fingerprint.
+- A document lands in Manku's 4 disjoint 16-bit band buckets
+  (operators/dedup.py ``SIMHASH_BANDS``); every pair within hamming
+  distance <= 3 shares a bucket, so comparing within buckets loses no
+  pair.
+- State holds one row per (bucket, distinct fingerprint) group:
+  ``(fp, min_id, cnt)``. It grows with distinct fingerprints, not
+  documents, and exact duplicates add only a count.
+- The answer is exact with no member lists, because under the final
+  ``min`` only two facts about a group matter: an arriving doc d's best
+  partner in a matching group is the group min (the direct row
+  ``(d, min)``), and every member above d, present or future, gains d
+  as a partner (the correction row ``(grp=f, of_id=d)``, which the
+  caller joins back to docs on ``fp == f`` and filters to
+  ``of_id < doc_id``). ``min`` over both kinds per doc equals the batch
+  left-join-min answer however the stream is split into batches: of
+  any qualifying pair, the later arrival finds the other's group in
+  state. Each shard's batch slice is processed in ascending doc_id.
 """
 
 from __future__ import annotations
@@ -79,38 +33,20 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
     HAMMING_MAX,
     SIMHASH_BANDS,
     SIMHASH_BITS,
 )
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import sharded_fold
 
 BLOCK_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 16: Manku's 4x16 layout
 
-# State-sharding knob: logical (band, block-value) buckets are hashed
-# into this many state GROUPS, each holding its members as parallel
-# arrays tagged with their bucket id. Grouping state by the raw bucket
-# key costs one Python invocation + one state (de)serialization PER
-# BUCKET PER BATCH — ~20k near-singleton groups at sf0.1 made the query
-# take 74 s, all overhead. Sharding bounds the invocation count while
-# pair checks stay bucket-local inside each shard (the dict-by-bucket
-# below), so candidate volume — and losslessness — are untouched. At
-# 100 TB this is the state-store parallelism dial: raise it with the
-# cluster's state partitions; per-shard state stays corpus/SHARDS.
-STATE_SHARDS = 256
-
 # dup_id set -> direct pair row; grp set (dup_id null) -> group
 # correction row "every doc with fp == grp and doc_id > of_id has
-# partner of_id" (module docstring (b))
+# partner of_id" (module docstring)
 OUTPUT_SCHEMA = "dup_id BIGINT, of_id BIGINT, grp STRING"
-# per-(bucket, distinct-fingerprint) GROUP parallel arrays: bucket id,
-# fingerprint, group min doc id, member count (fp-collapse — state is
-# O(distinct fps), exact-dup skew adds no entries)
-STATE_SCHEMA = (
-    "bks ARRAY<STRING>, fps ARRAY<STRING>, mins ARRAY<BIGINT>, cnts ARRAY<BIGINT>"
-)
 
 
 def fingerprint_col() -> Column:
@@ -203,117 +139,92 @@ def _fp_int(fp: str) -> int:
     return int(fp[::-1], 2)  # bit-0-first string -> unsigned 64-bit int
 
 
-def detect_bucket_dups(key, pdfs, state: GroupState):
-    """Per-shard stateful detector over fp-collapsed group state. Each
-    shard accumulates ``(fp -> (min_id, count))`` per logical
-    (band, block-value) bucket hashed into it; hamming checks are
-    confined to groups of the SAME bucket (the dict below). Per arriving
-    doc d it emits
-    - ONE direct row ``(d, best)`` where best = min over matching-group
-      mins below d (d's exact answer contribution from this bucket), and
-    - one correction row ``(grp=f, of_id=d)`` per matching group f,
-      addressing every f-member above d without enumerating members.
-    The caller's min aggregation over both kinds is
-    micro-batch-split-invariant and exactly equal to the batch
-    LEFT-JOIN-min answer (module docstring)."""
-    if state.exists:
-        bks, fps, mins, cnts = (list(c) for c in state.get)
-    else:
-        bks, fps, mins, cnts = [], [], [], []
-    # per-bucket group view: bucket -> fp -> [min_id, count]
+def detect_bucket_dups(
+    batch: pd.DataFrame, table: pd.DataFrame | None
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Check one shard's batch slice against its (bk, fp, min_id, cnt)
+    group table, bucket by bucket, in ascending doc_id. Per arriving doc
+    d it emits one direct row ``(d, best)``, best being the smallest
+    matching-group min below d, and one correction row ``(grp=f,
+    of_id=d)`` per matching group f (module docstring)."""
+    # bucket -> fp -> [min_id, cnt]
     buckets: dict[str, dict[str, list[int]]] = {}
-    for bk, f, mn, c in zip(bks, fps, mins, cnts):
-        buckets.setdefault(bk, {})[f] = [mn, c]
+    if table is not None:
+        for bk, f, mn, c in zip(
+            table["bk"].tolist(),
+            table["fp"].tolist(),
+            table["min_id"].tolist(),
+            table["cnt"].tolist(),
+        ):
+            buckets.setdefault(bk, {})[f] = [mn, c]
     fp_ints: dict[str, int] = {}
     out_dup, out_of, out_grp = [], [], []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("doc_id")
-        for bk, doc_id, fp in zip(
-            pdf["bk"].tolist(), pdf["doc_id"].tolist(), pdf["fp"].tolist()
-        ):
-            v = fp_ints.get(fp)
-            if v is None:
-                v = fp_ints[fp] = _fp_int(fp)
-            by_fp = buckets.setdefault(bk, {})
-            best = None
-            for f, group in by_fp.items():
-                w = fp_ints.get(f)
-                if w is None:
-                    w = fp_ints[f] = _fp_int(f)
-                if bin((w ^ v) & 0xFFFFFFFFFFFFFFFF).count("1") > HAMMING_MAX:
-                    continue
-                if group[0] < doc_id and (best is None or group[0] < best):
-                    best = group[0]
-                out_dup.append(None)
-                out_of.append(doc_id)
-                out_grp.append(f)
-            if best is not None:
-                out_dup.append(doc_id)
-                out_of.append(best)
-                out_grp.append(None)
-            group = by_fp.get(fp)
-            if group is None:
-                by_fp[fp] = [doc_id, 1]
-            else:
-                group[0] = min(group[0], doc_id)
-                group[1] += 1
-    bks, fps, mins, cnts = [], [], [], []
-    for bk, by_fp in buckets.items():
-        for f, (mn, c) in by_fp.items():
-            bks.append(bk)
-            fps.append(f)
-            mins.append(mn)
-            cnts.append(c)
-    state.update((bks, fps, mins, cnts))
-    if out_of:
-        yield pd.DataFrame(
-            {
-                "dup_id": pd.array(out_dup, dtype="Int64"),
-                "of_id": out_of,
-                "grp": out_grp,
-            }
-        )
+    batch = batch.sort_values("doc_id")
+    for bk, doc_id, fp in zip(
+        batch["bk"].tolist(), batch["doc_id"].tolist(), batch["fp"].tolist()
+    ):
+        v = fp_ints.get(fp)
+        if v is None:
+            v = fp_ints[fp] = _fp_int(fp)
+        by_fp = buckets.setdefault(bk, {})
+        best = None
+        for f, group in by_fp.items():
+            w = fp_ints.get(f)
+            if w is None:
+                w = fp_ints[f] = _fp_int(f)
+            if bin((w ^ v) & 0xFFFFFFFFFFFFFFFF).count("1") > HAMMING_MAX:
+                continue
+            if group[0] < doc_id and (best is None or group[0] < best):
+                best = group[0]
+            out_dup.append(None)
+            out_of.append(doc_id)
+            out_grp.append(f)
+        if best is not None:
+            out_dup.append(doc_id)
+            out_of.append(best)
+            out_grp.append(None)
+        group = by_fp.get(fp)
+        if group is None:
+            by_fp[fp] = [doc_id, 1]
+        else:
+            group[0] = min(group[0], doc_id)
+            group[1] += 1
+    table = pd.DataFrame(
+        [(bk, f, mn, c) for bk, by_fp in buckets.items() for f, (mn, c) in by_fp.items()],
+        columns=["bk", "fp", "min_id", "cnt"],
+    )
+    out = pd.DataFrame(
+        {
+            "dup_id": pd.array(out_dup, dtype="Int64"),
+            "of_id": out_of,
+            "grp": out_grp,
+        }
+    )
+    return table, out
 
 
 def dedup_stream(stream_docs: DataFrame) -> DataFrame:
-    """Wire fingerprint -> banding -> sharded per-bucket state onto a
-    streaming documents DataFrame; returns the emission stream (direct
-    pair rows + group corrections, see module docstring).
+    """Fingerprint, band and fold a streaming documents DataFrame into
+    sharded bucket state; returns the emission stream (direct pair rows
+    and group corrections, module docstring).
 
-    The pinned repartition ahead of the fingerprint fold is the r11
-    1000x probe finding (the streaming twin of the r10 IVF lesson): the
-    fold costs ~1 ms/doc of interpreted higher-order-function CPU, and
-    it must run BEFORE the shard exchange (the shard key derives from
-    the fingerprint), so without the repartition its parallelism is
-    whatever the source stage had — ONE task per file under
-    maxFilesPerTrigger=1, serializing a 500k-doc micro-batch onto one
-    core while 31 idle. One cheap text-bytes exchange buys
-    cluster-wide fingerprinting."""
+    The fingerprint fold costs about 1 ms/doc of interpreted
+    higher-order-function CPU and must run before the shard exchange,
+    whose key derives from the fingerprint. Without the repartition
+    ahead of it, it runs at the source stage's parallelism: one task
+    per file under maxFilesPerTrigger=1."""
     from cqu_bigdata_recommender_system_for_movies_spark.session import (
         shuffle_partitions,
     )
-    from cqu_bigdata_recommender_system_for_movies_spark.shipping import ensure_shipped
 
     spark = stream_docs.sparkSession
-    ensure_shipped(spark)
     # full machine width, NOT the (deliberately small) state-partition
     # pin that _stream_state_partitions puts in shuffle.partitions while
     # this plan is built — the fold is pure map work and wants every core
     n_fold = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism)
-    keyed = banded(
-        with_fingerprint(stream_docs.repartition(n_fold))
-    ).select(
+    keyed = banded(with_fingerprint(stream_docs.repartition(n_fold))).select(
         F.concat_ws(":", F.col("band").cast("string"), "key").alias("bk"),
         "doc_id",
         "fp",
-        F.pmod(F.xxhash64(F.col("band"), F.col("key")), F.lit(STATE_SHARDS)).alias(
-            "shard"
-        ),
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        detect_bucket_dups,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
+    return sharded_fold(keyed, ["bk"], detect_bucket_dups, OUTPUT_SCHEMA)

@@ -12,6 +12,31 @@ from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+class _FakeGroupState:
+    """In-process stand-in for the GroupState of applyInPandasWithState:
+    exists/get/update is all streaming/state.py's per-group callback uses."""
+
+    def __init__(self):
+        self._v = None
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+
+@pytest.fixture
+def group_state():
+    """Factory of fresh GroupState stand-ins, one per simulated shard."""
+    return _FakeGroupState
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("engine-tests")

@@ -18,6 +18,10 @@ here so they cannot silently erode:
 3. One session cache: every cross-query cache is `session._SESSION_CACHE`
    (one key rule, one eviction), and only `session.py` and `shipping.py`
    read a context's `applicationId`.
+
+4. One sharded-state fold: `streaming/state.py` holds the only
+   `applyInPandasWithState` call, the only shard-count constant and the
+   only `GroupState` / `GroupStateTimeout` import.
 """
 
 from __future__ import annotations
@@ -205,3 +209,47 @@ def test_application_id_read_only_by_session_and_shipping():
         f"applicationId read outside session.py/shipping.py: {readers} — "
         "key per-session state through session_cache"
     )
+
+
+def _package_nodes():
+    for py in sorted(PKG.rglob("*.py")):
+        rel = str(py.relative_to(PKG))
+        for node in ast.walk(ast.parse(py.read_text())):
+            yield rel, node
+
+
+def test_one_apply_in_pandas_with_state_call():
+    sites = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes()
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandasWithState"
+    ]
+    assert len(sites) == 1 and sites[0].startswith("streaming/state.py:"), (
+        f"stateful folds go through streaming/state.py sharded_fold: {sites}"
+    )
+
+
+def test_one_state_shards_definition():
+    defs = sorted(
+        rel
+        for rel, node in _package_nodes()
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and "SHARDS" in t.id
+    )
+    assert defs == ["streaming/state.py"], (
+        f"the shard count is defined once, in streaming/state.py: {defs}"
+    )
+
+
+def test_group_state_imported_only_by_state_helper():
+    importers = sorted(
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes()
+        if isinstance(node, ast.ImportFrom)
+        and any(a.name in ("GroupState", "GroupStateTimeout") for a in node.names)
+        and rel != "streaming/state.py"
+    )
+    assert not importers, f"GroupState imported outside streaming/state.py: {importers}"

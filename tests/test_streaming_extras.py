@@ -305,30 +305,13 @@ def with_fingerprint_count(spark, sf_dir) -> int:
     return with_fingerprint(load(spark, sf_dir, "documents")).count()
 
 
-class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState stand-in for driving
-    detect_bucket_dups in-process (exists/get/update is all it uses)."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-def test_simhash_group_state_split_invariant_randomized():
-    """Property test of the fp-collapsed detector (VERDICT r10 #2): for
-    random fingerprint corpora with heavy exact-dup skew and random
-    ARRIVAL ORDER / micro-batch splits (including ids arriving out of
-    order — the case the group-correction channel exists for), the
+def test_simhash_group_state_split_invariant_randomized(group_state):
+    """Property test of the fp-collapsed detector, driven through the
+    state helper's per-group callback (chunk concatenation and the state
+    codec included): for random fingerprint corpora with heavy exact-dup
+    skew, random ARRIVAL ORDER / micro-batch splits (including ids
+    arriving out of order — the case the group-correction channel exists
+    for) and random Arrow-chunk sub-splits of each batch, the
     min-aggregated answer over direct + correction emissions must equal
     the brute-force all-pairs hamming oracle, for every split."""
     import random
@@ -343,6 +326,11 @@ def test_simhash_group_state_split_invariant_randomized():
         BLOCK_BITS,
         detect_bucket_dups,
     )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import (
+        shard_step,
+    )
+
+    step = shard_step(detect_bucket_dups)
 
     def fp_str(v: int) -> str:
         return "".join("1" if (v >> b) & 1 else "0" for b in range(64))
@@ -376,7 +364,7 @@ def test_simhash_group_state_split_invariant_randomized():
             order[i:j]
             for i, j in zip([0] + splits, splits + [len(order)])
         ]
-        state = _FakeGroupState()
+        state = group_state()
         direct: dict[int, int] = {}
         corr: dict[str, int] = {}
         for batch in batches:
@@ -387,8 +375,12 @@ def test_simhash_group_state_split_invariant_randomized():
                     rows.append(
                         (f"{b}:{f[b * BLOCK_BITS:(b + 1) * BLOCK_BITS]}", d, f)
                     )
+            # arbitrary-order Arrow-chunk sub-split of the batch
             pdf = pd.DataFrame(rows, columns=["bk", "doc_id", "fp"])
-            for out in detect_bucket_dups(None, [pdf], state):
+            k = rng.randrange(1, 4)
+            chunks = [pdf.iloc[i::k].reset_index(drop=True) for i in range(k)]
+            rng.shuffle(chunks)
+            for out in step((0,), iter(chunks), state):
                 for dup, of, grp in zip(
                     out["dup_id"].tolist(), out["of_id"].tolist(), out["grp"].tolist()
                 ):

@@ -34,26 +34,6 @@ def _expected_interest(events: pd.DataFrame) -> dict[int, np.ndarray]:
     return out
 
 
-class _FakeGroupState:
-    """Minimal GroupState stand-in for driving the applyInPandasWithState
-    callbacks directly in property tests (shared by the interest-fold and
-    online-ridge split-invariance tests)."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
 def test_interest_fold_matches_pandas_reference(spark, sf_dir):
     result = streaming_interest_fold(spark, sf_dir).collect()
     events_pd = load(spark, sf_dir, "events").toPandas()
@@ -118,10 +98,11 @@ def test_fold_events_closed_form_equals_iterative():
     check()
 
 
-def test_sharded_fold_split_invariant_randomized():
-    """Property test of the SHARDED fold callback (VERDICT r11 #1): for
-    random event corpora, random user->shard mixes, random TIME-ORDERED
-    micro-batch splits (batch boundaries respect the global (ts,
+def test_sharded_fold_split_invariant_randomized(group_state):
+    """Property test of the sharded interest fold, driven through the
+    state helper's per-group callback (so chunk concatenation and the
+    state codec run too): for random event corpora, random user->shard
+    mixes, random TIME-ORDERED micro-batch splits (batch boundaries respect the global (ts,
     event_id) order, as the file source's per-slice staging does), and
     random Arrow-chunk sub-splits WITHIN a batch (chunks arrive in
     arbitrary order — the case the concat-before-fold exists for), the
@@ -131,9 +112,13 @@ def test_sharded_fold_split_invariant_randomized():
     import random
 
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
-        update_interest_shard,
+        update_interest,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import (
+        shard_step,
     )
 
+    step = shard_step(update_interest)
     types = list(EVENT_TYPES) + ["unknown_type"]
     for seed in range(5):
         rng = random.Random(seed)
@@ -160,7 +145,7 @@ def test_sharded_fold_split_invariant_randomized():
             ordered.iloc[i:j]
             for i, j in zip([0] + cuts, cuts + [n_events])
         ]
-        state = _FakeGroupState()
+        state = group_state()
         last: dict[int, tuple[int, list[float]]] = {}
         for batch in batches:
             # shuffle rows within the batch and sub-split into chunks:
@@ -170,7 +155,7 @@ def test_sharded_fold_split_invariant_randomized():
             chunks = [
                 shuffled.iloc[i::k].reset_index(drop=True) for i in range(k)
             ]
-            for out in update_interest_shard((0,), iter(chunks), state):
+            for out in step((0,), iter(chunks), state):
                 for uid, n, vec in zip(
                     out["user_id"], out["n_events"], out["interest"]
                 ):
@@ -182,6 +167,42 @@ def test_sharded_fold_split_invariant_randomized():
             assert np.array(vec) == pytest.approx(exp_vec, abs=1e-9), (
                 f"seed {seed}, user {uid}"
             )
+
+
+def test_state_codec_round_trips_bit_exact():
+    """The shard-state codec returns every value to the bit: int64
+    extremes, float64 signed zeros / subnormals / infinities / NaN
+    payload, strings (empty and non-ASCII), list<double> of varying
+    length — and an empty shard table keeps its columns and row count."""
+    import math
+
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import (
+        decode,
+        encode,
+    )
+
+    floats = [0.0, -0.0, 5e-324, -1.7976931348623157e308, math.inf, 0.1 + 0.2]
+    table = pd.DataFrame(
+        {
+            "k": np.array([-(2**63), 2**63 - 1, 0, 7, -1, 42], dtype=np.int64),
+            "x": np.array(floats, dtype=np.float64),
+            "s": ["", "a:b", "ünï", "0" * 64, "x", "y"],
+            "v": [np.array(v, dtype=np.float64) for v in (
+                [], [-0.0], [1 / 3, 2 / 3], [math.nan], [5e-324] * 3, floats
+            )],
+        }
+    )
+    got = decode(encode(table))
+    assert list(got.columns) == list(table.columns)
+    assert got["k"].dtype == np.int64 and got["k"].tolist() == table["k"].tolist()
+    assert got["x"].to_numpy().tobytes() == table["x"].to_numpy().tobytes()
+    assert got["s"].tolist() == table["s"].tolist()
+    for a, b in zip(got["v"], table["v"]):
+        assert np.asarray(a, dtype=np.float64).tobytes() == b.tobytes()
+
+    empty = decode(encode(table.iloc[:0]))
+    assert list(empty.columns) == list(table.columns) and len(empty) == 0
+    assert empty["k"].dtype == np.int64 and empty["x"].dtype == np.float64
 
 
 def test_stateful_fold_recovers_from_checkpoint(spark, sf_dir):
@@ -224,7 +245,7 @@ def test_stateful_fold_recovers_from_checkpoint(spark, sf_dir):
     def run_once():
         stream = spark.readStream.schema(events.schema).parquet(src)
         q = (
-            interest_fold_stream(stream, output_mode="update")
+            interest_fold_stream(stream)
             .writeStream.foreachBatch(sink)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -280,7 +301,7 @@ def _batch_ridge(rows_pd):
     return out
 
 
-def test_ridge_shard_split_invariant_randomized():
+def test_ridge_shard_split_invariant_randomized(group_state):
     """Sufficient statistics are associative sums, so ANY batch split,
     row order, and chunk sub-split must leave the final (n, theta)
     equal to the all-rows closed form — tighter than the interest
@@ -289,9 +310,13 @@ def test_ridge_shard_split_invariant_randomized():
 
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.ridge import (
         DIM,
-        update_ridge_shard,
+        update_ridge,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import (
+        shard_step,
     )
 
+    step = shard_step(update_ridge)
     for seed in range(5):
         rng = random.Random(1000 + seed)
         n_users, n_rows = rng.randrange(3, 8), rng.randrange(40, 120)
@@ -313,14 +338,14 @@ def test_ridge_shard_split_invariant_randomized():
         batches = [
             shuffled.iloc[i:j] for i, j in zip([0] + cuts, cuts + [n_rows])
         ]
-        state = _FakeGroupState()
+        state = group_state()
         last: dict[int, tuple[int, list[float]]] = {}
         for batch in batches:
             k = rng.randrange(1, 4)
             chunks = [
                 batch.iloc[i::k].reset_index(drop=True) for i in range(k)
             ]
-            for out in update_ridge_shard((0,), iter(chunks), state):
+            for out in step((0,), iter(chunks), state):
                 for uid, n, theta in zip(
                     out["user_id"], out["n_events"], out["theta"]
                 ):

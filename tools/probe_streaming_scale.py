@@ -146,7 +146,7 @@ def _interest_fold(stream):
         interest_fold_stream,
     )
 
-    return interest_fold_stream(stream, output_mode="update"), "update"
+    return interest_fold_stream(stream), "update"
 
 
 BUILDERS = {
@@ -203,7 +203,7 @@ def _run_recommend_emit(spark, sf_dir: str, n_slices: int, catalog_mult: int = 1
     t0 = time.perf_counter()
     with _stream_state_partitions(spark, *STATE_PARTITIONS_OVERRIDE[-1:]):
         q = (
-            interest_fold_stream(stream, output_mode="update")
+            interest_fold_stream(stream)
             .writeStream.foreachBatch(score_and_count)
             .outputMode("update")
             .trigger(availableNow=True)
@@ -350,7 +350,7 @@ def _run_recommend_candidates(
     t0 = time.perf_counter()
     with _stream_state_partitions(spark, *STATE_PARTITIONS_OVERRIDE[-1:]):
         q = (
-            interest_fold_stream(stream, output_mode="update")
+            interest_fold_stream(stream)
             .writeStream.foreachBatch(score_and_count)
             .outputMode("update")
             .trigger(availableNow=True)
