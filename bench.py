@@ -407,31 +407,7 @@ REGRESSION_MIN_DELTA_SEC = 0.5
 # band; its resample fan-out is genuinely ~3 s at sf0.1). Both floors
 # at or under their records at matched calibration (0.334/0.201
 # medians): map empty.
-#
-# r13 entry: streaming_online_ridge carries the ADVICE-r12 temp-dir fix
-# — the final snapshot is now materialized (serialized localCheckpoint)
-# so the mkdtemp staging can be removed instead of leaking per
-# invocation. That adds one fixed small-job evaluation at sf0.1
-# (suite 2.42 -> 3.40 s; isolation warm floor 3.51 s at calibration
-# 0.383 — the post-change floor, not noise). Deliberate trade; the
-# sibling emit/candidates queries absorbed the same change and got
-# FASTER (5.26 -> 5.04, 4.0 -> 3.63) because their r13 re-plans
-# dominate.
-# ADVICE r13 correction to the ridge attribution: part of the r13 +1 s
-# was NOT the snapshot materialize — ridge's _stream_state_partitions
-# call passed no source path, so the scale-aware derivation read "size
-# unknown" and fanned the sf0.1 run out to min(256, cores) state
-# partitions instead of the documented 8 floor. r14 passes the actual
-# source path (ridge.py), putting sf0.1 back on 8; expect the entry to
-# move back TOWARD its pre-r13 time (the snapshot-materialize share of
-# the shift remains).
-EXPECTED_SHIFTS: dict[str, str] = {
-    "streaming_online_ridge": (
-        "r13 snapshot-materialize + staging cleanup (ADVICE r12) plus an "
-        "unintended 32-partition state fan-out; r14 re-pins the 8-floor "
-        "via source_path (ADVICE r13) — expect a partial recovery"
-    ),
-}
+EXPECTED_SHIFTS: dict[str, str] = {}
 # The delta floor exists because single-shot timings of short queries are
 # noisy: round 4 flagged global_stats 1.106->1.510 and dedup_exact
 # 0.336->0.423 with NO code change, and a round-5 isolation run (fresh

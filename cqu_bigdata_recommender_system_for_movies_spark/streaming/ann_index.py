@@ -15,7 +15,8 @@ streaming/ann_requantize.py) runs through ONE loop, `_IndexLoop`, built
 from these steps:
 
 - stage: the arrivals are written as `ver=` slice partitions in one job
-  and replayed one file per micro-batch (`_stage_arrivals`, `drain`);
+  (`stage_slices`) and replayed one file per micro-batch (`replay`,
+  `drain`);
 - open: a fresh run drops the table, its aside names and its generation
   directories; a resume completes an interrupted swap and reads the resume
   floor and the row anchor;
@@ -80,7 +81,11 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import
     _rec_cells_sql,
     derive_rec_cells,
 )
-from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import drain
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+    drain,
+    replay,
+    stage_slices,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.tables import (
     load,
     table_row_count,
@@ -513,17 +518,6 @@ def _crud_arrivals(emb: DataFrame, n_slices: int, deletes: bool) -> DataFrame:
     return rows
 
 
-def _stage_arrivals(arrivals: DataFrame, stage_dir: str, n_slices: int) -> None:
-    """Write ``arrivals`` under ``stage_dir`` as one ``ver=`` partition
-    (one file) per slice, in one job."""
-    (
-        arrivals.repartition(n_slices, "ver")
-        .write.mode("overwrite")
-        .partitionBy("ver")
-        .parquet(stage_dir)
-    )
-
-
 class _IndexLoop:
     """One maintenance run over ``table``: the state its steps share.
 
@@ -577,10 +571,10 @@ class _IndexLoop:
         own_stage = stage_dir is None
         if own_stage:
             stage_dir = tempfile.mkdtemp(prefix="spark_graft_ann_stage_")
-        if own_stage or fresh or not os.path.isdir(stage_dir):
-            _stage_arrivals(arrivals, stage_dir, self.n_slices)
-        self.open(fresh)
         try:
+            if own_stage or fresh or not os.path.isdir(stage_dir):
+                stage_slices(arrivals, "ver", self.n_slices, stage_dir)
+            self.open(fresh)
             self.drain(stage_dir, arrivals.schema, checkpoint_dir)
         finally:
             if own_stage:
@@ -617,9 +611,7 @@ class _IndexLoop:
         ``checkpoint_dir`` makes a restart replay the same batch ids and
         contents, which the resume floor assumes."""
         writer = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+            replay(self.spark, stage_dir, schema)
             .writeStream.foreachBatch(self.emit)
             .outputMode("append")
         )

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +49,11 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import 
     derive_fold_parts,
     two_level_quantizer,
 )
-from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import drain
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+    emissions,
+    replay,
+    stage_slices,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.tables import table_row_count
 
 ANN_SEARCH_TABLE = "spark_graft_ann_search_index"
@@ -161,12 +166,6 @@ def score_query_batch(
     "served answer is exact-checked row by row.",
 )
 def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _snapshot_and_clean,
-    )
-
     emb = _vectors(spark, sf_dir)
     n_cells = derive_ann_cells(sf_dir)
     cents = _ann_cents_relation(emb, n_cells)
@@ -195,45 +194,22 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne")
     )
 
-    # stage the query stream: 2%-of-corpus query vectors in
-    # N_SEARCH_SLICES sequential arrival files
-    queries = emb.filter(F.pmod("vec_id", F.lit(QUERY_MOD)) == QUERY_REM)
-    stage_dir = tempfile.mkdtemp(prefix="spark_graft_ann_query_stage_")
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    os.makedirs(stage_dir, exist_ok=True)
-    for s in range(N_SEARCH_SLICES):
-        (
-            queries.filter(
-                F.pmod((F.col("vec_id") / QUERY_MOD).cast("long"), F.lit(N_SEARCH_SLICES))
-                == s
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(stage_dir)
-        )
-    stream = (
-        spark.readStream.schema("vec_id long, e array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
+    # the query stream: 2%-of-corpus query vectors in N_SEARCH_SLICES
+    # staged arrival slices
+    queries = emb.filter(F.pmod("vec_id", F.lit(QUERY_MOD)) == QUERY_REM).withColumn(
+        "slice", F.pmod((F.col("vec_id") / QUERY_MOD).cast("long"), F.lit(N_SEARCH_SLICES))
     )
-
-    out_dir = tempfile.mkdtemp(prefix="spark_graft_ann_search_out_")
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            score_query_batch(batch_df, cents, index_df)
-            .write.mode("append")
-            .parquet(out_dir)
+    stage_dir = tempfile.mkdtemp(prefix="spark_graft_ann_query_stage_")
+    try:
+        stage_slices(queries, "slice", N_SEARCH_SLICES, stage_dir)
+        stream = replay(spark, stage_dir, queries.schema).drop("slice")
+        return emissions(
+            stream, lambda batch: score_query_batch(batch, cents, index_df), "append"
         )
-
-    drain(stream.writeStream.foreachBatch(emit).outputMode("append"))
-
-    snap = _snapshot_and_clean(spark.read.parquet(out_dir), out_dir)
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    shutil.rmtree(loc, ignore_errors=True)
-    return snap
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 @register(

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import math
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +40,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
     _events_stream,
     _stream_state_partitions,
-    drain,
+    emissions,
     item_profiles,
 )
 
@@ -121,8 +122,6 @@ def build_candidate_index(
     item's norm folds once into the table, so the join path's per-pair
     cosine is one fold instead of three (same doubles, bit-identical
     scores)."""
-    import tempfile
-
     spark = profiles.sparkSession
     n_items = profiles.count()
     if n_cells is None:
@@ -341,9 +340,6 @@ def item_cell_assignments(
     "scoring exactly.",
 )
 def streaming_recommend_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     # The candidate index is built ONCE (foreachBatch re-evaluates every
     # closed-over DataFrame per micro-batch without the checkpoint —
     # same pin as streaming_recommend_emit's profile dim). The index
@@ -351,31 +347,16 @@ def streaming_recommend_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     # REC_BROADCAST_MAX_ITEMS, cell-bucketed table beyond.
     profiles = item_profiles(spark, sf_dir).localCheckpoint(eager=True)
     cents, item_dim, _ = build_candidate_index(profiles)
-    out_dir = tempfile.mkdtemp(prefix="spark_graft_cand_recs_")
-    shutil.rmtree(out_dir, ignore_errors=True)  # foreachBatch appends fresh
 
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        # round BEFORE both quantizing and scoring: the oracle's fold ->
-        # round -> (assign, cosine) pipeline runs on identical doubles
-        # (inside score_candidates_batch, shared with the scale probe).
-        top = score_candidates_batch(batch_df, cents, item_dim)
-        (
-            top.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
+    # score_candidates_batch rounds BEFORE both quantizing and scoring:
+    # the oracle's fold -> round -> (assign, cosine) pipeline runs on
+    # identical doubles.
     folded = interest_fold_stream(_events_stream(spark, sf_dir))
     with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
-        drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
-
-    recs = spark.read.parquet(out_dir)
-    last = recs.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))
-    snap = recs.join(last, ["user_id", "batch_id"]).select(
-        "user_id", "item_ref", "rnk", "score"
-    )
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _snapshot_and_clean,
-    )
-
-    return _snapshot_and_clean(snap, out_dir)
+        recs = emissions(
+            folded,
+            lambda batch: score_candidates_batch(batch, cents, item_dim),
+            "update",
+            latest_by="user_id",
+        )
+    return recs.select("user_id", "item_ref", "rnk", "score")

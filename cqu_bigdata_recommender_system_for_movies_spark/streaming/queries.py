@@ -17,9 +17,13 @@ Coverage here:
 - S5  console sink: ``run_console_sink`` (smoke-tested in pytest).
 - S6 + ST6 + M8  foreachBatch recommendation emission:
   ``streaming_recommend_emit`` — per micro-batch stateful interest update →
-  cosine vs item profiles → top-10 per user → append to a recommendations
-  table (reference streaming_rec.py:190-198 driving 106-126, minus its
-  first()-only bug).
+  cosine vs item profiles → top-10 per user, appended through
+  ``emissions`` (reference streaming_rec.py:190-198 driving 106-126, minus
+  its first()-only bug). ``emissions`` is the one foreachBatch emission
+  sink; its ``latest_by`` keeps each user's rows from the user's last
+  batch. Streams replayed from a staged table write it with
+  ``stage_slices`` (one file per slice value) and read it with ``replay``
+  (one file per micro-batch).
 - ST1/ST2  availableNow micro-batches; append/update/complete modes.
 - ST3  per-key state: streaming_interest_fold (applyInPandasWithState).
 - ST4  watermarks: ``streaming_watermarked_counts`` (withWatermark +
@@ -33,22 +37,48 @@ import hashlib
 import itertools
 from contextlib import contextmanager
 import os
+import shutil
 import tempfile
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.storagelevel import StorageLevel
 
+from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
+    HAMMING_MAX,
+    _simhash_value_sql,
+)
+from cqu_bigdata_recommender_system_for_movies_spark.operators.sketches import (
+    HLL_LG_K,
+    TOPK_MAX_ITEMS_TRACKED,
+    _hll_band_cols,
+)
+from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
+    EPS,
+    dot,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.operators.windows import (
     SESSION_GAP_MIN,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
+from cqu_bigdata_recommender_system_for_movies_spark.session import shuffle_partitions
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
+    EVENT_TYPES,
     interest_fold_stream,
 )
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.simdedup import (
+    dedup_stream,
+    with_fingerprint,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import STATE_SHARDS
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load
+from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    EVENTS_RAW_SCHEMA,
+    _events_ts_is_nanos,
+    _nanos_to_ts,
+    load,
+)
 
 _counter = itertools.count()
 
@@ -143,12 +173,6 @@ def _as_stream_dir(file_path: str) -> str:
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (S4 socket stand-in)."""
-    from cqu_bigdata_recommender_system_for_movies_spark.tables import (
-        EVENTS_RAW_SCHEMA,
-        _events_ts_is_nanos,
-        _nanos_to_ts,
-    )
-
     stream_dir = _as_stream_dir(f"{sf_dir}/events.parquet")
     if _events_ts_is_nanos(sf_dir):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -171,6 +195,66 @@ def drain(writer: DataStreamWriter) -> StreamingQuery:
     finally:
         q.stop()
     return q
+
+
+def stage_slices(df: DataFrame, slice_col: str, n_slices: int, stage_dir: str) -> None:
+    """Write ``df`` under ``stage_dir`` in one job, one ``slice_col=``
+    partition directory holding one file per slice value. Hashing the
+    values onto ``n_slices`` tasks may put two values in one task, but
+    partitionBy still gives each its own file."""
+    (
+        df.repartition(n_slices, slice_col)
+        .write.mode("overwrite")
+        .partitionBy(slice_col)
+        .parquet(stage_dir)
+    )
+
+
+def replay(spark: SparkSession, stage_dir: str, schema) -> DataFrame:
+    """The file stream over ``stage_dir``, one file per micro-batch.
+    ``schema`` includes the slice column of a `stage_slices` stage. The
+    source may merge the first files into one batch, so no result may
+    depend on the slicing."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
+    )
+
+
+def emissions(
+    stream: DataFrame,
+    score: Callable[[DataFrame], DataFrame],
+    mode: str,
+    latest_by: str | None = None,
+) -> DataFrame:
+    """Drain ``stream`` in ``mode``, appending ``score(batch)`` plus the
+    batch_id to a private parquet directory, and return the emitted rows
+    (without batch_id) as a serialized localCheckpoint. With
+    ``latest_by``, keep each key's rows from that key's last batch. The
+    directory is removed on return and on failure."""
+    out_dir = tempfile.mkdtemp(prefix="spark_graft_emit_")
+
+    def emit(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            score(batch_df)
+            .withColumn("batch_id", F.lit(int(batch_id)))
+            .write.mode("append")
+            .parquet(out_dir)
+        )
+
+    try:
+        drain(stream.writeStream.foreachBatch(emit).outputMode(mode))
+        rows = stream.sparkSession.read.parquet(out_dir)
+        cols = [c for c in rows.columns if c != "batch_id"]
+        if latest_by is not None:
+            last = rows.groupBy(latest_by).agg(F.max("batch_id").alias("batch_id"))
+            rows = rows.join(last, [latest_by, "batch_id"])
+        return rows.select(*cols).localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
@@ -327,10 +411,6 @@ def item_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution — the analogue of the reference's per-movie genre vector
     (streaming_rec.py:130-134), derived from behavior instead of metadata.
     Output: (item_ref, profile: array<double> over EVENT_TYPES order)."""
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
-        EVENT_TYPES,
-    )
-
     events = load(spark, sf_dir, "events")
     typed = events.select(
         F.get_json_object("props", "$.k").cast("int").alias("item_ref"),
@@ -428,16 +508,6 @@ def item_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Returns the final recommendations (latest batch per user).",
 )
 def streaming_recommend_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
-        EPS,
-        dot,
-    )
-
     # Materialize the item-profile dim ONCE: foreachBatch re-evaluates every
     # DataFrame it closes over per micro-batch, so without the checkpoint the
     # events scan + groupBy under item_profiles would re-run for every batch
@@ -452,10 +522,8 @@ def streaming_recommend_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("pnorm", F.sqrt(dot("profile", "profile")))
         .localCheckpoint(eager=True)
     )
-    out_dir = tempfile.mkdtemp(prefix="spark_graft_recs_")
-    shutil.rmtree(out_dir, ignore_errors=True)  # foreachBatch appends fresh
 
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
+    def score(batch_df: DataFrame) -> DataFrame:
         # state is unrounded (ADVICE r6): round interest to 6 dp in the
         # plan (F.round = DuckDB ROUND) BEFORE scoring, matching the
         # oracle's fold -> round -> cosine -> round pipeline exactly.
@@ -482,41 +550,14 @@ def streaming_recommend_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
         )
         w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_ref"))
-        top = scored.withColumn("rnk", F.row_number().over(w)).filter(
+        return scored.withColumn("rnk", F.row_number().over(w)).filter(
             F.col("rnk") <= 10
-        )
-        (
-            top.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("append")
-            .parquet(out_dir)
         )
 
     folded = interest_fold_stream(_events_stream(spark, sf_dir))
     with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
-        drain(folded.writeStream.foreachBatch(emit).outputMode("update"))
-
-    recs = spark.read.parquet(out_dir)
-    last = recs.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))
-    snap = recs.join(last, ["user_id", "batch_id"]).select(
-        "user_id", "item_ref", "rnk", "score"
-    )
-    return _snapshot_and_clean(snap, out_dir)
-
-
-def _snapshot_and_clean(df: DataFrame, out_dir: str) -> DataFrame:
-    """Materialize a foreachBatch snapshot off its mkdtemp parquet staging
-    (serialized localCheckpoint — the snapshot is small: final top-k /
-    model rows per user) so the staging dir can be removed immediately
-    instead of leaking one temp dir per invocation (ADVICE r12). The
-    serialized level is the corpus-checkpoint convention (VERDICT r11:
-    MEMORY_AND_DISK in PySpark IS the serialized level)."""
-    import shutil
-
-    from pyspark.storagelevel import StorageLevel
-
-    snap = df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return snap
+        recs = emissions(folded, score, "update", latest_by="user_id")
+    return recs.select("user_id", "item_ref", "rnk", "score")
 
 
 def run_console_sink(stream_df: DataFrame, mode: str = "append") -> int:
@@ -923,11 +964,6 @@ def streaming_hash_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact anchor column is what the oracle hashes.",
 )
 def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.sketches import (
-        HLL_LG_K,
-        _hll_band_cols,
-    )
-
     stream = _events_stream(spark, sf_dir)
     sketched = stream.groupBy("event_type").agg(
         F.expr(f"hll_sketch_agg(user_id, {HLL_LG_K})").alias("sk")
@@ -970,10 +1006,6 @@ STREAM_TOPK_K = 10
     "maxItemsTracked exceeds the distinct-user count.",
 )
 def streaming_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.sketches import (
-        TOPK_MAX_ITEMS_TRACKED,
-    )
-
     stream = _events_stream(spark, sf_dir)
     sketched = stream.agg(
         F.expr(
@@ -993,7 +1025,7 @@ def streaming_approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 UPSERT_N_SLICES = 3  # staged source files -> micro-batches
-LAST_UPSERT_VERSIONS: list[int] = []  # snapshot versions of the last run (test hook)
+LAST_UPSERT_BATCH_ROWS: list[int] = []  # input rows per batch of the last run (test hook)
 
 
 @register(
@@ -1006,8 +1038,9 @@ LAST_UPSERT_VERSIONS: list[int] = []  # snapshot versions of the last run (test 
     """,
     doc="Streaming upsert into a snapshot table — the foreachBatch MERGE "
     "pattern every lakehouse streaming sink implements: the source is "
-    "staged into 3 files consumed one per micro-batch "
-    "(maxFilesPerTrigger=1), and each batch full-outer-merges its "
+    "staged as one file per event_id % 3 slice and replayed one file per "
+    "micro-batch (the file source may merge the first files into one "
+    "batch), and each batch full-outer-merges its "
     "per-user aggregate into the previous snapshot version by pure "
     "arithmetic (counts and exact per-event cents add), writing an "
     "immutable new version — MVCC-style, never overwriting the file a "
@@ -1018,19 +1051,12 @@ LAST_UPSERT_VERSIONS: list[int] = []  # snapshot versions of the last run (test 
     "boundaries, not just within one.",
 )
 def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    events = load(spark, sf_dir, "events")
+    sliced = load(spark, sf_dir, "events").withColumn(
+        "slice", F.pmod("event_id", F.lit(UPSERT_N_SLICES))
+    )
     stage_dir = tempfile.mkdtemp(prefix="spark_graft_upsert_src_")
-    # stage the source as N files so availableNow + maxFilesPerTrigger=1
-    # yields N real micro-batches (a single parquet file is one batch)
-    events.withColumn("slice", F.pmod("event_id", F.lit(UPSERT_N_SLICES))).repartition(
-        UPSERT_N_SLICES, "slice"
-    ).drop("slice").write.mode("overwrite").parquet(stage_dir)
-
     snap_root = tempfile.mkdtemp(prefix="spark_graft_upsert_snap_")
     state = {"version": -1}
-    LAST_UPSERT_VERSIONS.clear()
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         delta = batch_df.groupBy("user_id").agg(
@@ -1059,15 +1085,19 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = delta
         merged.write.mode("overwrite").parquet(f"{snap_root}/v{int(batch_id)}")
         state["version"] = int(batch_id)
-        LAST_UPSERT_VERSIONS.append(int(batch_id))
 
-    schema = events.schema
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(stage_dir)
-    drain(stream.writeStream.foreachBatch(merge_batch).outputMode("update"))
-
-    return spark.read.parquet(f"{snap_root}/v{state['version']}")
+    try:
+        stage_slices(sliced, "slice", UPSERT_N_SLICES, stage_dir)
+        stream = replay(spark, stage_dir, sliced.schema).drop("slice")
+        q = drain(stream.writeStream.foreachBatch(merge_batch).outputMode("update"))
+        LAST_UPSERT_BATCH_ROWS[:] = [p["numInputRows"] for p in q.recentProgress]
+        # the final version must outlive snap_root
+        return spark.read.parquet(f"{snap_root}/v{state['version']}").localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+        shutil.rmtree(snap_root, ignore_errors=True)
 
 
 @register(
@@ -1199,11 +1229,6 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _simdedup_oracle() -> str:
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
-        HAMMING_MAX,
-        _simhash_value_sql,
-    )
-
     return f"""
     WITH {_simhash_value_sql()}
     SELECT a.doc_id AS doc_id,
@@ -1236,37 +1261,21 @@ def _simdedup_oracle() -> str:
     "marks a doc with no smaller near-duplicate.",
 )
 def streaming_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.simdedup import (
-        dedup_stream,
-        with_fingerprint,
-    )
-
     docs = load(spark, sf_dir, "documents")
-    # stage the corpus so availableNow + maxFilesPerTrigger=1 yields 3
-    # real micro-batches and state genuinely crosses batches. partitionBy
-    # makes each slice ITS OWN file deterministically — a plain
-    # repartition(3, "slice") hash-partitions and can collide two slices
-    # into one file, voiding the cross-batch guarantee the pytest's
-    # doc_id % 3 != dup_of % 3 assertion relies on (ADVICE r10).
+    # stage the corpus as 3 slices so state genuinely crosses batches
+    # (the pytest's doc_id % 3 != dup_of % 3 assertion relies on it)
+    sliced = docs.withColumn("slice", F.pmod("doc_id", F.lit(3)).cast("int"))
     stage_dir = tempfile.mkdtemp(prefix="spark_graft_simdedup_src_")
-    docs.withColumn("slice", F.pmod("doc_id", F.lit(3)).cast("int")).repartition(
-        3, "slice"
-    ).write.mode("overwrite").partitionBy("slice").parquet(stage_dir)
-    # build the read schema from a COPY: StructType.add mutates self, and
-    # DataFrame.schema is cached, so adding to docs.schema directly would
-    # leave docs with a phantom "slice" field (ADVICE r11)
-    read_schema = T.StructType(list(docs.schema.fields)).add("slice", "integer")
-    stream = (
-        spark.readStream.schema(read_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .drop("slice")
-    )
-    with _stream_state_partitions(spark, source_path=stage_dir):
-        emissions = _run_to_memory(dedup_stream(stream), "update")
+    try:
+        stage_slices(sliced, "slice", 3, stage_dir)
+        stream = replay(spark, stage_dir, sliced.schema).drop("slice")
+        with _stream_state_partitions(spark, source_path=stage_dir):
+            emitted = _run_to_memory(dedup_stream(stream), "update")
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
     # direct pair rows: the arriving doc's own best partner per bucket
     direct = (
-        emissions.filter(F.col("dup_id").isNotNull())
+        emitted.filter(F.col("dup_id").isNotNull())
         .groupBy("dup_id")
         .agg(F.min("of_id").alias("dup_of"))
     )
@@ -1275,7 +1284,7 @@ def streaming_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint; min per group is valid because the per-doc filter
     # of_id < doc_id keeps exactly the partners the group min represents
     corr = (
-        emissions.filter(F.col("grp").isNotNull())
+        emitted.filter(F.col("grp").isNotNull())
         .groupBy("grp")
         .agg(F.min("of_id").alias("corr_of"))
     )
@@ -1284,10 +1293,6 @@ def streaming_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallelism (one small file = one task); repartition to machine
     # width and checkpoint so it runs once, wide (guide §1.2/§2.4 — same
     # fold, same rows, identical fingerprints)
-    from cqu_bigdata_recommender_system_for_movies_spark.session import (
-        shuffle_partitions,
-    )
-
     n_fold = max(
         shuffle_partitions(spark), spark.sparkContext.defaultParallelism
     )

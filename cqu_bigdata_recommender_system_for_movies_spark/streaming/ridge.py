@@ -43,6 +43,12 @@ from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import regis
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.interest import (
     DIM,  # item-profile dimensionality = len(EVENT_TYPES); one source of truth
 )
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+    _events_stream,
+    _run_to_memory,
+    _stream_state_partitions,
+    item_profiles,
+)
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import sharded_fold
 
 REG = 0.1  # same regParam family as ml/als.py fit_als / ml/foldin.py
@@ -129,52 +135,20 @@ def ridge_fold_stream(stream_df: DataFrame, profiles: DataFrame) -> DataFrame:
 
 
 def streaming_online_ridge_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(user_id, n_events, theta): the LAST batch emission per user — the
-    cumulative model over all of the user's profiled events. Consumed by
-    the registered count-anchored query and by pytest's batch twin."""
-    import shutil
-    import tempfile
-
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _events_stream,
-        _stream_state_partitions,
-        drain,
-        item_profiles,
-    )
-
+    """(user_id, n_events, theta): each user's latest emission, the
+    cumulative model over all of the user's profiled events. A user's
+    n_events grows with every batch that sees the user, so the latest
+    row is the one with the largest n_events. Consumed by the registered
+    count-anchored query and by pytest's batch twin."""
     profiles = item_profiles(spark, sf_dir).localCheckpoint(eager=True)
-    out_dir = tempfile.mkdtemp(prefix="spark_graft_ridge_")
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    # ADVICE r13: pass the stream's actual source so the scale-aware
-    # derivation sees the real row count — sf0.1 stays on the documented
-    # 8-partition floor (the no-arg call read "size unknown" and fanned
-    # out to min(256, cores), silently polluting the bench attribution),
-    # decade replays still fan out.
+    folded = ridge_fold_stream(_events_stream(spark, sf_dir), profiles)
     with _stream_state_partitions(spark, source_path=f"{sf_dir}/events.parquet"):
-        drain(
-            ridge_fold_stream(_events_stream(spark, sf_dir), profiles)
-            .writeStream.foreachBatch(emit)
-            .outputMode("update")
-        )
-
-    rows = spark.read.parquet(out_dir)
-    last = rows.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))
-    snap = rows.join(last, ["user_id", "batch_id"]).select(
-        "user_id", "n_events", "theta"
+        rows = _run_to_memory(folded, "update")
+    return (
+        rows.groupBy("user_id")
+        .agg(F.max(F.struct("n_events", "theta")).alias("s"))
+        .select("user_id", "s.n_events", "s.theta")
     )
-    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        _snapshot_and_clean,
-    )
-
-    return _snapshot_and_clean(snap, out_dir)
 
 
 @register(

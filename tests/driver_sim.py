@@ -2,10 +2,11 @@
 the engine's session config), run entry() + every queries() entry at sf0.01,
 compare oracle-paired ones against DuckDB on count/schema/values."""
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

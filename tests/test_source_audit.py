@@ -22,6 +22,11 @@ here so they cannot silently erode:
 4. One sharded-state fold: `streaming/state.py` holds the only
    `applyInPandasWithState` call, the only shard-count constant and the
    only `GroupState` / `GroupStateTimeout` import.
+
+5. One staged replay and one emission sink: `maxFilesPerTrigger` is set
+   only in `streaming/queries.py` `replay`, and `foreachBatch` is called
+   only by the `emissions` sink, the ANN maintenance loop and the upsert
+   merge.
 """
 
 from __future__ import annotations
@@ -70,7 +75,9 @@ COLLECT_WHITELIST = {
 DRIVER_SINKS = ("collect", "toPandas", "toLocalIterator")
 
 
-def _call_sites():
+def _sites(match):
+    """(module, innermost enclosing function, line) of every node that
+    ``match`` accepts."""
     sites = []
     for py in sorted(PKG.rglob("*.py")):
         tree = ast.parse(py.read_text())
@@ -81,10 +88,14 @@ def _call_sites():
         ]
         rel = str(py.relative_to(PKG))
         for node in ast.walk(tree):
-            if isinstance(node, ast.Attribute) and node.attr in DRIVER_SINKS:
+            if match(node):
                 enclosing = [n for s, e, n in funcs if s <= node.lineno <= e]
                 sites.append((rel, enclosing[-1] if enclosing else "<module>", node.lineno))
     return sites
+
+
+def _call_sites():
+    return _sites(lambda n: isinstance(n, ast.Attribute) and n.attr in DRIVER_SINKS)
 
 
 def test_driver_materialization_is_whitelisted():
@@ -253,3 +264,36 @@ def test_group_state_imported_only_by_state_helper():
         and rel != "streaming/state.py"
     )
     assert not importers, f"GroupState imported outside streaming/state.py: {importers}"
+
+
+def test_max_files_per_trigger_set_only_by_replay():
+    sites = _sites(lambda n: isinstance(n, ast.Constant) and n.value == "maxFilesPerTrigger")
+    assert {(rel, fn) for rel, fn, _ in sites} == {("streaming/queries.py", "replay")}, (
+        f"file-replayed streams read through streaming/queries.py replay: {sites}"
+    )
+
+
+FOREACH_BATCH_SITES = {
+    ("streaming/queries.py", "emissions"),
+    ("streaming/ann_index.py", "drain"),
+    ("streaming/queries.py", "streaming_upsert_merge"),
+}
+
+
+def test_foreach_batch_only_in_the_emission_sinks():
+    sites = _sites(lambda n: isinstance(n, ast.Attribute) and n.attr == "foreachBatch")
+    assert {(rel, fn) for rel, fn, _ in sites} == FOREACH_BATCH_SITES, (
+        "per-batch emissions go through streaming/queries.py emissions: "
+        f"{sites}"
+    )
+
+
+def test_retired_staging_and_snapshot_helpers_are_gone():
+    names = ("_snapshot_and_clean", "_stage_arrivals")
+    found = sorted(
+        f"{py.relative_to(PKG)}: {name}"
+        for py in PKG.rglob("*.py")
+        for name in names
+        if name in py.read_text()
+    )
+    assert not found, f"stage with stage_slices, emit with emissions: {found}"

@@ -233,17 +233,92 @@ def test_checkpoint_resume_is_exactly_once(spark, sf_dir):
 def test_upsert_merge_is_actually_incremental(spark, sf_dir):
     """The exactly-once claim is only meaningful if the snapshot really
     crossed micro-batch boundaries: the staged 3-slice source must yield
-    multiple versions, each merged from the previous."""
+    multiple non-empty batches, each merged into the previous version,
+    that together hold every event once."""
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
-        LAST_UPSERT_VERSIONS,
+        LAST_UPSERT_BATCH_ROWS,
         streaming_upsert_merge,
     )
 
     out = streaming_upsert_merge(spark, sf_dir)
     assert out.count() > 0
-    assert len(LAST_UPSERT_VERSIONS) >= 2, (
-        f"only {LAST_UPSERT_VERSIONS} micro-batches — merge path never ran"
+    rows = list(LAST_UPSERT_BATCH_ROWS)
+    # availableNow may merge the first staged files into one batch
+    assert len(rows) >= 2, f"only {rows} micro-batches — merge path never ran"
+    assert all(n > 0 for n in rows), f"an empty micro-batch among {rows}"
+    assert sum(rows) == load(spark, sf_dir, "events").count()
+
+
+def test_stage_slices_one_nonempty_file_per_slice(spark, tmp_path):
+    """Bigint slice ids 0..2 hash onto fewer than 3 of the 3 tasks, so a
+    plain repartition puts two slices in one file and writes an empty
+    one; stage_slices still writes one non-empty file per slice value."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+        stage_slices,
     )
+
+    df = spark.range(30).withColumn("slice", F.col("id") % 3)
+    tasks = df.repartition(3, "slice").select(F.spark_partition_id()).distinct()
+    assert tasks.count() < 3  # the collision this guards against
+    stage = str(tmp_path / "stage")
+    stage_slices(df, "slice", 3, stage)
+    files = {
+        os.path.basename(root): [os.path.join(root, f) for f in names if f.endswith(".parquet")]
+        for root, _, names in os.walk(stage)
+        if os.path.basename(root).startswith("slice=")
+    }
+    assert sorted(files) == ["slice=0", "slice=1", "slice=2"]
+    for paths in files.values():
+        assert len(paths) == 1
+        assert pq.ParquetFile(paths[0]).metadata.num_rows == 10
+
+
+def test_file_replayed_streams_leave_no_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """Staging, snapshot and emission directories are removed when the
+    query returns, and the emission directory also when the stream
+    fails; only the shared stream-symlink and table roots stay."""
+    import os
+    import tempfile
+
+    from cqu_bigdata_recommender_system_for_movies_spark.shipping import ensure_shipped
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+        emissions,
+        replay,
+        stage_slices,
+        streaming_simhash_dedup,
+        streaming_upsert_merge,
+    )
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.ridge import (
+        streaming_online_ridge_detail,
+    )
+
+    # the shipped package zip is one per process, not per query
+    ensure_shipped(spark)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    for query in (
+        streaming_upsert_merge,
+        streaming_simhash_dedup,
+        streaming_online_ridge_detail,
+        streaming_recommend_emit,
+    ):
+        query(spark, sf_dir)
+
+    def fail(batch):
+        raise RuntimeError("scoring failed")
+
+    df = spark.range(4).withColumn("slice", F.col("id") % 2)
+    stage = str(tmp_path / "stage")
+    stage_slices(df, "slice", 2, stage)
+    with pytest.raises(Exception, match="scoring failed"):
+        emissions(replay(spark, stage, df.schema), fail, "append")
+    left = set(os.listdir(tmp))
+    assert left <= {"spark_graft_streams", "spark_graft_tables"}, left
 
 
 # --- round-10: streaming SimHash near-dup detection ------------------------
@@ -1083,6 +1158,9 @@ def test_ann_index_crud_result_ignores_arrival_order(spark, sf_dir):
     import time
 
     import cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index as ai
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+        stage_slices,
+    )
 
     n = ai.N_DELETE_SLICES
     tbl = "spark_graft_ann_order_test"
@@ -1104,7 +1182,7 @@ def test_ann_index_crud_result_ignores_arrival_order(spark, sf_dir):
     )
     stage = tempfile.mkdtemp(prefix="spark_graft_ann_order_stage_")
     try:
-        ai._stage_arrivals(arrivals, stage, n)
+        stage_slices(arrivals, "ver", n, stage)
         # the file source replays in mtime order: ver=4 oldest, ver=0 newest
         base = time.time() - 100.0
         for ver in range(n):

@@ -31,7 +31,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load
@@ -60,29 +59,24 @@ def main() -> None:
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
         STREAM_STATE_PARTITIONS,
         _stream_state_partitions,
+        replay,
+        stage_slices,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.simdedup import (
         dedup_stream,
     )
 
-    docs = load(spark, sf_dir, "documents")
+    sliced = load(spark, sf_dir, "documents").withColumn(
+        "slice", F.pmod("doc_id", F.lit(n_slices)).cast("int")
+    )
     stage_dir = tempfile.mkdtemp(prefix="simdedup_probe_src_")
     t0 = time.perf_counter()
-    docs.withColumn(
-        "slice", F.pmod("doc_id", F.lit(n_slices)).cast("int")
-    ).repartition(n_slices, "slice").write.mode("overwrite").partitionBy(
-        "slice"
-    ).parquet(stage_dir)
+    stage_slices(sliced, "slice", n_slices, stage_dir)
     print(
         json.dumps({"staged_sec": round(time.perf_counter() - t0, 1)}), flush=True
     )
 
-    stream = (
-        spark.readStream.schema(T.StructType(list(docs.schema.fields)).add("slice", "integer"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .drop("slice")
-    )
+    stream = replay(spark, stage_dir, sliced.schema).drop("slice")
 
     emitted = {"rows": 0, "per_batch": {}}
 

@@ -28,11 +28,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.candidates import (
     derive_rec_cells,
+)
+from cqu_bigdata_recommender_system_for_movies_spark.streaming.queries import (
+    replay,
+    stage_slices,
 )
 
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load
@@ -71,22 +74,10 @@ def _staged_stream(spark, sf_dir: str, n_slices: int, by_time: bool = False):
             staged.filter(F.col("slice") == s).drop("slice").coalesce(
                 1
             ).write.mode("append").parquet(stage_dir)
-        return (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-    events.withColumn(
-        "slice", F.pmod("event_id", F.lit(n_slices)).cast("int")
-    ).repartition(n_slices, "slice").write.mode("overwrite").partitionBy(
-        "slice"
-    ).parquet(stage_dir)
-    return (
-        spark.readStream.schema(T.StructType(list(events.schema.fields)).add("slice", "integer"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .drop("slice")
-    )
+        return replay(spark, stage_dir, events.schema)
+    sliced = events.withColumn("slice", F.pmod("event_id", F.lit(n_slices)).cast("int"))
+    stage_slices(sliced, "slice", n_slices, stage_dir)
+    return replay(spark, stage_dir, sliced.schema).drop("slice")
 
 
 def _window_counts(stream):
