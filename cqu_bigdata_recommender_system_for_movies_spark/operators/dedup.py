@@ -1,28 +1,42 @@
-"""Deduplication operators (north-star extension): exact, n-gram Jaccard,
-and MinHash+LSH near-dup detection over the documents table.
+"""Deduplication and set-similarity operators over the documents table:
+exact dedup, n-gram Jaccard, AllPairs prefix filtering, MinHash+LSH,
+SimHash, connected components and survivor selection.
 
-Scale design:
-- exact dedup      -> hash-groupBy on the full text: one shuffle, map-side
-  partial agg; at 100 TB group on md5(text) so the shuffle key is 16 bytes,
-  not the document body.
-- n-gram Jaccard   -> inverted-index self-join on 5-token shingles. 5-grams
-  are sparse enough that the join output is ~(true near-dup pairs) +
-  a small collision tail, instead of the O(n²) all-pairs blow-up.
-- MinHash + LSH    -> the 100 TB path: fixed-size signature (16 hashes) per
-  doc, banded into 4 LSH keys of 4 hashes each; candidate pairs come from
-  equi-joins on band keys (shuffle on a tiny key), then only candidates
-  are verified with exact Jaccard.
+Every set-similarity query has one shape, candidates then verify, and
+each step of it is one function here that every query calls:
 
-Portability trick for the DuckDB oracle: both engines hash a shingle to
-int64 via ``int(md5(s)[:8], 16)`` (Spark ``conv(substring(md5,1,8),16,10)``,
-DuckDB ``('0x' || substr(md5,1,8))::BIGINT``), and MinHash uses integer
-affine hashes ``(a*v + b) % P`` — exact in both engines.
+- ``_shingle_hashes(spark, sf_dir, n)``: (doc_id, hv), the portable hash
+  of every n-token shingle. The n-gram, MinHash and prefix queries read
+  it at n=5 through ``_doc_hash_arrays``, the session-cached per-doc hash
+  arrays; ``text.contamination_check`` reads it at n=3.
+- ``_band_buckets(df, band_structs)``: (band, key, ds) LSH buckets that
+  hold at least two docs, for the MinHash bands and the SimHash blocks.
+- ``_pairs_in_array(col)``: the map-side pairs of one bounded array
+  (also the item-CF co-occurrence pairs in ``itemcf.py``).
+- ``_bucket_pairs(buckets, key_cols)``: the distinct candidate pairs of
+  a bucket table; small buckets pair in-array, big ones stream through a
+  chunked keyed self-join, so no bucket is ever one quadratic object.
+- ``_minhash_sig(arrays)``: the 16-hash MinHash signature as an array.
+- ``_verified_jaccard(cand, arrays, threshold)``: the exact Jaccard of
+  each candidate pair from both docs' hash arrays, kept at the
+  threshold and rounded to 6 dp.
+
+Candidate generation never compares all pairs: the n-gram query joins
+through df-capped posting lists, MinHash through 4 bands of 4 hashes,
+SimHash through Manku's 4 disjoint 16-bit blocks, prefix filtering
+through each doc's rarest tokens. Exact dedup is a hash-groupBy on
+md5(text), so the shuffle key is 16 bytes, not the document body.
+
+Portability with the DuckDB oracles: both engines hash a shingle to
+int64 via ``int(md5(s)[:8], 16)`` (``tables.md5_long``; DuckDB
+``('0x' || substr(md5,1,8))::BIGINT``), and MinHash uses integer affine
+hashes ``(a*v + b) % P``, exact in both engines.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
@@ -30,7 +44,11 @@ from cqu_bigdata_recommender_system_for_movies_spark.session import (
     session_cache,
     shuffle_partitions,
 )
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load, scan_fanout
+from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    load,
+    load_fanned_out,
+    md5_long,
+)
 
 SHINGLE_N = 5
 JACCARD_THRESHOLD = 0.3
@@ -106,35 +124,24 @@ _SHINGLES_SQL = f"""
 """
 
 
-def _shingles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, hv): hashed 5-token shingles per document, NOT deduplicated —
-    a narrow scan-side stream (split/slice/md5, zero shuffle). Every consumer
-    folds it through a duplicate-insensitive set aggregate (``collect_set``
-    for shingle sets and posting lists, ``min`` for MinHash), so a separate
-    ``distinct`` would just add a full shuffle of the exploded stream for
-    nothing — the round-2 plan paid that shuffle twice per query."""
-    docs = load(spark, sf_dir, "documents")
-    # r16 (guide §2.5 input skew): a small one-file scan runs this whole
-    # CPU-dense md5-shingle pipeline on ONE task — fan out first when the
-    # scan's natural split count is under machine width (scan_fanout is
-    # None at scale, where the exchange would be pure cost)
-    fan = scan_fanout(spark, sf_dir, "documents")
-    if fan:
-        docs = docs.repartition(fan)
+def _shingle_hashes(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """(doc_id, hv): the portable hash of every n-token shingle (tokens
+    joined by ``_``) of every document, NOT deduplicated: split, slice
+    and md5 per row, no shuffle past the scan fan-out (on a one-file scan
+    the md5 pipeline would otherwise run as one task). Consumers fold it
+    through a duplicate-insensitive aggregate (``collect_set``) or add
+    their own ``distinct``."""
+    docs = load_fanned_out(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda w: w != "")
-    n_sh = F.greatest(F.size(toks) - (SHINGLE_N - 1), F.lit(0))
+    n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     shingles = F.when(n_sh > 0,
         F.transform(
             F.sequence(F.lit(1), n_sh),
-            lambda i: F.concat_ws("_", F.slice(toks, i, SHINGLE_N)),
+            lambda i: F.concat_ws("_", F.slice(toks, i, n)),
         ),
     ).otherwise(F.array())
-    return (
-        docs.select("doc_id", F.explode(shingles).alias("s"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long").alias("hv"),
-        )
+    return docs.select("doc_id", F.explode(shingles).alias("s")).select(
+        "doc_id", md5_long("s").alias("hv")
     )
 
 
@@ -159,7 +166,7 @@ def _doc_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache(
         spark,
         ("dedup_hash_arrays", sf_dir),
-        lambda: _shingles_raw(spark, sf_dir)
+        lambda: _shingle_hashes(spark, sf_dir, SHINGLE_N)
         .groupBy("doc_id")
         .agg(F.collect_set("hv").alias("hvs"))
         .localCheckpoint(eager=False),
@@ -237,21 +244,15 @@ _NGRAM_PAIRS_SQL = f"""
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays = _doc_hash_arrays(spark, sf_dir)
-    # Posting lists are derived by RE-EXPLODING the checkpointed hash-array
-    # table, not by re-reading the corpus: the explode emits (doc_id, hv)
-    # already-distinct pairs straight out of memory, so candidate generation
-    # costs one shuffle on the 8-byte hv — benchmarked ~4x faster than
-    # aggregating the raw scan-side shingle stream a second time. The pairs
-    # are generated map-side inside the (df-capped) posting array; a
-    # self-join formulation would shuffle each posting twice.
-    # data-derived df cap (see SHINGLE_DF_CAP comment): greatest(50,
-    # n_docs/100), 1-row broadcast scalar, same expression AND same row set
-    # as the oracle's scalar subquery — COUNT(*) over the documents TABLE,
-    # not over the shingle-array table: docs shorter than SHINGLE_N tokens
-    # produce zero shingles and are absent from `arrays`, so counting
-    # arrays rows diverges from the oracle's COUNT(*) FROM documents once
-    # n_docs clears the floor (ADVICE r8). The count is metadata-only
-    # (parquet row-group stats), so this costs no extra corpus scan.
+    # Posting lists come from RE-EXPLODING the checkpointed hash arrays,
+    # not from a second corpus scan: the explode emits already-distinct
+    # (doc_id, hv) rows, so candidate generation costs one shuffle on the
+    # 8-byte hv (benchmarked ~4x faster than re-aggregating the scan).
+    # The df cap (see SHINGLE_DF_CAP) counts the documents TABLE, as the
+    # oracle's scalar subquery does: docs shorter than SHINGLE_N tokens
+    # have no shingles and no `arrays` row, so counting `arrays` would
+    # diverge once n_docs clears the floor. The count is parquet
+    # metadata, no extra corpus scan.
     cap_row = load(spark, sf_dir, "documents").agg(
         F.expr("greatest(50L, count(1) div 100)").alias("df_cap")
     )
@@ -261,22 +262,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_set("doc_id").alias("ds"))
         .crossJoin(F.broadcast(cap_row))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= F.col("df_cap")))
-        .localCheckpoint(eager=False)  # both size branches read it
     )
-    # size-split pair generation (_bucket_pairs): small posting lists pair
-    # map-side inside the array; big lists (only exist once the derived cap
-    # exceeds the floor) stream through a keyed self-join
-    cand = _bucket_pairs(posts, ["hv"]).distinct()
-    aa = arrays.select(F.col("doc_id").alias("doc_a"), F.col("hvs").alias("hvs_a"))
-    ab = arrays.select(F.col("doc_id").alias("doc_b"), F.col("hvs").alias("hvs_b"))
-    common = F.size(F.array_intersect("hvs_a", "hvs_b"))
-    jac = common * 1.0 / (F.size("hvs_a") + F.size("hvs_b") - common)
-    return (
-        cand.join(aa, "doc_a")
-        .join(ab, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _verified_jaccard(_bucket_pairs(posts, ["hv"]), arrays, JACCARD_THRESHOLD)
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -304,24 +291,19 @@ def _token_hashes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hv1, hv2): two independent 32-bit md5-prefix hashes per
     DISTINCT token — the bit sources for the 64-bit SimHash.
 
-    Hash FIRST (map-side), dedup on the fixed-width hash longs AFTER: the
-    r8 100x probe GC-thrashed a 16 GiB heap deduping ~400M
-    (doc_id, token-string) rows, while (doc_id, hv1, hv2) rows are 24
+    Hash FIRST (map-side), dedup on the fixed-width hash longs AFTER: a
+    16 GiB heap GC-thrashed deduping ~400M (doc_id, token-string) rows
+    at a 100x replica, while (doc_id, hv1, hv2) rows are 24
     fixed bytes — a 3-4x smaller shuffle and hash map at every scale.
     Dedup-on-hash equals dedup-on-token unless two distinct tokens in one
     doc collide on the full 64-bit md5 prefix (~n²/2^65 per doc);
     the oracle applies the SAME distinct-after-hash, so both engines
     conflate identically even then."""
-    docs = load(spark, sf_dir, "documents")
-    fan = scan_fanout(spark, sf_dir, "documents")  # r16: see _shingles_raw
-    if fan:
-        docs = docs.repartition(fan)
+    docs = load_fanned_out(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda w: w != "")
     tok = docs.select("doc_id", F.explode(toks).alias("w"))
     return tok.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("hv1"),
-        F.conv(F.substring(F.md5("w"), 9, 8), 16, 10).cast("long").alias("hv2"),
+        "doc_id", md5_long("w").alias("hv1"), md5_long("w", 9).alias("hv2")
     ).distinct()
 
 
@@ -389,25 +371,13 @@ HAMMING_MAX = 3  # near-dup iff fingerprints differ in <= 3 of 64 bits
 # (Manku's k=3 on 64-bit fingerprints)
 SIMHASH_BANDS = 4  # pigeonhole: 3 flipped bits touch <= 3 of any 4 disjoint
 # bit blocks, so a pair within HAMMING_MAX agrees exactly on >= 1 block and
-# block-bucket candidate generation is LOSSLESS for the <= 3 threshold —
-# for ANY block width (verify filters the extra candidates), which is what
-# lets the width scale with the corpus without touching the result.
-SIMHASH_BLOCK_BITS_MAX = SIMHASH_BITS // SIMHASH_BANDS  # 16 — Manku's 4x16
-SIMHASH_BLOCK_BITS_MIN = 4
-
-
-def derive_simhash_block_bits(n_docs: int) -> int:
-    """Band-key width in bits: always the full SIMHASH_BITS/SIMHASH_BANDS
-    (Manku's production 4x16). Because 4 disjoint blocks make banding
-    LOSSLESS for hamming <= 3 at ANY width, width is a pure selectivity
-    knob — wider blocks are strictly better (fewer false candidates),
-    narrower ones never help. The round-4 occupancy-targeted derivation
-    (2^w buckets sized to ~8 docs uniform) undersized w badly in practice:
-    real fingerprints are skew-clustered, and at sf0.1 a 10-bit width
-    admitted 3.65M candidates for 105k true pairs (35x overgeneration in
-    the xor/popcount verify). Kept as a function of n_docs for API
-    stability and so the guard test documents the width contract."""
-    return SIMHASH_BLOCK_BITS_MAX if n_docs > 0 else SIMHASH_BLOCK_BITS_MIN
+# block-bucket candidate generation is LOSSLESS for the <= 3 threshold at
+# any block width (verify filters the extra candidates).
+SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 16: Manku's 4x16. The
+# width only sets selectivity, and the widest disjoint blocks admit the
+# fewest false candidates: an occupancy-derived 10-bit width admitted
+# 3.65M candidates for 105k true pairs at sf0.1 (skew-clustered
+# fingerprints).
 
 
 def _simhash_value_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,17 +440,13 @@ def _simhash_value_sql() -> str:
     "count); hamming-0 pairs stream from a fingerprint self-join and "
     "cross-group pairs re-expand through (rep -> member) joins after "
     "the verify — same result, duplicate-skew-proof buckets, no "
-    "quadratic in-row arrays (the r8 100x probe OOM'd on those).",
+    "quadratic in-row arrays.",
 )
 def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cqu_bigdata_recommender_system_for_movies_spark.tables import table_row_count
-
     # one fingerprint row per doc (checkpointed + session-cached inside
     # _simhash_value_df): banding and both verify probes read it, and the
     # token-hash aggregation must not re-run per probe
-    sim = _simhash_value_df(spark, sf_dir)
-    block_bits = derive_simhash_block_bits(table_row_count(sf_dir, "documents"))
-    return _simhash_pairs_from_values(sim, block_bits)
+    return _simhash_pairs_from_values(_simhash_value_df(spark, sf_dir))
 
 
 def _simhash_groups(sim: DataFrame) -> DataFrame:
@@ -501,38 +467,28 @@ def _simhash_groups(sim: DataFrame) -> DataFrame:
     )
 
 
-def _rep_band_buckets(groups: DataFrame, block_bits: int) -> DataFrame:
-    """(band, key, ds): banded LSH buckets over one representative per
-    distinct fingerprint. Bucket cardinality is bounded by distinct-
-    fingerprint count per (block, value), never by duplicate multiplicity —
-    but LSH concentrates near-dup families of DISTINCT fingerprints into
-    the same band bucket by design, so a hot bucket is still unbounded in
-    the distinct-fingerprint dimension; the column is named ``ds`` so the
-    caller feeds it straight into the size-split ``_bucket_pairs``
-    (ADVICE r8)."""
+def _rep_band_buckets(groups: DataFrame) -> DataFrame:
+    """(band, key, ds): the 4 disjoint 16-bit block buckets over one
+    representative per distinct fingerprint. Bucket size is bounded by the
+    distinct fingerprints per (block, value), never by duplicate
+    multiplicity; LSH still gathers a near-dup family of distinct
+    fingerprints into one bucket by design, which ``_bucket_pairs``
+    bounds."""
+    mask = (1 << SIMHASH_BLOCK_BITS) - 1
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(k).alias("band"),
-                F.expr(f"(sim >> {block_bits * k}) & {(1 << block_bits) - 1}").alias(
-                    "key"
-                ),
+                F.expr(f"(sim >> {SIMHASH_BLOCK_BITS * k}) & {mask}").alias("key"),
             )
             for k in range(SIMHASH_BANDS)
         ]
     )
     reps = groups.select(F.col("docs")[0].alias("doc_id"), "sim")
-    bands = reps.select("doc_id", F.explode(band_structs).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    return (
-        bands.groupBy("band", "key")
-        .agg(F.collect_set("doc_id").alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
+    return _band_buckets(reps, band_structs)
 
 
-def _simhash_pairs_from_values(sim: DataFrame, block_bits: int) -> DataFrame:
+def _simhash_pairs_from_values(sim: DataFrame) -> DataFrame:
     """All (doc_a < doc_b, hamming <= HAMMING_MAX) pairs from a
     (doc_id, sim) fingerprint table. Three stages, all output-bound AND
     streaming (nothing quadratic is ever materialized as one object):
@@ -546,10 +502,10 @@ def _simhash_pairs_from_values(sim: DataFrame, block_bits: int) -> DataFrame:
     groups = _simhash_groups(sim)
     # hamming-0 pairs via a STREAMING self-join on the fingerprint value,
     # NOT _pairs_in_array over the group arrays: the in-row pair array is
-    # quadratic in group size and materializes as ONE object — the r8 100x
-    # probe OOM'd a 16 GiB heap on ~5k-doc duplicate groups (C(5k,2) ≈
-    # 12.5M structs ≈ 300 MB per array, several per task). The join emits
-    # the same pairs row-by-row; skewed fingerprint keys split under AQE.
+    # quadratic in group size and materializes as ONE object (a 16 GiB
+    # heap OOM'd on ~5k-doc duplicate groups at a 100x replica: C(5k,2) ≈
+    # 12.5M structs ≈ 300 MB per array). The join emits the same pairs
+    # row-by-row; skewed fingerprint keys split under AQE.
     la = sim.select(F.col("sim").alias("s0"), F.col("doc_id").alias("doc_a"))
     lb = sim.select(F.col("sim").alias("s0"), F.col("doc_id").alias("doc_b"))
     within = (
@@ -557,22 +513,10 @@ def _simhash_pairs_from_values(sim: DataFrame, block_bits: int) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", F.lit(0).cast("int").alias("hamming"))
     )
-    # size-split pair generation (_bucket_pairs, ADVICE r8): rep buckets
-    # are bounded by DISTINCT fingerprints per (band, key), but LSH
-    # concentrates near-dup families of distinct fingerprints into one
-    # bucket by design — a hot bucket would reproduce the in-row C(n,2)
-    # OOM the exact-dup collapse fixed for duplicate multiplicity.
-    # Checkpointed because both size branches read the bucket table.
-    buckets = _rep_band_buckets(groups, block_bits).localCheckpoint(
-        eager=False
-    )
-    cand = _bucket_pairs(buckets, ["band", "key"]).distinct()
-    sa = sim.select(F.col("doc_id").alias("doc_a"), F.col("sim").alias("sim_a"))
-    sb = sim.select(F.col("doc_id").alias("doc_b"), F.col("sim").alias("sim_b"))
+    cand = _bucket_pairs(_rep_band_buckets(groups), ["band", "key"])
     hamming = F.expr("bit_count(sim_a ^ sim_b)").cast("int")
     rep_pairs = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _both_sides(cand, sim, "sim")
         .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= HAMMING_MAX)
         .select("doc_a", "doc_b", "hamming")
@@ -621,12 +565,31 @@ def _band_key_parts(bi: int) -> list[str]:
     return [f"h{ROWS_PER_BAND * bi + j}" for j in range(ROWS_PER_BAND)]
 
 
+# --- the candidate-and-verify kit ------------------------------------------
+
+
+def _band_buckets(df: DataFrame, band_structs) -> DataFrame:
+    """(band, key, ds): the LSH buckets of ``df``'s docs, one per
+    (band, key) that holds at least two docs. ``band_structs`` is an
+    array column of (band, key) structs over ``df``'s columns; it is
+    exploded once, so the per-doc inputs are computed once, not once per
+    band."""
+    return (
+        df.select("doc_id", F.explode(band_structs).alias("bk"))
+        .select("doc_id", "bk.band", "bk.key")
+        .groupBy("band", "key")
+        .agg(F.collect_set("doc_id").alias("ds"))
+        .filter(F.size("ds") >= 2)
+    )
+
+
 def _pairs_in_array(col: str):
-    """All unordered (doc_a < doc_b) pairs within an array column — generated
-    map-side by nested ``transform``s, no self-join. ONLY for arrays with a
-    bounded size (<= SHINGLE_DF_CAP): the result is one C(n,2) in-row
-    object, the r8 100x probe's OOM class. Unbounded buckets go through
-    _bucket_pairs."""
+    """Array of all unordered (doc_a < doc_b) pairs within an array
+    column, generated map-side by nested ``transform``s, no self-join.
+    ONLY for arrays of bounded size (<= SHINGLE_DF_CAP buckets, baskets):
+    the result is one C(n,2) in-row object, so an unbounded bucket would
+    be one quadratic allocation. Unbounded buckets go through
+    ``_bucket_pairs``."""
     return F.expr(
         f"flatten(transform({col}, (x, i) -> "
         f"transform(slice({col}, i + 2, size({col})), "
@@ -634,27 +597,25 @@ def _pairs_in_array(col: str):
     )
 
 
-def _bucket_pairs(posts: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Streaming-safe unordered (doc_a < doc_b) pairs from bucket arrays
-    ``ds``, keyed by ``key_cols``. Size-split (the ngram pattern, r8):
-    buckets at or below SHINGLE_DF_CAP pair map-side inside the array
-    (bounded C(50,2) structs per row — the fast path for the vast majority
-    of buckets); bigger buckets stream through a CHUNKED keyed self-join,
-    because an in-row pair array is ONE quadratic object (a 24,800-doc
-    bucket is ~307M structs — the r8 100x probe's OOM). Callers checkpoint
-    ``posts`` if it is expensive to recompute — both branches read it.
+def _bucket_pairs(buckets: DataFrame, key_cols: list[str]) -> DataFrame:
+    """The DISTINCT unordered (doc_a < doc_b) pairs that share a bucket of
+    ``buckets`` (bucket arrays ``ds``, keyed by ``key_cols``). The bucket
+    table is checkpointed here, because both size branches read it.
 
-    Chunking (VERDICT r8 #3): a plain self-join on the bucket key emits
-    ALL C(n,2) pairs of one mega-bucket from a single task — output
-    fan-out is invisible to AQE's skew handling (it detects INPUT bytes).
-    The probe side (doc_a) is split into ceil(n / SHINGLE_DF_CAP) chunks
-    by doc hash and the build side replicated across the chunk ids, so
-    the join key becomes (bucket key, chunk) and one bucket's emission
-    spreads over n/CAP tasks of ~CAP*n pairs each. Replication cost is
-    n^2/CAP rows of 8-byte ids — proportional to the output itself. The
-    probe side is pinned with REPARTITION_BY_NUM (exempt from AQE
-    coalescing), which also forces the build side's ENSURE_REQUIREMENTS
-    exchange to the same un-coalesced layout."""
+    Buckets at or below SHINGLE_DF_CAP pair map-side inside the array
+    (bounded C(50,2) structs per row, the fast path for nearly every
+    bucket). Bigger buckets stream through a CHUNKED keyed self-join: an
+    in-row pair array is ONE quadratic object (a 24,800-doc bucket is
+    ~307M structs), and a plain self-join on the bucket key would emit
+    all C(n,2) pairs of one bucket from one task, since AQE's skew
+    handling sees input bytes, not output fan-out. The probe side
+    (doc_a) is split into ceil(n / SHINGLE_DF_CAP) chunks by doc hash and
+    the build side replicated across the chunk ids, so one bucket's
+    emission spreads over n/CAP tasks; the replication costs n^2/CAP
+    8-byte ids, proportional to the output itself. The probe side is
+    pinned with REPARTITION_BY_NUM (exempt from AQE coalescing), which
+    also forces the build side's exchange to the same layout."""
+    posts = buckets.localCheckpoint(eager=False)
     small = (
         posts.filter(F.size("ds") <= SHINGLE_DF_CAP)
         .select(F.explode(_pairs_in_array("ds")).alias("p"))
@@ -685,7 +646,70 @@ def _bucket_pairs(posts: DataFrame, key_cols: list[str]) -> DataFrame:
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
     )
-    return small.unionByName(big_pairs)
+    return small.unionByName(big_pairs).distinct()
+
+
+def _both_sides(cand: DataFrame, table: DataFrame, col: str) -> DataFrame:
+    """``cand`` (doc_a, doc_b) with ``table``'s ``col`` attached for both
+    docs as ``{col}_a`` and ``{col}_b``: two equi-joins on doc_id."""
+    a = table.select(F.col("doc_id").alias("doc_a"), F.col(col).alias(f"{col}_a"))
+    b = table.select(F.col("doc_id").alias("doc_b"), F.col(col).alias(f"{col}_b"))
+    return cand.join(a, "doc_a").join(b, "doc_b")
+
+
+def _exact_jaccard():
+    """|A ∩ B| / |A ∪ B| of the (already distinct) hash arrays hvs_a, hvs_b."""
+    common = F.size(F.array_intersect("hvs_a", "hvs_b"))
+    return common * 1.0 / (F.size("hvs_a") + F.size("hvs_b") - common)
+
+
+def _verified_jaccard(cand: DataFrame, arrays: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the candidate pairs whose exact Jaccard
+    over the per-doc hash ``arrays`` is at least ``threshold``, rounded to
+    6 dp. Both probes read the same checkpointed array table."""
+    jac = _exact_jaccard()
+    return (
+        _both_sides(cand, arrays, "hvs")
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def _minhash_sig(arrays: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<long>): the MinHash signature, one affine-hash
+    minimum per MINHASH_AB pair, computed map-side from the hash arrays
+    (min is duplicate- and order-insensitive, so no shuffle)."""
+
+    def affine_min(a: int, b: int):
+        return F.array_min(
+            F.transform("hvs", lambda v: (F.lit(a) * v + F.lit(b)) % MINHASH_P)
+        )
+
+    return arrays.select(
+        "doc_id", F.array(*[affine_min(a, b) for a, b in MINHASH_AB]).alias("sig")
+    )
+
+
+def _minhash_candidates(sig: DataFrame) -> DataFrame:
+    """The distinct pairs agreeing on all ROWS_PER_BAND hashes of some
+    band. Exact-dup families share every band key, so a bucket is as big
+    as the largest duplicate family; ``_bucket_pairs`` bounds it."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.concat_ws(
+                    "_",
+                    *[
+                        F.element_at("sig", ROWS_PER_BAND * bi + j + 1)
+                        for j in range(ROWS_PER_BAND)
+                    ],
+                ).alias("key"),
+            )
+            for bi in range(N_BANDS)
+        ]
+    )
+    return _bucket_pairs(_band_buckets(sig, band_structs), ["band", "key"])
 
 
 def _minhash_sql() -> str:
@@ -734,63 +758,13 @@ def _minhash_sql() -> str:
     "Candidate generation never compares all pairs. The whole query reads "
     "the corpus ONCE: the checkpointed hash-array table feeds signatures "
     "(map-side array_min over affine transforms — min is duplicate- and "
-    "order-insensitive, so this equals the grouped min of the round-2 "
-    "plan with zero extra shuffle) and both verify probes.",
+    "order-insensitive, so this equals a grouped min with zero extra "
+    "shuffle) and both verify probes.",
 )
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The exploded shingle stream is never pinned — only the compact per-doc
-    # hash arrays are (see _doc_hash_arrays); at 100 TB recompute beats a
-    # multi-PB cache of the raw explode, but the 8-byte-hash array table is
-    # exactly what a production dedup would materialize as its signature
-    # store.
     arrays = _doc_hash_arrays(spark, sf_dir)
-
-    def affine_min(a: int, b: int):
-        return F.array_min(
-            F.transform("hvs", lambda v: (F.lit(a) * v + F.lit(b)) % MINHASH_P)
-        )
-
-    sig = arrays.select(
-        "doc_id",
-        *[affine_min(a, b).alias(f"h{i}") for i, (a, b) in enumerate(MINHASH_AB)],
-    )
-    # one explode, NOT a 4-way union of sig projections: a union would
-    # re-run the 16-min signature aggregation once per band branch
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat_ws("_", *_band_key_parts(bi)).alias("key"),
-            )
-            for bi in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    # bucket pair generation from the checkpointed bucket table: small
-    # buckets pair map-side inside the array; oversized buckets (exact-dup
-    # families share every band key, so bucket size tracks the largest
-    # duplicate family — unbounded at crawl scale) stream through a keyed
-    # self-join over the SAME checkpointed buckets, so neither branch
-    # re-runs the 16-min signature aggregation (_bucket_pairs, r8).
-    buckets = (
-        bands.groupBy("band", "key")
-        .agg(F.collect_set("doc_id").alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .localCheckpoint(eager=False)
-    )
-    cand = _bucket_pairs(buckets, ["band", "key"]).distinct()
-    aa = arrays.select(F.col("doc_id").alias("doc_a"), F.col("hvs").alias("hvs_a"))
-    ab = arrays.select(F.col("doc_id").alias("doc_b"), F.col("hvs").alias("hvs_b"))
-    common = F.size(F.array_intersect("hvs_a", "hvs_b"))
-    jac = common * 1.0 / (F.size("hvs_a") + F.size("hvs_b") - common)
-    return (
-        cand.join(aa, "doc_a")
-        .join(ab, "doc_b")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    cand = _minhash_candidates(_minhash_sig(arrays))
+    return _verified_jaccard(cand, arrays, JACCARD_THRESHOLD)
 
 
 def _pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -848,16 +822,16 @@ _CC_ORACLE = f"""
     "propagation carries a `changed` flag computed in the same pass, the "
     "round's labels land in a lazy localCheckpoint, and a count over it "
     "both materializes the checkpoint and delivers the changed total as "
-    "an observe() METRIC (VERDICT r10 #7 — no driver collect at all; the "
-    "scalar rides the job's metric channel, and no separate "
-    "convergence-probe job either, where the round-3 shape paid 2 "
-    "driver-synchronized jobs per round). Edge set materialized once; "
+    "an observe() METRIC (no driver collect: the scalar rides the job's "
+    "metric channel, and no separate convergence-probe job, which would "
+    "cost a second driver-synchronized job per round). Edge set "
+    "materialized once; "
     "rounds needed = component diameter (near-dup clusters are shallow). "
     "The oracle computes the same components with a recursive CTE. "
     "component = min doc_id in the group (the canonical survivor). "
-    "Scale note (r11): the r10 probe measured the old loop 8.8x slower "
-    "than LSS because every round re-shuffled the FULL edge set; the "
-    "loop now joins only the FRONTIER (labels that changed last round) "
+    "Scale note: a loop that re-shuffles the FULL edge set every round "
+    "measured 8.8x slower than LSS at the 100x replica; this "
+    "loop joins only the FRONTIER (labels that changed last round) "
     "against an edge set hash-partitioned once on the probe key, and "
     "at the 100x replica the warm loop beats LSS (21.3 s vs 26.9 s on "
     "the shared pair cache — cold runs of either are dominated by the "
@@ -867,19 +841,12 @@ _CC_ORACLE = f"""
     "they still cross-check bit-for-bit.",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Observation
-
-    from cqu_bigdata_recommender_system_for_movies_spark.session import (
-        shuffle_partitions,
-    )
-
     # materialized edge set, HASH-PARTITIONED ON THE PROBE KEY (doc_b)
     # once: the checkpointed LogicalRDD keeps its outputPartitioning, so
     # every round's frontier join reuses it and only the (shrinking)
-    # frontier side shuffles — the r10 100x probe measured the old
-    # full-edge-reshuffle-per-round plan 8.8x slower than LSS, and the
-    # per-round edge shuffle was that gap. Serialized storage per the
-    # r11 graph-family finding.
+    # frontier side shuffles (a per-round edge re-shuffle measured 8.8x
+    # slower than LSS at the 100x replica). Serialized storage: a
+    # deserialized corpus-sized edge list costs ~60-70 B of heap per row.
     n = shuffle_partitions(spark)
     edges = _pair_edges(spark, sf_dir)
     und = (
@@ -1087,67 +1054,19 @@ def dedup_components_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays = _doc_hash_arrays(spark, sf_dir)
-
-    def affine_min(a: int, b: int):
-        return F.array_min(
-            F.transform("hvs", lambda v: (F.lit(a) * v + F.lit(b)) % MINHASH_P)
-        )
-
-    sig = arrays.select(
-        "doc_id",
-        F.array(
-            *[affine_min(a, b) for a, b in MINHASH_AB]
-        ).alias("sig"),
-    ).localCheckpoint(eager=False)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.element_at("sig", ROWS_PER_BAND * bi + j + 1)
-                        for j in range(ROWS_PER_BAND)
-                    ],
-                ).alias("key"),
-            )
-            for bi in range(N_BANDS)
-        ]
-    )
-    # size-split pair generation from checkpointed band buckets
-    # (_bucket_pairs, r8): oversized exact-dup buckets stream through a
-    # keyed self-join instead of one quadratic in-row pair array
-    buckets = (
-        sig.select("doc_id", F.explode(band_structs).alias("bk"))
-        .select("doc_id", "bk.band", "bk.key")
-        .groupBy("band", "key")
-        .agg(F.collect_set("doc_id").alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .localCheckpoint(eager=False)
-    )
-    cand = _bucket_pairs(buckets, ["band", "key"]).distinct()
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    aa = arrays.select(F.col("doc_id").alias("doc_a"), F.col("hvs").alias("hvs_a"))
-    ab = arrays.select(F.col("doc_id").alias("doc_b"), F.col("hvs").alias("hvs_b"))
+    # checkpointed: banding and both signature probes read it
+    sig = _minhash_sig(arrays).localCheckpoint(eager=False)
+    both = _both_sides(_both_sides(_minhash_candidates(sig), sig, "sig"), arrays, "hvs")
     n_match = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
         )
     )
-    common = F.size(F.array_intersect("hvs_a", "hvs_b"))
-    exact = common * 1.0 / (F.size("hvs_a") + F.size("hvs_b") - common)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .join(aa, "doc_a")
-        .join(ab, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(n_match / F.lit(float(len(MINHASH_AB))), 6).alias("est_jaccard"),
-            F.round(exact, 6).alias("exact_jaccard"),
-        )
+    return both.select(
+        "doc_a",
+        "doc_b",
+        F.round(n_match / F.lit(float(len(MINHASH_AB))), 6).alias("est_jaccard"),
+        F.round(_exact_jaccard(), 6).alias("exact_jaccard"),
     )
 
 
@@ -1188,8 +1107,6 @@ _CANONICAL_ORACLE = f"""
     "shuffles, only (doc_id, component, n_chars).",
 )
 def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     comp = dedup_components(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return (
@@ -1455,8 +1372,6 @@ PREFIX_JACCARD_T = 0.8  # near-dup threshold; prefix length = sz - ceil(t*sz) + 
     "sides, same as the ngram path.",
 )
 def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     t = PREFIX_JACCARD_T
     arrays = _doc_hash_arrays(spark, sf_dir)
     posts = arrays.select(
@@ -1494,13 +1409,4 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
-    aa = arrays.select(F.col("doc_id").alias("doc_a"), F.col("hvs").alias("hvs_a"))
-    ab = arrays.select(F.col("doc_id").alias("doc_b"), F.col("hvs").alias("hvs_b"))
-    common = F.size(F.array_intersect("hvs_a", "hvs_b"))
-    jac = common * 1.0 / (F.size("hvs_a") + F.size("hvs_b") - common)
-    return (
-        cand.join(aa, "doc_a")
-        .join(ab, "doc_b")
-        .filter(jac >= t)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return _verified_jaccard(cand, arrays, t)

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load
+from cqu_bigdata_recommender_system_for_movies_spark.tables import load, md5_long
 
 N_BINS = 4
 N_HASH_BUCKETS = 64
@@ -55,10 +55,7 @@ def feature_engineering_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("p_retailprice").alias("lo"), F.max("p_retailprice").alias("hi")
     )
     w = Window.partitionBy("p_brand").orderBy("p_retailprice", "p_partkey")
-    bucket = (
-        F.conv(F.substring(F.md5("p_brand"), 1, 8), 16, 10).cast("long")
-        % N_HASH_BUCKETS
-    )
+    bucket = md5_long("p_brand") % N_HASH_BUCKETS
     return part.crossJoin(F.broadcast(stats)).select(
         "p_partkey",
         F.ntile(N_BINS).over(w).alias("brand_price_bin"),
@@ -465,14 +462,7 @@ def bpr_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos_item",
             "k",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("_", "user_id", "pos_item", "k")), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("n")
+                md5_long(F.concat_ws("_", "user_id", "pos_item", "k")) % F.col("n")
             ).alias("neg_item"),
         )
     )
@@ -558,11 +548,7 @@ TE_PRIOR = 20.0  # smoothing pseudo-count toward the global mean
 )
 def target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
-    fold = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % TE_FOLDS
-    )
+    fold = md5_long(F.col("event_id").cast("string")) % TE_FOLDS
     cell = events.groupBy("event_type", fold.alias("fold")).agg(
         F.sum("value").alias("s"), F.count("*").alias("c")
     )

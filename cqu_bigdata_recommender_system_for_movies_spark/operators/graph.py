@@ -27,7 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import RATINGS_SQL, ratings
+from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    RATINGS_SQL,
+    md5_long,
+    ratings,
+)
 
 DAMPING = 0.85
 TELEPORT = 0.15  # (1 - DAMPING), classic unnormalized formulation
@@ -379,12 +383,7 @@ def ppr_seeded_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir)
     du = edges.groupBy("u").agg(F.count("*").alias("du"))
     di = edges.groupBy("i").agg(F.count("*").alias("di"))
-    is_seed = (
-        F.conv(F.substring(F.md5(F.col("u").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % PPR_SEED_MOD
-        == 0
-    )
+    is_seed = md5_long(F.col("u").cast("string")) % PPR_SEED_MOD == 0
     restart = F.lit(1 - PPR_ALPHA)
 
     # iteration 1, item side: only seed users carry mass (indicator = 1)

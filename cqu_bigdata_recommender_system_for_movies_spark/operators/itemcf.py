@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import _pairs_in_array
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load
 
@@ -43,15 +44,9 @@ def _co_counts(arrs: DataFrame) -> DataFrame:
     (item_a, item_b) pair aggregation. This is the posting-list shape the
     dedup family uses; a basket self-join would scan and shuffle the
     basket table twice and add a join for the same result."""
-    pairs = arrs.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(pks, (x, i) -> "
-                "transform(slice(pks, i + 2, size(pks)), "
-                "y -> struct(x AS item_a, y AS item_b))))"
-            )
-        ).alias("p")
-    ).select("p.item_a", "p.item_b")
+    pairs = arrs.select(F.explode(_pairs_in_array("pks")).alias("p")).select(
+        F.col("p.doc_a").alias("item_a"), F.col("p.doc_b").alias("item_b")
+    )
     return (
         pairs.groupBy("item_a", "item_b")
         .agg(F.count("*").alias("n_ab"))
@@ -250,16 +245,12 @@ def item_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = _basket_arrays(spark, sf_dir)
     pairs = arrs.filter(F.size("pks") >= 2).select(
         (1.0 / F.log(F.size("pks").cast("double"))).alias("w"),
-        F.explode(
-            F.expr(
-                "flatten(transform(pks, (x, i) -> "
-                "transform(slice(pks, i + 2, size(pks)), "
-                "y -> struct(x AS item_a, y AS item_b))))"
-            )
-        ).alias("p"),
+        F.explode(_pairs_in_array("pks")).alias("p"),
     )
     return (
-        pairs.select("p.item_a", "p.item_b", "w")
+        pairs.select(
+            F.col("p.doc_a").alias("item_a"), F.col("p.doc_b").alias("item_b"), "w"
+        )
         .groupBy("item_a", "item_b")
         .agg(F.count("*").alias("n_ab"), F.sum("w").alias("aa"))
         .filter(F.col("n_ab") >= MIN_SUPPORT)

@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
 from cqu_bigdata_recommender_system_for_movies_spark.session import shuffle_partitions
-from cqu_bigdata_recommender_system_for_movies_spark.tables import RATINGS_SQL, load, ratings
+from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    RATINGS_SQL,
+    load,
+    md5_long,
+    ratings,
+)
 
 # ---------------------------------------------------------------------------
 # Aggregations + cold-start analytics (A2, A3, A4, M9, M10, T4)
@@ -544,12 +549,7 @@ def _blk_class_sql(key_expr: str) -> str:
 
 
 def _blk_class_spark(key_col, blk_m_col):
-    return (
-        F.conv(F.substring(F.md5(key_col.cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        % blk_m_col
-    )
+    return md5_long(key_col.cast("string")) % blk_m_col
 
 
 @register(

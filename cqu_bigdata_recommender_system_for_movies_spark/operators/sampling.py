@@ -16,6 +16,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import regis
 from cqu_bigdata_recommender_system_for_movies_spark.tables import (
     RATINGS_SQL,
     load,
+    md5_long,
     ratings,
     sql_in_list,
 )
@@ -202,10 +203,7 @@ SPLIT_VAL_LT = 90  # 80 <= bucket < 90      -> val    (10%), else test
 
 
 def _md5_bucket_spark(col):
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-        % SPLIT_BUCKETS
-    )
+    return md5_long(col.cast("string")) % SPLIT_BUCKETS
 
 
 def _md5_bucket_sql(expr: str) -> str:
@@ -632,11 +630,7 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load(spark, sf_dir, "orders")
-    u = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        + 1
-    ) / F.lit(float(1 << 32))
+    u = (md5_long(F.col("o_orderkey").cast("string")) + 1) / F.lit(float(1 << 32))
     scored = orders.select(
         "o_orderpriority",
         "o_orderkey",

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load
+from cqu_bigdata_recommender_system_for_movies_spark.tables import load, md5_long
 
 # lgConfigK=18 → 256 KiB dense sketch, ±0.20% relative error at scale;
 # exact (coupon/SET) mode holds to 3/4·2^(lgK-3) ≈ 24.5k distinct per
@@ -332,9 +332,7 @@ def _bloom_pos(col, i: int):
     salted rendering, mod BLOOM_BITS. Identical to the DuckDB rendering
     ('bf' || i || '-' || key)."""
     salted = F.concat(F.lit(f"bf{i}-"), col.cast("string"))
-    return (
-        F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long") % BLOOM_BITS
-    )
+    return md5_long(salted) % BLOOM_BITS
 
 
 def _bit_mask(pos_col_name: str):
@@ -754,11 +752,7 @@ def kmv_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
 
     def hashed(df: DataFrame, col: str) -> DataFrame:
-        u = (
-            F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            + 1
-        ) / F.lit(float(1 << 32))
+        u = (md5_long(F.col(col).cast("string")) + 1) / F.lit(float(1 << 32))
         return df.select(u.alias("u")).distinct().localCheckpoint(eager=False)
 
     ha = hashed(events, "user_id")

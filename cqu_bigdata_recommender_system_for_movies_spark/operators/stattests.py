@@ -21,7 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load, scan_fanout
+from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    load,
+    load_fanned_out,
+    md5_long,
+)
 
 # ---------------------------------------------------------------------------
 # A/B experiment readout
@@ -73,10 +77,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.tables import load, scan_fa
 def ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
     arm = F.when(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 2
-        == 0,
+        md5_long(F.col("user_id").cast("string")) % 2 == 0,
         F.lit("control"),
     ).otherwise(F.lit("treatment"))
     stats = events.groupBy("event_type", arm.alias("arm")).agg(
@@ -510,13 +511,9 @@ def _pois_weight_sql(u_expr: str) -> str:
     "100 TB the hash IS the dominant scan-side cost of this operator.",
 )
 def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    # r16 (guide §2.5 input skew): the md5-per-(row, replica-group)
-    # pipeline is the documented dominant scan-side cost; on a one-file
-    # suite scan it ran as ONE task — fan out first (None at scale)
-    fan = scan_fanout(spark, sf_dir, "orders")
-    if fan:
-        orders = orders.repartition(fan)
+    # the md5-per-(row, replica-group) pipeline is the dominant scan-side
+    # cost; a one-file scan would run it as ONE task
+    orders = load_fanned_out(spark, sf_dir, "orders")
     n_groups = (BOOT_REPLICAS + 3) // 4
     # one md5 per (row, group) — materialized as a column BEFORE the slice
     # explode so the four uniforms it feeds never re-hash

@@ -13,8 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import _shingle_hashes
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load, scan_fanout, sql_in_list
+from cqu_bigdata_recommender_system_for_movies_spark.tables import load, load_fanned_out, sql_in_list
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 
@@ -443,35 +444,6 @@ CONTAM_ORACLE = f"""
     """
 
 
-def _contam_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The single tokenize+shingle+hash scan: DISTINCT (doc_id, hv) where
-    hv is the portable 8-byte hash of each 3-gram (never the n-gram text —
-    the join/agg keys downstream shuffle 8 bytes)."""
-    docs = load(spark, sf_dir, "documents")
-    # r16 (guide §2.5 input skew): fan a small one-file scan out before
-    # the CPU-dense md5-shingle pipeline (None at scale — see scan_fanout)
-    fan = scan_fanout(spark, sf_dir, "documents")
-    if fan:
-        docs = docs.repartition(fan)
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    n_sh = F.greatest(F.size(toks) - 2, F.lit(0))
-    shingles = F.when(
-        n_sh > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.concat_ws("_", F.slice(toks, i, 3)),
-        ),
-    ).otherwise(F.array())
-    return (
-        docs.select("doc_id", F.explode(shingles).alias("s"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long").alias("hv"),
-        )
-        .distinct()
-    )
-
-
 @register(
     "contamination_check",
     oracle=CONTAM_ORACLE,
@@ -488,8 +460,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the one scan, materialized: the bench side and the training side are
     # both filters over this compact (doc_id, hv) table — without the
     # checkpoint each side re-ran the split/md5 pipeline from the parquet
-    # scan (the round-3 bench regression, +19%)
-    sh = _contam_shingles(spark, sf_dir).localCheckpoint(eager=False)
+    # scan (+19% on the bench)
+    sh = _shingle_hashes(spark, sf_dir, 3).distinct().localCheckpoint(eager=False)
     is_bench = F.col("doc_id") % CONTAM_BENCHMARK_MOD == 0
     # pre-aggregate the bench side to distinct hv before the join, so the
     # probe matches at most one row per (doc_id, hv) and the per-doc agg
@@ -1259,15 +1231,10 @@ def boolean_retrieval_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     "CTE for a literal.",
 )
 def phrase_retrieval_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    # r17 (guide §2.5 input skew — the r16 scan_fanout class, this site
-    # missed): the bigram generation + checkpoint materialization ran on
-    # the suite's ONE scan task (measured 5.0 s first-run; fanned 1.3 s).
-    # None at scale where the scan already fans out. Downstream
-    # aggregates are exact counts — order-insensitive.
-    fan = scan_fanout(spark, sf_dir, "documents")
-    if fan:
-        docs = docs.repartition(fan)
+    # fanned out: the bigram generation + checkpoint materialization ran
+    # on the suite's ONE scan task (measured 5.0 s first-run; fanned
+    # 1.3 s). Downstream aggregates are exact counts — order-insensitive.
+    docs = load_fanned_out(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda w: w != "")
     n_bg = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.when(

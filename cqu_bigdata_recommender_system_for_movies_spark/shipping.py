@@ -5,8 +5,10 @@ Any pandas-UDF closure defined in this package is pickled *by reference*
 (module + qualname), so executor-side Python workers must be able to import
 the package — true on a real cluster (where code is distributed as an
 archive) and NOT guaranteed locally when the driver process starts outside
-the repo. ``ensure_shipped`` zips the package once per session and registers
-it with ``addPyFile``, exactly how a 1000-executor deployment would ship it.
+the repo. ``ensure_shipped`` registers the package zip with ``addPyFile``
+once per session, exactly how a 1000-executor deployment would ship it. The
+zip is written once per process to a private temp file and removed when the
+process exits.
 
 Zip-directory guard. A reused Python worker runs
 ``pyspark.worker_util.setup_spark_files`` at the start of every task, and
@@ -37,6 +39,7 @@ imported the engine for some other UDF.
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 import tempfile
@@ -49,26 +52,42 @@ from pyspark.sql import SparkSession
 # pass for a shipped one and its workers could not import the engine.
 _SHIPPED_SESSIONS: set[str] = set()
 
+# This process's package zip: written once, to a fresh ``mkstemp`` name,
+# and removed at exit. A name derived from the pid could be a file that
+# another process (another checkout) left behind under a recycled pid.
+_ZIP_PATH: str | None = None
 
-def ensure_shipped(spark: SparkSession) -> None:
-    key = spark.sparkContext.applicationId
-    if key in _SHIPPED_SESSIONS:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+
+def _remove_zip(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
+def _package_zip() -> str:
+    global _ZIP_PATH
+    if _ZIP_PATH is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        fd, path = tempfile.mkstemp(prefix=f"{pkg_name}_", suffix=".zip")
+        atexit.register(_remove_zip, path)
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fname in files:
                     if not fname.endswith(".py"):
                         continue
                     full = os.path.join(root, fname)
-                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+                    zf.write(full, os.path.join(pkg_name, os.path.relpath(full, pkg_dir)))
+        _ZIP_PATH = path
+    return _ZIP_PATH
+
+
+def ensure_shipped(spark: SparkSession) -> None:
+    key = spark.sparkContext.applicationId
+    if key in _SHIPPED_SESSIONS:
+        return
+    spark.sparkContext.addPyFile(_package_zip())
     _SHIPPED_SESSIONS.add(key)
 
 

@@ -78,6 +78,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.tables import (
     _events_ts_is_nanos,
     _nanos_to_ts,
     load,
+    md5_long,
 )
 
 _counter = itertools.count()
@@ -917,12 +918,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_hash_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("event_id").cast("string")) % 100
     counts = (
         stream.select(
             F.when(bucket < 80, "train")

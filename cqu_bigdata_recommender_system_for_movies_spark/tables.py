@@ -113,22 +113,21 @@ def table_row_count(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int | None:
-    """Partition count to ``repartition`` a table scan to BEFORE a
-    CPU-dense per-row projection, or None when the scan already fans out
-    (r16, guide §2.5 "input skew" / §1.2). A small parquet file scans as
-    ~ceil(bytes / maxPartitionBytes) tasks — often ONE — so an expensive
-    narrow pipeline on it (md5 shingling, interpreted folds) serializes
-    on one core while the rest idle (the r10/r11 probe finding, now
-    applied at the suite scale where one 4 MB file = one task). The
-    decision is driver-side file metadata only, and scale-adaptive: once
-    the source's natural split count reaches machine width the exchange
-    would be pure cost (at 100 TB the scan already has thousands of
-    splits) and this returns None."""
+def load_fanned_out(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``load`` for a scan that feeds a CPU-dense per-row projection (md5
+    shingling, resampling): repartitioned to machine width when the scan
+    would run on fewer tasks than that (input skew). A small parquet file scans as ~ceil(bytes / maxPartitionBytes) tasks,
+    often ONE, so the expensive narrow pipeline on it would serialize on
+    one core while the rest idle. The decision is driver-side file
+    metadata only, and scale-adaptive: once the source's natural split
+    count reaches machine width the exchange would be pure cost (at
+    100 TB the scan has thousands of splits) and the scan is returned
+    as is."""
     from cqu_bigdata_recommender_system_for_movies_spark.session import (
         shuffle_partitions,
     )
 
+    df = load(spark, sf_dir, name)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
@@ -139,7 +138,7 @@ def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int | None:
         else:
             nbytes = os.path.getsize(path)
     except OSError:
-        return None
+        return df
     raw = spark.conf.get(
         "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
     )
@@ -152,7 +151,7 @@ def scan_fanout(spark: SparkSession, sf_dir: str, name: str) -> int | None:
         max_split = 128 * 1024 * 1024
     width = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism)
     est_tasks = max(1, -(-nbytes // max_split))
-    return width if est_tasks < width else None
+    return df.repartition(width) if est_tasks < width else df
 
 
 def ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,6 +179,14 @@ def sql_in_list(items) -> str:
     invalid SQL). Items must not contain single quotes — this formats
     trusted engine constants, it does not escape."""
     return "(" + ", ".join(f"'{s}'" for s in items) + ")"
+
+
+def md5_long(col, start: int = 1):
+    """The portable hash: 8 hex digits of ``md5(col)`` from ``start`` as a
+    non-negative BIGINT. DuckDB computes the same value as
+    ``('0x' || substr(md5(x), start, 8))::BIGINT``, so hash-based buckets,
+    splits and shingle ids agree across the engine and its oracles."""
+    return F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("long")
 
 
 # DuckDB twin of ratings() — embedded as a CTE in oracle SQL strings.

@@ -228,11 +228,11 @@ def test_contamination_no_forced_broadcast(spark, sf_dir):
     assert "partial_count" in plan  # per-doc overlap combines map-side
     # the shared scan is checkpointed, so the md5-hashing lives in the
     # pre-checkpoint stage; the final plan must join on the 8-byte hv
-    from cqu_bigdata_recommender_system_for_movies_spark.operators.text import (
-        _contam_shingles,
+    from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
+        _shingle_hashes,
     )
 
-    scan = _contam_shingles(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
+    scan = _shingle_hashes(spark, sf_dir, 3)._jdf.queryExecution().analyzed().toString()
     assert "conv(substring(md5" in scan  # hashed join key, not text
     assert "hv#" in analyzed and "LogicalRDD" in analyzed  # probes the
     # one materialized (doc_id, hv) table from both sides
@@ -371,33 +371,24 @@ def test_simhash_pairs_single_scan_no_cartesian(spark, sf_dir):
 
 
 def test_simhash_manku_sizing_and_losslessness_preconditions():
-    """VERDICT r3 #2: the 32-bit/8-bit-band parameterization capped every
-    band at 256 buckets forever — quadratic bucket fan-out at scale. The
-    fingerprint is now Manku's 64-bit and the block width is derived from
-    the corpus (resolving to the production 4x16 at 1e9+ docs). This test
-    is red on the old constants by construction, and pins the pigeonhole
-    preconditions that make ANY derived width lossless for hamming <= 3."""
+    """A 32-bit fingerprint with 8-bit bands capped every band at 256
+    buckets, a quadratic bucket fan-out at scale. The fingerprint is
+    Manku's 64-bit with the production 4x16 blocks. This pins the
+    constants and the pigeonhole preconditions that make the banding
+    lossless for hamming <= 3."""
     from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
         HAMMING_MAX,
         SIMHASH_BANDS,
         SIMHASH_BITS,
-        SIMHASH_BLOCK_BITS_MAX,
-        SIMHASH_BLOCK_BITS_MIN,
-        derive_simhash_block_bits,
+        SIMHASH_BLOCK_BITS,
     )
 
     assert SIMHASH_BITS == 64, "Manku production fingerprint width"
-    assert SIMHASH_BLOCK_BITS_MAX == 16, "Manku 4x16 block sizing"
+    assert SIMHASH_BLOCK_BITS == 16, "Manku 4x16 block sizing"
     # losslessness: <= HAMMING_MAX flipped bits must leave >= 1 of the
     # SIMHASH_BANDS disjoint blocks intact, and blocks must be disjoint
     assert SIMHASH_BANDS > HAMMING_MAX
-    assert SIMHASH_BANDS * SIMHASH_BLOCK_BITS_MAX <= SIMHASH_BITS
-    # width is a pure selectivity knob (losslessness holds at any width),
-    # so every real corpus gets the full production 16-bit blocks — the
-    # occupancy-targeted derivation undersized the width 35x at sf0.1
-    for n in (10, 10**3, 10**6, 10**9):
-        assert derive_simhash_block_bits(n) == SIMHASH_BLOCK_BITS_MAX
-    assert SIMHASH_BLOCK_BITS_MIN >= 1  # degenerate floor only
+    assert SIMHASH_BANDS * SIMHASH_BLOCK_BITS <= SIMHASH_BITS
 
 
 def test_pca_gramian_no_self_join(spark, sf_dir):
@@ -480,9 +471,10 @@ def test_claimed_narrow_queries_have_zero_exchanges(name, spark, sf_dir):
 # and REVERTED — unbiased cold-session isolation floors showed the
 # exchange costs more than the one-task regex/explode work it
 # parallelizes at suite scale (warm floors regressed ~0.1-0.2 s), and
-# at 100 TB scan_fanout is None anyway. phrase_retrieval_topdocs KEPT
-# its fan-out: its checkpoint materialization on one task was the real
-# bottleneck — warm floor 2.27 -> 0.94 s.)
+# at 100 TB load_fanned_out does not fan out anyway.
+# phrase_retrieval_topdocs KEPT its fan-out: its checkpoint
+# materialization on one task was the real bottleneck — warm floor
+# 2.27 -> 0.94 s.)
 
 
 def test_itemcf_pairs_generated_map_side(spark, sf_dir):
@@ -543,7 +535,7 @@ def test_simhash_hot_buckets_collapse_exact_dups(spark):
     assert groups.count() == 3  # one row per distinct fingerprint
     # the hot-bucket cap: 50 exact dups of `a` occupy ONE slot per bucket
     max_bucket = (
-        _rep_band_buckets(groups, 16)
+        _rep_band_buckets(groups)
         .agg(F.max(F.size("ds")))
         .collect()[0][0]
     )
@@ -551,7 +543,7 @@ def test_simhash_hot_buckets_collapse_exact_dups(spark):
 
     got = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in _simhash_pairs_from_values(sim, 16).collect()
+        for r in _simhash_pairs_from_values(sim).collect()
     }
     fp = dict(rows)
     want = {

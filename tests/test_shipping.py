@@ -145,3 +145,75 @@ def test_context_with_a_reused_id_is_still_shipped(spark, monkeypatch):
     shipping.ensure_shipped(spark)
     shipping.ensure_shipped(spark)
     assert len(added) == 1
+
+
+class _FakeContext:
+    def __init__(self, app_id: str):
+        self.applicationId = app_id
+        self.added: list[str] = []
+
+    def addPyFile(self, path: str) -> None:
+        self.added.append(path)
+
+
+class _FakeSession:
+    def __init__(self, app_id: str):
+        self.sparkContext = _FakeContext(app_id)
+
+
+def test_shipped_zip_is_this_process_package(tmp_path, monkeypatch):
+    """A file left at the pid-derived name by another process (another
+    checkout, a recycled pid) is never shipped: the zip holds this
+    package's own source. Starts no JVM."""
+    import tempfile
+
+    from cqu_bigdata_recommender_system_for_movies_spark import shipping
+
+    pkg_dir = os.path.dirname(os.path.abspath(shipping.__file__))
+    pkg = os.path.basename(pkg_dir)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(shipping, "_SHIPPED_SESSIONS", set())
+    monkeypatch.setattr(shipping, "_ZIP_PATH", None, raising=False)
+    with zipfile.ZipFile(tmp_path / f"{pkg}_{os.getpid()}.zip", "w") as zf:
+        zf.writestr(f"{pkg}/shipping.py", "STALE = True\n")
+    spark = _FakeSession("app-stale-zip")
+    shipping.ensure_shipped(spark)
+    shipping.ensure_shipped(spark)
+    [shipped] = spark.sparkContext.added
+    with zipfile.ZipFile(shipped) as zf:
+        got = zf.read(f"{pkg}/shipping.py")
+    with open(os.path.join(pkg_dir, "shipping.py"), "rb") as f:
+        assert got == f.read()
+
+
+def test_shipping_process_leaves_no_zip(tmp_path):
+    """The zip lives as long as the process that wrote it."""
+    import subprocess
+
+    from cqu_bigdata_recommender_system_for_movies_spark import shipping
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(shipping.__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        "import os\n"
+        "from cqu_bigdata_recommender_system_for_movies_spark import shipping\n"
+        "class C:\n"
+        "    applicationId = 'app-leak'\n"
+        "    def addPyFile(self, path):\n"
+        "        assert os.path.exists(path)\n"
+        "        print(path)\n"
+        "class S:\n"
+        "    sparkContext = C()\n"
+        "shipping.ensure_shipped(S())\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp), "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip().startswith(str(tmp))
+    assert not list(tmp.glob("*.zip"))

@@ -27,6 +27,13 @@ here so they cannot silently erode:
    only in `streaming/queries.py` `replay`, and `foreachBatch` is called
    only by the `emissions` sink, the ANN maintenance loop and the upsert
    merge.
+
+6. One candidate-and-verify kit for the set-similarity queries: dedup.py
+   holds the only exact-Jaccard `array_intersect`, the only MinHash
+   affine-min definition and, besides the prefix filter's length-filtered
+   generator, the only in-array pair generator (`flatten(transform(`);
+   the scan fan-out and the portable md5 hash live only in `tables.py`,
+   and the single-valued SimHash width function is gone.
 """
 
 from __future__ import annotations
@@ -297,3 +304,77 @@ def test_retired_staging_and_snapshot_helpers_are_gone():
         if name in py.read_text()
     )
     assert not found, f"stage with stage_slices, emit with emissions: {found}"
+
+
+def _attr_sites(attr):
+    return _sites(lambda n: isinstance(n, ast.Attribute) and n.attr == attr)
+
+
+def test_one_exact_jaccard_verify():
+    sites = _attr_sites("array_intersect")
+    assert [(rel, fn) for rel, fn, _ in sites] == [("operators/dedup.py", "_exact_jaccard")], (
+        f"exact-Jaccard verify goes through dedup.py _verified_jaccard: {sites}"
+    )
+
+
+def test_one_minhash_affine_min():
+    defs = _sites(lambda n: isinstance(n, ast.FunctionDef) and n.name == "affine_min")
+    mins = _attr_sites("array_min")
+    assert [(rel, fn) for rel, fn, _ in defs] == [("operators/dedup.py", "affine_min")], defs
+    assert [(rel, fn) for rel, fn, _ in mins] == [("operators/dedup.py", "affine_min")], (
+        f"MinHash signatures come from dedup.py _minhash_sig: {mins}"
+    )
+
+
+def test_in_array_pairs_only_in_the_shared_generators():
+    sites = _sites(
+        lambda n: isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and "flatten(transform(" in n.value
+    )
+    assert {(rel, fn) for rel, fn, _ in sites} == {
+        ("operators/dedup.py", "_pairs_in_array"),
+        ("operators/dedup.py", "prefix_filter_jaccard_join"),
+    }, f"in-array pairs come from dedup.py _pairs_in_array: {sites}"
+
+
+def test_scan_fan_out_and_portable_hash_only_in_tables():
+    fanned = _sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "repartition"
+        and any(isinstance(a, ast.Name) and a.id == "fan" for a in n.args)
+    )
+    assert all(rel == "tables.py" for rel, _, _ in fanned), (
+        f"fan a scan out with tables.load_fanned_out: {fanned}"
+    )
+
+    def is_md5_conv(n):
+        def call_of(node, attr):
+            return (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == attr
+            )
+
+        return (
+            call_of(n, "conv")
+            and n.args
+            and call_of(n.args[0], "substring")
+            and n.args[0].args
+            and call_of(n.args[0].args[0], "md5")
+        )
+
+    hashes = _sites(is_md5_conv)
+    assert [(rel, fn) for rel, fn, _ in hashes] == [("tables.py", "md5_long")], (
+        f"the portable md5 hash is tables.md5_long: {hashes}"
+    )
+
+
+def test_single_valued_simhash_width_is_gone():
+    found = sorted(
+        str(py.relative_to(PKG))
+        for py in PKG.rglob("*.py")
+        if "derive_simhash_block_bits" in py.read_text()
+    )
+    assert not found, f"the SimHash block width is the constant SIMHASH_BLOCK_BITS: {found}"
