@@ -65,18 +65,30 @@ def get_spark(app_name: str = "cqu-bigdata-spark-engine") -> SparkSession:
     return spark
 
 
-def session_cache(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+def session_cache(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], T],
+    fresh: Callable[[T], bool] | None = None,
+) -> T:
     """The value cached under (applicationId, *key), built by ``build()``
-    on a miss. Every lookup first drops other applications' entries.
-    ``key`` names what is cached first, then what it depends on, e.g.
-    ``("als_split", sf_dir)``."""
+    on a miss, or when ``fresh`` is given and ``fresh(value)`` is false
+    (the new value replaces the old). Every lookup first drops other
+    applications' entries. ``key`` names what is cached first, then what
+    it depends on, e.g. ``("als_split", sf_dir)``."""
     app_id = spark.sparkContext.applicationId
     for k in [k for k in _SESSION_CACHE if k[0] != app_id]:
         del _SESSION_CACHE[k]
     full = (app_id, *key)
-    if full not in _SESSION_CACHE:
+    if full not in _SESSION_CACHE or (fresh is not None and not fresh(_SESSION_CACHE[full])):
         _SESSION_CACHE[full] = build()
     return _SESSION_CACHE[full]
+
+
+def session_evict(spark: SparkSession, key: tuple) -> None:
+    """Drop the value cached under (applicationId, *key), if any: for a
+    caller that deletes what the value was built from."""
+    _SESSION_CACHE.pop((spark.sparkContext.applicationId, *key), None)
 
 
 def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
@@ -84,8 +96,8 @@ def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
     conf values.
 
     ``spark.sql.shuffle.partitions`` is not guaranteed numeric — managed
-    runtimes set it to ``"auto"`` under AQE auto-tuning (ADVICE r9). Every
-    call site that needs a concrete task count for a pinned
+    runtimes set it to ``"auto"`` under AQE auto-tuning. Every call site
+    that needs a concrete task count for a pinned
     ``repartition(N, ...)`` goes through here: non-numeric conf falls back
     to ``defaultParallelism`` (the cluster's actual slot count — the right
     fan-out anchor when the runtime is auto-tuning), then to ``default``.

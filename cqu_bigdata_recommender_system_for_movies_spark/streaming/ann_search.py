@@ -6,11 +6,14 @@ functions/nearcell.py) that travels in the probe UDF's closure. A batch
 of query vectors probes its SEARCH_NPROBE nearest cells and takes the
 exact-cosine top-SEARCH_TOPK of those cells' index rows (cos DESC,
 neighbor_id ASC, self excluded) through the shared `cell_topk`
-(operators/vectors.py). The index's size picks the regime per batch:
-while the planner would broadcast it, it is collected and scored in one
-narrow stage; past that size the probed queries join the bucketed index
-on the cell key. The DuckDB oracles replay the whole pruned pipeline, so
-every served row is exact-checked.
+(operators/vectors.py). The index's size, re-checked on every batch,
+picks the regime: while the planner would broadcast it, it is served
+from collected arrays in one narrow stage; past that size the probed
+queries join the bucketed index on the cell key. Collected arrays of a
+served table are kept per file list (`serving_index`): batches over an
+unchanged table skip the collect, and a write to it collects afresh.
+The DuckDB oracles replay the whole pruned pipeline, so every served row
+is exact-checked.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
 )
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     cell_topk,
+    forget_serving_index,
     serving_index,
     shuffle_partitions,
 )
@@ -73,10 +77,11 @@ def score_query_batch(
 
     Precondition: query ids are distinct within `batch_df`.
 
-    The regime is decided per batch (`serving_index`): an index the
-    planner would broadcast is collected afresh, the same table the join
-    would read, and served in one narrow stage; a bigger one is joined
-    on the cell key."""
+    The regime follows `serving_index`: an index the planner would
+    broadcast (its size re-checked on every batch) is served in one
+    narrow stage from collected arrays, kept per file list when the
+    index is a plain projection of a table's files and collected on
+    every batch otherwise; a bigger one is joined on the cell key."""
     return cell_topk(
         batch_df,
         cents,
@@ -207,6 +212,8 @@ def streaming_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, lambda batch: score_query_batch(batch, cents, index_df), "append"
         )
     finally:
+        # the kept index arrays must not outlive the table they came from
+        forget_serving_index(index_df)
         shutil.rmtree(stage_dir, ignore_errors=True)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(loc, ignore_errors=True)

@@ -37,11 +37,10 @@ from pyspark.sql import functions as F
 from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
     HAMMING_MAX,
     SIMHASH_BANDS,
-    SIMHASH_BITS,
+    SIMHASH_BLOCK_BITS,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import sharded_fold
-
-BLOCK_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 16: Manku's 4x16 layout
+from cqu_bigdata_recommender_system_for_movies_spark.tables import md5_long
 
 # dup_id set -> direct pair row; grp set (dup_id null) -> group
 # correction row "every doc with fp == grp and doc_id > of_id has
@@ -92,14 +91,11 @@ def token_hash_structs() -> Column:
     """array<struct<hv1,hv2>> of DISTINCT md5 token-hash pairs — the
     row-local twin of operators/dedup.py:_token_hashes_df (hash first,
     distinct on the fixed-width pair)."""
-    return F.expr(
-        """
-        array_distinct(transform(
-            filter(split(text, ' '), w -> w != ''),
-            w -> struct(
-                CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT) AS hv1,
-                CAST(conv(substring(md5(w), 9, 8), 16, 10) AS BIGINT) AS hv2)))
-        """
+    return F.array_distinct(
+        F.transform(
+            F.filter(F.split("text", " "), lambda w: w != ""),
+            lambda w: F.struct(md5_long(w).alias("hv1"), md5_long(w, 9).alias("hv2")),
+        )
     )
 
 
@@ -125,7 +121,9 @@ def banded(fps: DataFrame) -> DataFrame:
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.substring("fp", b * BLOCK_BITS + 1, BLOCK_BITS).alias("key"),
+                F.substring(
+                    "fp", b * SIMHASH_BLOCK_BITS + 1, SIMHASH_BLOCK_BITS
+                ).alias("key"),
             )
             for b in range(SIMHASH_BANDS)
         ]

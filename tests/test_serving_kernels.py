@@ -15,6 +15,13 @@ id sits in their probed cells.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import subprocess
+import sys
+import textwrap
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -23,9 +30,12 @@ from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
     Flat,
     IndexArrays,
 )
+from cqu_bigdata_recommender_system_for_movies_spark import session
+from cqu_bigdata_recommender_system_for_movies_spark.operators import vectors
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
     cell_topk,
     collect_index,
+    serving_index,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.streaming import (
     ann_index as ai,
@@ -354,3 +364,221 @@ def test_cell_topk_kernel_matches_join_path(spark, tmp_path, nprobe, two_level):
     near = {i: (rk, sc) for q, rk, i, sc in rows if q == 1001 and i in (14, 15)}
     assert len(near) == 2
     assert near[14][1] == near[15][1] and near[14][0] < near[15][0]
+
+
+# ---------------------------------------------------------------------------
+# The collected index kept per file list (`serving_index`)
+# ---------------------------------------------------------------------------
+
+KEPT_TABLE = "spark_graft_kept_index_test"
+
+
+def _count_collects(monkeypatch) -> list:
+    """The DataFrames `serving_index` collects from, appended per call."""
+    calls = []
+    real = vectors.collect_index
+
+    def counted(df, *args):
+        calls.append(df)
+        return real(df, *args)
+
+    monkeypatch.setattr(vectors, "collect_index", counted)
+    return calls
+
+
+def _kept_entries(location: str = "") -> list:
+    """Keys of the kept index entries whose scan location names ``location``."""
+    return [
+        k for k in session._SESSION_CACHE if k[1] == "serving_index" and location in k[2]
+    ]
+
+
+@pytest.fixture
+def kept_table(spark, tmp_path):
+    """(emb, quantizer, append): 160 adversarial vectors, the first 120
+    written into a catalog index table by the maintenance append;
+    ``append(df, batch_id)`` appends one more batch. Dropped afterwards."""
+    rng = np.random.default_rng(21)
+    corpus = _vectors(rng, 160, 6)
+    emb = spark.createDataFrame(
+        list(enumerate(corpus)), "vec_id long, e array<double>"
+    )
+    cents = ai._quantizer(emb.filter("vec_id < 120"), 8, False)
+    loc = str(tmp_path / "kept")
+    spark.sql(f"DROP TABLE IF EXISTS {KEPT_TABLE}")
+
+    def append(df, batch_id):
+        ai.apply_index_batch(spark, KEPT_TABLE, loc, df, cents, batch_id, 4, carry=("e",))
+
+    append(emb.filter("vec_id < 120"), 0)
+    try:
+        yield emb, cents, append
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {KEPT_TABLE}")
+        shutil.rmtree(loc, ignore_errors=True)
+
+
+def _kept_index(spark):
+    return spark.table(KEPT_TABLE).select(
+        F.col("vec_id").alias("neighbor_id"), "cell", F.col("e").alias("ne")
+    )
+
+
+def _served(queries, cents, index_df) -> list[tuple]:
+    return _ann_rows(asrch.score_query_batch(queries, cents, index_df))
+
+
+def test_repeat_batch_on_unchanged_table_runs_no_collect(
+    spark, kept_table, monkeypatch, tmp_path
+):
+    emb, cents, _ = kept_table
+    calls = _count_collects(monkeypatch)
+    index_df = _kept_index(spark)
+    queries = emb.filter("vec_id % 7 = 3")
+    first = _served(queries, cents, index_df)
+    assert len(calls) == 1
+    # the next batch, and a new DataFrame over the same table, are served
+    # from the kept arrays
+    assert _served(queries, cents, index_df) == first
+    assert _served(queries, cents, _kept_index(spark)) == first
+    assert len(calls) == 1
+    assert len(_kept_entries(str(tmp_path / "kept"))) == 1
+
+
+def test_append_between_serves_shows_in_the_next_batch(spark, kept_table, monkeypatch):
+    """A table read after the append lists the new files and collects
+    again. A DataFrame read before it keeps the file listing Spark
+    resolved it with (the append swaps the table's cached relation), and
+    is served exactly what its own scan reads."""
+    emb, cents, append = kept_table
+    calls = _count_collects(monkeypatch)
+    index_df = _kept_index(spark)
+    queries = emb.filter("vec_id % 5 = 1")
+    before = _served(queries, cents, index_df)
+    assert not {nb for *_, nb in before} & set(range(120, 160))
+    append(emb.filter("vec_id >= 120"), 1)
+    appended = _kept_index(spark)
+    after = _served(queries, cents, appended)
+    assert len(calls) == 2
+    assert {nb for *_, nb in after} & set(range(120, 160))
+    assert after == _join_path(spark, lambda: _served(queries, cents, appended))
+    assert _served(queries, cents, index_df) == _join_path(
+        spark, lambda: _served(queries, cents, index_df)
+    )
+
+
+def test_drop_and_rebuild_at_the_same_location_misses(
+    spark, kept_table, monkeypatch, tmp_path
+):
+    emb, cents, append = kept_table
+    calls = _count_collects(monkeypatch)
+    queries = emb.filter("vec_id % 5 = 2")
+    before = _served(queries, cents, _kept_index(spark))
+    assert len(_kept_entries(str(tmp_path / "kept"))) == 1
+    spark.sql(f"DROP TABLE {KEPT_TABLE}")
+    shutil.rmtree(tmp_path / "kept")
+    # the same ids and location, other vectors: only a collect can see them
+    append(emb.filter("vec_id >= 40").withColumn("vec_id", F.col("vec_id") - 40), 0)
+    index_df = _kept_index(spark)
+    after = _served(queries, cents, index_df)
+    assert len(calls) == 2 and after != before
+    assert len(_kept_entries(str(tmp_path / "kept"))) == 1  # replaced
+    assert after == _join_path(spark, lambda: _served(queries, cents, index_df))
+
+
+@pytest.mark.parametrize("plan", ["filter", "sample", "computed", "checkpoint"])
+def test_non_file_plan_collects_every_call_and_keeps_nothing(
+    spark, kept_table, monkeypatch, plan
+):
+    emb, cents, _ = kept_table
+    table = _kept_index(spark)
+    index_df = {
+        "filter": lambda: table.filter("neighbor_id % 2 = 0"),
+        "computed": lambda: table.withColumn("ne", F.transform("ne", lambda x: x * 2.0)),
+        "checkpoint": lambda: table.localCheckpoint(eager=True),
+        "sample": lambda: table.sample(fraction=0.5, seed=3),
+    }[plan]()
+    calls = _count_collects(monkeypatch)
+    kept = set(_kept_entries())
+    queries = emb.filter("vec_id % 9 = 4")
+    first = _served(queries, cents, index_df)
+    assert _served(queries, cents, index_df) == first
+    assert len(calls) == 2
+    assert set(_kept_entries()) == kept
+
+
+def test_kept_arrays_serve_bit_identical_rows(spark, kept_table, monkeypatch):
+    """Scores by ``float.hex()``: a fresh collect, the call that keeps
+    the arrays, and a call served from them give the same rows."""
+    emb, cents, _ = kept_table
+    calls = _count_collects(monkeypatch)
+    index_df = _kept_index(spark)
+    queries = emb.unionByName(
+        spark.createDataFrame([(1000, [0.0] * 6)], "vec_id long, e array<double>")
+    )
+
+    def topk(index):
+        return _topk_rows(cell_topk(
+            queries, cents, index, 2, 5, rounded=False, exclude_self=True,
+            qid="vec_id", vec="e",
+        ))
+
+    fresh = topk(collect_index(index_df, "neighbor_id", "ne"))
+    keeping = topk(serving_index(index_df, "neighbor_id", "ne"))
+    kept = topk(serving_index(index_df, "neighbor_id", "ne"))
+    assert len(calls) == 1
+    assert fresh == keeping == kept
+
+
+def test_query_that_drops_its_served_table_leaves_no_entry(spark, sf_dir, monkeypatch):
+    """streaming_ann_search serves its query batches from one kept
+    collect, and the entry goes with the table the query drops."""
+    calls = _count_collects(monkeypatch)
+    kept = set(_kept_entries())
+    assert asrch.streaming_ann_search(spark, sf_dir).count() > 0
+    assert len(calls) == 1 and asrch.N_SEARCH_SLICES > 1
+    assert set(_kept_entries()) == kept
+
+
+RESTART_SCRIPT = textwrap.dedent(
+    """
+    import json, sys
+    sys.path.insert(0, {repo!r})
+    from cqu_bigdata_recommender_system_for_movies_spark import session
+    from cqu_bigdata_recommender_system_for_movies_spark.operators import vectors
+
+    calls = []
+    real = vectors.collect_index
+    vectors.collect_index = lambda df, *a: calls.append(1) or real(df, *a)
+    apps = []
+    for context in range(2):
+        spark = session.get_spark("kept-index-restart-test")
+        if context == 0:
+            spark.createDataFrame(
+                [(i, i % 3, [float(i), 1.0]) for i in range(30)],
+                "id long, cell int, vec array<double>",
+            ).write.parquet({path!r})
+        for _ in range(2):
+            ids = vectors.serving_index(spark.read.parquet({path!r}), "id", "vec").ids
+        apps.append(spark.sparkContext.applicationId)
+        keys = [list(k) for k in session._SESSION_CACHE]
+        spark.stop()
+    print(json.dumps(dict(calls=len(calls), apps=apps, keys=keys, n=len(ids))))
+    """
+)
+
+
+def test_context_restart_misses_the_kept_index(tmp_path):
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    script = RESTART_SCRIPT.format(repo=repo, path=str(tmp_path / "index"))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    # one collect per context: the second context's first call misses
+    assert res["calls"] == 2 and res["n"] == 30
+    assert res["apps"][0] != res["apps"][1]
+    assert [k[0] for k in res["keys"]] == [res["apps"][1]]

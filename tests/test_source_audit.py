@@ -4,8 +4,8 @@ Two conventions every round's verdict has checked by hand are pinned
 here so they cannot silently erode:
 
 1. No driver-side materialization (`collect` / `toPandas` /
-   `toLocalIterator`) outside an explicit whitelist of sites whose
-   result size is bounded by something other than the data volume —
+   `toLocalIterator` / `toArrow`) outside an explicit whitelist of sites
+   whose result size is bounded by something other than the data volume —
    scalar convergence checks, partition-count offset maps, fixed-size
    sketch bitmaps, d x d Gramians, test-fixture staging. A new collect
    anywhere else fails with the offending function named.
@@ -32,8 +32,13 @@ here so they cannot silently erode:
    holds the only exact-Jaccard `array_intersect`, the only MinHash
    affine-min definition and, besides the prefix filter's length-filtered
    generator, the only in-array pair generator (`flatten(transform(`);
-   the scan fan-out and the portable md5 hash live only in `tables.py`,
-   and the single-valued SimHash width function is gone.
+   the scan fan-out and the portable md5 hash live only in `tables.py`
+   (as a Python call or as SQL text), and the single-valued SimHash
+   width function is gone.
+
+7. One serving collect: `collect_index` is called only by
+   `serving_index` (the ANN and IVF indexes) and `build_candidate_index`
+   (the candidate catalog).
 """
 
 from __future__ import annotations
@@ -77,9 +82,13 @@ COLLECT_WHITELIST = {
     # one max(batch_id) scalar when a run resumes — the resume floor that
     # lets every batch above it skip the per-batch ledger probe
     ("streaming/ann_index.py", "open"),
+    # a serving index: its callers collect only while it is broadcast-sized
+    # (serving_index: at most spark.sql.autoBroadcastJoinThreshold) or
+    # within REC_BROADCAST_MAX_ITEMS items (build_candidate_index)
+    ("operators/vectors.py", "collect_index"),
 }
 
-DRIVER_SINKS = ("collect", "toPandas", "toLocalIterator")
+DRIVER_SINKS = ("collect", "toPandas", "toLocalIterator", "toArrow")
 
 
 def _sites(match):
@@ -369,6 +378,14 @@ def test_scan_fan_out_and_portable_hash_only_in_tables():
     assert [(rel, fn) for rel, fn, _ in hashes] == [("tables.py", "md5_long")], (
         f"the portable md5 hash is tables.md5_long: {hashes}"
     )
+    sql_hashes = _sites(
+        lambda n: isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and "conv(substring(md5(" in n.value.replace(" ", "")
+    )
+    assert all(rel == "tables.py" for rel, _, _ in sql_hashes), (
+        f"spell the portable md5 hash as tables.md5_long, not SQL text: {sql_hashes}"
+    )
 
 
 def test_single_valued_simhash_width_is_gone():
@@ -378,3 +395,17 @@ def test_single_valued_simhash_width_is_gone():
         if "derive_simhash_block_bits" in py.read_text()
     )
     assert not found, f"the SimHash block width is the constant SIMHASH_BLOCK_BITS: {found}"
+
+
+def test_serving_collect_only_through_the_index_builders():
+    sites = _sites(
+        lambda n: isinstance(n, ast.Call)
+        and (
+            (isinstance(n.func, ast.Name) and n.func.id == "collect_index")
+            or (isinstance(n.func, ast.Attribute) and n.func.attr == "collect_index")
+        )
+    )
+    assert {(rel, fn) for rel, fn, _ in sites} == {
+        ("operators/vectors.py", "serving_index"),
+        ("streaming/candidates.py", "build_candidate_index"),
+    }, f"serve a collected index through serving_index: {sites}"

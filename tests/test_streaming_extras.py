@@ -396,9 +396,9 @@ def test_simhash_group_state_split_invariant_randomized(group_state):
     from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
         HAMMING_MAX,
         SIMHASH_BANDS,
+        SIMHASH_BLOCK_BITS,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.simdedup import (
-        BLOCK_BITS,
         detect_bucket_dups,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import (
@@ -448,7 +448,8 @@ def test_simhash_group_state_split_invariant_randomized(group_state):
                 f = fp_str(v)
                 for b in range(SIMHASH_BANDS):
                     rows.append(
-                        (f"{b}:{f[b * BLOCK_BITS:(b + 1) * BLOCK_BITS]}", d, f)
+                        (f"{b}:{f[b * SIMHASH_BLOCK_BITS:(b + 1) * SIMHASH_BLOCK_BITS]}",
+                         d, f)
                     )
             # arbitrary-order Arrow-chunk sub-split of the batch
             pdf = pd.DataFrame(rows, columns=["bk", "doc_id", "fp"])

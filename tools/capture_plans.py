@@ -1,13 +1,12 @@
 """Capture .explain("formatted") for registered queries into plan files.
 
 Usage:
-    python tools/capture_plans.py OUTDIR SUFFIX [query ...]
+    python tools/capture_plans.py OUTDIR SUFFIX query [query ...]
 
-Writes OUTDIR/<query>_<SUFFIX>.txt for each named query (default: a
-curated set of the expensive batch queries). Streaming / lifecycle
-queries whose fn() executes the whole micro-batch loop eagerly are
-skipped unless named explicitly — their returned snapshot is a
-LogicalRDD with no interesting plan; their evidence is phase timings.
+Writes OUTDIR/<query>_<SUFFIX>.txt for each named query over the tables
+in ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 reference tables).
+Streaming and lifecycle queries run their whole micro-batch loop when
+called, so their plan is only that of the snapshot they return.
 """
 
 from __future__ import annotations
@@ -22,15 +21,10 @@ from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import (  # 
 )
 from cqu_bigdata_recommender_system_for_movies_spark.session import get_spark  # noqa: E402
 
-# Queries whose fn() runs eagerly (micro-batch loops, fits) — the
-# returned DataFrame is a materialized snapshot, not a lazy plan.
-EAGER = {
-    name
-    for name in ()
-}
-
 
 def main() -> None:
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
     outdir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
