@@ -45,9 +45,12 @@ from cqu_bigdata_recommender_system_for_movies_spark.session import (
     shuffle_partitions,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    TOKS_SQL,
     load,
     load_fanned_out,
     md5_long,
+    token_rows,
+    tokens,
 )
 
 SHINGLE_N = 5
@@ -103,15 +106,13 @@ ROWS_PER_BAND = 4  # 4 bands × 4 hashes: at the 0.3 threshold the 2-hash
 
 # --- shared SQL fragments (DuckDB oracle side) -----------------------------
 
-_TOKS_SQL = "list_filter(string_split(text, ' '), w -> w <> '')"
-
 # Shingle sets are represented by their portable 32-bit hashes (int64
 # column): the dedup joins/groupBys shuffle fixed 8-byte keys instead of
 # ~50-byte shingle strings — at 100 TB that is the dominant shuffle-volume
 # term. Hash collisions merge shingles identically in BOTH engines
 # (standard hashed-shingle MinHash practice), so oracle parity is exact.
 _SHINGLES_SQL = f"""
-    t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+    t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     sh AS (
         SELECT DISTINCT doc_id,
                CAST(('0x' || substr(md5(s), 1, 8)) AS BIGINT) AS hv
@@ -132,7 +133,7 @@ def _shingle_hashes(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     through a duplicate-insensitive aggregate (``collect_set``) or add
     their own ``distinct``."""
     docs = load_fanned_out(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
+    toks = tokens()
     n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     shingles = F.when(n_sh > 0,
         F.transform(
@@ -300,9 +301,7 @@ def _token_hashes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle applies the SAME distinct-after-hash, so both engines
     conflate identically even then."""
     docs = load_fanned_out(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = docs.select("doc_id", F.explode(toks).alias("w"))
-    return tok.select(
+    return token_rows(docs, "doc_id").select(
         "doc_id", md5_long("w").alias("hv1"), md5_long("w", 9).alias("hv2")
     ).distinct()
 
@@ -331,7 +330,7 @@ def _simhash_popcounts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct AFTER hashing — the exact twin of _token_hashes_df (see its
 # docstring: dedup on the fixed-width hash pair, identical on both engines)
 _TOKEN_HASHES_SQL = f"""
-    t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+    t AS (SELECT doc_id, {TOKS_SQL} AS toks FROM documents),
     tok AS (SELECT doc_id, w FROM t, unnest(toks) u(w)),
     v AS (
         SELECT DISTINCT doc_id,
@@ -1232,7 +1231,7 @@ def dedup_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
         SELECT source, doc_id,
-               list_filter(string_split(text, ' '), w -> w <> '') AS t
+               {TOKS_SQL} AS t
         FROM documents
     ),
     sh AS (

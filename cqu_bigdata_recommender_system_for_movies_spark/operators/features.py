@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load, md5_long
+from cqu_bigdata_recommender_system_for_movies_spark.tables import TOKS_SQL, load, md5_long, tokens
 
 N_BINS = 4
 N_HASH_BUCKETS = 64
@@ -116,8 +116,7 @@ PACK_BLOCK_DOCS = 256  # docs per prefix-sum block: the corpus-wide running
     oracle=f"""
     WITH t AS (
         SELECT doc_id, lang,
-               len(list_filter(string_split(text, ' '), w -> w <> ''))
-                   AS n_tokens
+               len({TOKS_SQL}) AS n_tokens
         FROM documents
     ),
     c AS (
@@ -148,7 +147,7 @@ PACK_BLOCK_DOCS = 256  # docs per prefix-sum block: the corpus-wide running
 )
 def sequence_pack_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda w: w != ""))
+    n_tokens = F.size(tokens())
     # block_id is monotone in doc_id, so ordering by (block_id, doc_id)
     # within a lang equals ordering by doc_id — semantics are unchanged
     base = docs.select(

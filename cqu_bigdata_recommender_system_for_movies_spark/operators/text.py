@@ -10,14 +10,38 @@ the streaming form lives in streaming/queries.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import _shingle_hashes
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.tables import load, load_fanned_out, sql_in_list
+from cqu_bigdata_recommender_system_for_movies_spark.tables import (
+    TOKS_SQL,
+    load,
+    load_fanned_out,
+    sql_in_list,
+    token_rows,
+    tokens,
+)
 
 STOPWORDS = ("the", "a", "of", "and", "to")
+
+
+def _stopword_ratio():
+    """The share of a document's tokens that are STOPWORDS (0.0 for a
+    document with none). ``_STOPWORD_RATIO_SQL`` over ``toks`` is its
+    DuckDB twin."""
+    toks = tokens()
+    n_stop = F.size(F.filter(toks, lambda w: F.array_contains(F.array(*map(F.lit, STOPWORDS)), w)))
+    return n_stop * 1.0 / F.greatest(F.size(toks), F.lit(1))
+
+
+_STOPWORD_RATIO_SQL = (
+    f"len(list_filter(toks, w -> list_contains({list(STOPWORDS)}, w)))"
+    " * 1.0 / greatest(len(toks), 1)"
+)
 
 
 @register(
@@ -43,12 +67,12 @@ def wordcount_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(list_filter(string_split(text, ' '), w -> w <> '')) AS n_tokens,
+           len({TOKS_SQL}) AS n_tokens,
            length(text) AS text_len,
            ROUND(length(text) * 1.0 /
-                 greatest(len(list_filter(string_split(text, ' '), w -> w <> '')), 1),
+                 greatest(len({TOKS_SQL}), 1),
                  4) AS chars_per_token
     FROM documents
     """,
@@ -57,8 +81,7 @@ def wordcount_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    tokens = F.filter(F.split("text", " "), lambda w: w != "")
-    n_tokens = F.size(tokens)
+    n_tokens = F.size(tokens())
     return docs.select(
         "doc_id",
         n_tokens.alias("n_tokens"),
@@ -73,14 +96,12 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality_score",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     )
     SELECT doc_id,
            len(toks) AS n_tokens,
-           ROUND(len(list_filter(toks, w -> list_contains({list(STOPWORDS)}, w)))
-                 * 1.0 / greatest(len(toks), 1), 4) AS stopword_ratio,
+           ROUND({_STOPWORD_RATIO_SQL}, 4) AS stopword_ratio,
            ROUND(len(list_filter(toks, w -> length(w) >= 5))
                  * 1.0 / greatest(len(toks), 1), 4) AS long_token_ratio
     FROM t
@@ -91,17 +112,13 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    n = F.size(toks)
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda w: F.array_contains(stop_arr, w)))
-    n_long = F.size(F.filter(toks, lambda w: F.length(w) >= 5))
-    denom = F.greatest(n, F.lit(1))
+    n = F.size(tokens())
+    n_long = F.size(F.filter(tokens(), lambda w: F.length(w) >= 5))
     return docs.select(
         "doc_id",
         n.alias("n_tokens"),
-        F.round(n_stop * F.lit(1.0) / denom, 4).alias("stopword_ratio"),
-        F.round(n_long * F.lit(1.0) / denom, 4).alias("long_token_ratio"),
+        F.round(_stopword_ratio(), 4).alias("stopword_ratio"),
+        F.round(n_long * F.lit(1.0) / F.greatest(n, F.lit(1)), 4).alias("long_token_ratio"),
     )
 
 
@@ -115,10 +132,9 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]+"
     oracle=f"""
     SELECT doc_id,
            len(regexp_extract_all(text, '{BPE_TOKEN_RE}')) AS n_bpe_tokens,
-           len(list_filter(string_split(text, ' '), w -> w <> ''))
-               AS n_ws_tokens,
+           len({TOKS_SQL}) AS n_ws_tokens,
            ROUND(len(regexp_extract_all(text, '{BPE_TOKEN_RE}')) * 1.0 /
-                 greatest(len(list_filter(string_split(text, ' '), w -> w <> '')), 1),
+                 greatest(len({TOKS_SQL}), 1),
                  4) AS tokens_per_word
     FROM documents
     """,
@@ -130,7 +146,7 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r]+"
 def regex_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bpe = F.regexp_extract_all("text", F.lit(BPE_TOKEN_RE), 0)
-    ws = F.filter(F.split("text", " "), lambda w: w != "")
+    ws = tokens()
     return docs.select(
         "doc_id",
         F.size(bpe).alias("n_bpe_tokens"),
@@ -149,19 +165,47 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _lang_id_oracle() -> str:
-    score_rows = "\n        UNION ALL\n".join(
-        f"SELECT doc_id, '{lang}' AS cand,"
-        f" len(list_filter(toks, w -> list_contains({list(words)}, w))) AS score"
-        f" FROM t"
+def _lang_scores_sql(carry: str) -> str:
+    """The t and scores CTEs of `_lang_best`'s DuckDB twin; ``carry`` is
+    the carried columns' SQL prefix ('' or 'lang, ')."""
+    scores = " UNION ALL ".join(
+        f"SELECT doc_id, {carry}'{lang}' AS cand,"
+        f" len(list_filter(toks, w -> list_contains({list(words)}, w))) AS score FROM t"
         for lang, words in sorted(LANG_MARKERS.items())
     )
-    return f"""
-    WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+    return f"""WITH t AS (
+        SELECT doc_id, {carry}{TOKS_SQL} AS toks
         FROM documents
     ),
-    scores AS ({score_rows}),
+    scores AS ({scores})"""
+
+
+def _lang_best(docs: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, cand, score, rn): each document's best marker
+    language, most marker-word hits first, ties to the alphabetically
+    first language. One row per candidate is unioned, then one window
+    ranks them (a single shuffle)."""
+    base = docs.select("doc_id", *carry, tokens().alias("toks"))
+    parts = [
+        base.select(
+            "doc_id",
+            *carry,
+            F.lit(lang).alias("cand"),
+            F.size(
+                F.filter(F.col("toks"), lambda w: F.array_contains(F.array(*map(F.lit, words)), w))
+            ).cast("long").alias("score"),
+        )
+        for lang, words in sorted(LANG_MARKERS.items())
+    ]
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("cand"))
+    scored = reduce(DataFrame.union, parts)
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+
+
+@register(
+    "lang_id_heuristic",
+    oracle=f"""
+    {_lang_scores_sql("")},
     ranked AS (
         SELECT doc_id, cand, score,
                ROW_NUMBER() OVER (
@@ -171,39 +215,15 @@ def _lang_id_oracle() -> str:
     )
     SELECT doc_id, cand AS predicted_lang, score AS marker_hits
     FROM ranked WHERE rn = 1
-    """
-
-
-@register(
-    "lang_id_heuristic",
-    oracle=_lang_id_oracle(),
+    """,
     doc="Language identification (north star): stopword-marker scoring per "
     "candidate language, argmax with alphabetical tie-break — the cheap "
     "n-gram/marker heuristic a corpus triage pass runs before a real "
     "lang-ID model. Unpivot -> window-rank keeps it one shuffle.",
 )
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    base = docs.select("doc_id", toks.alias("toks"))
-    scored = None
-    for lang, words in sorted(LANG_MARKERS.items()):
-        marker = F.array(*[F.lit(w) for w in words])
-        part = base.select(
-            "doc_id",
-            F.lit(lang).alias("cand"),
-            F.size(
-                F.filter(F.col("toks"), lambda w: F.array_contains(marker, w))
-            ).cast("long").alias("score"),
-        )
-        scored = part if scored is None else scored.union(part)
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("cand"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("cand").alias("predicted_lang"), F.col("score").alias("marker_hits"))
+    return _lang_best(load(spark, sf_dir, "documents")).select(
+        "doc_id", F.col("cand").alias("predicted_lang"), F.col("score").alias("marker_hits")
     )
 
 
@@ -226,11 +246,11 @@ def lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(array_to_string(
                list_sort(list_distinct(
-                   list_filter(string_split(text, ' '), w -> w <> ''))), ' ')) AS fp
+                   {TOKS_SQL})), ' ')) AS fp
     FROM documents
     """,
     doc="Document fingerprinting (north star): content fingerprint = md5 over "
@@ -239,10 +259,9 @@ def lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
     return docs.select(
         "doc_id",
-        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))).alias("fp"),
+        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens())))).alias("fp"),
     )
 
 
@@ -266,7 +285,7 @@ def chunk_tokens(toks: list[str]) -> list[tuple[int, list[str]]]:
 
 _CHUNK_ORACLE = f"""
     WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     s AS (
@@ -296,7 +315,7 @@ _CHUNK_ORACLE = f"""
 )
 def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
+    toks = tokens()
     starts = F.sequence(
         F.lit(1),
         F.greatest(F.size(toks) - CHUNK_OVERLAP, F.lit(1)),
@@ -355,7 +374,7 @@ TFIDF_TOP_K = 3
     "tfidf_top_terms",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     tok AS (SELECT doc_id, unnest(toks) AS term FROM t),
@@ -384,11 +403,8 @@ TFIDF_TOP_K = 3
     "the wide text never shuffles.",
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = docs.select("doc_id", F.explode(toks).alias("term"))
+    tok = token_rows(docs, "doc_id", alias="term")
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tok.distinct().groupBy("term").agg(F.count("*").alias("df"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
@@ -422,7 +438,7 @@ CONTAM_MIN_SHARED = 1
 
 CONTAM_ORACLE = f"""
     WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     sh AS (
@@ -536,9 +552,9 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "repetition_stats",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS w
+        SELECT doc_id, unnest({TOKS_SQL}) AS w
         FROM documents
     ),
     wc AS (SELECT doc_id, w, COUNT(*) AS c FROM t GROUP BY doc_id, w)
@@ -559,12 +575,7 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    wc = (
-        docs.select("doc_id", F.explode(toks).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("c"))
-    )
+    wc = token_rows(docs, "doc_id").groupBy("doc_id", "w").agg(F.count("*").alias("c"))
     return wc.groupBy("doc_id").agg(
         F.sum("c").alias("n_words"),
         F.count("*").alias("n_distinct"),
@@ -643,7 +654,7 @@ def _funnel_conds_sql() -> list[tuple[str, str]]:
     "quality_filter_funnel",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     m AS (
@@ -682,7 +693,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold yields token count, summed length, distinct count, and max
     # multiplicity together, and the finish lambda collapses them to the
     # doc's cumulative SURVIVAL STAGE (0..5) — a single int column.
-    # Two scale reasons (r10 1000x probe, 111 s -> ~30 s at 5M docs):
+    # Two scale reasons (111 s -> ~30 s over a 5M-doc corpus):
     # (1) the old top_frac counted each distinct token's multiplicity by
     # re-filtering the full array — O(distinct x n) per doc, quadratic
     # for natural text where distinct ~ n (the 31-word synthetic vocab
@@ -697,7 +708,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = F.expr(
         f"""
         aggregate(
-            array_sort(filter(split(text, ' '), w -> w != '')),
+            toks,
             named_struct(
                 'n', CAST(0 AS BIGINT), 'len', CAST(0 AS BIGINT),
                 'prev', '', 'run', CAST(0 AS BIGINT),
@@ -729,7 +740,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unique_ratio",
         "top_token_frac",
     ]
-    m = docs.select(stage.alias("stage"))
+    m = docs.select(F.array_sort(tokens()).alias("toks")).select(stage.alias("stage"))
     aggs = [F.count("*").alias("s0")] + [
         F.sum((F.col("stage") >= i + 1).cast("long")).alias(f"s{i + 1}")
         for i in range(len(rule_names))
@@ -759,9 +770,9 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "unigram_logprob_score",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
@@ -786,8 +797,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = docs.select("doc_id", F.explode(toks).alias("w"))
+    tok = token_rows(docs, "doc_id")
     cnt = tok.groupBy("w").agg(F.count("*").alias("c"))
     tot = cnt.agg(F.sum("c").alias("n"))
     return (
@@ -863,8 +873,7 @@ _BM25_TERMS_SQL = sql_in_list(BM25_QUERY_TERMS)
     "bm25_topk",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-                                          w -> w <> '')) AS w
+        SELECT doc_id, unnest({TOKS_SQL}) AS w
         FROM documents
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
@@ -897,8 +906,7 @@ _BM25_TERMS_SQL = sql_in_list(BM25_QUERY_TERMS)
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = docs.select("doc_id", F.explode(toks).alias("w"))
+    tok = token_rows(docs, "doc_id")
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs"))
     qtok = tok.filter(F.col("w").isin(*BM25_QUERY_TERMS))
@@ -924,24 +932,22 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vocab_build",
-    oracle="""
+    oracle=f"""
     SELECT word, cnt,
            ROW_NUMBER() OVER (ORDER BY cnt DESC, word) - 1 AS token_id
     FROM (
         SELECT w AS word, COUNT(*) AS cnt
-        FROM (SELECT unnest(list_filter(string_split(text, ' '),
-                                        w -> w <> '')) AS w
+        FROM (SELECT unnest({TOKS_SQL}) AS w
               FROM documents)
         GROUP BY w
     )
     """,
     doc="Tokenizer vocabulary build: frequency-ranked contiguous token ids "
     "(count desc, word asc — the deterministic id assignment every "
-    "tokenizer training run needs). Re-planned in round 6: contiguous id "
-    "assignment needs a TOTAL order over the vocab, but the previous "
-    "unpartitioned row_number window sorted the whole vocabulary on one "
-    "reducer — an open-domain 100 TB corpus has an unbounded vocabulary "
-    "(VERDICT r5 stretch). Ids now come from global_row_number: range-"
+    "tokenizer training run needs). Contiguous ids need a TOTAL order "
+    "over the vocab, and an open-domain corpus has an unbounded "
+    "vocabulary, so no window may sort it on one reducer. Ids come from "
+    "global_row_number: range-"
     "partition on (count desc, word), rank locally per partition, add "
     "broadcast per-partition offsets — identical ids, no single-partition "
     "sort anywhere (the offset collect is one row per partition).",
@@ -950,12 +956,7 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cqu_bigdata_recommender_system_for_movies_spark.operators.windows import global_row_number
 
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    vocab = (
-        docs.select(F.explode(toks).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
+    vocab = token_rows(docs, alias="word").groupBy("word").agg(F.count("*").alias("cnt"))
     ranked = global_row_number(vocab, [F.desc("cnt"), F.asc("word")], out_col="rn")
     return ranked.select("word", "cnt", (F.col("rn") - 1).alias("token_id"))
 
@@ -964,14 +965,12 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_quartile_stats",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     scored AS (
         SELECT doc_id, len(toks) AS n_tokens,
-               len(list_filter(toks, w -> list_contains({list(STOPWORDS)}, w)))
-                   * 1.0 / greatest(len(toks), 1) AS stopword_ratio
+               {_STOPWORD_RATIO_SQL} AS stopword_ratio
         FROM t
     ),
     hist AS (
@@ -1009,10 +1008,9 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Quality-quartile report over the stopword-ratio signal, then "
     "per-quartile attrition stats — how a filtering threshold is chosen "
-    "before cutting a corpus. Re-planned in round 6: the previous "
-    "unpartitioned NTILE(4) moved the whole doc-count projection to ONE "
-    "partition (WindowExec does NOT range-partition like a global "
-    "orderBy — VERDICT r5 #2). Now quartile boundaries are DISCRETE "
+    "before cutting a corpus. No unpartitioned NTILE(4): it would move "
+    "the whole doc-count projection to ONE partition (WindowExec does "
+    "NOT range-partition like a global orderBy). Quartile boundaries are DISCRETE "
     "data values picked from the distinct-ratio cumulative histogram at "
     "the exact NTILE bucket positions (b*(n div 4) + min(b, n mod 4)), "
     "and rows bucket by broadcast (ratio > boundary) comparisons — ties "
@@ -1023,22 +1021,14 @@ def vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     "across engines.",
 )
 def quality_quartile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     # pinned: scored feeds BOTH the boundary computation and the final
     # bucketing — without the checkpoint the corpus tokenization would
     # execute once per consumer
     scored = docs.select(
         "doc_id",
-        F.size(toks).alias("n_tokens"),
-        (
-            F.size(F.filter(toks, lambda w: F.array_contains(stop_arr, w)))
-            * 1.0
-            / F.greatest(F.size(toks), F.lit(1))
-        ).alias("stopword_ratio"),
+        F.size(tokens()).alias("n_tokens"),
+        _stopword_ratio().alias("stopword_ratio"),
     ).localCheckpoint(eager=False)
     hist = scored.groupBy(F.col("stopword_ratio").alias("v")).agg(
         F.count("*").alias("c")
@@ -1081,16 +1071,7 @@ def quality_quartile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lang_id_confusion",
     oracle=f"""
-    WITH t AS (
-        SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), w -> w <> '') AS toks
-        FROM documents
-    ),
-    scores AS ({" UNION ALL ".join(
-        f"SELECT doc_id, lang, '{lang}' AS cand,"
-        f" len(list_filter(toks, w -> list_contains({list(words)}, w)))"
-        f" AS score FROM t"
-        for lang, words in sorted(LANG_MARKERS.items()))}),
+    {_lang_scores_sql("lang, ")},
     ranked AS (
         SELECT doc_id, lang, cand,
                ROW_NUMBER() OVER (
@@ -1110,27 +1091,8 @@ def quality_quartile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan as lang_id_heuristic plus one tiny (|langs|^2-row) aggregate.",
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    base = docs.select("doc_id", "lang", toks.alias("toks"))
-    scored = None
-    for lang, words in sorted(LANG_MARKERS.items()):
-        marker = F.array(*[F.lit(w) for w in words])
-        part = base.select(
-            "doc_id",
-            "lang",
-            F.lit(lang).alias("cand"),
-            F.size(
-                F.filter(F.col("toks"), lambda w: F.array_contains(marker, w))
-            ).cast("long").alias("score"),
-        )
-        scored = part if scored is None else scored.union(part)
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("cand"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _lang_best(load(spark, sf_dir, "documents"), "lang")
         .groupBy(
             F.col("lang").alias("true_lang"),
             F.col("cand").alias("predicted_lang"),
@@ -1143,8 +1105,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "boolean_retrieval_and",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-                                          w -> w <> '')) AS w
+        SELECT doc_id, unnest({TOKS_SQL}) AS w
         FROM documents
     ),
     hits AS (
@@ -1172,8 +1133,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def boolean_retrieval_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = docs.select("doc_id", F.explode(toks).alias("w"))
+    tok = token_rows(docs, "doc_id")
     hits = (
         tok.filter(F.col("w").isin(*BM25_QUERY_TERMS))
         .groupBy("doc_id", "w")
@@ -1198,10 +1158,9 @@ def boolean_retrieval_and(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "phrase_retrieval_topdocs",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, list_filter(string_split(text, ' '),
-                                   w -> w <> '') AS t
+        SELECT doc_id, {TOKS_SQL} AS t
         FROM documents
     ),
     bg AS (
@@ -1235,7 +1194,7 @@ def phrase_retrieval_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on the suite's ONE scan task (measured 5.0 s first-run; fanned
     # 1.3 s). Downstream aggregates are exact counts — order-insensitive.
     docs = load_fanned_out(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
+    toks = tokens()
     n_bg = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.when(
         n_bg > 0,
@@ -1290,10 +1249,9 @@ def phrase_retrieval_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "boilerplate dedup failures steepen it) fails this health check "
     "before any downstream model does. Rank assignment is the only "
     "ordered step and runs over the VOCABULARY (already aggregated), "
-    "not the token stream; re-planned in round 6 to global_row_number "
-    "(range-partition + per-partition offsets) so no single-partition "
-    "vocab sort remains — an open-domain corpus has an unbounded "
-    "vocabulary (VERDICT r5 stretch). The fit is the same closed-form "
+    "not the token stream, through global_row_number (range-partition "
+    "+ per-partition offsets): an open-domain corpus has an unbounded "
+    "vocabulary, so no single-partition vocab sort. The fit is the same closed-form "
     "regr_* moment aggregate as linear_regression_closed_form.",
 )
 def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1330,7 +1288,7 @@ BIGRAM_BACKOFF = 1 - BIGRAM_INTERP_LAMBDA
     "bigram_logprob_score",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), w -> w <> '') AS toks
+        SELECT doc_id, {TOKS_SQL} AS toks
         FROM documents
     ),
     tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
@@ -1374,9 +1332,8 @@ BIGRAM_BACKOFF = 1 - BIGRAM_INTERP_LAMBDA
 )
 def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    t = docs.select("doc_id", toks.alias("toks"))
-    tok = t.select("doc_id", F.explode("toks").alias("w"))
+    t = docs.select("doc_id", tokens().alias("toks"))
+    tok = token_rows(docs, "doc_id")
     c1 = tok.groupBy("w").agg(F.count("*").alias("c"))
     tot = c1.agg(F.sum("c").alias("n"))
     bigrams = F.when(
@@ -1422,8 +1379,7 @@ CTFIDF_TOP = 5
     "class_tfidf_top_terms",
     oracle=f"""
     WITH tok AS (
-        SELECT source, unnest(list_filter(string_split(text, ' '),
-                                          w -> w <> '')) AS w
+        SELECT source, unnest({TOKS_SQL}) AS w
         FROM documents
     ),
     cls AS (SELECT source, w, COUNT(*) AS c FROM tok GROUP BY source, w),
@@ -1457,7 +1413,7 @@ CTFIDF_TOP = 5
     "combined; the shuffle carries (class, term) partials, never "
     "positions), class totals and class-df derived FROM that table "
     "(classes-sized and vocab-sized — AQE broadcasts), and the per-class "
-    f"top-{CTFIDF_TOP} runs in TWO phases (re-planned round 6): with only "
+    f"top-{CTFIDF_TOP} runs in TWO phases: with only "
     "n_classes partitions a one-phase window sorts each class's whole "
     "vocabulary on one reducer, so phase 1 ranks within (class, "
     "salt = hash(term) % 8) and keeps each salt's local top-k — any "
@@ -1470,9 +1426,7 @@ def class_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cqu_bigdata_recommender_system_for_movies_spark.operators.topk import salted_topk
 
     docs = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: w != "")
-    tok = docs.select("source", F.explode(toks).alias("w"))
-    cls = tok.groupBy("source", "w").agg(F.count("*").alias("c")).localCheckpoint(
+    cls = token_rows(docs, "source").groupBy("source", "w").agg(F.count("*").alias("c")).localCheckpoint(
         eager=False
     )  # three derived tables read it: totals, class-df, and the scores
     tot = cls.groupBy("source").agg(F.sum("c").alias("t"))

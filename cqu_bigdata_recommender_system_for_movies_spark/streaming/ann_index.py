@@ -74,6 +74,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.functions.nearcell import (
     seed_quantizer,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.operators.vectors import (
+    forget_serving_index,
     shuffle_partitions,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
@@ -424,7 +425,9 @@ def _swap_generations(
     sits under ``tmp`` and the old under ``{table}_retiring``
     (``recover_swap`` finishes from there); after the second the new one
     serves. Both tables are EXTERNAL, so renames move only catalog
-    entries, never files."""
+    entries, never files. The arrays `serving_index` keeps for the old
+    generation's location go with it."""
+    forget_serving_index(spark.table(table))
     retiring = f"{table}_retiring"
     spark.sql(f"DROP TABLE IF EXISTS {retiring}")
     spark.sql(f"ALTER TABLE {table} RENAME TO {retiring}")

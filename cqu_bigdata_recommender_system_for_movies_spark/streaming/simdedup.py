@@ -40,7 +40,7 @@ from cqu_bigdata_recommender_system_for_movies_spark.operators.dedup import (
     SIMHASH_BLOCK_BITS,
 )
 from cqu_bigdata_recommender_system_for_movies_spark.streaming.state import sharded_fold
-from cqu_bigdata_recommender_system_for_movies_spark.tables import md5_long
+from cqu_bigdata_recommender_system_for_movies_spark.tables import md5_long, tokens
 
 # dup_id set -> direct pair row; grp set (dup_id null) -> group
 # correction row "every doc with fp == grp and doc_id > of_id has
@@ -93,7 +93,7 @@ def token_hash_structs() -> Column:
     distinct on the fixed-width pair)."""
     return F.array_distinct(
         F.transform(
-            F.filter(F.split("text", " "), lambda w: w != ""),
+            tokens(),
             lambda w: F.struct(md5_long(w).alias("hv1"), md5_long(w, 9).alias("hv2")),
         )
     )
@@ -107,7 +107,7 @@ def with_fingerprint(docs: DataFrame) -> DataFrame:
     plan because nothing aggregates across rows. The token-presence
     filter tests the raw token array (no md5), so the hashed ``__hvs``
     array is referenced exactly once."""
-    has_tokens = F.size(F.filter(F.split("text", " "), lambda w: w != "")) > 0
+    has_tokens = F.size(tokens()) > 0
     return (
         docs.filter(has_tokens)
         .withColumn("__hvs", token_hash_structs())

@@ -15,7 +15,8 @@ that onto the driver's TPC-H-ish star schema:
 - ``documents`` / ``embeddings`` := text + vector extension tables.
 
 ``RATINGS_SQL`` is the DuckDB-oracle twin of ``ratings()`` — both sides of
-every correctness check derive the fact table identically.
+every correctness check derive the fact table identically. ``TOKS_SQL`` is
+the same for ``tokens()``, the one document tokenizer.
 
 Scale note: the lineitem⋈orders join is a large-fact-to-large-fact equi
 join; at 100 TB both sides shuffle on the order key. Catalyst plans a
@@ -187,6 +188,25 @@ def md5_long(col, start: int = 1):
     ``('0x' || substr(md5(x), start, 8))::BIGINT``, so hash-based buckets,
     splits and shingle ids agree across the engine and its oracles."""
     return F.conv(F.substring(F.md5(col), start, 8), 16, 10).cast("long")
+
+
+def tokens():
+    """The one tokenizer: ``text`` split on single spaces, the empty
+    strings that leading, trailing and repeated spaces leave dropped.
+    Tabs, newlines and other whitespace do not split. ``TOKS_SQL`` is its
+    DuckDB twin. A raw field split (the first field, a word count that
+    keeps empty fields, a record parser) is a different rule and stays
+    ``F.split``."""
+    return F.filter(F.split("text", " "), lambda w: w != "")
+
+
+def token_rows(docs: DataFrame, *keys: str, alias: str = "w") -> DataFrame:
+    """One row per token of each document: ``keys`` and the token as
+    ``alias``."""
+    return docs.select(*keys, F.explode(tokens()).alias(alias))
+
+
+TOKS_SQL = "list_filter(string_split(text, ' '), w -> w <> '')"
 
 
 # DuckDB twin of ratings() — embedded as a CTE in oracle SQL strings.

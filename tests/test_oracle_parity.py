@@ -193,3 +193,49 @@ def test_output_dtype_classes_match(name, query_df, duck):
         f"{name}: output dtype class mismatch (column, spark, oracle): "
         f"{diffs} — equal values will still hash-fail on the driver"
     )
+
+
+# text -> the tokens both `tables.tokens()` and `tables.TOKS_SQL` must give:
+# split on single spaces, empty strings dropped, no other whitespace splits
+TOKENIZER_CASES = [
+    ("", []),
+    ("   ", []),
+    ("spark  join", ["spark", "join"]),
+    ("  leading", ["leading"]),
+    ("trailing  ", ["trailing"]),
+    (" a  b   c ", ["a", "b", "c"]),
+    ("tab\tstays", ["tab\tstays"]),
+    ("new\nline stays", ["new\nline", "stays"]),
+    ("nb\u00a0sp stays", ["nb\u00a0sp", "stays"]),
+    ("naïve café 数据  ß", ["naïve", "café", "数据", "ß"]),
+]
+
+
+def test_tokenizer_is_one_rule_on_both_engines(spark):
+    """`tokens()` and its DuckDB twin `TOKS_SQL` tokenize the same
+    strings into the same lists, and into the expected ones, so a change
+    to either definition alone fails here."""
+    import pandas as pd
+
+    from cqu_bigdata_recommender_system_for_movies_spark.tables import TOKS_SQL, tokens
+
+    texts = [t for t, _ in TOKENIZER_CASES]
+    got_spark = [
+        list(r.toks)
+        for r in spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+        .select("i", tokens().alias("toks"))
+        .orderBy("i")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"i": range(len(texts)), "text": texts}))
+    got_duck = [
+        list(toks)
+        for (toks,) in con.execute(
+            f"SELECT {TOKS_SQL} AS toks FROM documents ORDER BY i"
+        ).fetchall()
+    ]
+    con.close()
+    expected = [toks for _, toks in TOKENIZER_CASES]
+    assert got_spark == expected
+    assert got_duck == expected

@@ -486,6 +486,22 @@ def test_drop_and_rebuild_at_the_same_location_misses(
     assert after == _join_path(spark, lambda: _served(queries, cents, index_df))
 
 
+def test_compaction_evicts_the_retired_generation(spark, kept_table, tmp_path):
+    """A compaction moves the table to a new generation directory, and
+    the arrays kept for the retired location go with it."""
+    emb, cents, _ = kept_table
+
+    def kept_for(root):
+        return [k for k in session._SESSION_CACHE if k[1:] == ("serving_index", root)]
+
+    _served(emb.filter("vec_id % 5 = 3"), cents, _kept_index(spark))
+    old_root = vectors._file_scan(spark.table(KEPT_TABLE))[0]
+    assert kept_for(old_root)
+    ai.compact_index_table(spark, KEPT_TABLE, 4, str(tmp_path / "kept_gen1"))
+    assert vectors._file_scan(spark.table(KEPT_TABLE))[0] != old_root
+    assert not kept_for(old_root)
+
+
 @pytest.mark.parametrize("plan", ["filter", "sample", "computed", "checkpoint"])
 def test_non_file_plan_collects_every_call_and_keeps_nothing(
     spark, kept_table, monkeypatch, plan

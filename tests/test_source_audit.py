@@ -39,6 +39,11 @@ here so they cannot silently erode:
 7. One serving collect: `collect_index` is called only by
    `serving_index` (the ANN and IVF indexes) and `build_candidate_index`
    (the candidate catalog).
+
+8. One tokenizer: the empty-token filter over a split (`filter(split(`
+   as a Python call, `list_filter(string_split(` or `filter(split(text`
+   as SQL text) is written only in `tables.py` (`tokens`, `TOKS_SQL`).
+   Raw field splits keep their empty fields and do not match.
 """
 
 from __future__ import annotations
@@ -409,3 +414,27 @@ def test_serving_collect_only_through_the_index_builders():
         ("operators/vectors.py", "serving_index"),
         ("streaming/candidates.py", "build_candidate_index"),
     }, f"serve a collected index through serving_index: {sites}"
+
+
+def test_tokenizer_only_in_tables():
+    def call_of(node, name):
+        return isinstance(node, ast.Call) and name in (
+            getattr(node.func, "attr", None),
+            getattr(node.func, "id", None),
+        )
+
+    calls = _sites(
+        lambda n: call_of(n, "filter") and n.args and call_of(n.args[0], "split")
+    )
+    sql = _sites(
+        lambda n: isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and any(
+            spelling in "".join(n.value.split())
+            for spelling in ("list_filter(string_split(", "filter(split(text")
+        )
+    )
+    outside = sorted(site for site in calls + sql if site[0] != "tables.py")
+    assert not outside, (
+        f"tokenize with tables.tokens / tables.TOKS_SQL / tables.token_rows: {outside}"
+    )
